@@ -1,0 +1,6 @@
+import os
+import sys
+
+# the benchmark's modules import each other as top-level modules, as
+# they do when perfbench/run.py runs as a script
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
