@@ -676,12 +676,19 @@ def measure_graph_calibrations(
     the engine's real search path).
 
     Measured phase walls (uniform 100k x d128, 128 cells, local[32]):
-    sample 0.15s + exact scan 0.65s + merge/curve 0.06s + L pass 0.58s
-    + end search ~1.5-3s (query-capped below) ≈ 3-4.5s total, against
-    a ~21-27s core build — and the same session measured consecutive
-    IDENTICAL builds drifting 20.9-24.4s, so at bench scale the
-    measurement rides inside host noise; at the multi-hour 300k+
-    builds it is rounding error.
+    sample 0.15s + exact scan 0.65s + merge/curve 0.06s + end search
+    ~1.5-3s (query-capped below), against a ~21-27s core build — and
+    the same session measured consecutive IDENTICAL builds drifting
+    20.9-24.4s, so at bench scale the measurement rides inside host
+    noise; at the multi-hour 300k+ builds it is rounding error.
+
+    The L pass is the largest phase whenever the beam runs in python:
+    on a 4-core host, perfbench's `build` workload (3k x d128 routed,
+    degree 16, L 32; 20 calls) measured the L pass at median 3.7s
+    (2.1-4.8s) of a 5.7s (3.4-7.8s) measurement with the python beam,
+    and 0.81s (0.60-1.27s) of 3.0s (1.9-5.5s) with the compiled beam
+    of `_prune_c` (the default). The L pass wall at the 100k shape
+    above has not been re-measured.
 
     `end_calibration` is the piece that turns the two sample curves
     into an honest end-recall contract: the sample curves are measured

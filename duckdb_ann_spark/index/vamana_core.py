@@ -318,9 +318,17 @@ def _dists(metric: str, mat: np.ndarray, v: np.ndarray) -> np.ndarray:
     per-row accumulation order), so single-query, batch, and seeding
     paths are bitwise identical — mixing np.dot / gemv / `**2 .sum()`
     here produces last-ulp float32 divergence between paths."""
+    return _pair_dists(metric, mat, np.broadcast_to(v, mat.shape))
+
+
+def _pair_dists(metric: str, vecs: np.ndarray,
+                qrows: np.ndarray) -> np.ndarray:
+    """Distances of paired rows (vecs[i], qrows[i]) — the lock-step
+    batch's aggregated per-hop kernel, the same einsum reduction as
+    `_dists`."""
     if metric == "ip":
-        return -np.einsum("ij,ij->i", mat, np.broadcast_to(v, mat.shape))
-    diff = mat - v
+        return -np.einsum("ij,ij->i", vecs, qrows)
+    diff = vecs - qrows
     return np.einsum("ij,ij->i", diff, diff)
 
 
@@ -437,6 +445,16 @@ class VamanaGraph:
         reference dispatches that batch to Metal; here it's one numpy
         BLAS op instead of per-query small matmuls.
 
+        Two bodies, one result. The per-query bookkeeping (visited set,
+        candidate heap, sorted result list, stop rule) runs in the
+        compiled beam of `_prune_c` — the module that also holds the
+        compiled RobustPrune choose loops, behind the same
+        `SPARK_GRAFT_PRUNE_C` gate — while the gather and the distance
+        einsum stay in numpy, so every distance is bit-identical. The
+        python body (`_search_batch_py`) is the fallback when the kernel
+        is unavailable, and the two return identical lists (pinned by
+        tests/test_vamana.py::test_beam_c_parity).
+
         Returns list[list[(label, distance)]], identical per-query results
         to :meth:`search` (same L and stop rule, evaluated per query)."""
         qm = np.asarray(queries, dtype=np.float32)
@@ -445,25 +463,43 @@ class VamanaGraph:
             return [[] for _ in range(nq)]
         k_eff = min(k, self.n)
         L = max(k_eff, search_complexity or self.build_complexity)
+        eps = [ep for ep in self.entry_points if ep < self.n]
+        beam = _prune_c.Beam.open(self.adjacency, len(self.vectors), nq, L,
+                                  len(eps))
+        if beam is None:
+            return self._search_batch_py(qm, k_eff, L, eps)
+        with beam:
+            if eps:
+                eps_a = np.asarray(eps, dtype=np.int64)
+                beam.seed(eps_a, self._seed_dists(qm, eps_a))
+            while True:
+                flat_ids, qidx = beam.expand()
+                if not len(flat_ids):
+                    break
+                beam.merge(_pair_dists(
+                    self.metric, self.vectors[flat_ids], qm[qidx]))
+            return beam.results(k_eff)
 
+    def _seed_dists(self, qm, eps_a):
+        """(nq, |eps|) entry-point distances through the SAME row kernel
+        as the hop expansion (bitwise parity with the single-query
+        path)."""
+        ep_vecs = self.vectors[eps_a]
+        nq = qm.shape[0]
+        vrows = np.tile(ep_vecs, (nq, 1))
+        qrows = np.repeat(qm, len(eps_a), axis=0)
+        return _pair_dists(self.metric, vrows, qrows).reshape(nq, len(eps_a))
+
+    def _search_batch_py(self, qm, k_eff: int, L: int, eps: list[int]):
+        """Python body of :meth:`search_batch` — the fallback when the
+        compiled beam is unavailable, and its parity reference."""
+        nq = qm.shape[0]
         visited = [set() for _ in range(nq)]
         candidates: list[list[tuple[float, int]]] = [[] for _ in range(nq)]
         results: list[list[tuple[float, int]]] = [[] for _ in range(nq)]
 
-        # seed all queries with the entry points in one batch, through the
-        # SAME row kernel as the hop expansion (bitwise parity with the
-        # single-query path)
-        eps = [ep for ep in self.entry_points if ep < self.n]
         if eps:
-            ep_vecs = self.vectors[np.asarray(eps)]
-            vrows = np.tile(ep_vecs, (nq, 1))
-            qrows = np.repeat(qm, len(eps), axis=0)
-            if self.metric == "ip":
-                ds = -np.einsum("ij,ij->i", vrows, qrows)
-            else:
-                diff = vrows - qrows
-                ds = np.einsum("ij,ij->i", diff, diff)
-            dmat = ds.reshape(nq, len(eps))
+            dmat = self._seed_dists(qm, np.asarray(eps))
             for qi in range(nq):
                 for j, ep in enumerate(eps):
                     d = float(dmat[qi, j])
@@ -505,18 +541,13 @@ class VamanaGraph:
             # allocations per 300-query batch under the round-8
             # profile — wall effect within host noise, kept for the
             # allocator churn).
-            vecs = self.vectors[np.asarray(flat_ids)]
             nw = len(work)
             qidx = np.repeat(
                 np.fromiter((qi for qi, _ in work), np.int64, count=nw),
                 np.fromiter((len(n) for _, n in work), np.int64, count=nw),
             )
-            qrows = qm[qidx]
-            if self.metric == "ip":
-                ds_all = -np.einsum("ij,ij->i", vecs, qrows)
-            else:
-                diff = vecs - qrows
-                ds_all = np.einsum("ij,ij->i", diff, diff)
+            ds_all = _pair_dists(
+                self.metric, self.vectors[np.asarray(flat_ids)], qm[qidx])
             pos = 0
             for qi, nbrs in work:
                 self._merge_batch(

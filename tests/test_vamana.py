@@ -751,3 +751,130 @@ def test_prune_c_parity_and_gate():
             assert got_c == got_np, (metric, m, dim, with_nan, with_ties)
     finally:
         pass
+
+
+def test_prune_c_compiles_where_gcc_exists():
+    """A broken shared C source must fail the suite, not silently turn
+    off both compiled kernels (and skip their parity tests)."""
+    import os
+    import shutil
+
+    import duckdb_ann_spark.index._prune_c as pc
+
+    if shutil.which("gcc") is None:
+        pytest.skip("no gcc on PATH")
+    if "SPARK_GRAFT_PRUNE_C" in os.environ:
+        pytest.skip("SPARK_GRAFT_PRUNE_C is set")
+    assert pc.available(), pc._DISABLED_REASON
+
+
+def test_prune_c_failure_warns_once(monkeypatch):
+    """A compile/load failure falls back with ONE RuntimeWarning per
+    process carrying `_DISABLED_REASON`; the env gate stays silent."""
+    import warnings
+
+    import duckdb_ann_spark.index._prune_c as pc
+
+    def broken():
+        raise RuntimeError("gcc failed: synthetic")
+
+    monkeypatch.setattr(pc, "_lib", None)
+    monkeypatch.setattr(pc, "_DISABLED_REASON", None)
+    monkeypatch.setattr(pc, "_compile", broken)
+    monkeypatch.delenv("SPARK_GRAFT_PRUNE_C", raising=False)
+    with pytest.warns(RuntimeWarning, match="gcc failed: synthetic"):
+        assert not pc.available()
+    assert "gcc failed: synthetic" in pc._DISABLED_REASON
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert not pc.available()  # no second warning
+        monkeypatch.setattr(pc, "_DISABLED_REASON", None)
+        monkeypatch.setenv("SPARK_GRAFT_PRUNE_C", "0")
+        assert not pc.available()  # the env gate never warns
+
+
+def test_beam_c_parity(tmp_path):
+    """The compiled lock-step beam must return exactly what the python
+    body returns — same ids, same distances, same order — across
+    metrics, exact ties, NaN-laced vectors and queries, NO_EDGE padding
+    with a duplicated neighbour, degenerate k/L/n/nq, and mmap and SQ8
+    storage. A corrupt adjacency entry raises in both bodies."""
+    import duckdb_ann_spark.index._prune_c as pc
+    import duckdb_ann_spark.index.vamana_core as vc
+
+    if not pc.available():
+        pytest.skip(f"prune_c unavailable: {pc._DISABLED_REASON}")
+
+    def both(g, qs, k, L=None):
+        got_c = g.search_batch(qs, k, L)
+        # python body: force the kernel off via the module switch
+        pc_lib, pc._lib = pc._lib, None
+        pc_reason, pc._DISABLED_REASON = pc._DISABLED_REASON, "test"
+        try:
+            got_py = g.search_batch(qs, k, L)
+        finally:
+            pc._lib, pc._DISABLED_REASON = pc_lib, pc_reason
+        # repr: NaN distances compare unequal under ==
+        assert repr(got_c) == repr(got_py), (g.metric, k, L)
+        return got_c
+
+    rng = np.random.default_rng(5)
+    for metric in ("l2", "ip", "cosine"):
+        V = rng.random((300, 12), dtype=np.float32)
+        V[10:20] = V[0]  # duplicate vectors -> exact distance ties
+        V[40:60] = np.round(V[40:60] * 2) / 2
+        qs = np.vstack([V[:8], rng.random((24, 12), dtype=np.float32)])
+        g = build_graph(V, max_degree=12, build_complexity=24,
+                        metric=metric)
+        for k, L in ((1, None), (10, None), (11, 40), (10, 4),
+                     (400, None)):  # L < k, k > n
+            both(g, qs, k, L)
+        # NaN-laced graph vectors and queries
+        Vn = V.copy()
+        Vn[rng.integers(300, size=6), 3] = np.nan
+        gn = build_graph(Vn, max_degree=12, build_complexity=24,
+                         metric=metric)
+        qn = qs.copy()
+        qn[::5, 0] = np.nan
+        for k, L in ((10, None), (5, 64)):
+            both(gn, qn, k, L)
+            both(g, qn, k, L)
+
+    # NO_EDGE padding, a duplicated neighbour and duplicate entry points
+    g = build_graph(V[:120], max_degree=8, build_complexity=16)
+    g.adjacency[0, :] = NO_EDGE
+    g.adjacency[0, :3] = [5, 5, 7]
+    g.adjacency[5, 2:] = NO_EDGE
+    g.entry_points = [0, 0, 3]
+    both(g, qs, 10)
+    both(g, qs, 3, 2)
+
+    # degenerate: empty graph, nq = 0, k = 0
+    empty = VamanaGraph(12)
+    assert both(empty, qs[:3], 5) == [[], [], []]
+    assert both(g, qs[:0], 5) == []
+    assert both(g, qs[:3], 0) == [[], [], []]
+
+    # memory-mapped shard and the lazy SQ8 view
+    gf = build_graph(V, max_degree=12, build_complexity=24)
+    p = str(tmp_path / "s.diskann")
+    write_diskann(p, gf, sq8=sq8_quantize(gf.vectors[: gf.n]))
+    gm = read_diskann(p, mmap=True)
+    assert isinstance(gm.adjacency, np.memmap)
+    both(gm, qs, 10)
+    gq = read_diskann(p)
+    gq.vectors = vc.SQ8Vectors(*read_sq8(p))
+    both(gq, qs, 10, 48)
+
+    # a corrupt adjacency entry raises instead of reading out of bounds
+    gm = read_diskann(p)
+    gm.adjacency[gm.entry_points[0], 0] = gm.n + 7
+    with pytest.raises(IndexError):
+        gm.search_batch(qs, 10)
+    pc_lib, pc._lib = pc._lib, None
+    pc_reason, pc._DISABLED_REASON = pc._DISABLED_REASON, "test"
+    try:
+        with pytest.raises(IndexError):
+            gm.search_batch(qs, 10)
+    finally:
+        pc._lib, pc._DISABLED_REASON = pc_lib, pc_reason
