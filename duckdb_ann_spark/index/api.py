@@ -391,9 +391,8 @@ def _apply_target_recall(
         # measured >=lock-step recall at 1.7-3.2x less per-query python
         # bookkeeping. ONLY here: the contract under target_recall is
         # the measured floor; default/oracle paths keep the lock-step
-        # body the grid goldens pin. SPARK_GRAFT_SLAB_SEARCH=0 opts out.
-        if os.environ.get("SPARK_GRAFT_SLAB_SEARCH", "1") != "0":
-            manifest["slab_beam"] = True
+        # body the grid goldens pin.
+        manifest["slab_beam"] = True
     elif isinstance(impl, FlatEngine):
         pass  # exact scan meets any target by construction
     else:
@@ -476,7 +475,7 @@ def index_search_table(
       cache); shard_by='cells' routing happens inside the task off a
       broadcast centroid matrix.
     * IVFFlat: `index_knn_join` (cell-partitioned parquet reused,
-      query side assigned + cogroup-GEMM scored).
+      query side assigned + bin-GEMM scored).
     * Flat: exact k-NN join against the index's vector table.
 
     Queries whose vector length mismatches the index dimension are

@@ -219,15 +219,12 @@ def _exact_topk_scan(
             # sub-shard — argmin over the DUPLICATED route rows would
             # tie every candidate to a cell's first sub-shard, making
             # the curve claim one probe captures a whole split cell
-            from .vamana_core import _mix64_np
+            from ..functions.partitioning import sub_cells
 
             offs, nsub = spl
             base = cm[offs[:-1]]
             cell0 = np_index_distances(metric, base, flat_v).argmin(axis=1)
-            sub = _mix64_np(
-                acc_id.reshape(-1).astype(np.uint64)
-            ) % nsub[cell0].astype(np.uint64)
-            cells = offs[:-1][cell0] + sub.astype(np.int64)
+            cells = sub_cells(cell0, acc_id.reshape(-1), nsub, offs)
         else:
             cells = np_index_distances(metric, cm, flat_v).argmin(axis=1)
         yield pa.RecordBatch.from_pandas(

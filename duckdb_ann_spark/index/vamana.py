@@ -58,7 +58,6 @@ from .hnsw_core import build_hnsw
 from .vamana_core import (
     SQ8Vectors,
     VamanaGraph,
-    _mix64_np,
     build_graph,
     sq8_quantize,
 )
@@ -447,6 +446,48 @@ def _load_shard(path: str):
     return g
 
 
+def _build_shard_fn(artifact_dir: str, build, sq8: bool = False,
+                   hnsw: bool = False):
+    """`build_shard_np(ids, vecs, shard, walls=None)` for both graph
+    engines → the shard's (shard, label, id) frame. The build is
+    id-sorted (reference insert order) and runs `build(vecs)`; the
+    shard file carries SQ8 codes (`sq8`) or the HNSW upper layers
+    (`hnsw`). numpy-facing so the cell build's mapInArrow path never
+    round-trips the vectors through pandas object Series (round 13).
+    `walls` (round 14, r13 verdict item 1): per-phase wall dict the
+    cell build fills so the 10M composite phase is attributable —
+    graph insert vs shard-file write."""
+
+    def build_shard_np(ids: np.ndarray, vecs: np.ndarray,
+                       shard: int, walls=None) -> pd.DataFrame:
+        import time as _t
+
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order].astype(np.int64, copy=False)
+        vecs = vecs[order]
+        _w0 = _t.perf_counter()
+        g = build(vecs)
+        _w1 = _t.perf_counter()
+        codes = sq8_quantize(vecs) if sq8 and len(vecs) else None
+        write_diskann(
+            f"{artifact_dir}/{GRAPH_DIR}/shard_{shard}.diskann", g, codes,
+            hnsw=g if hnsw else None,
+        )
+        if walls is not None:
+            _w2 = _t.perf_counter()
+            walls["graph_insert"] += _w1 - _w0
+            walls["file_write"] += _w2 - _w1
+        return pd.DataFrame(
+            {
+                "shard": np.full(len(ids), shard, dtype=np.int32),
+                "label": np.arange(len(ids), dtype=np.int64),
+                "id": ids,
+            }
+        )
+
+    return build_shard_np
+
+
 class VamanaEngine:
     name = "vamana"
 
@@ -463,47 +504,10 @@ class VamanaEngine:
         os.makedirs(f"{artifact_dir}/{GRAPH_DIR}", exist_ok=True)
         src = df.select(id_col, vec_col)
 
-        def build_shard_np(ids: np.ndarray, vecs: np.ndarray,
-                           shard: int, walls=None) -> pd.DataFrame:
-            # id-sorted build (reference insert order); numpy-facing so
-            # the cell build's mapInArrow path never round-trips the
-            # vectors through pandas object Series (round 13). `walls`
-            # (round 14, r13 verdict item 1): per-phase wall dict the
-            # cell build fills so the 10M composite phase is
-            # attributable — graph insert vs shard-file write.
-            import time as _t
-
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order].astype(np.int64, copy=False)
-            vecs = vecs[order]
-            _w0 = _t.perf_counter()
-            g = build_graph(
-                vecs,
-                max_degree=params.max_degree,
-                build_complexity=params.build_complexity,
-                alpha=params.alpha,
-                metric=params.metric,
-                start_strategy=getattr(params, "start_strategy", "first"),
-                start_nsamples=getattr(params, "start_nsamples", 1),
-                start_seed=getattr(params, "start_seed", 42),
-            )
-            _w1 = _t.perf_counter()
-            sq8 = sq8_quantize(vecs) if params.quantize_sq8 and len(vecs) else None
-            write_diskann(
-                f"{artifact_dir}/{GRAPH_DIR}/shard_{shard}.diskann", g, sq8
-            )
-            if walls is not None:
-                _w2 = _t.perf_counter()
-                walls["graph_insert"] += _w1 - _w0
-                walls["file_write"] += _w2 - _w1
-            return pd.DataFrame(
-                {
-                    "shard": np.full(len(ids), shard, dtype=np.int32),
-                    "label": np.arange(len(ids), dtype=np.int64),
-                    "id": ids,
-                }
-            )
-
+        build_shard_np = _build_shard_fn(
+            artifact_dir, lambda vecs: self._fresh_graph(vecs, params),
+            sq8=bool(params.quantize_sq8),
+        )
         shards = self._run_sharded_build(
             spark, src, id_col, params, build_shard_np, artifact_dir
         )
@@ -682,7 +686,12 @@ class VamanaEngine:
         _phase("routing-kmeans")
         k_eff = centroids.shape[0]
         from ..functions.distance import np_index_distances
-        from ..functions.partitioning import exact_partition_tokens
+        from ..functions.partitioning import (
+            exact_partition_tokens,
+            lpt_bins,
+            split_cells,
+            sub_cells,
+        )
 
         # Cell-size guard (round 15): k-means does NOT guarantee
         # balanced cells — on uniform HIGH-DIM data it collapses
@@ -703,9 +712,8 @@ class VamanaEngine:
         # Balanced builds estimate no cell past 2x budget and resolve
         # to the historical one-shard-per-cell layout exactly.
         budget_rows = max(1, -(-n_rows // max(1, k_eff)))
-        n_sub = np.ones(k_eff, dtype=np.int64)
-        est = None
-        if os.environ.get("SPARK_GRAFT_CELL_SPLIT", "1") != "0" and len(train):
+        est = np.zeros(k_eff)
+        if len(train):
             tcn = np.einsum("ij,ij->i", centroids, centroids)
             ta = (
                 tcn[None, :] - 2.0 * (train @ centroids.T)
@@ -714,11 +722,7 @@ class VamanaEngine:
                 np.bincount(ta, minlength=k_eff).astype(np.float64)
                 / len(train) * n_rows
             )
-            over = est > 2 * budget_rows
-            n_sub[over] = np.ceil(est[over] / budget_rows).astype(np.int64)
-        sub_offsets = np.concatenate(
-            [[0], np.cumsum(n_sub)]
-        ).astype(np.int64)
+        n_sub, sub_offsets = split_cells(est, budget_rows)
         total_shards = int(sub_offsets[-1])
         if _phases and total_shards > k_eff:
             print(
@@ -786,24 +790,8 @@ class VamanaEngine:
         else:
             n_bins = total_shards
         if n_bins < total_shards:
-            import heapq
-
-            if est is not None:
-                est_shard = np.repeat(est / n_sub, n_sub)
-            else:
-                est_shard = np.ones(total_shards, dtype=np.float64)
-            # unit-mass floor (r15 ADVICE): zero-estimate cells (zero
-            # train-sample rows) would otherwise all pile into bin 0 —
-            # popping (0.0, 0) and pushing (0.0, 0) back keeps bin 0
-            # the heap minimum; with the floor they round-robin
-            est_shard = np.maximum(est_shard, 1.0)
-            heavy_first = np.argsort(-est_shard, kind="stable")
-            heap = [(0.0, b) for b in range(n_bins)]
-            bin_of = np.empty(total_shards, dtype=np.int64)
-            for s in heavy_first.tolist():
-                load, b = heapq.heappop(heap)
-                bin_of[s] = b
-                heapq.heappush(heap, (load + float(est_shard[s]), b))
+            # zero-estimate cells get the packer's unit-mass floor
+            bin_of = lpt_bins(np.repeat(est / n_sub, n_sub), n_bins)
             tokens = exact_partition_tokens(n_bins)[bin_of]
             if _phases:
                 print(
@@ -859,13 +847,12 @@ class VamanaEngine:
                 # deterministic splitmix64 of the id spreads an
                 # oversized cell's rows across its sub-shards; unsplit
                 # cells (nsub=1) reduce to shard id == cell id exactly
-                ids_np = (
+                sids = sub_cells(
+                    cells,
                     b.column(b.schema.get_field_index(id_col))
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.uint64)
+                    .to_numpy(zero_copy_only=False),
+                    nsub, offs,
                 )
-                sub = _mix64_np(ids_np) % nsub[cells].astype(np.uint64)
-                sids = (offs[cells] + sub.astype(np.int64)).astype(np.int64)
                 out = pa.RecordBatch.from_arrays(
                     [
                         b.column(b.schema.get_field_index(id_col)),
@@ -1022,11 +1009,6 @@ class VamanaEngine:
             from .calibration import shape_search_results
 
             def search_fn(qm, kk, rnp, L):
-                mani = {
-                    "id_col": id_col,
-                    "params": {"metric": metric, "shard_by": "cells",
-                               "route_nprobe": int(rnp)},
-                }
                 # round 15 (r14 advice): the end anchor is the ONLY
                 # consumer-facing promise of target_recall serving, and
                 # that serving rides the frontier-slab beam (api.py
@@ -1037,8 +1019,12 @@ class VamanaEngine:
                 # routing/L curves stay lock-step-measured (they are
                 # shard-local quantities; the anchor absorbs the
                 # composition error including the beam's).
-                if os.environ.get("SPARK_GRAFT_SLAB_SEARCH", "1") != "0":
-                    mani["slab_beam"] = True
+                mani = {
+                    "id_col": id_col,
+                    "params": {"metric": metric, "shard_by": "cells",
+                               "route_nprobe": int(rnp)},
+                    "slab_beam": True,
+                }
                 res = self.search(
                     spark, mani, artifact_dir,
                     [[float(x) for x in q] for q in qm], kk,
@@ -1681,46 +1667,13 @@ class HnswEngine(VamanaEngine):
     def _write_shard(self, path: str, g, params) -> None:
         write_diskann(path, g, None, hnsw=g)
 
-    def _build_shard_fn(self, artifact_dir: str, id_col: str, vec_col: str,
-                        params):
-        m, ef = int(params.hnsw_m), self._ef_construction(params)
-        metric = params.metric
-
-        def build_shard_np(ids: np.ndarray, vecs: np.ndarray,
-                           shard: int, walls=None) -> pd.DataFrame:
-            import time as _t
-
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order].astype(np.int64, copy=False)
-            _w0 = _t.perf_counter()
-            g = build_hnsw(
-                vecs[order] if len(ids) else vecs, m=m, ef_construction=ef,
-                metric=metric,
-            )
-            _w1 = _t.perf_counter()
-            write_diskann(
-                f"{artifact_dir}/{GRAPH_DIR}/shard_{shard}.diskann", g,
-                None, hnsw=g,
-            )
-            if walls is not None:
-                _w2 = _t.perf_counter()
-                walls["graph_insert"] += _w1 - _w0
-                walls["file_write"] += _w2 - _w1
-            return pd.DataFrame(
-                {
-                    "shard": np.full(len(ids), shard, dtype=np.int32),
-                    "label": np.arange(len(ids), dtype=np.int64),
-                    "id": ids,
-                }
-            )
-
-        return build_shard_np
-
     def build(self, spark, df, id_col, vec_col, artifact_dir, params, dim):
         os.makedirs(f"{artifact_dir}/{GRAPH_DIR}", exist_ok=True)
         src = df.select(id_col, vec_col)
-        build_shard_np = self._build_shard_fn(artifact_dir, id_col, vec_col,
-                                              params)
+        build_shard_np = _build_shard_fn(
+            artifact_dir, lambda vecs: self._fresh_graph(vecs, params),
+            hnsw=True,
+        )
         shards = self._run_sharded_build(
             spark, src, id_col, params, build_shard_np, artifact_dir
         )

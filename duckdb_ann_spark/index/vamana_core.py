@@ -1118,18 +1118,6 @@ def _mix64(x: int) -> int:
     return (z ^ (z >> 31)) & _M64
 
 
-def _mix64_np(x: np.ndarray) -> np.ndarray:
-    """Vectorized `_mix64` over a uint64 array — bit-identical per
-    element (numpy uint64 arithmetic wraps mod 2^64 exactly like the
-    masked python version). Used by the cell-split sub-shard placement
-    (round 15), which must be deterministic across environments for
-    the same reason as the scalar mixer."""
-    z = (x + np.uint64(0x9E3779B97F4A7C15))
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return z ^ (z >> np.uint64(31))
-
-
 def compute_medoid(vectors: np.ndarray, metric: str = "l2") -> int:
     """Label of the dataset medoid: the vector nearest the centroid
     (ties → lowest label). The reference's `StartPointStrategy::Medoid`

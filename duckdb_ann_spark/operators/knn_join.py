@@ -12,31 +12,40 @@ Plan (IVF-style cell co-partitioning):
    base side (driver numpy k-means — O(cap·dim) memory regardless of
    table size);
 2. one narrow pass assigns each base row to its nearest cell and each
-   query row to its `nprobe` nearest cells (queries explode ×nprobe);
+   query row to its `nprobe` nearest cells;
 3. score within cells:
-   * fast path (default): COGROUP both sides on `cell`
-     (`applyInPandas`) — the only exchange moves each base row once and
-     each query row `nprobe` times; every cell scores as ONE
-     (|q_cell|, |b_cell|) BLAS GEMM + tie-safe partial top-k. Candidate
-     pairs are never materialized as rows.
+   * fast path (default, `method='blas'`): cells are LPT-packed into at
+     most 2×parallelism BINS, each bin placed in its own partition.
+     The base side makes one exchange into the bins, and each bin's
+     task scores its cells with `_score_cells` — one (|q_c|, |b_c|)
+     BLAS GEMM per cell, a tie-keep cut, and a merge across cells.
+     Candidate pairs are never materialized as rows. The query side
+     is delivered one of two ways:
+     - under the `SPARK_GRAFT_KNN_BCAST_MB` cap (64 MB): ONE broadcast
+       of the query matrix and its per-cell probe lists;
+     - over the cap: through the same exchange, as one row per
+       (query, distinct probed bin) carrying the query's probed cells
+       in that bin — each query crosses at most min(nprobe, bins)
+       times, not once per probed cell.
    * exact path (`method='exact'`): equi-join on `cell` + the JVM
      sequential-fold distance — bit-exact vs the DuckDB LATERAL oracle
      (this is the hash-compared driver entry at `nprobe >= nlist`).
-4. a per-query window merges cell-local top-k into the global top-k.
+4. a per-query window merges bin-local top-k into the global top-k.
 
 `nprobe >= nlist` degenerates to the exact k-NN join (every pair
-scored). Cells are the unit of parallelism on the fast path — pick
-`nlist` at least the cluster parallelism so no task owns too much of
-the corpus, and `salt=s` to sub-split skewed cells (the one shuffle
-AQE's skew-join cannot touch) into s tasks each.
+scored). Cell skew is handled without a knob: a cell whose train-sample
+estimate exceeds two bins' share of the base splits into sub-cells by a
+hash of the base id (the vamana cell-size guard's rule,
+`functions.partitioning.split_cells`), and queries probing it go to
+every sub-cell.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -44,25 +53,30 @@ from ..functions.distance import (
     index_distance,
     np_index_distances,
     np_stack_vectors,
-    np_topk_frame,
+)
+from ..functions.partitioning import (
+    exact_partition_tokens,
+    lpt_bins,
+    split_cells,
+    sub_cells,
 )
 from ..index.ivf import _kmeans, auto_nlist, auto_nprobe
-from ..local import local_df
 
 DISTANCE_COL = "_distance"
 CELL_COL = "__cell"
+CELLS_COL = "__cells"
 TOK_COL = "__tok"
 
-# Broadcast-queries scoring path (round 16, guide §8 "decide with small
+# Broadcast-queries delivery (round 16, guide §8 "decide with small
 # rows, move big rows once" / §2.3 "shuffle keys, not payloads"): cap on
-# the query-side vector bytes collected to the driver. 0 disables the
-# path (every call takes the cogroup spelling).
+# the query-side vector bytes collected to the driver. 0 disables it
+# (every call delivers its queries through the exchange).
 _BCAST_MB_ENV = "SPARK_GRAFT_KNN_BCAST_MB"
 
 
 def _collect_queries_bounded(queries_df: DataFrame, query_id_col: str,
                              query_vec_col: str, dim: int):
-    """Bounded collect of the query side for the broadcast scoring path
+    """Bounded collect of the query side for the broadcast delivery
     → (qids int64 (nq,), qmat f32 (nq, dim)) or None when the side
     exceeds the byte cap / the cap is disabled / the side is empty.
     The probe is one `limit(cap+1).toPandas()` — CollectLimit stops
@@ -84,57 +98,73 @@ def _collect_queries_bounded(queries_df: DataFrame, query_id_col: str,
     return qids, qmat
 
 
+def _arrow_mat(col, dim: int) -> np.ndarray:
+    """(n, dim) f32 matrix of an Arrow vector column — zero-copy when
+    the layout allows, else the pandas conversion."""
+    from ..functions.distance import np_from_arrow_list
+
+    mat = np_from_arrow_list(col, dim)
+    return mat if mat is not None else np_stack_vectors(col.to_pandas())
+
+
+def _nearest_cells(metric: str, mat: np.ndarray, centroids: np.ndarray,
+                   nprobe: int) -> np.ndarray:
+    """(nprobe, n) nearest cells per row, nearest first — the one
+    assignment arithmetic of the driver and every executor pass, so
+    probe sets agree bit for bit wherever they are computed."""
+    d = np_index_distances(metric, mat, centroids)  # (nlist, n)
+    return np.argsort(d, axis=0, kind="stable")[:nprobe]
+
+
+def _unsplit(n_cells: int) -> tuple[np.ndarray, np.ndarray]:
+    """(n_sub, offsets) of a layout whose cells are all whole."""
+    return (np.ones(n_cells, dtype=np.int64),
+            np.arange(n_cells + 1, dtype=np.int64))
+
+
+def _sub_probes(cells: np.ndarray, n_sub: np.ndarray,
+                offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nprobe, n) probed cells → flat (probed sub-cell, row) pairs: a
+    row probing a split cell probes each of its sub-cells."""
+    nprobe, n = cells.shape
+    qidx = np.tile(np.arange(n, dtype=np.int64), nprobe)
+    cells = cells.reshape(-1)
+    reps = n_sub[cells]
+    first = np.repeat(offsets[cells], reps)
+    within = np.arange(len(first)) - np.repeat(np.cumsum(reps) - reps, reps)
+    return first + within, np.repeat(qidx, reps)
+
+
+def _probe_csr(cells: np.ndarray, qidx: np.ndarray, n_cells: int):
+    """Invert (cell, query) probe pairs to CSR over cells →
+    (grouped_q, bounds (n_cells+1,)): cell c is probed by the queries
+    grouped_q[bounds[c]:bounds[c+1]]."""
+    order = np.argsort(cells, kind="stable")
+    return qidx[order], np.searchsorted(cells[order], np.arange(n_cells + 1))
+
+
 def _driver_probe_csr(qmat: np.ndarray, centroids: np.ndarray, metric: str,
-                      nprobe: int):
-    """Assign every collected query to its `nprobe` nearest cells on the
-    driver (the same `np_index_distances` + stable-argsort arithmetic as
-    `_assign_cells`, so probe sets are bit-identical to the distributed
-    assignment pass) and invert to CSR over cells:
-    → (grouped_q int64 — query indices grouped by cell, bounds (nlist+1,)
-    — cell c probes grouped_q[bounds[c]:bounds[c+1]])."""
-    nlist = centroids.shape[0]
-    d = np_index_distances(metric, qmat, centroids)  # (nlist, nq)
-    cells = np.argsort(d, axis=0, kind="stable")[:nprobe]  # (nprobe, nq)
-    nq = qmat.shape[0]
-    cells_flat = cells.reshape(-1)
-    qidx_flat = np.tile(np.arange(nq, dtype=np.int64), nprobe)
-    order = np.argsort(cells_flat, kind="stable")
-    grouped_q = qidx_flat[order]
-    bounds = np.searchsorted(cells_flat[order], np.arange(nlist + 1))
-    return grouped_q, bounds
+                      nprobe: int, n_sub: np.ndarray, offsets: np.ndarray):
+    """Probe CSR over (sub-)cells of a driver-resident query matrix,
+    with `_assign_cells` arithmetic → (grouped_q, bounds)."""
+    sc, qi = _sub_probes(_nearest_cells(metric, qmat, centroids, nprobe),
+                         n_sub, offsets)
+    return _probe_csr(sc, qi, int(offsets[-1]))
 
 
-def _lpt_bins(mass: np.ndarray, n_bins: int) -> np.ndarray:
-    """LPT pack: heaviest cell first into the lightest bin → bin_of
-    (len(mass),). Every cell gets at least unit mass so zero-estimate
-    cells round-robin across bins instead of piling into bin 0 (the
-    r15 ADVICE straggler hazard on the vamana packer)."""
-    import heapq
-
-    mass = np.maximum(np.asarray(mass, dtype=np.float64), 1.0)
-    order = np.argsort(-mass, kind="stable")
-    heap = [(0.0, b) for b in range(n_bins)]
-    bin_of = np.empty(len(mass), dtype=np.int64)
-    for c in order.tolist():
-        load, b = heapq.heappop(heap)
-        bin_of[c] = b
-        heapq.heappush(heap, (load + float(mass[c]), b))
-    return bin_of
-
-
-def _cell_tokens(bounds: np.ndarray, est_b: np.ndarray | None,
-                 par: int) -> tuple[np.ndarray, int]:
-    """Placement tokens for the broadcast scoring path → (tokens
-    (n_cells,), n_bins). Cells probed by nobody get token -1 (their
-    base rows are pruned before the exchange — they cannot contribute a
-    candidate). Probed cells are LPT-packed by estimated GEMM mass
-    (|q_c| × est |b_c|) into `n_bins <= 2×parallelism` bins, each bin
-    placed in its own partition by a collision-free murmur3 token
-    (`functions.partitioning`) — the cogroup hashed ~nlist cells into
-    the shuffle partitions and lived with balls-in-bins collisions."""
-    from ..functions.partitioning import exact_partition_tokens
-
-    q_counts = np.diff(bounds).astype(np.float64)
+def _cell_tokens(q_counts: np.ndarray, est_b: np.ndarray | None,
+                 par: int, per_core: int = 2) -> tuple[np.ndarray, int]:
+    """Placement tokens of the bin scorer → (tokens (n_cells,), n_bins).
+    Cells probed by nobody (q_counts 0) get token -1: their base rows
+    are pruned before the exchange — they cannot contribute a
+    candidate. Probed cells are LPT-packed by estimated GEMM mass
+    (|q_c| × est |b_c|) into `n_bins <= per_core×parallelism` bins,
+    each bin placed in its own partition by a collision-free murmur3
+    token (`functions.partitioning`). The broadcast delivery takes two
+    bins per core (queries do not move; more bins buy LPT balance); the
+    exchange delivery takes one, because a query row crosses the
+    exchange once per distinct bin it probes."""
+    q_counts = np.asarray(q_counts, dtype=np.float64)
     probed = np.flatnonzero(q_counts > 0)
     tokens = np.full(len(q_counts), -1, dtype=np.int64)
     if len(probed) == 0:
@@ -142,16 +172,16 @@ def _cell_tokens(bounds: np.ndarray, est_b: np.ndarray | None,
     mass = q_counts[probed]
     if est_b is not None:
         mass = mass * np.maximum(est_b[probed], 1.0)
-    n_bins = max(1, min(len(probed), 2 * par))
-    toks = exact_partition_tokens(n_bins)
-    tokens[probed] = toks[_lpt_bins(mass, n_bins)]
+    n_bins = max(1, min(len(probed), per_core * par))
+    tokens[probed] = exact_partition_tokens(n_bins)[lpt_bins(mass, n_bins)]
     return tokens, n_bins
 
 
 def _with_tokens(df: DataFrame, tokens: np.ndarray) -> DataFrame:
     """Append the per-cell placement token column (`TOK_COL` =
-    tokens[cell]) to a frame that already carries `CELL_COL` — one
-    vectorized narrow Arrow pass, no plan-bloating literal array."""
+    tokens[cell], an INT so Spark's hash matches the token search) to
+    a frame that already carries `CELL_COL` — one vectorized narrow
+    Arrow pass, no plan-bloating literal array."""
     bc = df.sparkSession.sparkContext.broadcast(tokens)
     names = [f.name for f in df.schema.fields]
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -165,213 +195,301 @@ def _with_tokens(df: DataFrame, tokens: np.ndarray) -> DataFrame:
                 b.schema.get_field_index(CELL_COL)
             ).to_numpy(zero_copy_only=False)
             yield b.append_column(
-                TOK_COL, pa.array(t[cell], type=pa.int64())
+                TOK_COL, pa.array(t[cell], type=pa.int32())
             )
 
     schema = ", ".join(f"{c} {types[c]}" for c in names)
-    return df.mapInArrow(add, schema=f"{schema}, {TOK_COL} long")
+    return df.mapInArrow(add, schema=f"{schema}, {TOK_COL} int")
 
 
-def _broadcast_scored_topk(
-    b: DataFrame,
-    base_id_col: str,
-    base_vec_col: str,
-    query_id_col: str,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    grouped_q: np.ndarray,
-    bounds: np.ndarray,
-    metric: str,
-    k: int,
-    n_bins: int,
-) -> DataFrame:
-    """Scoring stage for a DRIVER-RESIDENT query side (guide §8
-    "decide with small rows, move the big rows once"): the query matrix
-    and its per-cell probe lists ride ONE broadcast; the base side —
-    already carrying cell + placement token columns — makes its one
-    exchange into `n_bins` LPT-balanced partitions and every cell is
-    scored by one (|q_c|, |b_c|) GEMM exactly as the cogroup scored it.
-    What this removes vs the cogroup: the query-side explosion (every
-    query vector ×nprobe through the exchange), the balls-in-bins task
-    imbalance of hashing cells into shuffle partitions, and — via the
-    in-task cross-cell merge, the `_hits_batch` discipline — most of
-    the candidate rows entering the window exchange.
+def _score_cells(bids: np.ndarray, bmat: np.ndarray, bcell: np.ndarray,
+                 qmat: np.ndarray, grouped_q: np.ndarray,
+                 bounds: np.ndarray, metric: str, k: int):
+    """The one approximate-join scorer: base rows (ids, vectors, cells)
+    against the queries probing their cells (CSR `grouped_q`/`bounds`
+    into `qmat`) → (qx — rows of qmat, base ids, f64 distances), or
+    None when no cell meets a query.
 
-    Correctness does not depend on the placement: the per-cell cut
-    keeps every candidate with d <= the k-th smallest per query (ties
-    and NaN-k-th kept), a superset of any global (d, id) top-k, and the
-    final window is unchanged. Per-pair distances come from the same
-    `np_index_distances` kernel at the same (|q_c|, |b_c|) GEMM shape;
-    query/base row ORDER inside the GEMM differs from the cogroup's
-    shuffle-arrival order, which BLAS answers with last-ulp wobble —
-    exactly the run-to-run wobble the cogroup itself already has (the
-    id sets are pinned by tests, the distances to 1e-5)."""
-    spark = b.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qmat, grouped_q, bounds))
-    dim = qmat.shape[1]
+    Each cell is ONE (|q_c|, |b_c|) GEMM. The per-cell cut keeps every
+    candidate with d <= the k-th smallest of its query row (ties kept;
+    a NaN k-th keeps the whole row — there is no safe cutoff there),
+    and the cross-cell merge keeps per query the first k by (d, id)
+    plus everything tied with the k-th (the `_hits_batch` discipline):
+    a superset of every global (d, id) top-k, so the caller's window
+    is exact over the probed cells and only ~k rows per query leave
+    the task."""
+    order = np.argsort(bcell, kind="stable")
+    cs = bcell[order]
+    uc, starts = np.unique(cs, return_index=True)
+    ends = np.r_[starts[1:], len(cs)]
+    acc_q: list = []
+    acc_b: list = []
+    acc_d: list = []
+    for c, s, e in zip(uc.tolist(), starts.tolist(), ends.tolist()):
+        qs_, qe_ = int(bounds[c]), int(bounds[c + 1])
+        if qe_ <= qs_:
+            continue
+        qidx_c = grouped_q[qs_:qe_]
+        rows = order[s:e]
+        d = np_index_distances(metric, bmat[rows], qmat[qidx_c])
+        nq_c, nb = d.shape
+        if nb > k:
+            kth = np.partition(d, k - 1, axis=1)[:, k - 1]
+            qi, bj = np.nonzero(~(d > kth[:, None]))
+        else:
+            qi = np.repeat(np.arange(nq_c), nb)
+            bj = np.tile(np.arange(nb), nq_c)
+        acc_q.append(qidx_c[qi])
+        acc_b.append(bids[rows][bj])
+        acc_d.append(d[qi, bj])
+    if not acc_q:
+        return None
+    qx = np.concatenate(acc_q)
+    bx = np.concatenate(acc_b)
+    dx = np.concatenate(acc_d).astype(np.float64)
+    if len(qx) > k:
+        order = np.lexsort((bx, dx, qx))
+        qx, bx, dx = qx[order], bx[order], dx[order]
+        starts = np.flatnonzero(np.r_[True, qx[1:] != qx[:-1]])
+        counts = np.diff(np.r_[starts, len(qx)])
+        rank = np.arange(len(qx)) - np.repeat(starts, counts)
+        kth = dx[starts + np.minimum(counts - 1, k - 1)]
+        keep = (rank < k) | ~(dx > np.repeat(kth, counts))
+        qx, bx, dx = qx[keep], bx[keep], dx[keep]
+    return qx, bx, dx
 
-    def score(batches):
-        import pyarrow as pa
 
-        from ..functions.distance import np_from_arrow_list
-
-        qids_, qmat_, gq, bnd = bc.value
-        mats: list = []
-        idsl: list = []
-        cells: list = []
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column(batch.schema.get_field_index(base_vec_col))
-            mat = np_from_arrow_list(col, dim)
-            if mat is None:
-                mat = np_stack_vectors(
-                    batch.select([base_vec_col]).to_pandas()[base_vec_col]
-                )
-            mats.append(mat)
-            idsl.append(
-                batch.column(
-                    batch.schema.get_field_index(base_id_col)
-                ).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            )
-            cells.append(
-                batch.column(
-                    batch.schema.get_field_index(CELL_COL)
-                ).to_numpy(zero_copy_only=False)
-            )
-        if not mats:
-            return
-        mat = np.concatenate(mats) if len(mats) > 1 else mats[0]
-        bids = np.concatenate(idsl) if len(idsl) > 1 else idsl[0]
-        cell = np.concatenate(cells) if len(cells) > 1 else cells[0]
-        order = np.argsort(cell, kind="stable")
-        cs = cell[order]
-        uc, starts = np.unique(cs, return_index=True)
-        ends = np.r_[starts[1:], len(cs)]
-        acc_q: list = []
-        acc_b: list = []
-        acc_d: list = []
-        for c, s, e in zip(uc.tolist(), starts.tolist(), ends.tolist()):
-            qs_, qe_ = int(bnd[c]), int(bnd[c + 1])
-            if qe_ <= qs_:
-                continue
-            qidx_c = gq[qs_:qe_]
-            rows = order[s:e]
-            bm = mat[rows]
-            d = np_index_distances(metric, bm, qmat_[qidx_c])
-            nq_c, nb = d.shape
-            if nb > k:
-                # tie-keep partial cut per query row: keep every
-                # candidate with d <= the k-th smallest (a NaN k-th
-                # keeps the row's whole set — no safe cutoff there)
-                kth = np.partition(d, k - 1, axis=1)[:, k - 1]
-                qi, bj = np.nonzero(~(d > kth[:, None]))
-            else:
-                qi = np.repeat(np.arange(nq_c), nb)
-                bj = np.tile(np.arange(nb), nq_c)
-            acc_q.append(qidx_c[qi])
-            acc_b.append(bids[rows][bj])
-            acc_d.append(d[qi, bj])
-        if not acc_q:
-            return
-        qx = np.concatenate(acc_q)
-        bx = np.concatenate(acc_b)
-        dx = np.concatenate(acc_d).astype(np.float64)
-        if len(qx) > k:
-            # cross-cell tie-keep merge per query (the `_hits_batch`
-            # discipline): only ~k rows per query can survive the
-            # downstream window, so don't ship nprobe×k per query
-            order = np.lexsort((bx, dx, qx))
-            qx, bx, dx = qx[order], bx[order], dx[order]
-            starts = np.flatnonzero(np.r_[True, qx[1:] != qx[:-1]])
-            counts = np.diff(np.r_[starts, len(qx)])
-            rank = np.arange(len(qx)) - np.repeat(starts, counts)
-            kth = dx[starts + np.minimum(counts - 1, k - 1)]
-            keep = (rank < k) | ~(dx > np.repeat(kth, counts))
-            qx, bx, dx = qx[keep], bx[keep], dx[keep]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(qids_[qx]), pa.array(bx), pa.array(dx)],
-            names=[query_id_col, base_id_col, DISTANCE_COL],
-        )
-
-    out = (
-        b.where(F.col(TOK_COL) >= 0)
-        .select(base_id_col, base_vec_col, CELL_COL, TOK_COL)
-        .repartition(n_bins, F.col(TOK_COL))
-        .mapInArrow(
-            score,
-            schema=(
-                f"{query_id_col} long, {base_id_col} long, "
-                f"{DISTANCE_COL} double"
-            ),
-        )
-    )
+def _window_topk(scored: DataFrame, query_id_col: str, base_id_col: str,
+                 k: int) -> DataFrame:
+    """Per-query global top-k of the scored candidates, ties on base id
+    ascending."""
     w = Window.partitionBy(query_id_col).orderBy(
         F.col(DISTANCE_COL).asc_nulls_last(), F.col(base_id_col).asc()
     )
     return (
-        out.withColumn("_rn", F.row_number().over(w))
+        scored.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .select(query_id_col, base_id_col, DISTANCE_COL)
     )
 
 
+def _scored_topk(
+    b: DataFrame,
+    base_id_col: str,
+    base_vec_col: str,
+    query_id_col: str,
+    metric: str,
+    k: int,
+    n_bins: int,
+    dim: int,
+    bcast: tuple | None = None,
+    q: DataFrame | None = None,
+    n_cells: int = 0,
+) -> DataFrame:
+    """The bin scorer's Spark stage. `b` carries (id, vec, `CELL_COL`,
+    `TOK_COL`); cells whose token is -1 are pruned before the one
+    exchange into `n_bins` partitions, and each partition runs
+    `_score_cells` on its bin. Exactly one query delivery is given:
+
+    * `bcast` = (qids, qmat, grouped_q, bounds): the driver-resident
+      queries and their probe CSR ride one broadcast;
+    * `q` = (qid, qvec, `CELLS_COL`, `TOK_COL`) rows, one per (query,
+      distinct bin): unioned with the base rows ahead of the same
+      exchange, so both sides meet per bin; each task rebuilds its
+      bin's probe CSR (over `n_cells` cells) from the rows' cell
+      lists.
+
+    Correctness does not depend on placement (see `_score_cells`);
+    query/base row order inside a GEMM follows shuffle arrival, which
+    BLAS answers with last-ulp wobble — the id lists are pinned by
+    tests, the distances to 1e-5."""
+    spark = b.sparkSession
+    bc = spark.sparkContext.broadcast(bcast) if bcast is not None else None
+
+    def col_np(t, name):
+        return t.column(name).to_numpy().astype(np.int64, copy=False)
+
+    def score(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        parts = [x for x in batches if x.num_rows]
+        if not parts:
+            return
+        t = pa.Table.from_batches(parts)
+        if bc is not None:
+            qids, qmat, gq, bnd = bc.value
+        else:
+            isq = pc.is_valid(t.column(CELLS_COL))
+            qt, t = t.filter(isq), t.filter(pc.invert(isq))
+            if qt.num_rows == 0 or t.num_rows == 0:
+                return
+            qids = col_np(qt, base_id_col)
+            qmat = _arrow_mat(qt.column(base_vec_col), dim)
+            lists = qt.column(CELLS_COL).combine_chunks()
+            gq, bnd = _probe_csr(
+                lists.flatten().to_numpy(),
+                pc.list_parent_indices(lists).to_numpy(), n_cells,
+            )
+        hits = _score_cells(
+            col_np(t, base_id_col), _arrow_mat(t.column(base_vec_col), dim),
+            col_np(t, CELL_COL), qmat, gq, bnd, metric, k,
+        )
+        if hits is not None:
+            qx, bx, dx = hits
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qids[qx]), pa.array(bx), pa.array(dx)],
+                names=[query_id_col, base_id_col, DISTANCE_COL],
+            )
+
+    frame = b.where(F.col(TOK_COL) >= 0)
+    if q is None:
+        frame = frame.select(base_id_col, base_vec_col, CELL_COL, TOK_COL)
+    else:
+        frame = frame.select(
+            base_id_col, base_vec_col, CELL_COL,
+            F.lit(None).cast("array<int>").alias(CELLS_COL), TOK_COL,
+        ).union(q.select(
+            q.columns[0], q.columns[1], F.lit(None).cast("int").alias(CELL_COL),
+            CELLS_COL, TOK_COL,
+        ))
+    scored = frame.repartition(n_bins, F.col(TOK_COL)).mapInArrow(
+        score,
+        schema=(
+            f"{query_id_col} long, {base_id_col} long, {DISTANCE_COL} double"
+        ),
+    )
+    return _window_topk(scored, query_id_col, base_id_col, k)
+
+
 def _assign_cells(df: DataFrame, vec_col: str, centroids: np.ndarray,
                   metric: str, nprobe: int, out_cols: list[str],
-                  tokens: np.ndarray | None = None) -> DataFrame:
-    """Narrow pass: nearest `nprobe` cells per row (exploded).
+                  place: tuple | None = None,
+                  id_col: str | None = None) -> DataFrame:
+    """Narrow pass: the `nprobe` nearest cells of every row.
 
     mapInArrow (round 12, same fix as the IVF build assignment): the
-    vector matrix reshapes zero-copy from the Arrow buffer and the
-    nprobe-fold row explosion is one vectorized `RecordBatch.take`
-    instead of a pandas `.iloc` on an object-Series frame.
+    vector matrix reshapes zero-copy from the Arrow buffer and every
+    row fan-out is one vectorized `RecordBatch.take`.
 
-    `tokens` (round 16, broadcast scoring path): per-cell placement
-    tokens — when given, an extra long `_tok` column = tokens[cell]
-    rides along so the caller's `repartition(n_bins, _tok)` places each
-    cell in its LPT-chosen partition with zero extra passes."""
+    * no `place` (the exact path, probe counting): rows explode
+      ×nprobe, one `CELL_COL` each;
+    * `place` = (tokens, n_sub, offsets) and `id_col` (a base side,
+      nprobe 1): `CELL_COL` = the row's sub-cell (a split cell by the
+      id hash of `functions.partitioning.sub_cells`), `TOK_COL` = its
+      bin token;
+    * `place` without `id_col` (an exchange-delivered query side): one
+      row per (row, distinct probed bin), `CELLS_COL` = the row's
+      probed sub-cells in that bin, `TOK_COL` = the bin token."""
     spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((centroids, tokens))
+    bc = spark.sparkContext.broadcast((centroids, place))
+    if place is None:
+        extra_names, extra_types = [CELL_COL], ["int"]
+    elif id_col is not None:
+        extra_names, extra_types = [CELL_COL, TOK_COL], ["int", "int"]
+    else:
+        extra_names, extra_types = [CELLS_COL, TOK_COL], ["array<int>", "int"]
 
     def assign(batches):
         import pyarrow as pa
 
-        from ..functions.distance import np_from_arrow_list
-
-        cm, toks = bc.value
+        cm, pl = bc.value
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            col = b.column(b.schema.get_field_index(vec_col))
-            mat = np_from_arrow_list(col, cm.shape[1])
-            if mat is None:
-                mat = np_stack_vectors(
-                    b.select([vec_col]).to_pandas()[vec_col]
+            cells = _nearest_cells(
+                metric, _arrow_mat(b.column(vec_col), cm.shape[1]), cm, nprobe
+            )  # (nprobe, n)
+            take = None
+            if pl is None:
+                take = np.tile(np.arange(n, dtype=np.int64), nprobe)
+                extra = [pa.array(cells.reshape(-1).astype(np.int32))]
+            elif id_col is not None:
+                tokens, n_sub, offsets = pl
+                sc = sub_cells(
+                    cells[0],
+                    b.column(id_col).to_numpy(zero_copy_only=False),
+                    n_sub, offsets,
                 )
-            d = np_index_distances(metric, mat, cm)  # (nlist, n)
-            cells = np.argsort(d, axis=0, kind="stable")[:nprobe]  # (p, n)
-            taken = b.select(out_cols).take(
-                pa.array(np.tile(np.arange(n, dtype=np.int64), nprobe))
-            )
-            flat = cells.reshape(-1)
-            extra = [pa.array(flat.astype(np.int32), type=pa.int32())]
-            names = [*out_cols, CELL_COL]
-            if toks is not None:
-                extra.append(pa.array(toks[flat], type=pa.int64()))
-                names.append(TOK_COL)
+                extra = [pa.array(sc.astype(np.int32)),
+                         pa.array(tokens[sc].astype(np.int32))]
+            else:
+                tokens, n_sub, offsets = pl
+                sc, qi = _sub_probes(cells, n_sub, offsets)
+                tok = tokens[sc]
+                order = np.lexsort((sc, tok, qi))
+                sc, tok, qi = sc[order], tok[order], qi[order]
+                head = np.flatnonzero(
+                    np.r_[True, (qi[1:] != qi[:-1]) | (tok[1:] != tok[:-1])]
+                )
+                take = qi[head]
+                extra = [
+                    pa.ListArray.from_arrays(
+                        pa.array(np.r_[head, len(sc)].astype(np.int32)),
+                        pa.array(sc.astype(np.int32)),
+                    ),
+                    pa.array(tok[head].astype(np.int32)),
+                ]
+            kept = b.select(out_cols)
+            if take is not None:
+                kept = kept.take(pa.array(take))
             yield pa.RecordBatch.from_arrays(
-                [taken.column(i) for i in range(taken.num_columns)] + extra,
-                names=names,
+                kept.columns + extra, names=[*out_cols, *extra_names]
             )
 
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    schema_fields = ", ".join(f"{c} {types[c]}" for c in out_cols)
-    schema = f"{schema_fields}, {CELL_COL} int"
-    if tokens is not None:
-        schema += f", {TOK_COL} long"
+    schema = ", ".join(
+        [f"{c} {types[c]}" for c in out_cols]
+        + [f"{c} {t}" for c, t in zip(extra_names, extra_types)]
+    )
     return df.mapInArrow(assign, schema=schema)
+
+
+def _exact_scored_topk(q: DataFrame, b: DataFrame, query_id_col: str,
+                       query_vec_col: str, base_id_col: str,
+                       base_vec_col: str, k: int, metric: str) -> DataFrame:
+    """`method='exact'` scoring shared by `knn_join` (freshly-trained
+    cells) and `index_knn_join` (cells of a published IVF index): both
+    sides arrive carrying `__cell`; a bit-exact JVM fold over
+    materialized candidate pairs — the oracle path (hash-compared
+    against DuckDB's LATERAL join)."""
+    cand = q.join(b, on=CELL_COL)  # ONLY wide exchange: cell equi-join
+    scored = cand.withColumn(
+        DISTANCE_COL,
+        index_distance(
+            metric, base_vec_col,
+            F.col(query_vec_col).cast("array<double>"),
+        ),
+    )
+    return _window_topk(scored, query_id_col, base_id_col, k)
+
+
+def _rename_clashes(queries_df: DataFrame, query_id_col: str,
+                    query_vec_col: str, base_id_col: str, base_vec_col: str):
+    """Prefix query columns named like a base column with `_q_` →
+    (frame, query id col, query vec col)."""
+    if query_vec_col == base_vec_col:
+        queries_df = queries_df.withColumnRenamed(
+            query_vec_col, f"_q_{query_vec_col}"
+        )
+        query_vec_col = f"_q_{query_vec_col}"
+    if query_id_col == base_id_col:
+        queries_df = queries_df.withColumnRenamed(
+            query_id_col, f"_q_{query_id_col}"
+        )
+        query_id_col = f"_q_{query_id_col}"
+    return queries_df, query_id_col, query_vec_col
+
+
+def _check_target_recall(nprobe: int, target_recall: float) -> None:
+    if nprobe:
+        raise ValueError(
+            "pass either nprobe (an explicit probe count) or "
+            "target_recall, not both"
+        )
+    if not (0.0 < float(target_recall) <= 1.0):
+        raise ValueError("target_recall must be in (0, 1]")
 
 
 def knn_join(
@@ -387,7 +505,6 @@ def knn_join(
     nprobe: int = 0,
     method: str = "blas",
     n_rows: int | None = None,
-    salt: int = 1,
     calibration_queries: int = 64,
     target_recall: float | None = None,
     stats: dict | None = None,
@@ -432,52 +549,43 @@ def knn_join(
     `stats`: pass a dict to observe the resolved configuration — the
     call records `nlist` (effective trained cells), `nprobe` (resolved
     probe count) and `measured` (whether the in-call calibration
-    produced it) before returning. Observability only; results don't
-    depend on it.
+    produced it) before returning; a `method='blas'` call also records
+    `delivery` ('broadcast' or 'exchange'), `cells` (scored cells after
+    the skew split — above `nlist` when a cell split) and `bins` (scoring
+    partitions). Observability only; results don't depend on it.
 
-    `salt` handles CELL SKEW on the cogroup fast path — the one shuffle
-    AQE's skew-join cannot split (a whole cell is one task). With
-    salt=s, each base row lands in sub-bucket (cell, hash(id) mod s)
-    and each query replicates to all s sub-buckets of its probed cells,
-    so the largest task is 1/s of the hottest cell by construction; the
-    per-query window merge already unions partial top-k correctly.
-    Exchange cost: base x1 (unchanged), queries x(nprobe*s).
+    Cell skew (the one imbalance LPT placement cannot fix: a whole cell
+    is one GEMM in one task) is split automatically. Each cell's base
+    rows are estimated from the train sample; a cell past twice the
+    per-bin share ceil(n / (2·parallelism)) becomes ceil(est / share)
+    sub-cells by a hash of the base id, and every query probing it is
+    scored against each sub-cell — every (query, base) pair still meets
+    in exactly one sub-cell. Balanced data never splits.
     """
     spark = base_df.sparkSession
     # argument-only validation fires BEFORE the count/train/kmeans work
     # (round-10 review: a bad target_recall must not cost a pass over a
     # 100M-row base first)
     if target_recall is not None:
-        if nprobe:
-            raise ValueError(
-                "pass either nprobe (an explicit probe count) or "
-                "target_recall, not both"
-            )
-        if not (0.0 < float(target_recall) <= 1.0):
-            raise ValueError("target_recall must be in (0, 1]")
+        _check_target_recall(nprobe, target_recall)
         if int(calibration_queries) <= 0:
             raise ValueError(
                 "target_recall needs the in-call probe measurement — "
                 "don't pass calibration_queries=0 with it"
             )
-    if query_vec_col == base_vec_col:
-        queries_df = queries_df.withColumnRenamed(
-            query_vec_col, f"_q_{query_vec_col}"
-        )
-        query_vec_col = f"_q_{query_vec_col}"
-    if query_id_col == base_id_col:
-        queries_df = queries_df.withColumnRenamed(
-            query_id_col, f"_q_{query_id_col}"
-        )
-        query_id_col = f"_q_{query_id_col}"
+    queries_df, query_id_col, query_vec_col = _rename_clashes(
+        queries_df, query_id_col, query_vec_col, base_id_col, base_vec_col
+    )
     # Arrow-pass dtype normalization (round-13 advice): the assignment
-    # mapInArrow, the applyInArrow cogroup, and the in-call calibration
-    # scan all declare long/array<float> schemas and do not coerce —
-    # cast BOTH sides once here (no-op for already-typed frames)
+    # and scoring mapInArrow passes and the in-call calibration scan all
+    # declare long/array<float> schemas and do not coerce — cast BOTH
+    # sides once here (no-op for already-typed frames)
     from ..functions.distance import cast_id_vec
 
     base_df = cast_id_vec(base_df, base_id_col, base_vec_col)
     queries_df = cast_id_vec(queries_df, query_id_col, query_vec_col)
+    base = base_df.select(base_id_col, base_vec_col)
+    queries = queries_df.select(query_id_col, query_vec_col)
 
     # bounded deterministic train sample from the base side
     n = base_df.count() if n_rows is None else int(n_rows)
@@ -500,230 +608,112 @@ def knn_join(
     # trained centroids — are identical.
     train = np_stack_vectors(sample.toPandas()[base_vec_col][:cap])
     centroids = _kmeans(train, min(nlist, max(1, len(train))))
-    nlist_eff = centroids.shape[0]
+    nlist_eff, dim = centroids.shape[0], int(centroids.shape[1])
     measured = False
-    # kick the bounded query-side collect off NOW on a worker thread
-    # (guide §2.6 "overlap independent jobs"): it shares no lineage
-    # with the calibration scan below, and its CollectLimit round
-    # trips hide under the calibration job's wall
-    collect_fut = None
-    pool = None
-    if method != "exact" and salt <= 1:
-        from concurrent.futures import ThreadPoolExecutor
+    # the pool's `with` joins the collect thread on every exit path,
+    # errors included — no Spark collect outlives the call
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        # kick the bounded query-side collect off NOW (guide §2.6
+        # "overlap independent jobs"): it shares no lineage with the
+        # calibration scan below, and its CollectLimit round trips hide
+        # under the calibration job's wall
+        collect_fut = None
+        if method != "exact":
+            collect_fut = pool.submit(
+                _collect_queries_bounded, queries, query_id_col,
+                query_vec_col, dim,
+            )
+        if nprobe == 0 and int(calibration_queries) > 0 and nlist_eff > 1:
+            # nprobe=0 = AUTO (round 10): measure THIS join's freshly
+            # trained cells on a held-out base sample — the same
+            # build-time pass a CREATE INDEX runs — so clustered data
+            # gets the small probe count it actually needs instead of
+            # the static uniform-worst-case rule (see docstring)
+            from ..index import calibration
 
-        pool = ThreadPoolExecutor(max_workers=1)
-        collect_fut = pool.submit(
-            _collect_queries_bounded, queries_df, query_id_col,
-            query_vec_col, int(centroids.shape[1]),
-        )
-    if nprobe == 0 and int(calibration_queries) > 0 and nlist_eff > 1:
-        # nprobe=0 = AUTO (round 10): measure THIS join's freshly
-        # trained cells on a held-out base sample — the same build-time
-        # pass a CREATE INDEX runs — so clustered data gets the small
-        # probe count it actually needs instead of the static
-        # uniform-worst-case rule (see docstring)
-        from ..index.calibration import (
-            IVF_TARGET,
-            measure_probe_calibration,
-            nprobe_for_target,
-        )
-
-        cal = measure_probe_calibration(
-            base_df.select(base_id_col, base_vec_col), base_id_col,
-            base_vec_col, centroids, metric, n, IVF_TARGET,
-            n_queries=int(calibration_queries),
-        )
-        if target_recall is not None:
-            nprobe = nprobe_for_target({"calibration": cal}, target_recall)
-            if nprobe <= 0:
-                if pool is not None:
-                    pool.shutdown(wait=False)
-                raise ValueError(
-                    "knn_join: the in-call probe measurement came back "
-                    "degenerate (too few rows/cells) — target_recall "
-                    "cannot be honored; drop target_recall and pass an "
-                    "explicit nprobe"
+            cal = calibration.measure_probe_calibration(
+                base, base_id_col, base_vec_col, centroids, metric, n,
+                calibration.IVF_TARGET, n_queries=int(calibration_queries),
+            )
+            if target_recall is not None:
+                nprobe = calibration.nprobe_for_target(
+                    {"calibration": cal}, target_recall
                 )
-            measured = True
-        elif cal is not None:
-            nprobe = int(cal["nprobe"])
-            measured = True
-    elif target_recall is not None:
-        if pool is not None:
-            pool.shutdown(wait=False)
-        raise ValueError(
-            "knn_join: target_recall needs >1 trained cell to measure "
-            "a curve; drop target_recall and pass an explicit nprobe"
-        )
+                if nprobe <= 0:
+                    raise ValueError(
+                        "knn_join: the in-call probe measurement came "
+                        "back degenerate (too few rows/cells) — "
+                        "target_recall cannot be honored; drop "
+                        "target_recall and pass an explicit nprobe"
+                    )
+                measured = True
+            elif cal is not None:
+                nprobe = int(cal["nprobe"])
+                measured = True
+        elif target_recall is not None:
+            raise ValueError(
+                "knn_join: target_recall needs >1 trained cell to measure "
+                "a curve; drop target_recall and pass an explicit nprobe"
+            )
+        got = collect_fut.result() if collect_fut is not None else None
     if nprobe == 0:
         # static fallback: calibration disabled or degenerate — the
         # uniform-worst-case rule, same as ivf_nlist=0/nprobe=0 search
-        nprobe = auto_nprobe(nlist_eff, int(centroids.shape[1]))
+        nprobe = auto_nprobe(nlist_eff, dim)
     nprobe = min(max(1, nprobe), nlist_eff)
     if stats is not None:
         stats.update(
             nlist=int(nlist_eff), nprobe=int(nprobe), measured=bool(measured)
         )
 
-    if collect_fut is not None:
-        # broadcast-queries scoring (round 16, guide §8): when the query
-        # side fits the driver cap, ship it (plus the per-cell probe
-        # lists, assigned driver-side with `_assign_cells` arithmetic)
-        # in ONE broadcast — the cogroup exchange carried every query
-        # vector ×nprobe; this path exchanges the base side once into
-        # LPT-balanced bins and only ~nq×k candidate rows afterwards.
-        # An explicit `salt` keeps the cogroup spelling (single-giant-
-        # cell sub-splitting is the one skew LPT placement cannot fix).
-        got = collect_fut.result()
-        pool.shutdown()
-        if got is not None:
-            qids_np, qmat = got
-            grouped_q, bounds = _driver_probe_csr(
-                qmat, centroids, metric, nprobe
-            )
-            # base-side mass estimate per cell from the already-resident
-            # train sample (one driver GEMM — no extra Spark pass)
-            est_b = np.bincount(
-                np.argmin(
-                    np_index_distances(metric, train, centroids), axis=0
-                ),
-                minlength=nlist_eff,
-            ).astype(np.float64)
-            par = max(1, spark.sparkContext.defaultParallelism)
-            tokens, n_bins = _cell_tokens(bounds, est_b, par)
-            b = _assign_cells(
-                base_df.select(base_id_col, base_vec_col), base_vec_col,
-                centroids, metric, 1, [base_id_col, base_vec_col],
-                tokens=tokens,
-            )
-            return _broadcast_scored_topk(
-                b, base_id_col, base_vec_col, query_id_col, qids_np,
-                qmat, grouped_q, bounds, metric, k, n_bins,
-            )
-
-    b = _assign_cells(
-        base_df.select(base_id_col, base_vec_col), base_vec_col, centroids,
-        metric, 1, [base_id_col, base_vec_col],
-    )
-    q = _assign_cells(
-        queries_df.select(query_id_col, query_vec_col), query_vec_col,
-        centroids, metric, nprobe, [query_id_col, query_vec_col],
-    )
-
-    return _cell_scored_topk(
-        q, b, query_id_col, query_vec_col, base_id_col, base_vec_col,
-        k, metric, method, salt,
-    )
-
-
-def _cell_scored_topk(
-    q: DataFrame,
-    b: DataFrame,
-    query_id_col: str,
-    query_vec_col: str,
-    base_id_col: str,
-    base_vec_col: str,
-    k: int,
-    metric: str,
-    method: str,
-    salt: int,
-) -> DataFrame:
-    """Scoring stage shared by `knn_join` (freshly-trained cells) and
-    `index_knn_join` (cells of a published IVF index): both sides arrive
-    already carrying `__cell`; score within cells, merge per-query
-    top-k."""
-    out_schema = (
-        f"{query_id_col} long, {base_id_col} long, {DISTANCE_COL} double"
-    )
     if method == "exact":
-        # bit-exact JVM fold over materialized candidate pairs — the
-        # oracle path (hash-compared against DuckDB's LATERAL join)
-        cand = q.join(b, on=CELL_COL)  # ONLY wide exchange: cell equi-join
-        scored = cand.withColumn(
-            DISTANCE_COL,
-            index_distance(
-                metric, base_vec_col,
-                F.col(query_vec_col).cast("array<double>"),
-            ),
+        b = _assign_cells(base, base_vec_col, centroids, metric, 1,
+                          [base_id_col, base_vec_col])
+        q = _assign_cells(queries, query_vec_col, centroids, metric, nprobe,
+                          [query_id_col, query_vec_col])
+        return _exact_scored_topk(q, b, query_id_col, query_vec_col,
+                                  base_id_col, base_vec_col, k, metric)
+
+    # base-side rows per cell, estimated from the already-resident train
+    # sample (one driver GEMM — no extra Spark pass): the LPT mass, and
+    # the skew split of cells past twice the per-bin share
+    est_b = np.bincount(
+        np.argmin(np_index_distances(metric, train, centroids), axis=0),
+        minlength=nlist_eff,
+    ).astype(np.float64)
+    par = max(1, spark.sparkContext.defaultParallelism)
+    n_sub, offsets = split_cells(
+        est_b / max(1, len(train)) * n, max(1, -(-n // (2 * par)))
+    )
+    n_cells = int(offsets[-1])
+    if got is not None:
+        qids_np, qmat = got
+        grouped_q, bounds = _driver_probe_csr(
+            qmat, centroids, metric, nprobe, n_sub, offsets
         )
+        q_counts = np.diff(bounds)
     else:
-        # fast path: COGROUP both sides by cell instead of materializing
-        # candidate pairs. The exchange then carries each base row once
-        # and each query row nprobe times — never |q_cell| x |b_cell|
-        # pair rows with two vectors aboard — and each cell scores as
-        # ONE (nq, nb) GEMM + tie-safe partial top-k. Cells are the unit
-        # of parallelism: pick nlist >= cluster parallelism so no single
-        # task owns too much of the corpus.
-
-        def score_cell(qtab, btab):
-            # applyInArrow (round 12, same fix as the scan paths): both
-            # sides' vector matrices reshape zero-copy from the Arrow
-            # buffers instead of round-tripping pandas object Series
-            import pyarrow as pa
-
-            from ..functions.distance import np_from_arrow_list
-
-            empty = pa.table(
-                {query_id_col: pa.array([], type=pa.int64()),
-                 base_id_col: pa.array([], type=pa.int64()),
-                 DISTANCE_COL: pa.array([], type=pa.float64())}
-            )
-            if qtab.num_rows == 0 or btab.num_rows == 0:
-                return empty
-
-            qcol = qtab.column(qtab.schema.get_field_index(query_vec_col))
-            bcol = btab.column(btab.schema.get_field_index(base_vec_col))
-            qdim = len(qcol[0].as_py() or [])
-            bdim = len(bcol[0].as_py() or [])
-            qm = np_from_arrow_list(qcol, qdim)
-            if qm is None:
-                qm = np_stack_vectors(qcol.to_pandas())
-            bm = np_from_arrow_list(bcol, bdim)
-            if bm is None:
-                bm = np_stack_vectors(bcol.to_pandas())
-            d = np_index_distances(metric, bm, qm)  # (nq, nb)
-            kk = min(k, bm.shape[0])
-            qids = qtab.column(
-                qtab.schema.get_field_index(query_id_col)
-            ).to_numpy(zero_copy_only=False)
-            bids = btab.column(
-                btab.schema.get_field_index(base_id_col)
-            ).to_numpy(zero_copy_only=False)
-            frame = np_topk_frame(
-                d, bids, qids, kk, base_id_col,
-                DISTANCE_COL, qidx_col=query_id_col, qidx_dtype=np.int64,
-            )
-            return pa.Table.from_pandas(frame, preserve_index=False)
-
-        salt = max(1, int(salt))
-        if salt > 1:
-            # deterministic sub-split: base by id hash, queries to all
-            # sub-buckets (see docstring; exactness per (cell, salt)
-            # pair is preserved — every (q, b) candidate pair still
-            # meets in exactly one group)
-            b = b.withColumn(
-                "_salt", F.pmod(F.abs(F.hash(F.col(base_id_col))), F.lit(salt))
-            )
-            q = q.withColumn(
-                "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-            )
-            group_cols = [CELL_COL, "_salt"]
-        else:
-            group_cols = [CELL_COL]
-        scored = (
-            q.groupby(*group_cols)
-            .cogroup(b.groupby(*group_cols))
-            .applyInArrow(score_cell, schema=out_schema)
-        )
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col(DISTANCE_COL).asc_nulls_last(), F.col(base_id_col).asc()
+        # exchange delivery: no query side on the driver, so every cell
+        # counts as probed once and the base estimate alone packs bins
+        q_counts = np.ones(n_cells)
+    tokens, n_bins = _cell_tokens(
+        q_counts, np.repeat(est_b / n_sub, n_sub), par,
+        2 if got is not None else 1,
     )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select(query_id_col, base_id_col, DISTANCE_COL)
-    )
+    if stats is not None:
+        stats.update(delivery="broadcast" if got is not None else "exchange",
+                     cells=n_cells, bins=int(n_bins))
+    place = (tokens, n_sub, offsets)
+    b = _assign_cells(base, base_vec_col, centroids, metric, 1,
+                      [base_id_col, base_vec_col], place, base_id_col)
+    if got is not None:
+        return _scored_topk(b, base_id_col, base_vec_col, query_id_col,
+                            metric, k, n_bins, dim,
+                            bcast=(qids_np, qmat, grouped_q, bounds))
+    q = _assign_cells(queries, query_vec_col, centroids, metric, nprobe,
+                      [query_id_col, query_vec_col], place)
+    return _scored_topk(b, base_id_col, base_vec_col, query_id_col, metric,
+                        k, n_bins, dim, q=q, n_cells=n_cells)
 
 
 def index_knn_join(
@@ -736,7 +726,6 @@ def index_knn_join(
     nprobe: int = 0,
     method: str = "blas",
     catalog=None,
-    salt: int = 1,
     target_recall: float | None = None,
 ) -> DataFrame:
     """k-NN join against a PUBLISHED IVFFlat index instead of freshly
@@ -760,8 +749,10 @@ def index_knn_join(
     * base side: the cell-PARTITIONED vectors parquet read as-is — no
       assignment pass, no exchange; pruned to the union of probed cells
       (partition pruning, same as index search);
-    * query side: one narrow assignment pass to its `nprobe` nearest
-      cells, then the same cogroup-GEMM / exact scoring as `knn_join`.
+    * query side: its `nprobe` nearest cells, then the same bin
+      scorer (broadcast or exchange delivery) / exact scoring as
+      `knn_join`. The index's cells are kept whole — no skew split —
+      and packed into bins by their query counts.
       `nprobe=0` resolves exactly like `index_scan` on this index
       (round 9): the index's own PINNED build nprobe when one was set
       (reference semantics — FAISS defaults nprobe=1, and the join
@@ -776,7 +767,7 @@ def index_knn_join(
     """
     from ..index.api import _deleted_ids, _load
     from ..index.ivf import CELL_COL as IVF_CELL_COL
-    from ..index.ivf import VECTORS_DIR, IvfFlatEngine, auto_nprobe
+    from ..index.ivf import VECTORS_DIR, IvfFlatEngine, _decode_cells_df
 
     cat, manifest, d, impl = _load(index_name, "", catalog)
     if not isinstance(impl, IvfFlatEngine):
@@ -794,13 +785,7 @@ def index_knn_join(
     if nlist_eff == 0:
         raise ValueError(f"index '{index_name}' is empty (no trained cells)")
     if target_recall is not None:
-        if nprobe:
-            raise ValueError(
-                "pass either nprobe (an explicit probe count) or "
-                "target_recall, not both"
-            )
-        if not (0.0 < float(target_recall) <= 1.0):
-            raise ValueError("target_recall must be in (0, 1]")
+        _check_target_recall(nprobe, target_recall)
         from ..index.calibration import nprobe_for_target
 
         nprobe = nprobe_for_target(manifest, target_recall)
@@ -826,16 +811,15 @@ def index_knn_join(
         )
     nprobe = min(max(1, nprobe), nlist_eff)
 
-    if query_vec_col == base_vec_col:
-        queries_df = queries_df.withColumnRenamed(
-            query_vec_col, f"_q_{query_vec_col}"
-        )
-        query_vec_col = f"_q_{query_vec_col}"
-    if query_id_col == base_id_col:
-        queries_df = queries_df.withColumnRenamed(
-            query_id_col, f"_q_{query_id_col}"
-        )
-        query_id_col = f"_q_{query_id_col}"
+    queries_df, query_id_col, query_vec_col = _rename_clashes(
+        queries_df, query_id_col, query_vec_col, base_id_col, base_vec_col
+    )
+    from ..functions.distance import cast_id_vec
+
+    queries = cast_id_vec(queries_df, query_id_col, query_vec_col).select(
+        query_id_col, query_vec_col
+    )
+    dim = int(centroids.shape[1])
 
     b = spark.read.parquet(f"{d}/{VECTORS_DIR}")
     if IVF_CELL_COL != CELL_COL:  # pragma: no cover - same constant today
@@ -843,77 +827,62 @@ def index_knn_join(
     deleted = _deleted_ids(spark, d, manifest)
     if deleted is not None:
         b = b.join(F.broadcast(deleted), on=base_id_col, how="anti")
-    sq8 = impl._sq8_params(manifest)
-    from ..functions.distance import cast_id_vec
 
-    if method != "exact" and salt <= 1:
-        # broadcast-queries scoring (round 16, guide §8 — see knn_join):
-        # the probed-cell union is additionally known driver-side here,
-        # so the partition pruning below costs NO extra Spark job (the
-        # cogroup path re-runs the query assignment pass to collect it)
-        got = _collect_queries_bounded(
-            cast_id_vec(queries_df, query_id_col, query_vec_col),
-            query_id_col, query_vec_col, int(centroids.shape[1]),
+    got = None
+    if method != "exact":
+        # broadcast delivery (round 16, guide §8 — see knn_join): the
+        # probe counts are then known driver-side at no Spark job
+        got = _collect_queries_bounded(queries, query_id_col,
+                                       query_vec_col, dim)
+    if got is not None:
+        qids_np, qmat = got
+        grouped_q, bounds = _driver_probe_csr(
+            qmat, centroids, metric, nprobe, *_unsplit(nlist_eff)
         )
-        if got is not None:
-            qids_np, qmat = got
-            grouped_q, bounds = _driver_probe_csr(
-                qmat, centroids, metric, nprobe
-            )
-            probed = np.flatnonzero(np.diff(bounds) > 0)
-            bb = b
-            if len(probed) < nlist_eff:
-                # keep the isin prune: it reaches the parquet scan as
-                # partition pruning (the token filter inside the scoring
-                # stage cannot)
-                bb = bb.where(
-                    F.col(CELL_COL).isin([int(c) for c in probed])
-                )
-            if sq8 is not None:
-                from ..index.ivf import _decode_cells_df
-
-                bb = _decode_cells_df(bb, base_id_col, base_vec_col, sq8,
-                                      with_cell=True)
-            par = max(1, spark.sparkContext.defaultParallelism)
-            tokens, n_bins = _cell_tokens(bounds, None, par)
-            bb = _with_tokens(
-                bb.select(base_id_col, base_vec_col, CELL_COL), tokens
-            )
-            return _broadcast_scored_topk(
-                bb, base_id_col, base_vec_col, query_id_col, qids_np,
-                qmat, grouped_q, bounds, metric, k, n_bins,
-            )
-
-    q = _assign_cells(
-        cast_id_vec(queries_df, query_id_col, query_vec_col),
-        query_vec_col, centroids, metric, nprobe,
-        [query_id_col, query_vec_col],
-    )
-    if nprobe < nlist_eff:
-        # partition pruning: only cells some query probes are scanned.
-        # Collecting the distinct probed cells re-runs the (narrow,
-        # cheap) query assignment pass once more — worth it whenever the
-        # base outweighs the query side, which is this operator's use
-        # case: it converts the base-side read+cogroup from ALL cells to
-        # the probed union (a query workload with locality probes far
-        # fewer than nlist cells). The collect is bounded by nlist_eff
-        # ints. Cells probed by nobody would only cogroup against empty
-        # query groups — pruning is a scan optimization, not a
-        # correctness requirement.
-        probed = [
-            int(r[CELL_COL])
-            for r in q.select(CELL_COL).distinct().collect()
-        ]
-        if len(probed) < nlist_eff:
-            b = b.where(F.col(CELL_COL).isin(probed))
+        q_counts = np.diff(bounds)
+    elif nprobe < nlist_eff:
+        # ONE job over the (narrow, cheap) query assignment pass: the
+        # per-cell query counts feed both the partition prune below and
+        # the LPT bin mass — worth it whenever the base outweighs the
+        # query side, which is this operator's use case (a query
+        # workload with locality probes far fewer than nlist cells).
+        # The collect is bounded by nlist_eff rows.
+        q_counts = np.zeros(nlist_eff)
+        for r in (
+            _assign_cells(queries, query_vec_col, centroids, metric, nprobe,
+                          [query_id_col])
+            .groupBy(CELL_COL).count().collect()
+        ):
+            q_counts[int(r[CELL_COL])] = r["count"]
+    else:
+        q_counts = np.ones(nlist_eff)  # full probe: every cell, evenly
+    probed = np.flatnonzero(q_counts > 0)
+    if len(probed) < nlist_eff:
+        # partition pruning: only cells some query probes are scanned
+        # (a scan optimization — the scorer's token filter alone cannot
+        # reach the parquet scan)
+        b = b.where(F.col(CELL_COL).isin([int(c) for c in probed]))
+    sq8 = impl._sq8_params(manifest)
     if sq8 is not None:
         # dequantize AFTER the cell pruning so the parquet scan still
         # reads only the probed cells' (1/4-size) code files
-        from ..index.ivf import _decode_cells_df
-
         b = _decode_cells_df(b, base_id_col, base_vec_col, sq8,
                              with_cell=True)
-    return _cell_scored_topk(
-        q, b, query_id_col, query_vec_col, base_id_col, base_vec_col,
-        k, metric, method, salt,
-    )
+    if method == "exact":
+        q = _assign_cells(queries, query_vec_col, centroids, metric, nprobe,
+                          [query_id_col, query_vec_col])
+        return _exact_scored_topk(q, b, query_id_col, query_vec_col,
+                                  base_id_col, base_vec_col, k, metric)
+    par = max(1, spark.sparkContext.defaultParallelism)
+    tokens, n_bins = _cell_tokens(q_counts, None, par,
+                                  2 if got is not None else 1)
+    b = _with_tokens(b.select(base_id_col, base_vec_col, CELL_COL), tokens)
+    if got is not None:
+        return _scored_topk(b, base_id_col, base_vec_col, query_id_col,
+                            metric, k, n_bins, dim,
+                            bcast=(qids_np, qmat, grouped_q, bounds))
+    q = _assign_cells(queries, query_vec_col, centroids, metric, nprobe,
+                      [query_id_col, query_vec_col],
+                      (tokens, *_unsplit(nlist_eff)))
+    return _scored_topk(b, base_id_col, base_vec_col, query_id_col, metric,
+                        k, n_bins, dim, q=q, n_cells=nlist_eff)

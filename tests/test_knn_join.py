@@ -71,14 +71,14 @@ def test_no_cartesian_product(spark, emb):
 
 
 def test_blas_path_never_materializes_pairs(spark, emb, monkeypatch):
-    """Fast-path plan shapes. Default (round 16): the broadcast-queries
-    spelling — scan → MapInArrow scoring with exactly TWO exchanges
-    (the token-placed base gather + the window merge), the query side
-    never on the wire, and no join operator. Cogroup fallback (cap
-    disabled): the round-12 shape — one exchange per side keyed on cell
-    + FlatMapCoGroupsInArrow + the window merge, three exchanges. Either
-    way, a pair-materializing join (|q_cell| × |b_cell| vector rows on
-    the wire) must never appear."""
+    """Fast-path plan shapes. Broadcast delivery (default): scan →
+    MapInArrow scoring with TWO exchanges (the token-placed base gather
+    + the window merge), the query side never on the wire. Exchange
+    delivery (cap disabled): base and query rows meet in the same
+    token-keyed exchange — two exchanges as well (the retired per-cell
+    cogroup took three). Either way, no join operator: a
+    pair-materializing join (|q_cell| × |b_cell| vector rows on the
+    wire) must never appear."""
     queries = emb.where(F.col("vec_id") < 10)
 
     def mk():
@@ -90,14 +90,16 @@ def test_blas_path_never_materializes_pairs(spark, emb, monkeypatch):
     plan = mk()._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan, plan
     assert "FlatMapCoGroupsInArrow" not in plan, plan
+    assert "Union" not in plan, plan
     assert "Join" not in plan, plan
     assert plan.count("Exchange") == 2, plan
 
     monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0")
     plan = mk()._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInArrow" in plan, plan
+    assert "MapInArrow" in plan and "Union" in plan, plan
+    assert "FlatMapCoGroupsInArrow" not in plan, plan
     assert "Join" not in plan, plan
-    assert plan.count("Exchange") == 3, plan
+    assert plan.count("Exchange") == 2, plan
 
 
 def test_exact_method_matches_blas_ids(spark, emb):
@@ -115,20 +117,119 @@ def test_exact_method_matches_blas_ids(spark, emb):
     assert ka == kb
 
 
-def test_salted_cogroup_matches_unsalted(spark, emb):
-    """salt=s splits each cell into s cogroup tasks without changing
-    results: every (query, base) candidate pair still meets in exactly
-    one (cell, salt) group and the window merge unions partial top-k."""
-    queries = emb.where(F.col("vec_id") < 25)
-    kw = dict(k=3, nlist=8, nprobe=3)
-    plain = knn_join(queries, "vec_id", "embedding", emb, "vec_id",
-                     "embedding", **kw).collect()
-    salted = knn_join(queries, "vec_id", "embedding", emb, "vec_id",
-                      "embedding", salt=4, **kw).collect()
-    key = lambda rows: sorted(
-        (r["_q_vec_id"], r["vec_id"], round(r["_distance"], 6)) for r in rows
+@pytest.fixture(scope="module")
+def skewed(spark):
+    """A base where most rows are ONE duplicated vector (far from the
+    rest), so k-means puts ~80% of the rows in one cell."""
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    n, dim = 1200, 16
+    mat = rng.random((n, dim), dtype=np.float32)
+    mat[200:] = np.float32(4.0)
+    base = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(n), "embedding": list(mat)})
     )
-    assert key(plain) == key(salted)
+    return base, mat
+
+
+def test_knn_join_skew_split(spark, skewed, monkeypatch):
+    """A cell past twice the per-bin share splits into sub-cells by
+    base-id hash (replacing the old `salt` knob): at full probe both
+    deliveries still return the numpy brute-force (query, id) lists —
+    ties on the duplicated vector broken by id — and the split engages
+    (more scored cells than trained ones)."""
+    base, mat = skewed
+    qi = np.r_[np.arange(0, 200, 10), np.arange(200, 1200, 100)]
+    queries = base.where(F.col("vec_id").isin([int(i) for i in qi]))
+    d = ((mat[qi][:, None, :] - mat[None, :, :]) ** 2).sum(-1)
+    k = 7
+    want = sorted(
+        (int(q), int(j))
+        for q, row in zip(qi, d)
+        for j in np.lexsort((np.arange(len(mat)), row))[:k]
+    )
+    for cap in ("64", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", cap)
+        stats: dict = {}
+        got = knn_join(
+            queries, "vec_id", "embedding", base, "vec_id", "embedding",
+            k=k, nlist=6, nprobe=6, calibration_queries=0, stats=stats,
+        ).collect()
+        assert stats["delivery"] == ("broadcast" if cap == "64"
+                                     else "exchange")
+        assert stats["cells"] > stats["nlist"], stats
+        assert sorted((r["_q_vec_id"], r["vec_id"]) for r in got) == want
+
+
+def test_knn_join_exchange_query_rows_bounded(spark, emb, monkeypatch):
+    """Over the cap, each query crosses the exchange once per DISTINCT
+    probed bin, carrying all its probed cells in that bin — not once
+    per probed cell: with nlist > bins and nprobe > 1 the query rows
+    entering the exchange are <= nq × distinct probed bins and strictly
+    fewer than nq × nprobe."""
+    from duckdb_ann_spark.operators import knn_join as kj
+
+    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0")
+    nq, nlist, nprobe = 40, 32, 6
+    seen = {}
+    real = kj._scored_topk
+
+    def spy(*a, q=None, **kw):
+        # `q` is exactly the query side of the scorer's one exchange
+        seen["per_q"] = q.groupBy(q.columns[0]).agg(
+            F.count("*").alias("rows"),
+            F.countDistinct("__tok").alias("bins"),
+            F.sum(F.size("__cells")).alias("cells"),
+        ).toPandas()
+        return real(*a, q=q, **kw)
+
+    monkeypatch.setattr(kj, "_scored_topk", spy)
+    stats: dict = {}
+    queries = emb.where(F.col("vec_id") < nq)
+    out = knn_join(queries, "vec_id", "embedding", emb, "vec_id",
+                   "embedding", k=3, nlist=nlist, nprobe=nprobe,
+                   calibration_queries=0, stats=stats)
+    assert out.count() == nq * 3
+    assert stats["delivery"] == "exchange"
+    assert stats["nlist"] > stats["bins"], stats
+    per_q = seen["per_q"]
+    assert len(per_q) == nq
+    assert (per_q["rows"] == per_q["bins"]).all()  # one row per bin
+    assert (per_q["rows"] <= min(nprobe, stats["bins"])).all()
+    assert (per_q["cells"] >= nprobe).all()  # every probe carried
+    assert per_q["rows"].sum() < nq * nprobe, per_q
+
+
+def test_knn_join_collect_pool_shut_down_on_error(spark, emb, monkeypatch):
+    """Any error while the query-side collect runs in its helper thread
+    (here: the in-call calibration raising) must still shut the pool
+    down — no thread, and no Spark collect, outlives the call."""
+    import duckdb_ann_spark.index.calibration as cal
+    from duckdb_ann_spark.operators import knn_join as kj
+
+    pools = []
+
+    class Pool(kj.ThreadPoolExecutor):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            self.closed = False
+            pools.append(self)
+
+        def shutdown(self, *a, **kw):
+            self.closed = True
+            return super().shutdown(*a, **kw)
+
+    def boom(*a, **kw):
+        raise RuntimeError("calibration failed")
+
+    monkeypatch.setattr(kj, "ThreadPoolExecutor", Pool)
+    monkeypatch.setattr(cal, "measure_probe_calibration", boom)
+    with pytest.raises(RuntimeError, match="calibration failed"):
+        knn_join(emb.where(F.col("vec_id") < 10), "vec_id", "embedding",
+                 emb, "vec_id", "embedding", k=3, nlist=8)
+    assert len(pools) == 1 and pools[0].closed
+    assert all(not t.is_alive() for t in pools[0]._threads)
 
 
 def test_knn_join_auto_nlist(spark, sf_dir):
@@ -385,13 +486,14 @@ def test_index_knn_join_target_recall(spark, clustered, tmp_path):
     drop_index("ikj_pin", cat)
 
 
-def test_broadcast_path_matches_cogroup(spark, emb, monkeypatch):
-    """Round-16 broadcast-queries scoring vs the cogroup spelling: the
-    (query, base) id sets must be identical and the distances equal to
-    BLAS ulp wobble (the cogroup's own shuffle-arrival row order already
-    wobbles the GEMM at the last ulp — per-pair values are not
-    bit-pinned on either spelling). Covers partial probe, k larger than
-    a cell, and all three metrics."""
+def test_broadcast_and_exchange_deliveries_match(spark, emb, monkeypatch):
+    """The two query deliveries of the one bin scorer — broadcast
+    (under the cap) and the token-keyed exchange (cap 0): the (query,
+    base) id lists must be identical and the distances equal to BLAS
+    ulp wobble (shuffle-arrival row order wobbles the GEMM at the last
+    ulp — per-pair values are not bit-pinned on either delivery).
+    Covers partial probe, k larger than a cell, and all three
+    metrics."""
     queries = emb.where(F.col("vec_id") < 25)
 
     def run(**kw):
@@ -417,16 +519,18 @@ def test_broadcast_path_matches_cogroup(spark, emb, monkeypatch):
 
 
 def test_broadcast_path_falls_back_over_cap(spark, emb, monkeypatch):
-    """A query side over the byte cap must take the cogroup spelling
+    """A query side over the byte cap must take the exchange delivery
     (bounded collect, no driver blow-up) and produce the same ids."""
     queries = emb.where(F.col("vec_id") < 25)
     monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0.0001")
+    stats: dict = {}
     df = knn_join(
         queries, "vec_id", "embedding", emb, "vec_id", "embedding",
-        k=2, nlist=8, nprobe=2,
+        k=2, nlist=8, nprobe=2, stats=stats,
     )
+    assert stats["delivery"] == "exchange"
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInArrow" in plan, plan
+    assert "Union" in plan, plan
     a = sorted((r["_q_vec_id"], r["vec_id"]) for r in df.collect())
     monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "64")
     b = sorted(
@@ -439,41 +543,48 @@ def test_broadcast_path_falls_back_over_cap(spark, emb, monkeypatch):
     assert a == b
 
 
-def test_index_broadcast_path_matches_cogroup(spark, emb, ivf_cat,
-                                              monkeypatch):
-    """index_knn_join parity across the two spellings, including the
-    tombstone anti-join riding in front of the broadcast scoring."""
+def test_index_broadcast_and_exchange_deliveries_match(spark, emb, ivf_cat,
+                                                      monkeypatch):
+    """index_knn_join parity across the two query deliveries, with the
+    tombstone anti-join riding in front of the scorer, on a plain and
+    an SQ8 index, at partial and full probe."""
     from duckdb_ann_spark.index import create_index, delete_from_index
     from duckdb_ann_spark.operators.knn_join import index_knn_join
 
-    create_index(emb, "vec_id", "embedding", "kjb_idx", engine="faiss",
-                 type="IVFFlat", ivf_nlist=8, nprobe=3, catalog=ivf_cat)
-    delete_from_index(spark, "kjb_idx", [3, 7], catalog=ivf_cat)
     queries = emb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
+    for name, opts in (("kjb_idx", {}), ("kjb_sq8", {"quantization": "sq8"})):
+        create_index(emb, "vec_id", "embedding", name, engine="faiss",
+                     type="IVFFlat", ivf_nlist=8, nprobe=3, catalog=ivf_cat,
+                     **opts)
+        delete_from_index(spark, name, [3, 7], catalog=ivf_cat)
+        for nprobe in (0, 8):
 
-    def run():
-        return sorted(
-            (r["qid"], r["vec_id"])
-            for r in index_knn_join(
-                spark, "kjb_idx", queries, "qid", "embedding", k=4,
-                catalog=ivf_cat,
-            ).collect()
-        )
+            def run():
+                return sorted(
+                    (r["qid"], r["vec_id"], r["_distance"])
+                    for r in index_knn_join(
+                        spark, name, queries, "qid", "embedding", k=4,
+                        nprobe=nprobe, catalog=ivf_cat,
+                    ).collect()
+                )
 
-    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "64")
-    a = run()
-    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0")
-    b = run()
-    assert a == b
-    assert not any(bid in (3, 7) for _, bid in a)
+            monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "64")
+            a = run()
+            monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0")
+            b = run()
+            assert [x[:2] for x in a] == [x[:2] for x in b], (name, nprobe)
+            assert np.allclose([x[2] for x in a], [x[2] for x in b],
+                               rtol=1e-4, atol=1e-5), (name, nprobe)
+            assert len(a) == 20 * 4
+            assert not any(x[1] in (3, 7) for x in a)
 
 
 def test_lpt_bins_balance_and_zero_mass():
     """LPT packs heaviest-first into the lightest bin; zero-estimate
     cells round-robin instead of piling into bin 0 (r15 ADVICE)."""
-    from duckdb_ann_spark.operators.knn_join import _lpt_bins
+    from duckdb_ann_spark.functions.partitioning import lpt_bins as _lpt_bins
 
     mass = np.array([100.0, 90.0, 10.0, 10.0, 0.0, 0.0, 0.0, 0.0])
     bins = _lpt_bins(mass, 2)
@@ -495,8 +606,32 @@ def test_cell_tokens_prune_and_place():
 
     # 6 cells, cells 1 and 4 unprobed
     bounds = np.array([0, 2, 2, 5, 9, 9, 12])
-    tokens, n_bins = _cell_tokens(bounds, None, par=2)
+    tokens, n_bins = _cell_tokens(np.diff(bounds), None, par=2)
     assert tokens[1] == -1 and tokens[4] == -1
     probed = [0, 2, 3, 5]
     parts = {murmur3_hash_int(int(tokens[c])) % n_bins for c in probed}
     assert len(parts) == min(len(probed), n_bins)
+
+
+def test_cell_tokens_balanced_data_unchanged():
+    """On balanced data the skew split is the identity and the
+    broadcast delivery's placement tokens are exactly the ones the
+    pre-split packer produced (values pinned from it)."""
+    from duckdb_ann_spark.functions.partitioning import split_cells
+    from duckdb_ann_spark.operators.knn_join import _cell_tokens
+
+    rng = np.random.default_rng(5)
+    counts = rng.integers(0, 6, 24)
+    counts[[3, 17]] = 0
+    est = rng.integers(0, 40, 24).astype(float)
+    for par, want in (
+        (2, [6, 0, -1, -1, 12, 12, 2, 2, 6, -1, 12, 0, 0, 2, -1, -1, -1,
+             -1, -1, 12, 2, 6, 6, 0]),
+        (4, [0, 25, -1, -1, 15, 12, 5, 2, 1, -1, 25, 0, 1, 15, -1, -1, -1,
+             -1, -1, 2, 0, 6, 15, 2]),
+    ):
+        n = int(est.sum())
+        n_sub, offsets = split_cells(est, -(-n // (2 * par)))
+        assert (n_sub == 1).all() and (offsets == np.arange(25)).all()
+        tokens, _ = _cell_tokens(counts, np.repeat(est / n_sub, n_sub), par)
+        assert tokens.tolist() == want, par

@@ -418,6 +418,54 @@ def test_cell_split_guard_on_degenerate_clustering(spark):
     drop_index("splitchk", cat)
 
 
+def test_cell_split_guard_on_duplicated_vector(spark, cat):
+    """The cell-size guard on the sharpest skew: most rows are ONE
+    duplicated vector, so one trained cell holds ~80% of the base.
+    That cell splits into id-hash sub-shards — more shard files than
+    trained cells, its centroid repeated once per sub-shard in the
+    route table — and index_scan still serves numpy brute-force
+    recall (queries at the duplicate find distance-0 rows)."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(21)
+    n, dim, n_rest = 2000, 16, 400
+    mat = rng.random((n, dim), dtype=np.float32)
+    mat[n_rest:] = np.float32(3.0)
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(n), "embedding": list(mat)})
+    )
+    m = create_index(df, "vec_id", "embedding", "dupsplit",
+                     engine="diskann", max_degree=16, build_complexity=32,
+                     shards=6, shard_by="cells", catalog=cat)
+    rt = pq.read_table(f"{cat.path('dupsplit')}/route").to_pandas()
+    cents = np.array(rt.sort_values("shard")["centroid"].tolist())
+    uniq, reps = np.unique(cents, axis=0, return_counts=True)
+    assert m["shards"] == len(cents) > len(uniq), (m["shards"], len(uniq))
+    # the duplicate's cell is the one repeated: its centroid IS the
+    # duplicated vector, one route row per sub-shard
+    dup = np.flatnonzero(np.abs(uniq - 3.0).max(axis=1) < 1e-4)
+    assert len(dup) == 1 and reps[dup[0]] == reps.max() > 1, reps
+    assert reps.sum() - len(uniq) == reps[dup[0]] - 1  # only it split
+
+    qs = mat[:40]
+    got = index_scan(spark, "dupsplit", qs, 10, catalog=cat).collect()
+    by_q = {}
+    for r in got:
+        by_q.setdefault(r["query_idx"], set()).add(r["vec_id"])
+    d = ((mat[None, :, :] - qs[:, None, :]) ** 2).sum(-1)
+    truth = [set(np.argsort(x, kind="stable")[:10].tolist()) for x in d]
+    rec = sum(len(by_q.get(i, set()) & truth[i]) for i in range(40)) / 400
+    assert rec >= 0.70, rec
+    hits = index_scan(spark, "dupsplit", [mat[-1]], 10,
+                      catalog=cat).collect()
+    assert len(hits) == 10
+    assert all(r["vec_id"] >= n_rest and r["_distance"] < 1e-6
+               for r in hits), hits
+    drop_index("dupsplit", cat)
+
+
 def test_cell_pack_identical_artifacts_and_gate(spark, cat, monkeypatch,
                                                 capfd):
     """Round 15 (optimization): cell PACKING — when a routed build has
