@@ -172,7 +172,11 @@ def _deleted_ids(spark: SparkSession, d: str, manifest: dict) -> Optional[DataFr
     path = os.path.join(d, DELETED_DIR)
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path).select(manifest["id_col"]).distinct()
+    id_col = manifest["id_col"]
+    return (
+        spark.read.schema(f"{_quote(id_col)} long").parquet(path)
+        .select(id_col).distinct()
+    )
 
 
 def index_scan(
@@ -712,7 +716,8 @@ def delete_from_index(
     del_df.write.mode("append").parquet(os.path.join(d, DELETED_DIR))
     _refresh(spark, d)
     n_deleted = (
-        spark.read.parquet(os.path.join(d, DELETED_DIR)).select(id_col).distinct().count()
+        spark.read.schema(f"{_quote(id_col)} long")
+        .parquet(os.path.join(d, DELETED_DIR)).distinct().count()
     )
     return cat.update(name, num_deleted=int(n_deleted))
 
@@ -725,8 +730,7 @@ def vacuum_index(
     cat, manifest, d, impl = _load(name, "", catalog)
     id_col = manifest["id_col"]
     if int(manifest["num_vectors"]) == 0:
-        # nothing to rebuild (and an empty IVF artifact isn't readable);
-        # just clear any tombstone residue
+        # nothing to rebuild; just clear any tombstone residue
         delpath = os.path.join(d, DELETED_DIR)
         if os.path.exists(delpath):
             import shutil
@@ -895,11 +899,9 @@ def recalibrate_index(
         measure_routing = int(
             (manifest.get("params") or {}).get("route_nprobe", 0) or 0
         ) == 0
-        from .vamana import LABELS_DIR
-
         route_cal, l_cal, end_cal = measure_graph_calibrations(
             src, id_col, vec_col, route, manifest["params"]["metric"],
-            n_live, shard_files, os.path.join(d, LABELS_DIR),
+            n_live, shard_files,
             impl._default_search_complexity(params), search_fn,
             measure_routing=measure_routing, n_queries=nq,
         )
@@ -1060,8 +1062,7 @@ def insert_into_index(
     if stats["n_ids"] != n_new:
         raise ValueError(f"id column '{id_col}' must be unique in the new rows")
     if int(manifest["num_vectors"]) == 0:
-        # nothing to collide with, and an empty artifact may not even be
-        # readable (the empty IVF parquet has no inferable schema)
+        # nothing to collide with
         existing = None
     elif hasattr(impl, "ids"):
         existing = impl.ids(spark, d, id_col)

@@ -372,7 +372,6 @@ def _measure_l_curve(
     centroids: np.ndarray,
     metric: str,
     shard_files: "list[tuple[int, str]]",
-    labels_dir: str,
     grid: "list[int]",
     k: int,
     max_shards: int = L_MAX_SHARDS,
@@ -397,8 +396,8 @@ def _measure_l_curve(
     (a returned label counts if its exact distance is within the k-th
     exact distance), so GEMM-vs-per-row float32 accumulation
     differences cannot miscount. Self-exclusion is BY ID via the
-    shard's label map (nearest-point "self" miscounts duplicate vectors
-    and is wrong outright for IP)."""
+    shard's id sidecar (nearest-point "self" miscounts duplicate
+    vectors and is wrong outright for IP)."""
     nq = qmat.shape[0]
     if nq == 0 or not shard_files:
         return {}, 0
@@ -441,31 +440,12 @@ def _measure_l_curve(
     )
 
     def run(batches):
-        import pyarrow.dataset as pds
-
-        # per-task label-map cache: a task sees one shard's queries
-        # across MANY Arrow batches (the repartition is by shard), and
-        # the labels parquet open+filter is the per-group fixed cost
-        # worth paying once (round-10 advice)
-        lab_cache: dict[int, dict] = {}
-
-        def labels_for(shard: int) -> dict:
-            if shard not in lab_cache:
-                lab_tbl = pds.dataset(labels_dir, format="parquet").to_table(
-                    columns=["label", "id"],
-                    filter=pds.field("shard") == shard,
-                )
-                lab_cache[shard] = dict(zip(
-                    lab_tbl["id"].to_pylist(), lab_tbl["label"].to_pylist()
-                ))
-            return lab_cache[shard]
-
         for pdf in batches:
             if not len(pdf):
                 continue
             out = []
             for shard, grp in pdf.groupby("shard", sort=True):
-                g = load_shard(paths[int(shard)])
+                g, ids = load_shard(paths[int(shard)])
                 n = int(g.n)
                 if n < 2:
                     continue
@@ -478,20 +458,19 @@ def _measure_l_curve(
                 # calibration drops the query's own row for the same
                 # reason; an inflated curve here under-measures L and
                 # the end recall pays for it). Exclusion is BY ID via
-                # this shard's label map (round-10 review: picking the
+                # this shard's id sidecar (round-10 review: picking the
                 # nearest point as "self" miscounts duplicates and is
                 # wrong outright for IP, where self need not rank first)
-                lab_of_id = labels_for(int(shard))
                 kk = min(k, n - 1)
                 # judge (and SEARCH) only queries whose row is in this
-                # shard's label map — defensive rows can't be
-                # self-excluded, and searching them per grid L was pure
-                # waste (round-10 advice: |grid| beam runs per
-                # never-judged query)
-                self_all = np.array(
-                    [lab_of_id.get(int(i), -1) for i in q_ids],
-                    dtype=np.int64,
-                )
+                # shard — defensive rows can't be self-excluded, and
+                # searching them per grid L was pure waste (round-10
+                # advice: |grid| beam runs per never-judged query)
+                by_id = np.argsort(ids, kind="stable")
+                pos = by_id[
+                    np.searchsorted(ids[by_id], q_ids).clip(max=n - 1)
+                ]
+                self_all = np.where(ids[pos] == q_ids, pos, -1)
                 judged = self_all >= 0
                 if not judged.any():
                     continue
@@ -646,7 +625,6 @@ def measure_graph_calibrations(
     metric: str,
     n_rows: int,
     shard_files: "list[tuple[int, str]]",
-    labels_dir: str,
     base_l: int,
     search_fn,
     measure_routing: bool = True,
@@ -670,7 +648,8 @@ def measure_graph_calibrations(
     bounded in-shard L pass on the busiest shards, and finally ONE
     end-to-end search of the sample at the resolved default config
     (`search_fn(qmat, k, route_nprobe, L) -> [[(id, dist), ...]]` —
-    the engine's real search path).
+    the engine's real search path). The L pass reads each measured
+    shard's id sidecar beside its graph to exclude a query's own row.
 
     Measured phase walls (uniform 100k x d128, 128 cells, local[32]):
     sample 0.15s + exact scan 0.65s + merge/curve 0.06s + end search
@@ -732,7 +711,7 @@ def measure_graph_calibrations(
             )
     grid = _l_grid(int(base_l))
     l_recall, l_nq = _measure_l_curve(
-        spark, qids, qmat, centroids, metric, shard_files, labels_dir,
+        spark, qids, qmat, centroids, metric, shard_files,
         grid, k, max_shards,
     )
     l_cal = _l_cal_dict(

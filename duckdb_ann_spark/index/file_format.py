@@ -28,6 +28,12 @@ adjacency segment → still mmap-able, still reconstructable by
     n u32 | levels u8*n |
     per layer 1..max_level:
       count u32 | count x (label u32 | deg u32 | nbrs u32*deg)
+
+Every index shard `shard_<s>.diskann` has an id sidecar
+`shard_<s>.ids` beside it: little-endian int64, entry i = the row id of
+label i (the reference keeps its label↔rowid map beside the graph the
+same way, `src/include/diskann_index.hpp:144-147`). `write_ids` /
+`read_ids` own that format; callers pass the shard's own path.
 """
 
 from __future__ import annotations
@@ -93,6 +99,39 @@ def write_diskann(path: str, graph, sq8: tuple | None = None,
                     f.write(struct.pack("<II", int(lab), ids.size))
                     f.write(ids.tobytes())
     os.replace(tmp, path)
+
+
+def ids_path(shard_path: str) -> str:
+    """The id sidecar's path for the shard file at `shard_path`."""
+    return os.path.splitext(shard_path)[0] + ".ids"
+
+
+def write_ids(shard_path: str, ids) -> None:
+    """Write the shard's id sidecar (entry i = id of label i), temp file
+    + rename like `write_diskann`. Shard writers call this BEFORE
+    `write_diskann`, so a reader never sees a label without its id."""
+    path = ids_path(shard_path)
+    tmp = f"{path}.tmp.{os.getpid()}"
+    np.ascontiguousarray(ids, dtype="<i8").tofile(tmp)
+    os.replace(tmp, path)
+
+
+def read_ids(shard_path: str, n: int) -> np.ndarray:
+    """The (n,) int64 id array of the shard at `shard_path`, memmapped.
+    Raises ValueError when the sidecar is missing or does not hold
+    exactly `n` ids — an artifact written before the sidecar format, or
+    a torn one."""
+    path = ids_path(shard_path)
+    size = os.path.getsize(path) if os.path.exists(path) else -1
+    if size != 8 * n:
+        found = "missing" if size < 0 else f"{size // 8} ids"
+        raise ValueError(
+            f"Index shard '{shard_path}' has no matching id sidecar "
+            f"({found}, expected {n} ids). Drop and recreate the index."
+        )
+    if n == 0:  # mmap cannot map an empty file
+        return np.empty(0, dtype="<i8")
+    return np.memmap(path, dtype="<i8", mode="r", shape=(n,))
 
 
 def read_header(path: str) -> dict:

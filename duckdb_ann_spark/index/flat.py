@@ -15,6 +15,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.text import quote_ident as _quote
 from ..operators.batch import search_batch_ids
 from .engines import register_engine
 
@@ -41,7 +42,15 @@ class FlatEngine:
         return {"layout": "flat-parquet-v1"}
 
     def vectors(self, spark: SparkSession, artifact_dir: str) -> DataFrame:
-        return spark.read.parquet(f"{artifact_dir}/{VECTORS_DIR}")
+        """The stored (id, vec) parquet, read under the schema the
+        build writes (ids long, vectors array<float> — create_index and
+        insert normalize both), so no schema-inference job runs."""
+        from .catalog import read_manifest
+
+        m = read_manifest(artifact_dir, spark)
+        return spark.read.schema(
+            f"{_quote(m['id_col'])} long, {_quote(m['vec_col'])} array<float>"
+        ).parquet(f"{artifact_dir}/{VECTORS_DIR}")
 
     def append(
         self,

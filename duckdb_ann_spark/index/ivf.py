@@ -907,6 +907,23 @@ class IvfFlatEngine:
         return (np.asarray(mins, dtype=np.float32),
                 np.asarray(scale, dtype=np.float32))
 
+    @staticmethod
+    def _read_cells(spark: SparkSession, artifact_dir: str,
+                    manifest: dict) -> DataFrame:
+        """The raw cell-partitioned `vectors/` parquet, read under the
+        schema its writer (`_assigned_cells_df`) declares — no
+        schema-inference job, and an empty artifact reads as an empty
+        frame. Columns: id, the vector (or the SQ8 code column), cell."""
+        id_col, vec_col = manifest["id_col"], manifest["vec_col"]
+        payload = (
+            f"{SQ8_COL} binary"
+            if (manifest.get("params") or {}).get("quantization") == "sq8"
+            else f"{_quote(vec_col)} array<float>"
+        )
+        return spark.read.schema(
+            f"{_quote(id_col)} long, {payload}, {CELL_COL} int"
+        ).parquet(f"{artifact_dir}/{VECTORS_DIR}")
+
     def cells_df(self, spark: SparkSession, artifact_dir: str,
                  manifest: dict) -> DataFrame:
         """The cell-partitioned (cell, id, vec) frame — raw for fp32
@@ -915,7 +932,7 @@ class IvfFlatEngine:
         RESULT because the decode is row-local... filters on CELL_COL
         must be applied by the CALLER before decoding to keep the scan
         pruned; see search/index_knn_join call sites)."""
-        raw = spark.read.parquet(f"{artifact_dir}/{VECTORS_DIR}")
+        raw = self._read_cells(spark, artifact_dir, manifest)
         sq8 = self._sq8_params(manifest)
         if sq8 is None:
             return raw
@@ -928,18 +945,18 @@ class IvfFlatEngine:
             id_col: str) -> DataFrame:
         """Just the indexed ids — a column-pruned parquet scan that never
         touches (or dequantizes) the vector payload."""
-        return spark.read.parquet(
-            f"{artifact_dir}/{VECTORS_DIR}"
-        ).select(id_col)
+        return spark.read.schema(
+            f"{_quote(id_col)} long, {CELL_COL} int"
+        ).parquet(f"{artifact_dir}/{VECTORS_DIR}").select(id_col)
 
     def vectors(self, spark: SparkSession, artifact_dir: str) -> DataFrame:
-        raw = spark.read.parquet(f"{artifact_dir}/{VECTORS_DIR}")
-        if SQ8_COL not in raw.columns:
-            return raw.drop(CELL_COL)
         from .catalog import read_manifest
 
         manifest = read_manifest(artifact_dir, spark)
+        raw = self._read_cells(spark, artifact_dir, manifest)
         sq8 = self._sq8_params(manifest)
+        if sq8 is None:
+            return raw.drop(CELL_COL)
         return _decode_cells_df(
             raw, manifest["id_col"], manifest["vec_col"], sq8,
             with_cell=False,
@@ -1040,7 +1057,7 @@ class IvfFlatEngine:
             )
         nprobe = min(max(1, nprobe), nlist)
 
-        vecs = spark.read.parquet(f"{artifact_dir}/{VECTORS_DIR}")
+        vecs = self._read_cells(spark, artifact_dir, manifest)
         sq8 = self._sq8_params(manifest)
         if nprobe >= nlist:
             # probing every cell = exact flat scan; use the bit-exact path

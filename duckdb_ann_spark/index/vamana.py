@@ -11,7 +11,7 @@ the same shard-and-merge trade the reference makes in `MergeIndexes`.
 Artifact layout:
 
     graph/shard_<s>.diskann    v2 binary (+ SQ8 appendix when quantized)
-    labels/                    parquet (shard, label, id) label↔id map
+    graph/shard_<s>.ids        int64 id of each label (`file_format`)
     route/                     parquet (shard, centroid) — only when
                                shard_by='cells' (kmeans-routed shards)
 
@@ -29,15 +29,17 @@ past 8 shards, 'hash' otherwise — and the manifest records the
 resolved value.
 
 The `.diskann` shard files ARE the vector storage — `vectors()`
-reconstructs (id, vec) rows distributively from shards + label map for
-vacuum/merge/insert, so the index never keeps a second parquet copy of
-every vector (2x storage at 100 TB otherwise).
+reconstructs (id, vec) rows distributively from the shards and their id
+sidecars for vacuum/merge/insert, so the index never keeps a second
+parquet copy of every vector (2x storage at 100 TB otherwise).
 
-Search: the driver memmaps each shard (cached per process), runs the
-greedy search per query, unions shard results and keeps the global
-top-k. Single-query latency is served driver-locally (BASELINE.json
-concedes Spark's win is batch, not point lookups); the tombstone
-over-request happens in `api.index_scan`.
+Search: the searching process memmaps each shard with its id sidecar
+(cached per process), runs the greedy search per query, maps labels to
+ids and keeps each query's top-k by (distance, id) — in-process, as the
+reference does (`src/diskann_index.cpp:552-595`), so a distributed
+search is one stage. Few-query scans are served driver-locally
+(BASELINE.json concedes Spark's win is batch, not point lookups); the
+tombstone over-request happens in `api.index_scan`.
 """
 
 from __future__ import annotations
@@ -53,7 +55,15 @@ from pyspark.sql import functions as F
 from ..local import local_df
 from .engines import register_engine
 from ..functions.distance import np_index_distances, np_stack_vectors
-from .file_format import read_diskann, read_hnsw, read_sq8, write_diskann
+from .file_format import (
+    read_diskann,
+    read_header,
+    read_hnsw,
+    read_ids,
+    read_sq8,
+    write_diskann,
+    write_ids,
+)
 from .hnsw_core import build_hnsw
 from .vamana_core import (
     SQ8Vectors,
@@ -64,7 +74,6 @@ from .vamana_core import (
 from ..functions.text import quote_ident as _quote
 
 GRAPH_DIR = "graph"
-LABELS_DIR = "labels"
 # shard_by='cells' routing table: parquet (shard int, centroid) — one
 # kmeans centroid per shard, read driver-side at search/append time
 ROUTE_DIR = "route"
@@ -79,7 +88,7 @@ ROUTE_DIR = "route"
 # to the whole index: at 25k-row x d768 shards the round-7 dequantized-
 # f32 cache cost ~77 MB/shard (~20 GB/worker at the count cap); the u8
 # view caches ~19 MB/shard and the byte budget bounds it regardless.
-_GRAPH_CACHE: "dict" = {}  # key -> (graph, resident_nbytes)
+_GRAPH_CACHE: "dict" = {}  # key -> ((graph, ids), resident_nbytes)
 MAX_CACHED_SHARDS = 256
 MAX_CACHED_BYTES = int(
     os.environ.get("SPARK_GRAFT_SHARD_CACHE_BYTES", str(1 << 30))
@@ -101,43 +110,6 @@ def _resident_nbytes(g) -> int:
         for ids in layer.values():
             total += int(getattr(ids, "nbytes", 8 * len(ids)))
     return total
-
-
-def _resolve_labels(
-    spark: SparkSession, artifact_dir: str, pairs: "set[tuple[int, int]]"
-) -> "dict[tuple[int, int], int]":
-    """(shard, label) → id for ONLY the requested pairs. The few-query
-    driver path used to load the WHOLE label map into pandas — O(index)
-    driver memory, which a billion-row index breaks; a filtered pyarrow
-    read keeps it O(hits) (round 8). The shard×label product filter can
-    match a few extra rows (same label number in another hit shard) —
-    harmless, the dict lookup keys stay exact. Spark fallback for path
-    schemes pyarrow can't open."""
-    if not pairs:
-        return {}
-    shards = sorted({s for s, _ in pairs})
-    labs = sorted({l for _, l in pairs})
-    try:
-        import pyarrow.dataset as ds
-
-        pdf = (
-            ds.dataset(f"{artifact_dir}/{LABELS_DIR}", format="parquet")
-            .to_table(
-                filter=ds.field("shard").isin(shards)
-                & ds.field("label").isin(labs)
-            )
-            .to_pandas()
-        )
-    except Exception:
-        pdf = (
-            spark.read.parquet(f"{artifact_dir}/{LABELS_DIR}")
-            .where(F.col("shard").isin(shards) & F.col("label").isin(labs))
-            .toPandas()
-        )
-    return {
-        (int(s), int(l)): int(i)
-        for s, l, i in zip(pdf["shard"], pdf["label"], pdf["id"])
-    }
 
 
 def _route_centroids(spark: SparkSession, artifact_dir: str,
@@ -302,36 +274,35 @@ def _flat_search_batch(g, qm: np.ndarray, k: int):
     return out
 
 
+def _cut_topk(ids: np.ndarray, d: np.ndarray, k: int):
+    """The k best (id, distance) rows by (distance, id), NaN last — the
+    order of the `ORDER BY _distance ASC NULLS LAST, id` top-k the
+    search surfaces promise (Spark sorts NaN after every number and
+    ties NaN like any equal value; `np.lexsort` does the same)."""
+    o = np.lexsort((ids, d))[:k]
+    return ids[o], d[o]
+
+
 def _hits_batch(qs: np.ndarray, qids: list, psets, shard_files,
                 k: int, search_complexity, qid_name: str, qid_np_dtype,
-                slab: bool = False):
-    """One Arrow hit RecordBatch (qid, shard, label, _distance) for a
-    task's query slab: per probed shard, the lock-step `search_batch`;
-    hits stack as typed numpy arrays (round 13 — the python-tuple-list →
-    pandas frame assembly was the largest remaining pandas surface on
-    the search paths). `psets` is positional (probe set per query row)
-    or None for full fan-out. `slab` (round 14, target_recall-driven
-    calls only) swaps in the frontier-slab beam where the graph offers
-    one — measured-floor contract, not byte-parity.
-
-    ROUND 15 (guide §2.3 "shuffle fewer bytes"): hits are merged to the
-    GLOBAL top-k per query IN-TASK before they leave the Python worker.
-    A query's whole probe set is searched inside one task (both callers
-    partition queries, never shards), so per-shard top-k rows —
-    queries x probed_shards x k of them (the 10k-query routed leg
-    shipped ~4M rows) — were pure shuffle/join/window inflation: only
-    the global top-k can survive the downstream window. Distance TIES
-    at the k-th place are all kept (cutoff is `d <= kth smallest`, via
-    np.partition) because the final window breaks ties on the global id
-    that only exists after the (shard, label) -> id join — so the
-    surviving row set is bit-identical to the unmerged emission. A
-    NaN k-th distance (fewer than k finite candidates) keeps every row:
-    no safe cutoff exists there."""
+                id_name: str, slab: bool = False):
+    """One Arrow RecordBatch (qid, id, _distance) holding the FINAL
+    top-k of every query in a task's slab: per probed shard, the
+    lock-step `search_batch`; labels map to ids through the shard's id
+    sidecar (loaded with the graph by `_load_shard`), and each query's
+    hits across its probe set are cut to k rows by (distance, id) with
+    NaN last (`_cut_topk`) — the row set and values a global
+    `ORDER BY _distance, id` window would keep. A query's whole probe
+    set is searched inside one task (every caller partitions queries,
+    never shards), so no join or window follows. `psets` is positional
+    (probe set per query row) or None for full fan-out. `slab`
+    (target_recall-driven calls only) swaps in the frontier-slab beam
+    where the graph offers one — measured-floor contract, not
+    byte-parity."""
     import pyarrow as pa
 
     nq = len(qids)
-    acc_s: list = [[] for _ in range(nq)]
-    acc_l: list = [[] for _ in range(nq)]
+    acc_i: list = [[] for _ in range(nq)]
     acc_d: list = [[] for _ in range(nq)]
     for shard, path in shard_files:
         if psets is None:
@@ -342,7 +313,7 @@ def _hits_batch(qs: np.ndarray, qids: list, psets, shard_files,
             if not keep:
                 continue
             sub_qs = qs[keep]
-        g = _load_shard(path)
+        g, ids = _load_shard(path)
         if slab and _flat_scan_ok(g, k, search_complexity):
             found = _flat_search_batch(g, sub_qs, k)
         else:
@@ -358,34 +329,26 @@ def _hits_batch(qs: np.ndarray, qids: list, psets, shard_files,
             if not hits:
                 continue
             la, da = zip(*hits)
-            acc_s[qi].append(np.full(len(la), shard, dtype=np.int32))
-            acc_l[qi].append(np.asarray(la, dtype=np.int64))
+            acc_i[qi].append(ids[np.asarray(la, dtype=np.int64)])
             acc_d[qi].append(np.asarray(da, dtype=np.float64))
-    out_q, out_s, out_l, out_d = [], [], [], []
+    out_q, out_i, out_d = [], [], []
     for qi in range(nq):
         if not acc_d[qi]:
             continue
-        s = np.concatenate(acc_s[qi])
-        lab = np.concatenate(acc_l[qi])
-        d = np.concatenate(acc_d[qi])
-        if d.shape[0] > k:
-            kth = np.partition(d, k - 1)[k - 1]
-            if not np.isnan(kth):
-                m = d <= kth
-                s, lab, d = s[m], lab[m], d[m]
+        rid, d = _cut_topk(
+            np.concatenate(acc_i[qi]), np.concatenate(acc_d[qi]), k
+        )
         out_q.append(np.full(d.shape[0], qids[qi], dtype=qid_np_dtype))
-        out_s.append(s)
-        out_l.append(lab)
+        out_i.append(rid)
         out_d.append(d)
     if out_q:
-        cols = [np.concatenate(out_q), np.concatenate(out_s),
-                np.concatenate(out_l), np.concatenate(out_d)]
+        cols = [np.concatenate(out_q), np.concatenate(out_i),
+                np.concatenate(out_d)]
     else:
-        cols = [np.empty(0, qid_np_dtype), np.empty(0, np.int32),
-                np.empty(0, np.int64), np.empty(0, np.float64)]
+        cols = [np.empty(0, qid_np_dtype), np.empty(0, np.int64),
+                np.empty(0, np.float64)]
     return pa.RecordBatch.from_arrays(
-        [pa.array(c) for c in cols],
-        names=[qid_name, "shard", "label", "_distance"],
+        [pa.array(c) for c in cols], names=[qid_name, id_name, "_distance"],
     )
 
 
@@ -404,6 +367,9 @@ def _clear_shard_cache() -> None:
 
 
 def _load_shard(path: str):
+    """(graph, ids) for the shard file at `path`: the graph memmapped
+    (SQ8 codes resident, HNSW upper layers when present) and its id
+    sidecar memmapped beside it, cached together under one key."""
     global _CACHE_BYTES
     key = (path, os.path.getmtime(path))
     entry = _GRAPH_CACHE.get(key)
@@ -431,8 +397,9 @@ def _load_shard(path: str):
             # distances to the full dequantized matrix at 1/4 the
             # resident bytes
             g.vectors = SQ8Vectors(*sq8)
+    entry = (g, read_ids(path, g.n))
     nbytes = _resident_nbytes(g)
-    _GRAPH_CACHE[key] = (g, nbytes)
+    _GRAPH_CACHE[key] = (entry, nbytes)
     _CACHE_BYTES += nbytes
     # byte budget first (the real constraint), count cap as fd backstop;
     # always keep the entry just inserted
@@ -443,53 +410,16 @@ def _load_shard(path: str):
         if oldest == key:
             break
         _evict_cache_entry(oldest)
-    return g
+    return entry
 
 
-def _build_shard_fn(artifact_dir: str, build, sq8: bool = False,
-                   hnsw: bool = False):
-    """`build_shard_np(ids, vecs, shard, walls=None)` for both graph
-    engines → the shard's (shard, label, id) frame. The build is
-    id-sorted (reference insert order) and runs `build(vecs)`; the
-    shard file carries SQ8 codes (`sq8`) or the HNSW upper layers
-    (`hnsw`). numpy-facing so the cell build's mapInArrow path never
-    round-trips the vectors through pandas object Series (round 13).
-    `walls` (round 14, r13 verdict item 1): per-phase wall dict the
-    cell build fills so the 10M composite phase is attributable —
-    graph insert vs shard-file write."""
-
-    def build_shard_np(ids: np.ndarray, vecs: np.ndarray,
-                       shard: int, walls=None) -> pd.DataFrame:
-        import time as _t
-
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order].astype(np.int64, copy=False)
-        vecs = vecs[order]
-        _w0 = _t.perf_counter()
-        g = build(vecs)
-        _w1 = _t.perf_counter()
-        codes = sq8_quantize(vecs) if sq8 and len(vecs) else None
-        write_diskann(
-            f"{artifact_dir}/{GRAPH_DIR}/shard_{shard}.diskann", g, codes,
-            hnsw=g if hnsw else None,
-        )
-        if walls is not None:
-            _w2 = _t.perf_counter()
-            walls["graph_insert"] += _w1 - _w0
-            walls["file_write"] += _w2 - _w1
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(ids), shard, dtype=np.int32),
-                "label": np.arange(len(ids), dtype=np.int64),
-                "id": ids,
-            }
-        )
-
-    return build_shard_np
+def _shard_path(artifact_dir: str, shard: int) -> str:
+    return f"{artifact_dir}/{GRAPH_DIR}/shard_{shard}.diskann"
 
 
 class VamanaEngine:
     name = "vamana"
+    layout = "diskann-v2"
 
     def build(
         self,
@@ -503,16 +433,12 @@ class VamanaEngine:
     ) -> dict:
         os.makedirs(f"{artifact_dir}/{GRAPH_DIR}", exist_ok=True)
         src = df.select(id_col, vec_col)
-
-        build_shard_np = _build_shard_fn(
-            artifact_dir, lambda vecs: self._fresh_graph(vecs, params),
-            sq8=bool(params.quantize_sq8),
-        )
         shards = self._run_sharded_build(
-            spark, src, id_col, params, build_shard_np, artifact_dir
+            spark, src, id_col, params,
+            self._build_shard_fn(artifact_dir, params), artifact_dir,
         )
         return {
-            "layout": "diskann-v2", "shards": shards,
+            "layout": self.layout, "shards": shards,
             # measured routing calibration (round 9; None for
             # hash/single-shard layouts — also CLEARS a stale value
             # when vacuum/merge rebuilds under a different layout)
@@ -524,6 +450,36 @@ class VamanaEngine:
             # anchor of the target_recall composition (round 11)
             "end_calibration": getattr(params, "_end_calibration", None),
         }
+
+    def _build_shard_fn(self, artifact_dir: str, params):
+        """`build_shard_np(ids, vecs, shard, walls=None)` → the shard's
+        row count. The build is id-sorted (reference insert order),
+        runs `_fresh_graph` and writes the graph and its id sidecar
+        through `_write_shard`. numpy-facing so the cell build's
+        mapInArrow path never round-trips the vectors through pandas
+        object Series (round 13). `walls` (round 14, r13 verdict item
+        1): per-phase wall dict the cell build fills so the 10M
+        composite phase is attributable — graph insert vs shard-file
+        write."""
+
+        def build_shard_np(ids: np.ndarray, vecs: np.ndarray,
+                           shard: int, walls=None) -> int:
+            import time as _t
+
+            order = np.argsort(ids, kind="stable")
+            ids = ids[order].astype(np.int64, copy=False)
+            vecs = vecs[order]
+            _w0 = _t.perf_counter()
+            g = self._fresh_graph(vecs, params)
+            _w1 = _t.perf_counter()
+            self._write_shard(_shard_path(artifact_dir, shard), g, ids, params)
+            if walls is not None:
+                _w2 = _t.perf_counter()
+                walls["graph_insert"] += _w1 - _w0
+                walls["file_write"] += _w2 - _w1
+            return len(ids)
+
+        return build_shard_np
 
     def _run_sharded_build(self, spark, src, id_col, params, build_shard_np,
                            artifact_dir) -> int:
@@ -557,7 +513,7 @@ class VamanaEngine:
 
         vec_col = [c for c in src.columns if c != id_col][0]
 
-        def build_shard(pdf: pd.DataFrame, shard: int) -> pd.DataFrame:
+        def build_shard(pdf: pd.DataFrame, shard: int) -> int:
             # pandas adapter for the single-shard / hash-partition
             # paths; the cell path feeds build_shard_np from Arrow
             # buffers directly (stack-then-sort == sort-then-stack, so
@@ -610,10 +566,7 @@ class VamanaEngine:
         # routing table from a previous layout
         shutil.rmtree(f"{artifact_dir}/{ROUTE_DIR}", ignore_errors=True)
         if shards == 1:
-            labels = build_shard(src.toPandas(), 0)
-            spark.createDataFrame(
-                labels, schema="shard int, label long, id long"
-            ).write.mode("overwrite").parquet(f"{artifact_dir}/{LABELS_DIR}")
+            build_shard(src.toPandas(), 0)
             return 1
 
         if getattr(params, "shard_by", "hash") == "cells":
@@ -627,18 +580,15 @@ class VamanaEngine:
             if not pdfs:
                 return
             pdf = pd.concat(pdfs)
-            yield build_shard(
-                pdf.drop(columns=["shard"]), int(pdf["shard"].iloc[0])
-            )
+            shard = int(pdf["shard"].iloc[0])
+            n = build_shard(pdf.drop(columns=["shard"]), shard)
+            yield pd.DataFrame({"shard": [shard], "n": [n]})
 
         (
             src.repartition(shards, F.col(id_col))
             .withColumn("shard", F.spark_partition_id())
-            .mapInPandas(
-                build_partition, schema="shard int, label long, id long"
-            )
-            .write.mode("overwrite")
-            .parquet(f"{artifact_dir}/{LABELS_DIR}")
+            .mapInPandas(build_partition, schema="shard int, n long")
+            .collect()
         )
         return len(self._shard_files(artifact_dir))
 
@@ -766,7 +716,7 @@ class VamanaEngine:
         # first into the lightest bin) and give each BIN one partition;
         # the build task loops its bin's cells exactly as it always
         # looped hash-collided cells, so every cell still builds alone
-        # from its own id-sorted rows — shard files, labels, and
+        # from its own id-sorted rows — shard files, id sidecars, and
         # calibration are byte-identical; only task placement changes.
         # The n_bins >= 8x-parallelism floor keeps bins >> workers (LPT
         # tail stays negligible) and the total_shards <= 8x-parallelism
@@ -809,12 +759,12 @@ class VamanaEngine:
 
         # round 14 (r13 verdict item 1): per-TASK phase walls, summed
         # via accumulators, so the one driver-side composite phase
-        # ("assign+cell-builds+labels") decomposes into named executor
+        # ("assign+cell-builds") decomposes into named executor
         # work — assignment GEMM, shuffle-read wait, Arrow->numpy input,
         # graph insert, shard-file write. Sums are TASK-seconds across
         # all concurrent workers (32x the wall when perfectly parallel);
-        # the residual vs the composite wall is shuffle-write + parquet
-        # label write + scheduling. Only created when the phase print is
+        # the residual vs the composite wall is shuffle-write +
+        # scheduling. Only created when the phase print is
         # on — zero cost otherwise.
         task_accs = (
             {
@@ -949,10 +899,12 @@ class VamanaEngine:
             try:
                 for a, z in zip(starts[:-1], starts[1:]):
                     rows = order[a:z]
-                    frame = build_shard_np(ids[rows], vecs[rows],
-                                           int(cells_s[a]), walls)
-                    yield pa.RecordBatch.from_pandas(
-                        frame, preserve_index=False
+                    shard = int(cells_s[a])
+                    n = build_shard_np(ids[rows], vecs[rows], shard, walls)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array([shard], pa.int32()),
+                         pa.array([n], pa.int64())],
+                        names=["shard", "n"],
                     )
             finally:
                 if prev_threads is not None:
@@ -972,11 +924,8 @@ class VamanaEngine:
             cast_id_vec(src, id_col, vec_col)
             .mapInArrow(assign, schema=schema)
             .repartition(n_bins, F.col("_pt"))
-            .mapInArrow(
-                build_cells, schema="shard int, label long, id long"
-            )
-            .write.mode("overwrite")
-            .parquet(f"{artifact_dir}/{LABELS_DIR}")
+            .mapInArrow(build_cells, schema="shard int, n long")
+            .collect()
         )
         if task_accs is not None:
             parts = " ".join(
@@ -985,11 +934,11 @@ class VamanaEngine:
             print(
                 f"[build-phase-tasks] {parts} (TASK-seconds summed across "
                 f"{total_shards} cells; divide by concurrent workers for wall; "
-                "residual vs the composite wall = shuffle-write + label "
-                "parquet + scheduling)",
+                "residual vs the composite wall = shuffle-write + "
+                "scheduling)",
                 flush=True,
             )
-        _phase("assign+cell-builds+labels")
+        _phase("assign+cell-builds")
         # FUSED build-time measurement (round 11; shard files exist
         # now): one shared sample + one exact-top-k scan feed the
         # routing curve (round 9), the in-shard L curve (round 10), AND
@@ -1045,8 +994,8 @@ class VamanaEngine:
                 # SAME (sub-shard) rows serve-time routing ranks —
                 # identical when no cell split
                 src, id_col, vec_col, route_cents, metric, n_rows,
-                shard_files, f"{artifact_dir}/{LABELS_DIR}",
-                self._default_search_complexity(params), search_fn,
+                shard_files, self._default_search_complexity(params),
+                search_fn,
                 measure_routing=measure_routing, n_queries=nq,
                 split=(
                     (sub_offsets, n_sub) if total_shards > k_eff else None
@@ -1062,44 +1011,66 @@ class VamanaEngine:
         build-time L-calibration grid."""
         return int(params.build_complexity)
 
+    def _shard_scan(self, spark: SparkSession, artifact_dir: str,
+                    emit, schema: str) -> DataFrame:
+        """One row stream over every shard in ascending (shard, label)
+        order: task t reads a contiguous run of the sorted shard files,
+        and `emit(path)` yields each shard's RecordBatches."""
+        files = [p for _, p in self._shard_files(artifact_dir)]
+        npart = max(1, min(len(files), spark.sparkContext.defaultParallelism))
+
+        def run(batches):
+            for b in batches:
+                for i in b.column(0).to_numpy():
+                    yield from emit(files[int(i)])
+
+        return spark.range(0, len(files), 1, npart).mapInArrow(run, schema)
+
     def ids(self, spark: SparkSession, artifact_dir: str, id_col: str) -> DataFrame:
-        """Just the indexed ids — a column-pruned label-map scan, no
-        graph loads (used by the insert uniqueness check)."""
-        return (
-            spark.read.parquet(f"{artifact_dir}/{LABELS_DIR}")
-            .select(F.col("id").alias(id_col))
+        """Just the indexed ids — the shards' id sidecars, no vector
+        reads (used by the insert uniqueness check)."""
+
+        def emit(path):
+            import pyarrow as pa
+
+            ids = read_ids(path, read_header(path)["num_vectors"])
+            yield pa.RecordBatch.from_arrays([pa.array(ids)], [id_col])
+
+        return self._shard_scan(
+            spark, artifact_dir, emit, f"{_quote(id_col)} long"
         )
 
     def vectors(self, spark: SparkSession, artifact_dir: str) -> DataFrame:
-        """(id, vec) reconstructed from the graph shards + label map.
-        Distributed: each task mmaps only the shards its label rows point
-        at — no driver materialization, no duplicate vector parquet."""
+        """(id, vec) reconstructed from the graph shards and their id
+        sidecars, distributed over shards, in ascending (shard, label)
+        order — no driver materialization, no duplicate vector
+        parquet."""
         from .catalog import read_manifest
 
         m = read_manifest(artifact_dir, spark)
         id_col, vec_col = m["id_col"], m["vec_col"]
-        files = dict(self._shard_files(artifact_dir))
-        labels = spark.read.parquet(f"{artifact_dir}/{LABELS_DIR}")
 
-        def emit(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                for shard, grp in pdf.groupby("shard"):
-                    # raw file read (not _load_shard): SQ8 indexes keep
-                    # full-precision vectors in the v2 body; rebuilds must
-                    # use those, not the dequantized search cache
-                    g = read_diskann(files[int(shard)], mmap=True)
-                    lab = grp["label"].to_numpy()
-                    yield pd.DataFrame(
-                        {
-                            id_col: grp["id"].to_numpy(),
-                            vec_col: list(np.asarray(g.vectors[lab])),
-                        }
-                    )
+        def emit(path):
+            import pyarrow as pa
 
-        return labels.mapInPandas(
-            emit, schema=f"{_quote(id_col)} long, {_quote(vec_col)} array<float>"
+            # raw file read (not _load_shard): SQ8 indexes keep
+            # full-precision vectors in the v2 body; rebuilds must use
+            # those, not the dequantized search cache
+            g = read_diskann(path, mmap=True)
+            if g.n == 0:
+                return
+            ids = read_ids(path, g.n)
+            flat = np.asarray(g.vectors[: g.n]).reshape(-1)
+            offsets = np.arange(0, g.n * g.dim + 1, g.dim, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids),
+                 pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat))],
+                [id_col, vec_col],
+            )
+
+        return self._shard_scan(
+            spark, artifact_dir, emit,
+            f"{_quote(id_col)} long, {_quote(vec_col)} array<float>",
         )
 
     # a shard at/above this many vectors stops receiving appends; new
@@ -1164,11 +1135,34 @@ class VamanaEngine:
             start_seed=getattr(params, "start_seed", 42),
         )
 
-    def _write_shard(self, path: str, g, params) -> None:
+    def _write_shard(self, path: str, g, ids, params) -> None:
+        """Write a shard: its id sidecar first, then the graph file, so
+        a reader never sees a label without its id."""
+        write_ids(path, ids)
+        self._write_graph(path, g, params)
+
+    def _write_graph(self, path: str, g, params) -> None:
         sq8 = None
         if getattr(params, "quantize_sq8", False) and g.n:
             sq8 = sq8_quantize(g.vectors[: g.n])
         write_diskann(path, g, sq8)
+
+    def _grow_shard(self, path: str, g, ids: np.ndarray, vecs: np.ndarray,
+                    params):
+        """Append (ids, vecs) to shard `g` stored at `path` — or build
+        the shard fresh when `g` is None or empty (per-vector insert
+        can't seed a dimensionless graph) — and rewrite its graph and
+        id sidecar. Inserts take labels g.n, g.n+1, ... in row order.
+        Cache keys include mtime, so the rewritten file misses the old
+        cache entry on next load. → the grown graph."""
+        if g is None or g.n == 0:
+            g = self._fresh_graph(vecs, params)
+        else:
+            ids = np.concatenate([read_ids(path, g.n), ids])
+            for vec in vecs:
+                g.insert(vec)
+        self._write_shard(path, g, ids, params)
+        return g
 
     def _append_routed(
         self, spark, manifest, artifact_dir, pdf, params, route: np.ndarray
@@ -1187,32 +1181,17 @@ class VamanaEngine:
         metric = manifest["params"]["metric"]
         cells = np_index_distances(metric, vecs, route).argmin(axis=0)
         files = dict(self._shard_files(artifact_dir))
-        labels: list[tuple[int, int, int]] = []
         overgrown: list[int] = []
         for cell in sorted({int(c) for c in cells}):
             sub = pdf[cells == cell].sort_values(id_col).reset_index(drop=True)
-            svecs = np_stack_vectors(sub[vec_col])
-            path = files.get(
-                cell, f"{artifact_dir}/{GRAPH_DIR}/shard_{cell}.diskann"
+            path = files.get(cell, _shard_path(artifact_dir, cell))
+            g = self._grow_shard(
+                path, self._load_writable(path) if cell in files else None,
+                sub[id_col].to_numpy(dtype=np.int64),
+                np_stack_vectors(sub[vec_col]), params,
             )
-            g = self._load_writable(path) if cell in files else None
-            if g is None or g.n == 0:
-                # empty cell (wrote no file at build, or 0-row shard):
-                # per-vector insert can't seed a dimensionless graph
-                g = self._fresh_graph(svecs, params)
-                labels += [
-                    (cell, label, int(rid))
-                    for label, rid in enumerate(sub[id_col])
-                ]
-            else:
-                for rid, vec in zip(sub[id_col], svecs):
-                    labels.append((cell, g.insert(vec), int(rid)))
-            self._write_shard(path, g, params)
             if g.n > self._append_cap(params):
                 overgrown.append(cell)
-        local_df(
-            spark, labels, "shard int, label long, id long"
-        ).write.mode("append").parquet(f"{artifact_dir}/{LABELS_DIR}")
         out = {"shards": len(self._shard_files(artifact_dir))}
         if overgrown:
             # routed appends have no overflow shard (spatial locality
@@ -1240,7 +1219,9 @@ class VamanaEngine:
         df_new: DataFrame,
         params,
     ) -> dict:
-        """Live insert (`src/diskann_index.cpp:316-361`), shard-routed.
+        """Live insert (`src/diskann_index.cpp:316-361`), shard-routed,
+        for both graph engines (the `_load_writable` / `_fresh_graph` /
+        `_write_shard` hooks pick the graph type).
 
         The reference stream-inserts sequentially into its single graph;
         a multi-shard index must NOT funnel every append into shard 0 —
@@ -1249,9 +1230,10 @@ class VamanaEngine:
         Appends instead go to the SMALLEST existing shard, and when even
         that shard is at `APPEND_SHARD_CAP`, into a fresh overflow shard
         (merged down later by the existing `MergeIndexes`/`Vacuum`
-        machinery). Exactly one shard file is written per append;
-        untouched shards stay byte-identical. shard_by='cells' indexes
-        route by nearest centroid instead — see `_append_routed`."""
+        machinery). Exactly one shard (graph + id sidecar) is written
+        per append; untouched shards stay byte-identical.
+        shard_by='cells' indexes route by nearest centroid instead —
+        see `_append_routed`."""
         id_col, vec_col = manifest["id_col"], manifest["vec_col"]
         pdf = self._collect_delta(df_new, id_col, vec_col)
         if not len(pdf):
@@ -1261,68 +1243,24 @@ class VamanaEngine:
             return self._append_routed(
                 spark, manifest, artifact_dir, pdf, params, route
             )
-        vecs = np_stack_vectors(pdf[vec_col])
-
         shard_files = self._shard_files(artifact_dir)
         # smallest shard by file size (header-free proxy for vector count;
         # no graph loads for the routing decision)
-        target = min(shard_files, key=lambda sf: os.path.getsize(sf[1]))
-        g = read_diskann(target[1], mmap=False)  # writable copy
-        if g.n == 0:
-            # empty shard (index created over 0 rows, dim unknown): build
-            # it fresh from the new batch — per-vector insert can't seed a
-            # dimensionless graph
-            shard_id, path = target
-            g = build_graph(
-                vecs,
-                max_degree=params.max_degree,
-                build_complexity=params.build_complexity,
-                alpha=getattr(params, "alpha", 1.2),
-                metric=params.metric,
-                start_strategy=getattr(params, "start_strategy", "first"),
-                start_nsamples=getattr(params, "start_nsamples", 1),
-                start_seed=getattr(params, "start_seed", 42),
-            )
-            labels = [
-                (shard_id, label, int(rid))
-                for label, rid in enumerate(pdf[id_col])
-            ]
-        elif g.n >= self._append_cap(params):
+        _, path = min(shard_files, key=lambda sf: os.path.getsize(sf[1]))
+        g = self._load_writable(path)  # writable copy
+        if g.n and g.n >= self._append_cap(params):
             # overflow shard: bounded build from just the new rows
-            shard_id = max(s for s, _ in shard_files) + 1
-            path = f"{artifact_dir}/{GRAPH_DIR}/shard_{shard_id}.diskann"
-            g = build_graph(
-                vecs,
-                max_degree=params.max_degree,
-                build_complexity=params.build_complexity,
-                alpha=getattr(params, "alpha", 1.2),
-                metric=params.metric,
-                start_strategy=getattr(params, "start_strategy", "first"),
-                start_nsamples=getattr(params, "start_nsamples", 1),
-                start_seed=getattr(params, "start_seed", 42),
+            path = _shard_path(
+                artifact_dir, max(s for s, _ in shard_files) + 1
             )
-            labels = [
-                (shard_id, label, int(rid))
-                for label, rid in enumerate(pdf[id_col])
-            ]
-        else:
-            shard_id, path = target
-            labels = []
-            for rid, vec in zip(pdf[id_col], vecs):
-                label = g.insert(vec)
-                labels.append((shard_id, label, int(rid)))
-        sq8 = None
-        if getattr(params, "quantize_sq8", False) and g.n:
-            sq8 = sq8_quantize(g.vectors[: g.n])
-        write_diskann(path, g, sq8)
-        # cache keys include mtime, so the rewritten file misses the old
-        # entry automatically on next load
-        local_df(
-            spark, labels, "shard int, label long, id long"
-        ).write.mode("append").parquet(f"{artifact_dir}/{LABELS_DIR}")
+            g = None
+        self._grow_shard(
+            path, g, pdf[id_col].to_numpy(dtype=np.int64),
+            np_stack_vectors(pdf[vec_col]), params,
+        )
         # recount from disk: build shard numbering can be non-contiguous
-        # (empty hash partitions write no file), so shard_id+1 would
-        # overstate the count after an overflow append
+        # (empty hash partitions write no file), so the overflow shard's
+        # number + 1 would overstate the count
         return {"shards": len(self._shard_files(artifact_dir))}
 
     # above this many queries, fan out across executors instead of
@@ -1364,23 +1302,20 @@ class VamanaEngine:
             )
         if len(queries) > self.DISTRIBUTE_THRESHOLD:
             return self._search_distributed(
-                spark, manifest, artifact_dir, queries, k, search_complexity,
+                spark, manifest, queries, k, search_complexity,
                 shard_files, probe_sets,
             )
-        # search first, resolve labels after: only the hit (shard,
-        # label) pairs are read from the label map (O(hits) driver
-        # memory — the map itself scales with the index). ALL shard
-        # hits resolve (<= queries x shards x k) so the final top-k cut
-        # can tie-break on the global id, matching the distributed
-        # path's ORDER BY (_distance, id).
+        # driver-local: per query, search its probed shards, map labels
+        # to ids through the shard sidecars and keep the top-k by
+        # (distance, id) — the distributed path's `_cut_topk` order
         slab = bool(manifest.get("slab_beam"))
-        per_q: list[list[tuple[float, int, int]]] = []
+        rows = []
         for qi, q in enumerate(queries):
-            hits: list[tuple[float, int, int]] = []
+            hit_ids, hit_d = [], []
             for shard, path in shard_files:
                 if probe_sets is not None and shard not in probe_sets[qi]:
                     continue
-                g = _load_shard(path)
+                g, ids = _load_shard(path)
                 if slab and _flat_scan_ok(g, k, search_complexity):
                     found = _flat_search_batch(
                         g, np.asarray([q], dtype=np.float32), k
@@ -1390,111 +1325,61 @@ class VamanaEngine:
                 else:
                     found = g.search(q, k, search_complexity)
                 for label, dist in found:
-                    hits.append((dist, shard, int(label)))
-            per_q.append(hits)
-        ids = _resolve_labels(
-            spark, artifact_dir,
-            {(s, l) for hits in per_q for _, s, l in hits},
-        )
-        rows = []
-        for qi, hits in enumerate(per_q):
-            merged = sorted(
-                (dist, ids[(shard, label)]) for dist, shard, label in hits
+                    hit_ids.append(int(ids[int(label)]))
+                    hit_d.append(dist)
+            rid, d = _cut_topk(
+                np.asarray(hit_ids, dtype=np.int64),
+                np.asarray(hit_d, dtype=np.float64), k,
             )
-            rows += [(qi, rid, float(dist)) for dist, rid in merged[:k]]
+            rows += [(qi, int(i), float(x)) for i, x in zip(rid, d)]
         return local_df(
             spark, rows, f"query_idx int, {_quote(id_col)} long, _distance double"
         )
 
     def _search_distributed(
-        self, spark, manifest, artifact_dir, queries, k, search_complexity,
+        self, spark, manifest, queries, k, search_complexity,
         shard_files, probe_sets=None,
     ) -> DataFrame:
         """Batch path (`rust_lib/src/provider.rs:248-441` lock-step batch →
-        Spark shape): queries are partitioned across executors; each task
-        memmaps the shard files from shared storage (per-process cache) and
-        searches its queries; shard-local hits join the (shard, label)→id
-        parquet map and a window keeps the global top-k per query. The
-        index file is never broadcast — executors read it lazily, like the
-        reference's mmap DiskProvider. With `probe_sets` (shard_by='cells')
-        each task touches only the shards its own queries probe — the
-        routing map rides in the broadcast, tiny."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
+        Spark shape), ONE stage: the query matrix and the per-query
+        probe sets (shard_by='cells') ride one broadcast, and each of
+        `spark.range(npart)`'s tasks searches the queries that
+        `repartition(npart, query_idx)` would place in its partition
+        (Spark's int hash), in ascending order — the batched kernels
+        (the flat scan's GEMM selection) see the same query slabs as a
+        hash-partitioned query frame. `_hits_batch` maps labels to ids
+        through the shard sidecars and emits each query's final top-k,
+        so no exchange, join or window follows.
+        Each task memmaps only the shard files its queries probe, from
+        shared storage (per-process cache) — the index file is never
+        broadcast, like the reference's mmap DiskProvider."""
+        from ..functions.partitioning import murmur3_hash_int
 
         id_col = manifest["id_col"]
-        qrows = [(i, [float(x) for x in q]) for i, q in enumerate(queries)]
-        npart = min(len(qrows), spark.sparkContext.defaultParallelism)
-        qdf = local_df(
-            spark, qrows, "query_idx int, _qv array<float>"
-        ).repartition(npart, "query_idx")
-        bpm = spark.sparkContext.broadcast(probe_sets)
-        dim = len(qrows[0][1]) if qrows else 0
+        qm = np.asarray(queries, dtype=np.float32)
+        nq = qm.shape[0]
+        npart = min(nq, spark.sparkContext.defaultParallelism)
+        part = np.array([murmur3_hash_int(i) % npart for i in range(nq)])
+        bq = spark.sparkContext.broadcast((qm, part, probe_sets))
         slab = bool(manifest.get("slab_beam"))
 
         def run(batches):
-            # mapInArrow (round 13 — r12 verdict item 7): the query
-            # matrix reshapes zero-copy from the Arrow buffer and the
-            # hit frame assembles as typed numpy arrays instead of a
-            # python tuple list through a pandas frame
-            import pyarrow as pa
-
-            from ..functions.distance import np_from_arrow_list
-
-            pm = bpm.value
+            qm_, part_, pm = bq.value
             for b in batches:
-                if b.num_rows == 0:
-                    continue
-                qcol = b.column(b.schema.get_field_index("_qv"))
-                qs = np_from_arrow_list(qcol, dim)
-                if qs is None:
-                    qs = np_stack_vectors(
-                        b.select(["_qv"]).to_pandas()["_qv"]
+                for p in b.column(0).to_numpy():
+                    sel = np.flatnonzero(part_ == p)
+                    if not len(sel):
+                        continue
+                    yield _hits_batch(
+                        qm_[sel], sel.tolist(),
+                        None if pm is None else [pm[qi] for qi in sel],
+                        shard_files, k, search_complexity,
+                        "query_idx", np.int32, id_col, slab,
                     )
-                qids = b.column(
-                    b.schema.get_field_index("query_idx")
-                ).to_numpy(zero_copy_only=False).tolist()
-                psets = None if pm is None else [pm[qi] for qi in qids]
-                yield _hits_batch(
-                    qs, qids, psets, shard_files, k, search_complexity,
-                    "query_idx", np.int32, slab,
-                )
 
-        hits = qdf.mapInArrow(
-            run, schema="query_idx int, shard int, label long, _distance double"
+        return spark.range(0, npart, 1, npart).mapInArrow(
+            run, schema=f"query_idx int, {_quote(id_col)} long, _distance double"
         )
-        labels = spark.read.parquet(f"{artifact_dir}/{LABELS_DIR}")
-        w = Window.partitionBy("query_idx").orderBy(
-            F.col("_distance").asc_nulls_last(), F.col("id").asc()
-        )
-        # hits are usually the small side — the label map scales with
-        # the index, so IT must stream. But the hit count grows with
-        # the query batch: only hint the broadcast while the row count
-        # stays well under Spark's broadcast limits; a huge query
-        # batch falls back to a shuffle join rather than collecting
-        # hits to the driver. Round 15: _hits_batch merges to the
-        # global top-k in-task, so the emission is ~queries x k.
-        # Round 16 (r15 VERDICT item 5): the old 2x tie margin was a
-        # heuristic that a pathological all-ties / NaN-degenerate
-        # shard set could undershoot (up to probed_shards x k rows per
-        # query survive the d <= k-th cut); bound by the worst case by
-        # construction instead — the hint can now only OVER-estimate,
-        # never a driver-memory risk. Bench-scale plans are unchanged
-        # (50-query legs: 50 x <=128 x 10 well under the cap).
-        probed = len(shard_files)
-        if probe_sets is not None:
-            probed = max((len(s) for s in probe_sets), default=probed)
-        est_hits = len(qrows) * min(max(1, probed), len(shard_files)) * k
-        joined = (
-            F.broadcast(hits) if est_hits <= 2_000_000 else hits
-        ).join(labels, on=["shard", "label"])
-        return (
-            joined
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select("query_idx", F.col("id").alias(id_col), "_distance")
-        )
-
 
     def search_df(
         self,
@@ -1507,9 +1392,10 @@ class VamanaEngine:
         k: int,
         search_complexity: int | None = None,
     ) -> DataFrame:
-        """DataFrame-queries search → (<query_id_col>, shardhit rows
-        merged to global top-k): the `_search_distributed` shape WITHOUT
-        the driver ever holding the queries (beyond-reference: the
+        """DataFrame-queries search → (<query_id_col>, id, _distance),
+        each query row's top-k emitted by its own task (`_hits_batch`):
+        the `_search_distributed` shape WITHOUT the driver ever holding
+        the queries (beyond-reference: the
         reference's `ann_search_table` streams the query table through
         one in-process index, `src/ann_search.cpp:397-691`; here the
         query side is an unbounded DataFrame — the scale path for
@@ -1562,8 +1448,6 @@ class VamanaEngine:
             # conversion that cut the scan paths in round 12, applied
             # to the largest remaining pandas surface (the 10k-query
             # index_search_table legs at 10M)
-            import pyarrow as pa  # noqa: F401  (used via _hits_batch)
-
             from ..functions.distance import np_from_arrow_list
 
             route_mat = bc.value
@@ -1590,31 +1474,13 @@ class VamanaEngine:
                         pm.append(s if s else existing)
                 yield _hits_batch(
                     qs, qids, pm, shard_files, k, search_complexity,
-                    "_qid", np.int64, slab,
+                    "_qid", np.int64, id_col, slab,
                 )
 
-        hits = qdf.mapInArrow(
-            run, schema="_qid long, shard int, label long, _distance double"
-        )
-        labels = spark.read.parquet(f"{artifact_dir}/{LABELS_DIR}")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_qid").orderBy(
-            F.col("_distance").asc_nulls_last(), F.col("id").asc()
-        )
-        # unlike `_search_distributed`, the hit count is UNBOUNDED (it
-        # grows with the query DataFrame), so the label map join is a
-        # plain shuffle join — never a broadcast of the hits
-        return (
-            hits.join(labels, on=["shard", "label"])
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select(
-                F.col("_qid").alias(query_id_col),
-                F.col("id").alias(id_col),
-                "_distance",
-            )
-        )
+        return qdf.mapInArrow(
+            run,
+            schema=f"_qid long, {_quote(id_col)} long, _distance double",
+        ).withColumnRenamed("_qid", query_id_col)
 
 
 class HnswEngine(VamanaEngine):
@@ -1642,6 +1508,7 @@ class HnswEngine(VamanaEngine):
     lifecycle/restart tests."""
 
     name = "hnsw"
+    layout = "hnsw-layered"
 
     @staticmethod
     def _ef_construction(params) -> int:
@@ -1664,97 +1531,13 @@ class HnswEngine(VamanaEngine):
             metric=params.metric,
         )
 
-    def _write_shard(self, path: str, g, params) -> None:
+    def _write_graph(self, path: str, g, params) -> None:
         write_diskann(path, g, None, hnsw=g)
-
-    def build(self, spark, df, id_col, vec_col, artifact_dir, params, dim):
-        os.makedirs(f"{artifact_dir}/{GRAPH_DIR}", exist_ok=True)
-        src = df.select(id_col, vec_col)
-        build_shard_np = _build_shard_fn(
-            artifact_dir, lambda vecs: self._fresh_graph(vecs, params),
-            hnsw=True,
-        )
-        shards = self._run_sharded_build(
-            spark, src, id_col, params, build_shard_np, artifact_dir
-        )
-        return {
-            "layout": "hnsw-layered", "shards": shards,
-            "route_calibration": getattr(params, "_route_calibration", None),
-            "l_calibration": getattr(params, "_l_calibration", None),
-            "end_calibration": getattr(params, "_end_calibration", None),
-        }
 
     def _default_search_complexity(self, params) -> int:
         """efSearch defaults to ef_construction (`hnsw_core:285`) — the
         base of the build-time L-calibration grid for HNSW shards."""
         return self._ef_construction(params)
-
-    def append(self, spark, manifest, artifact_dir, df_new, params):
-        """Shard-routed append (same policy as VamanaEngine.append):
-        smallest shard receives the rows; at APPEND_SHARD_CAP a fresh
-        overflow shard is built instead. Exactly one shard file is
-        rewritten. shard_by='cells' routes by nearest centroid instead —
-        see `_append_routed`."""
-        id_col, vec_col = manifest["id_col"], manifest["vec_col"]
-        pdf = self._collect_delta(df_new, id_col, vec_col)
-        if not len(pdf):
-            return {}
-        route = _route_centroids(spark, artifact_dir, manifest["params"])
-        if route is not None:
-            return self._append_routed(
-                spark, manifest, artifact_dir, pdf, params, route
-            )
-        vecs = np_stack_vectors(pdf[vec_col])
-        shard_files = self._shard_files(artifact_dir)
-        shard_id, path = min(
-            shard_files, key=lambda sf: os.path.getsize(sf[1])
-        )
-        g = read_hnsw(path, mmap=False)
-        if g is None:
-            # shard has no HNSW appendix — an artifact from the old
-            # 'hnsw-as-vamana-graph' layout; its shards are plain Vamana
-            # bodies an HnswGraph can't extend
-            raise ValueError(
-                f"Index shard '{path}' predates the layered-HNSW format; "
-                "drop and recreate the index to append to it"
-            )
-        if g.n == 0:
-            # empty shard (index created over 0 rows, dim unknown): build
-            # it fresh from the new batch in place
-            g = build_hnsw(
-                vecs, m=int(params.hnsw_m),
-                ef_construction=self._ef_construction(params),
-                metric=params.metric,
-            )
-            labels = [
-                (shard_id, label, int(rid))
-                for label, rid in enumerate(pdf[id_col])
-            ]
-        elif g.n >= self._append_cap(params):
-            shard_id = max(s for s, _ in shard_files) + 1
-            path = f"{artifact_dir}/{GRAPH_DIR}/shard_{shard_id}.diskann"
-            g = build_hnsw(
-                vecs, m=int(params.hnsw_m),
-                ef_construction=self._ef_construction(params),
-                metric=params.metric,
-            )
-            labels = [
-                (shard_id, label, int(rid))
-                for label, rid in enumerate(pdf[id_col])
-            ]
-        else:
-            labels = []
-            for rid, vec in zip(pdf[id_col], vecs):
-                label = g.insert(vec)
-                labels.append((shard_id, label, int(rid)))
-        write_diskann(path, g, None, hnsw=g)
-        local_df(
-            spark, labels, "shard int, label long, id long"
-        ).write.mode("append").parquet(f"{artifact_dir}/{LABELS_DIR}")
-        # recount from disk: build shard numbering can be non-contiguous
-        # (empty hash partitions write no file), so shard_id+1 would
-        # overstate the count after an overflow append
-        return {"shards": len(self._shard_files(artifact_dir))}
 
 
 register_engine("diskann", "vamana", VamanaEngine())

@@ -767,7 +767,7 @@ def index_knn_join(
     """
     from ..index.api import _deleted_ids, _load
     from ..index.ivf import CELL_COL as IVF_CELL_COL
-    from ..index.ivf import VECTORS_DIR, IvfFlatEngine, _decode_cells_df
+    from ..index.ivf import IvfFlatEngine, _decode_cells_df
 
     cat, manifest, d, impl = _load(index_name, "", catalog)
     if not isinstance(impl, IvfFlatEngine):
@@ -821,7 +821,7 @@ def index_knn_join(
     )
     dim = int(centroids.shape[1])
 
-    b = spark.read.parquet(f"{d}/{VECTORS_DIR}")
+    b = impl._read_cells(spark, d, manifest)
     if IVF_CELL_COL != CELL_COL:  # pragma: no cover - same constant today
         b = b.withColumnRenamed(IVF_CELL_COL, CELL_COL)
     deleted = _deleted_ids(spark, d, manifest)

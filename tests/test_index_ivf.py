@@ -453,10 +453,16 @@ def test_write_partition_count_regimes(spark):
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         spark.sparkContext.defaultParallelism,
     )
-    # small build: capped at k_eff (layout unchanged vs pre-round-12)
-    assert _write_partition_count(spark, 8, 60_000, 64) == 8
-    # the 10M smoke shape: core-count, not 3162
-    assert _write_partition_count(spark, 3162, 10_000_000, 16) == cores
+    # small build: the core-count floor, capped at k_eff (layout
+    # unchanged vs pre-round-12); the k_eff=2 case binds the cap on
+    # every host (cores >= 4 always)
+    assert _write_partition_count(spark, 8, 60_000, 64) == min(8, cores)
+    assert _write_partition_count(spark, 2, 60_000, 64) == 2
+    # the 10M smoke shape: core-count, not 3162 (10M x (16*4+16) B is
+    # ~6 tasks of 128 MB, so the size term only shows below 6 cores)
+    assert _write_partition_count(spark, 3162, 10_000_000, 16) == max(
+        cores, 6
+    )
     # huge rows: the 128MB/task term takes over
     big = _write_partition_count(spark, 65_536, 2_000_000_000, 128)
     assert big > cores and big <= 65_536

@@ -59,9 +59,10 @@ def test_create_empty_then_insert(spark, cat, engine, opts):
 
 
 def test_vacuum_and_merge_with_empty_indexes(spark, cat):
-    """Vacuum of an empty index is a no-op (the empty IVF artifact is
-    not even readable); merging an empty source is a no-op and an empty
-    DESTINATION adopts the source's vectors and dimension."""
+    """Vacuum of an empty index is a no-op; the empty IVF artifact reads
+    as empty frames (known schema, nothing to infer from); merging an
+    empty source is a no-op and an empty DESTINATION adopts the
+    source's vectors and dimension."""
     from duckdb_ann_spark.index import merge_indexes
 
     for n in ("rob_me_full", "rob_me_empty", "rob_me_ivf"):
@@ -73,6 +74,11 @@ def test_vacuum_and_merge_with_empty_indexes(spark, cat):
     create_index(_vecs(spark, []), "vec_id", "embedding", "rob_me_ivf",
                  engine="faiss", table_name="t", type="IVFFlat",
                  ivf_nlist=4, catalog=cat)
+    from duckdb_ann_spark.index.engines import get_engine
+
+    ivf = get_engine("faiss", "ivfflat")
+    assert ivf.vectors(spark, cat.path("rob_me_ivf")).count() == 0
+    assert ivf.ids(spark, cat.path("rob_me_ivf"), "vec_id").count() == 0
 
     assert vacuum_index(spark, "rob_me_ivf", catalog=cat)["num_vectors"] == 0
     assert vacuum_index(spark, "rob_me_empty", catalog=cat)["num_vectors"] == 0
@@ -268,32 +274,6 @@ def test_overrequest_retry_on_routed_graph(spark, cat):
     got = index_scan(spark, name, qs, k, catalog=cat).collect()
     assert len(got) == 3 * k
     assert not {r["vec_id"] for r in got} & set(deleted)
-    drop_index(name, cat)
-
-
-def test_resolve_labels_spark_fallback(spark, cat, monkeypatch):
-    """_resolve_labels' Spark isin-filter fallback returns the same map
-    as the pyarrow path when pyarrow can't open the scheme."""
-    import duckdb_ann_spark.index.vamana as vm
-
-    name = "rob_labels"
-    drop_index(name, cat)
-    create_index(_vecs(spark, range(40)), "vec_id", "embedding", name,
-                 engine="diskann", table_name="t", catalog=cat)
-    d = cat.path(name)
-    pairs = {(0, 3), (0, 17), (0, 39)}
-    want = vm._resolve_labels(spark, d, pairs)
-    assert set(want) == pairs  # single shard: label == insertion order
-
-    import pyarrow.dataset as pads
-
-    def boom(*a, **kw):
-        raise OSError("scheme not supported")
-
-    monkeypatch.setattr(pads, "dataset", boom)
-    got = vm._resolve_labels(spark, d, pairs)
-    assert got == want
-    assert vm._resolve_labels(spark, d, set()) == {}
     drop_index(name, cat)
 
 

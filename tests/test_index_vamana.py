@@ -271,7 +271,7 @@ def test_shard_cache_lru_bounded(tmp_path):
     import numpy as np
 
     import duckdb_ann_spark.index.vamana as vm
-    from duckdb_ann_spark.index.file_format import write_diskann
+    from duckdb_ann_spark.index.file_format import write_diskann, write_ids
     from duckdb_ann_spark.index.vamana_core import build_graph
 
     g = build_graph(np.ones((3, 4), dtype=np.float32), max_degree=4,
@@ -283,6 +283,7 @@ def test_shard_cache_lru_bounded(tmp_path):
         paths = []
         for i in range(5):
             p = str(tmp_path / f"s{i}.diskann")
+            write_ids(p, np.arange(g.n))
             write_diskann(p, g)
             paths.append(p)
             vm._load_shard(p)
@@ -309,7 +310,7 @@ def test_sq8_shard_cache_stays_quantized(tmp_path):
     import numpy as np
 
     import duckdb_ann_spark.index.vamana as vm
-    from duckdb_ann_spark.index.file_format import write_diskann
+    from duckdb_ann_spark.index.file_format import write_diskann, write_ids
     from duckdb_ann_spark.index.vamana_core import (
         SQ8Vectors,
         build_graph,
@@ -322,10 +323,11 @@ def test_sq8_shard_cache_stays_quantized(tmp_path):
     vecs = rng.random((n, dim), dtype=np.float32)
     g = build_graph(vecs, max_degree=8, build_complexity=16)
     p = str(tmp_path / "q.diskann")
+    write_ids(p, np.arange(n))
     write_diskann(p, g, sq8_quantize(vecs))
     try:
         vm._clear_shard_cache()
-        loaded = vm._load_shard(p)
+        loaded, _ = vm._load_shard(p)
         assert isinstance(loaded.vectors, SQ8Vectors)
         # resident accounting: codes (n*dim u1) + mins/scale (2*dim f4),
         # plus nothing else materialized (body vectors/adjacency are mmap)
@@ -356,7 +358,7 @@ def test_shard_cache_byte_budget(tmp_path):
     import numpy as np
 
     import duckdb_ann_spark.index.vamana as vm
-    from duckdb_ann_spark.index.file_format import write_diskann
+    from duckdb_ann_spark.index.file_format import write_diskann, write_ids
     from duckdb_ann_spark.index.vamana_core import build_graph, sq8_quantize
 
     rng = np.random.default_rng(9)
@@ -371,6 +373,7 @@ def test_shard_cache_byte_budget(tmp_path):
             vecs = rng.random((n, dim), dtype=np.float32)
             g = build_graph(vecs, max_degree=8, build_complexity=16)
             p = str(tmp_path / f"b{i}.diskann")
+            write_ids(p, np.arange(n))
             write_diskann(p, g, sq8_quantize(vecs))
             paths.append(p)
             vm._load_shard(p)

@@ -76,21 +76,35 @@ def test_distance_exprs_stay_in_codegen(spark, emb):
     assert "*(1)" in plan, plan
 
 
-def test_vamana_batch_search_broadcasts_hits(spark, sf_dir, tmp_path):
-    """The label-map join must broadcast the tiny hits side — the label
-    map scales with the index and has to stream."""
-    from duckdb_ann_spark.index import Catalog, create_index, index_scan
+def test_vamana_search_is_one_stage(spark, sf_dir, tmp_path):
+    """Graph searches map labels to ids inside the search task (per-shard
+    id sidecars) and cut each query to its top-k there: the batch scan
+    is one stage — no Join, no Window, no Exchange — and the table
+    search keeps only its query repartition (no Join, no Window)."""
+    from duckdb_ann_spark.index import (
+        Catalog,
+        create_index,
+        index_scan,
+        index_search_table,
+    )
 
     cat = Catalog(str(tmp_path / "plan_cat"))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     create_index(
         emb, "vec_id", "embedding", "plan_vam", engine="diskann",
-        max_degree=16, build_complexity=32, catalog=cat,
+        max_degree=16, build_complexity=32, shards=2, catalog=cat,
     )
     qs = [[0.0] * 64] * 16  # > DISTRIBUTE_THRESHOLD -> distributed path
     plan = _plan(index_scan(spark, "plan_vam", qs, 5, catalog=cat))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    for node in ("Join", "Window", "Exchange"):
+        assert node not in plan, plan
+    qdf = emb.select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    plan = _plan(index_search_table(spark, "plan_vam", qdf, "qid", "qv", 5,
+                                    catalog=cat))
+    assert "Join" not in plan, plan
+    assert "Window" not in plan, plan
 
 
 def test_ivf_probe_scan_has_no_join(spark, sf_dir, tmp_path):

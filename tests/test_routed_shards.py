@@ -142,8 +142,9 @@ def test_routed_append_targets_nearest_cell(spark, emb, cat):
                      "embedding")
     insert_into_index(spark, "rap", new, cat)
     after = digests()
-    changed = [f for f in before if before[f] != after.get(f)]
-    assert len(changed) == 1, changed
+    # one shard rewritten: its graph file and its id sidecar
+    changed = sorted(f for f in before if before[f] != after.get(f))
+    assert len(changed) == 2, changed
     # the changed shard is the one whose centroid is nearest the vector
     route = spark.read.parquet(os.path.join(d, "route")).collect()
     cents = np.array(
@@ -152,7 +153,7 @@ def test_routed_append_targets_nearest_cell(spark, emb, cat):
     )
     v = np.array(src.head()["embedding"], dtype=np.float32)
     want_cell = int(((cents - v) ** 2).sum(axis=1).argmin())
-    assert changed == [f"shard_{want_cell}.diskann"]
+    assert changed == [f"shard_{want_cell}.diskann", f"shard_{want_cell}.ids"]
     # and the clone is findable
     q = [float(x) for x in v]
     got = {
@@ -475,7 +476,7 @@ def test_cell_pack_identical_artifacts_and_gate(spark, cat, monkeypatch,
     75-86s of pure schedule+shuffle floor vs 13.6-14.6s at 834). Every
     cell still builds alone from its own id-sorted rows inside the task
     loop, so the ARTIFACT must be byte-identical: same shard files,
-    same labels, same route table, same manifest shard count. The
+    same id sidecars, same route table, same manifest shard count. The
     <= 8x-parallelism gate keeps small builds (all bench/oracle
     layouts) on the historical one-cell-per-partition placement."""
     import glob
@@ -503,16 +504,11 @@ def test_cell_pack_identical_artifacts_and_gate(spark, cat, monkeypatch,
                      max_degree=8, build_complexity=16, shards=shards,
                      shard_by="cells", catalog=cat)
         root = cat.path(name)
+        # graph files AND their id sidecars
         files = {
             os.path.basename(p): open(p, "rb").read()
-            for p in glob.glob(f"{root}/graphs/shard_*.diskann")
+            for p in glob.glob(f"{root}/graph/shard_*")
         }
-        labels = (
-            pq.read_table(f"{root}/labels")
-            .to_pandas()
-            .sort_values(["shard", "label"])
-            .reset_index(drop=True)
-        )
         route = (
             pq.read_table(f"{root}/route")
             .to_pandas()
@@ -520,16 +516,16 @@ def test_cell_pack_identical_artifacts_and_gate(spark, cat, monkeypatch,
             .reset_index(drop=True)
         )
         m = cat.load(name)
-        return files, labels, route, m
+        return files, route, m
 
-    files_off, labels_off, route_off, m_off = _build("pack_off", "0")
-    files_on, labels_on, route_on, m_on = _build("pack_on", "8")
+    files_off, route_off, m_off = _build("pack_off", "0")
+    files_on, route_on, m_on = _build("pack_on", "8")
 
     assert m_on["shards"] == m_off["shards"]
+    assert len(files_off) == 2 * m_off["shards"]  # .diskann + .ids each
     assert set(files_on) == set(files_off)
     mismatched = [f for f in files_off if files_on[f] != files_off[f]]
     assert not mismatched, mismatched[:5]
-    assert labels_on.equals(labels_off)
     assert route_on["shard"].tolist() == route_off["shard"].tolist()
     assert np.array_equal(
         np.array(route_on["centroid"].tolist()),

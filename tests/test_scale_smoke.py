@@ -888,7 +888,7 @@ def test_vamana_1m_routed_sq8(spark, cat):
         vam._clear_shard_cache()
         vec_bytes = 0
         for _, path in files[:5]:
-            g = vam._load_shard(path)
+            g, _ = vam._load_shard(path)
             if name == "smoke_vam8":
                 assert isinstance(g.vectors, SQ8Vectors), type(g.vectors)
             vec_bytes += int(g.vectors.nbytes)
@@ -1994,7 +1994,7 @@ def test_graph_1m_dim768_tier(spark, cat):
             )[:5]
             vam._clear_shard_cache()
             for _, path in big5:
-                g = vam._load_shard(path)
+                g, _ = vam._load_shard(path)
                 if name == "smoke768_vam8":
                     assert isinstance(g.vectors, SQ8Vectors), type(g.vectors)
                 vec_bytes += int(g.vectors.nbytes)
