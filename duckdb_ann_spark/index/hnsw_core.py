@@ -48,9 +48,7 @@ import numpy as np
 
 from .vamana_core import NO_EDGE, _dist, _dists, _mix64
 
-# Max dim for the wave-batched level-0 build body (round-14 gate,
-# env-overridable for A/B like the vamana wave knobs — executors read
-# their own copy of this module, so only the env reaches them). Round
+# Max dim for the wave-batched level-0 build body (round-14 gate). Round
 # 15 (r14 verdict item 5): the dim-128 regression the gate was hiding
 # was the wave kernel's qs-repeat + diff TEMPS (two (rows, dim)
 # allocations growing with dim); with the in-place segment subtract in
@@ -61,9 +59,7 @@ from .vamana_core import NO_EDGE, _dist, _dists, _mix64
 # loses at 2000x768 (4.20->4.36s, 0.96x): at that dim the merged
 # slab rows blow past cache and the wave only adds working set. Gate
 # raised 64 -> 256; 768-dim builds keep the per-row slab body.
-import os as _os
-
-WAVE_MAX_DIM = int(_os.environ.get("SPARK_GRAFT_HNSW_WAVE_MAX_DIM", "256"))
+WAVE_MAX_DIM = 256
 
 
 def _level_for(label: int, ml: float) -> int:
@@ -482,12 +478,32 @@ class HnswGraph:
         for lc in range(self.max_level, 0, -1):
             ep = self._search_layer(q, ep, 1, lc, visited_out=visited)
         res = self._search_layer(q, ep, ef, 0, visited_out=visited)
+        res = self._fill_short(q, res, k_eff, visited)
         # deterministic (dist, id) order for equal distances
         res = sorted((d, i) for d, i in res)[:k_eff]
         hits = [(i, d) for d, i in res]
         if return_visited:
             return hits, sorted(visited)
         return hits
+
+    def _fill_short(self, q: np.ndarray, res: list[tuple[float, int]],
+                    k_eff: int, visited: set | None = None):
+        """Top a layer-0 result that reached fewer than `k_eff` labels
+        up with the nearest of the rest, scored exactly. The pruned
+        layer 0 need not be strongly connected (IP can leave a sink of
+        a few mutually-nearest nodes the descent lands in), so the beam
+        alone cannot promise `min(k, n)` hits; full results pass
+        through unchanged."""
+        if len(res) >= k_eff:
+            return res
+        rest = np.ones(self.n, dtype=bool)
+        rest[[i for _, i in res]] = False
+        ids = np.flatnonzero(rest)
+        ds = _dists(self.metric, self.vectors[ids], q)
+        top = np.lexsort((ids, ds))[: k_eff - len(res)]
+        if visited is not None:
+            visited.update(ids.tolist())
+        return list(res) + [(float(ds[j]), int(ids[j])) for j in top]
 
     def search_batch(self, queries, k: int,
                      search_complexity: int | None = None):
@@ -523,7 +539,8 @@ class HnswGraph:
                    self.entry_point)]
             for lc in range(self.max_level, 0, -1):
                 ep = self._search_layer(q, ep, 1, lc)
-            res = self._search_layer0_slab(q, ep, ef, B)[:k_eff]
+            res = self._search_layer0_slab(q, ep, ef, B)
+            res = sorted(self._fill_short(q, res, k_eff))[:k_eff]
             out.append([(i, d) for d, i in res])
         return out
 
@@ -569,12 +586,10 @@ def build_hnsw(vectors: np.ndarray, m: int = 32, ef_construction: int = 64,
         # boundaries are known upfront — level-1+ labels (and label 0,
         # the entry seed) insert sequentially, runs of level-0 labels
         # between them wave. Same recall-parity gate as the rest of the
-        # bulk body. Dim-gated (<= 64): measured min-of-3 vs per-row
-        # slab at m16/ef40 — 6000x16 3.71->3.38s, 4000x32 4.53->3.98s,
-        # 4000x64 5.38->5.24s, but 4000x128 4.24->4.87s (the wide
-        # high-dim waves over-expand past ef and the select/connect
-        # phase dominates there anyway); recall identical at every
-        # shape.
+        # bulk body. Dim-gated (<= WAVE_MAX_DIM): measured min-of-3 vs
+        # per-row slab at m16/ef40 — 6000x16 3.71->3.38s, 4000x32
+        # 4.53->3.98s, 4000x64 5.38->5.24s, recall identical at every
+        # shape; WAVE_MAX_DIM has the measurements past dim 64.
         i = 0
         while i < n:
             if i == 0 or _level_for(i, g.ml) > 0:

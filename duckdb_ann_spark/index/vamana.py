@@ -5,8 +5,9 @@ the reference buffers every vector in one global sink state and builds
 single-threaded (`ParallelSink()=false`); our single-shard build mirrors
 that exactly (driver-side sequential inserts in id order). For scale,
 `shards=N` partitions ids by hash and builds N independent graphs in
-parallel executors (`applyInPandas`), searching all shards and merging —
-the same shard-and-merge trade the reference makes in `MergeIndexes`.
+parallel executors (`mapInArrow`, one body for hash and cell shards),
+searching all shards and merging — the same shard-and-merge trade the
+reference makes in `MergeIndexes`.
 
 Artifact layout:
 
@@ -48,13 +49,16 @@ import os
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..local import local_df
 from .engines import register_engine
-from ..functions.distance import np_index_distances, np_stack_vectors
+from ..functions.distance import (
+    cast_id_vec,
+    np_index_distances,
+    np_stack_vectors,
+)
 from .file_format import (
     read_diskann,
     read_header,
@@ -77,6 +81,9 @@ GRAPH_DIR = "graph"
 # shard_by='cells' routing table: parquet (shard int, centroid) — one
 # kmeans centroid per shard, read driver-side at search/append time
 ROUTE_DIR = "route"
+# most cells one packed build partition of a routed build holds (see
+# `_run_cell_build`)
+CELL_PACK = 8
 
 # per-process (driver or python worker) shard cache, LRU-bounded two
 # ways (round 8): by RESIDENT BYTES (the real constraint — SQ8 shards
@@ -223,9 +230,8 @@ def _route_probe_sets(
 # across batch widths 1-193; crossover ~2x L*d single-query, ~12-25x
 # L*d batched) and strictly better recall (exact per shard — the
 # calibrated floor stays a floor). 4x L*d keeps every covered shape a
-# win at every batch width. 0 disables (beam everywhere). Read per
-# call (not at import) so executors and tests resolve their own env.
-FLAT_SCAN_FACTOR_DEFAULT = 4.0
+# win at every batch width.
+FLAT_SCAN_FACTOR = 4.0
 
 
 def _flat_scan_ok(g, k: int, search_complexity) -> bool:
@@ -236,13 +242,9 @@ def _flat_scan_ok(g, k: int, search_complexity) -> bool:
     v = getattr(g, "vectors", None)
     if not isinstance(v, np.ndarray):
         return False
-    factor = float(
-        os.environ.get("SPARK_GRAFT_FLAT_SCAN_FACTOR", "")
-        or FLAT_SCAN_FACTOR_DEFAULT
-    )
     deg = getattr(g, "max_degree", 0) or 2 * getattr(g, "m", 0)
     L = max(k, int(search_complexity or getattr(g, "build_complexity", 0) or k))
-    return deg > 0 and g.n <= factor * L * deg
+    return deg > 0 and g.n <= FLAT_SCAN_FACTOR * L * deg
 
 
 def _flat_search_batch(g, qm: np.ndarray, k: int):
@@ -417,6 +419,107 @@ def _shard_path(artifact_dir: str, shard: int) -> str:
     return f"{artifact_dir}/{GRAPH_DIR}/shard_{shard}.diskann"
 
 
+def _build_cells(build_shard_np, id_col: str, vec_col: str,
+                 task_accs=None):
+    """The one shard-build body of every multi-shard graph build (hash
+    and cells, both engines): a mapInArrow function over (id, vec,
+    shard int, ...) rows that builds each distinct `shard` value of
+    its task from that shard's rows alone through `build_shard_np` and
+    emits one (shard, n) row per shard built. `task_accs` (routed
+    builds under SPARK_GRAFT_BUILD_PHASES) sums per-task phase walls."""
+
+    def build_cells(batches):
+        # mapInArrow (round 13 — r12 verdict item 2): a pandas body
+        # round-trips every vector through an object Series on its
+        # way into the per-shard build — the same conversion tax the
+        # round-12 Arrow scan fixes removed everywhere else. Vectors
+        # reshape zero-copy from the Arrow child buffers; grouping is
+        # one stable argsort over the int32 shard column.
+        import time as _t
+
+        import pyarrow as pa
+
+        from ..functions.distance import np_from_arrow_list
+
+        walls = (
+            {"shuffle_fetch": 0.0, "input_arrow": 0.0,
+             "graph_insert": 0.0, "file_write": 0.0}
+            if task_accs is not None
+            else None
+        )
+        id_parts, vec_parts, cell_parts = [], [], []
+        t_prev = _t.perf_counter()
+        for b in batches:
+            t_in = _t.perf_counter()
+            if walls is not None:
+                # time inside the generator's __next__ = waiting on
+                # the shuffle reader for the next batch
+                walls["shuffle_fetch"] += t_in - t_prev
+            if b.num_rows == 0:
+                t_prev = _t.perf_counter()
+                continue
+            ids_b = b.column(b.schema.get_field_index(id_col)).to_numpy(
+                zero_copy_only=False
+            )
+            vcol = b.column(b.schema.get_field_index(vec_col))
+            dim = len(vcol[0].as_py() or []) if b.num_rows else 0
+            mat = np_from_arrow_list(vcol, dim)
+            if mat is None:
+                mat = np_stack_vectors(
+                    b.select([vec_col]).to_pandas()[vec_col]
+                )
+            cells_b = b.column(
+                b.schema.get_field_index("shard")
+            ).to_numpy(zero_copy_only=False)
+            id_parts.append(ids_b)
+            vec_parts.append(mat)
+            cell_parts.append(cells_b)
+            t_prev = _t.perf_counter()
+            if walls is not None:
+                walls["input_arrow"] += t_prev - t_in
+        if not id_parts:
+            return
+        t_in = _t.perf_counter()
+        ids = np.concatenate(id_parts)
+        vecs = np.vstack(vec_parts)
+        cells = np.concatenate(cell_parts)
+        order = np.argsort(cells, kind="stable")
+        cells_s = cells[order]
+        starts = np.concatenate(
+            [[0], np.flatnonzero(np.diff(cells_s)) + 1, [len(cells_s)]]
+        )
+        if walls is not None:
+            walls["input_arrow"] += _t.perf_counter() - t_in
+        # single-BLAS-thread insert kernels for the shard builds:
+        # this task is one of `defaultParallelism` running
+        # concurrently — a second BLAS thread only oversubscribes
+        # (measured -8% per cell at the 10M shape). Restored after:
+        # python workers are reused by later jobs whose big-GEMM
+        # kernels want the default.
+        from .vamana_core import _blas_set_threads
+
+        prev_threads = _blas_set_threads(1)
+        try:
+            for a, z in zip(starts[:-1], starts[1:]):
+                rows = order[a:z]
+                shard = int(cells_s[a])
+                n = build_shard_np(ids[rows], vecs[rows], shard, walls)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([shard], pa.int32()),
+                     pa.array([n], pa.int64())],
+                    names=["shard", "n"],
+                )
+        finally:
+            if prev_threads is not None:
+                _blas_set_threads(prev_threads)
+        if walls is not None:
+            for k, v in walls.items():
+                if v:
+                    task_accs[k].add(v)
+
+    return build_cells
+
+
 class VamanaEngine:
     name = "vamana"
     layout = "diskann-v2"
@@ -455,10 +558,10 @@ class VamanaEngine:
         """`build_shard_np(ids, vecs, shard, walls=None)` → the shard's
         row count. The build is id-sorted (reference insert order),
         runs `_fresh_graph` and writes the graph and its id sidecar
-        through `_write_shard`. numpy-facing so the cell build's
-        mapInArrow path never round-trips the vectors through pandas
+        through `_write_shard`. numpy-facing so the `_build_cells`
+        mapInArrow body never round-trips the vectors through pandas
         object Series (round 13). `walls` (round 14, r13 verdict item
-        1): per-phase wall dict the cell build fills so the 10M
+        1): per-phase wall dict the routed build fills so the 10M
         composite phase is attributable — graph insert vs shard-file
         write."""
 
@@ -484,11 +587,13 @@ class VamanaEngine:
     def _run_sharded_build(self, spark, src, id_col, params, build_shard_np,
                            artifact_dir) -> int:
         """Shared shard-and-merge driver for every graph engine: 1 shard
-        = reference-parity driver build; N shards = the shuffle partition
-        IS the shard — repartition(shards, id) spreads rows uniformly
-        (hash of a unique id) and each task builds exactly one graph from
-        its whole partition. One shuffle, perfect task balance, no hidden
-        sampling job (repartitionByRange runs one to estimate bounds).
+        = reference-parity driver build; N hash shards = shard
+        pmod(hash(id), N), and repartition(N, id) places shard s in
+        partition s, so each task builds exactly one graph from its
+        whole partition through `_build_cells` — the Arrow body the
+        cell build uses too. One shuffle, uniform task balance, no
+        hidden sampling job (repartitionByRange runs one to estimate
+        bounds).
         `params.shards == 0` (both engines' default) resolves here: one
         graph up to `params.auto_shard_rows()` vectors (the round-9
         degree-aware budget — the historical reference-parity 25k at
@@ -512,17 +617,6 @@ class VamanaEngine:
         import shutil
 
         vec_col = [c for c in src.columns if c != id_col][0]
-
-        def build_shard(pdf: pd.DataFrame, shard: int) -> int:
-            # pandas adapter for the single-shard / hash-partition
-            # paths; the cell path feeds build_shard_np from Arrow
-            # buffers directly (stack-then-sort == sort-then-stack, so
-            # both paths produce byte-identical shard files)
-            return build_shard_np(
-                pdf[id_col].to_numpy(), np_stack_vectors(pdf[vec_col]),
-                shard,
-            )
-
         # routed-probe + in-shard-L calibration results (set by
         # _run_cell_build; None-initialized here so hash/single-shard
         # builds — and vacuum/merge rebuilds that CHANGE layout —
@@ -566,7 +660,10 @@ class VamanaEngine:
         # routing table from a previous layout
         shutil.rmtree(f"{artifact_dir}/{ROUTE_DIR}", ignore_errors=True)
         if shards == 1:
-            build_shard(src.toPandas(), 0)
+            pdf = src.toPandas()
+            build_shard_np(
+                pdf[id_col].to_numpy(), np_stack_vectors(pdf[vec_col]), 0
+            )
             return 1
 
         if getattr(params, "shard_by", "hash") == "cells":
@@ -575,19 +672,17 @@ class VamanaEngine:
                 shards, n_rows,
             )
 
-        def build_partition(batches):
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs)
-            shard = int(pdf["shard"].iloc[0])
-            n = build_shard(pdf.drop(columns=["shard"]), shard)
-            yield pd.DataFrame({"shard": [shard], "n": [n]})
-
+        # shard = pmod(murmur3(id), shards): exactly the partition id
+        # the repartition's HashPartitioning assigns, so shard s is
+        # built by partition s from its whole row set
         (
-            src.repartition(shards, F.col(id_col))
-            .withColumn("shard", F.spark_partition_id())
-            .mapInPandas(build_partition, schema="shard int, n long")
+            cast_id_vec(src, id_col, vec_col)
+            .withColumn("shard", F.pmod(F.hash(F.col(id_col)), F.lit(shards)))
+            .repartition(shards, F.col(id_col))
+            .mapInArrow(
+                _build_cells(build_shard_np, id_col, vec_col),
+                schema="shard int, n long",
+            )
             .collect()
         )
         return len(self._shard_files(artifact_dir))
@@ -725,17 +820,13 @@ class VamanaEngine:
         # one-cell-per-partition placement exactly. The round-11
         # expensive-cell lesson is preserved by LPT: a heavy cell lands
         # alone in its bin unless there are more heavy cells than bins,
-        # which no placement could fix. SPARK_GRAFT_CELL_PACK = target
-        # cells/bin cap (default 8; 0 disables packing).
+        # which no placement could fix. A bin holds at most
+        # CELL_PACK cells.
         par = max(1, spark.sparkContext.defaultParallelism)
-        pack = float(os.environ.get("SPARK_GRAFT_CELL_PACK", "") or 8)
-        if pack > 0 and total_shards > 8 * par:
-            # max(1, int(pack)): a fractional env value in (0,1) passes
-            # the pack>0 gate but int(pack)==0 would ZeroDivisionError
-            # (r15 ADVICE)
+        if total_shards > 8 * par:
             n_bins = min(
                 total_shards,
-                max(8 * par, -(-total_shards // max(1, int(pack)))),
+                max(8 * par, -(-total_shards // CELL_PACK)),
             )
         else:
             n_bins = total_shards
@@ -824,98 +915,6 @@ class VamanaEngine:
             "shard int, _pt int"
         )
 
-        def build_cells(batches):
-            # mapInArrow (round 13 — r12 verdict item 2): the OLD
-            # mapInPandas body round-tripped every vector through a
-            # pandas object Series on its way into the per-cell build —
-            # the same conversion tax the round-12 Arrow scan fixes
-            # removed everywhere else. Vectors reshape zero-copy from
-            # the Arrow child buffers; grouping is one stable argsort
-            # over the int32 cell column.
-            import time as _t
-
-            import pyarrow as pa
-
-            from ..functions.distance import np_from_arrow_list
-
-            walls = (
-                {"shuffle_fetch": 0.0, "input_arrow": 0.0,
-                 "graph_insert": 0.0, "file_write": 0.0}
-                if task_accs is not None
-                else None
-            )
-            id_parts, vec_parts, cell_parts = [], [], []
-            t_prev = _t.perf_counter()
-            for b in batches:
-                t_in = _t.perf_counter()
-                if walls is not None:
-                    # time inside the generator's __next__ = waiting on
-                    # the shuffle reader for the next batch
-                    walls["shuffle_fetch"] += t_in - t_prev
-                if b.num_rows == 0:
-                    t_prev = _t.perf_counter()
-                    continue
-                ids_b = b.column(b.schema.get_field_index(id_col)).to_numpy(
-                    zero_copy_only=False
-                )
-                vcol = b.column(b.schema.get_field_index(vec_col))
-                dim = len(vcol[0].as_py() or []) if b.num_rows else 0
-                mat = np_from_arrow_list(vcol, dim)
-                if mat is None:
-                    mat = np_stack_vectors(
-                        b.select([vec_col]).to_pandas()[vec_col]
-                    )
-                cells_b = b.column(
-                    b.schema.get_field_index("shard")
-                ).to_numpy(zero_copy_only=False)
-                id_parts.append(ids_b)
-                vec_parts.append(mat)
-                cell_parts.append(cells_b)
-                t_prev = _t.perf_counter()
-                if walls is not None:
-                    walls["input_arrow"] += t_prev - t_in
-            if not id_parts:
-                return
-            t_in = _t.perf_counter()
-            ids = np.concatenate(id_parts)
-            vecs = np.vstack(vec_parts)
-            cells = np.concatenate(cell_parts)
-            order = np.argsort(cells, kind="stable")
-            cells_s = cells[order]
-            starts = np.concatenate(
-                [[0], np.flatnonzero(np.diff(cells_s)) + 1, [len(cells_s)]]
-            )
-            if walls is not None:
-                walls["input_arrow"] += _t.perf_counter() - t_in
-            # single-BLAS-thread insert kernels for the cell builds:
-            # this task is one of `defaultParallelism` running
-            # concurrently — a second BLAS thread only oversubscribes
-            # (measured -8% per cell at the 10M shape). Restored after:
-            # python workers are reused by later jobs whose big-GEMM
-            # kernels want the default.
-            from .vamana_core import _blas_set_threads
-
-            prev_threads = _blas_set_threads(1)
-            try:
-                for a, z in zip(starts[:-1], starts[1:]):
-                    rows = order[a:z]
-                    shard = int(cells_s[a])
-                    n = build_shard_np(ids[rows], vecs[rows], shard, walls)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([shard], pa.int32()),
-                         pa.array([n], pa.int64())],
-                        names=["shard", "n"],
-                    )
-            finally:
-                if prev_threads is not None:
-                    _blas_set_threads(prev_threads)
-            if walls is not None:
-                for k, v in walls.items():
-                    if v:
-                        task_accs[k].add(v)
-
-        from ..functions.distance import cast_id_vec
-
         (
             # belt-and-braces dtype cast (round-13 advice): the assign
             # batches pass id/vec VERBATIM into the declared
@@ -924,7 +923,10 @@ class VamanaEngine:
             cast_id_vec(src, id_col, vec_col)
             .mapInArrow(assign, schema=schema)
             .repartition(n_bins, F.col("_pt"))
-            .mapInArrow(build_cells, schema="shard int, n long")
+            .mapInArrow(
+                _build_cells(build_shard_np, id_col, vec_col, task_accs),
+                schema="shard int, n long",
+            )
             .collect()
         )
         if task_accs is not None:
@@ -1305,35 +1307,16 @@ class VamanaEngine:
                 spark, manifest, queries, k, search_complexity,
                 shard_files, probe_sets,
             )
-        # driver-local: per query, search its probed shards, map labels
-        # to ids through the shard sidecars and keep the top-k by
-        # (distance, id) — the distributed path's `_cut_topk` order
-        slab = bool(manifest.get("slab_beam"))
-        rows = []
-        for qi, q in enumerate(queries):
-            hit_ids, hit_d = [], []
-            for shard, path in shard_files:
-                if probe_sets is not None and shard not in probe_sets[qi]:
-                    continue
-                g, ids = _load_shard(path)
-                if slab and _flat_scan_ok(g, k, search_complexity):
-                    found = _flat_search_batch(
-                        g, np.asarray([q], dtype=np.float32), k
-                    )[0]
-                elif slab and hasattr(g, "search_batch_slab"):
-                    found = g.search_batch_slab([q], k, search_complexity)[0]
-                else:
-                    found = g.search(q, k, search_complexity)
-                for label, dist in found:
-                    hit_ids.append(int(ids[int(label)]))
-                    hit_d.append(dist)
-            rid, d = _cut_topk(
-                np.asarray(hit_ids, dtype=np.int64),
-                np.asarray(hit_d, dtype=np.float64), k,
-            )
-            rows += [(qi, int(i), float(x)) for i, x in zip(rid, d)]
+        # driver-local: the whole (few-query) batch is one `_hits_batch`
+        # slab, the body every distributed search task runs
+        batch = _hits_batch(
+            np.asarray(queries, dtype=np.float32), list(range(len(queries))),
+            probe_sets, shard_files, k, search_complexity,
+            "query_idx", np.int32, id_col, bool(manifest.get("slab_beam")),
+        )
         return local_df(
-            spark, rows, f"query_idx int, {_quote(id_col)} long, _distance double"
+            spark, zip(*(c.to_pylist() for c in batch.columns)),
+            f"query_idx int, {_quote(id_col)} long, _distance double",
         )
 
     def _search_distributed(

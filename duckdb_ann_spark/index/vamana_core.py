@@ -76,13 +76,9 @@ MAX_OCCLUSION_SIZE = 750
 # HNSW's slab body rides the same gate: 781x128 1.99x, 500x64 1.86x
 # at equal recall. 288 keeps the 256-row grid case sequential with
 # margin while flipping every real shard shape to the batch body.
-# Env-overridable (executors read their own copy of this module, so a
-# monkeypatched constant never reaches them):
-# SPARK_GRAFT_BULK_MIN_ROWS=<n>, e.g. a huge value forces the
-# sequential body everywhere for A/B runs.
-import os as _os
-
-BULK_MIN_ROWS = int(_os.environ.get("SPARK_GRAFT_BULK_MIN_ROWS", "288"))
+# Tests patch this module global (and WAVE_ROWS / BULK_SLACK below)
+# in-process around direct build calls to force the sequential body.
+BULK_MIN_ROWS = 288
 # Rows per wave-batched bulk insert (round 14): searches share the
 # wave-start graph snapshot (a row's pool misses its own wave's other
 # rows — the standard batch-build relaxation) and their distance
@@ -123,7 +119,7 @@ BULK_MIN_ROWS = int(_os.environ.get("SPARK_GRAFT_BULK_MIN_ROWS", "288"))
 # regime's prediction. The insert kernel's residual wall is the
 # measured 1.5x 32-way co-tenancy tax (r14, reproduced outside
 # Spark), not python dispatch.
-WAVE_ROWS = int(_os.environ.get("SPARK_GRAFT_WAVE_ROWS", "16"))
+WAVE_ROWS = 16
 # Build-time back-edge slack as a multiple of max_degree (round 15 —
 # the DiskANN batch-build discipline): bulk builds let back-edge rows
 # overflow to degree*(1+slack) before paying a prune, amortizing the
@@ -146,7 +142,7 @@ WAVE_ROWS = int(_os.environ.get("SPARK_GRAFT_WAVE_ROWS", "16"))
 #     occlusion, better graph)
 #   parity sweep (2000x32/deg16, seeds 11/22/33, l2+ip): slack recall
 #     within -0.007..+0.025 of immediate — never below the 0.02 gate.
-BULK_SLACK = float(_os.environ.get("SPARK_GRAFT_BULK_SLACK", "1"))
+BULK_SLACK = 1.0
 
 
 _BLAS_HANDLE = "unset"

@@ -240,6 +240,22 @@ def test_ip_metric_hnsw(vecs):
     assert got == want
 
 
+def test_ip_sink_still_returns_k():
+    """A 1-dim IP graph at m=2 has a layer-0 sink of five mutually
+    nearest nodes the descent lands in; search (and its slab twin)
+    still returns min(k, n) hits, the beam's five first."""
+    vecs = np.random.default_rng(0).uniform(
+        -1.0, 1.0, size=(28, 1)).astype(np.float32)
+    g = build_hnsw(vecs, m=2, ef_construction=8, metric="ip")
+    hits = g.search(vecs[0], 6, search_complexity=8)
+    assert len(hits) == 6
+    ds = [d for _, d in hits]
+    assert ds == sorted(ds)
+    assert g.search_batch_slab(vecs[:1], 6, 8)[0] == hits
+    want = np.lexsort((np.arange(28), -(vecs @ vecs[0])))[:5]
+    assert [i for i, _ in hits[:5]] == want.tolist()
+
+
 def test_hnsw_vacuum_and_merge_lifecycle(spark, sf_dir, tmp_path):
     """Vacuum rebuilds an HNSW index without tombstones (still layered);
     merge_indexes folds another index's vectors in — including a

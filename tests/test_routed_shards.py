@@ -467,22 +467,59 @@ def test_cell_split_guard_on_duplicated_vector(spark, cat):
     drop_index("dupsplit", cat)
 
 
+def _assert_shards_equal_driver_builds(cat, name, mat, tmp_path):
+    """Index `name` over ids 0..len(mat)-1 (`mat[id]` is id's vector):
+    its sidecars hold every id once, and each shard's `.diskann` and
+    `.ids` bytes equal a driver-side `_build_shard_fn` build of exactly
+    the rows its sidecar lists."""
+    import numpy as np
+
+    from duckdb_ann_spark.index.api import _params_kwargs
+    from duckdb_ann_spark.index.engines import get_engine
+    from duckdb_ann_spark.index.file_format import (
+        ids_path,
+        read_header,
+        read_ids,
+    )
+    from duckdb_ann_spark.index.params import parse_params
+
+    m = cat.load(name)
+    d = cat.path(name)
+    eng = get_engine(m["engine"], m["subtype"])
+    ref = tmp_path / f"{name}_ref"
+    os.makedirs(ref / "graph")
+    build = eng._build_shard_fn(
+        str(ref), parse_params(m["engine"], _params_kwargs(m))
+    )
+    files = eng._shard_files(d)
+    assert len(files) == m["shards"]
+    seen, bad = [], []
+    for s, path in files:
+        ids = np.array(read_ids(path, read_header(path)["num_vectors"]))
+        seen += ids.tolist()
+        build(ids, mat[ids], s)
+        for got in (path, ids_path(path)):
+            want = str(ref / "graph" / os.path.basename(got))
+            if open(got, "rb").read() != open(want, "rb").read():
+                bad.append(os.path.basename(got))
+    assert sorted(seen) == list(range(len(mat)))
+    assert not bad, bad[:5]
+
+
 def test_cell_pack_identical_artifacts_and_gate(spark, cat, monkeypatch,
-                                                capfd):
+                                                capfd, tmp_path):
     """Round 15 (optimization): cell PACKING — when a routed build has
     far more cells than cores, multiple cells share one shuffle
     partition via mass-balanced (LPT) bins, cutting task count and
     shuffle blocks ~8x (the 10M tier's 6667-partition exchange measured
     75-86s of pure schedule+shuffle floor vs 13.6-14.6s at 834). Every
     cell still builds alone from its own id-sorted rows inside the task
-    loop, so the ARTIFACT must be byte-identical: same shard files,
-    same id sidecars, same route table, same manifest shard count. The
-    <= 8x-parallelism gate keeps small builds (all bench/oracle
-    layouts) on the historical one-cell-per-partition placement."""
-    import glob
-
+    loop: each shard's graph and id sidecar are byte-equal to a
+    driver-side `_build_shard_fn` build of exactly the rows its sidecar
+    lists. The <= 8x-parallelism gate keeps small builds (all
+    bench/oracle layouts) on the historical one-cell-per-partition
+    placement."""
     import numpy as np
-    import pyarrow.parquet as pq
 
     from duckdb_ann_spark.index import create_index, drop_index
 
@@ -493,71 +530,65 @@ def test_cell_pack_identical_artifacts_and_gate(spark, cat, monkeypatch,
         [(i, [float(x) for x in mat[i]]) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
-    # 80 cells > 8 x local[8] parallelism -> packing engages by default
+    # more cells than 8 x parallelism -> packing engages
     par = spark.sparkContext.defaultParallelism
     shards = max(80, 8 * par + 16)
 
-    def _build(name, pack_env):
-        monkeypatch.setenv("SPARK_GRAFT_CELL_PACK", pack_env)
-        drop_index(name, cat)
-        create_index(df, "vec_id", "embedding", name, engine="diskann",
-                     max_degree=8, build_complexity=16, shards=shards,
-                     shard_by="cells", catalog=cat)
-        root = cat.path(name)
-        # graph files AND their id sidecars
-        files = {
-            os.path.basename(p): open(p, "rb").read()
-            for p in glob.glob(f"{root}/graph/shard_*")
-        }
-        route = (
-            pq.read_table(f"{root}/route")
-            .to_pandas()
-            .sort_values("shard")
-            .reset_index(drop=True)
-        )
-        m = cat.load(name)
-        return files, route, m
-
-    files_off, route_off, m_off = _build("pack_off", "0")
-    files_on, route_on, m_on = _build("pack_on", "8")
-
-    assert m_on["shards"] == m_off["shards"]
-    assert len(files_off) == 2 * m_off["shards"]  # .diskann + .ids each
-    assert set(files_on) == set(files_off)
-    mismatched = [f for f in files_off if files_on[f] != files_off[f]]
-    assert not mismatched, mismatched[:5]
-    assert route_on["shard"].tolist() == route_off["shard"].tolist()
-    assert np.array_equal(
-        np.array(route_on["centroid"].tolist()),
-        np.array(route_off["centroid"].tolist()),
-    )
-
-    # gate: a small build (cells <= 8x parallelism) must NOT pack even
-    # with the env set — exercised for real (r15 ADVICE: the old
-    # spelling asserted a tautology instead of building): the
-    # [build-phase] trace of a gated build carries no cell-pack line,
-    # while the packed build above does
+    # the packed build announces its packing ([build-phase] trace) and
+    # every shard equals its driver-side rebuild
     monkeypatch.setenv("SPARK_GRAFT_BUILD_PHASES", "1")
-    monkeypatch.setenv("SPARK_GRAFT_CELL_PACK", "8")
     capfd.readouterr()
+    create_index(df, "vec_id", "embedding", "pack_on", engine="diskann",
+                 max_degree=8, build_complexity=16, shards=shards,
+                 shard_by="cells", catalog=cat)
+    out = capfd.readouterr().out
+    assert "cell-pack" in out, out
+    _assert_shards_equal_driver_builds(cat, "pack_on", mat, tmp_path)
+    drop_index("pack_on", cat)
+
+    # gate: a small build (cells <= 8x parallelism) must NOT pack —
+    # its trace carries no cell-pack line
     small = 8 * par  # at the gate boundary
-    drop_index("pack_gate", cat)
     create_index(df, "vec_id", "embedding", "pack_gate", engine="diskann",
                  max_degree=8, build_complexity=16, shards=small,
                  shard_by="cells", catalog=cat)
     out = capfd.readouterr().out
     assert "cell-pack" not in out, out
     drop_index("pack_gate", cat)
-    monkeypatch.delenv("SPARK_GRAFT_BUILD_PHASES")
-    # and the packed build DOES announce the packing (same trace)
-    monkeypatch.setenv("SPARK_GRAFT_BUILD_PHASES", "1")
-    drop_index("pack_trace", cat)
-    create_index(df, "vec_id", "embedding", "pack_trace", engine="diskann",
-                 max_degree=8, build_complexity=16, shards=shards,
-                 shard_by="cells", catalog=cat)
-    out = capfd.readouterr().out
-    assert "cell-pack" in out, out
-    drop_index("pack_trace", cat)
 
-    for name in ("pack_off", "pack_on"):
-        drop_index(name, cat)
+
+@pytest.mark.parametrize("opts", [
+    dict(engine="diskann", max_degree=8, build_complexity=16),
+    dict(engine="faiss", type="HNSW", hnsw_m=8),
+])
+def test_hash_shards_equal_driver_builds(spark, cat, tmp_path, opts):
+    """Hash builds run the same Arrow shard body as routed builds: each
+    shard's graph and id sidecar are byte-equal to a driver-side
+    `_build_shard_fn` build of the rows its sidecar lists, and shard s
+    holds exactly the ids with pmod(hash(id), 3) == s."""
+    import numpy as np
+
+    from duckdb_ann_spark.index import create_index, drop_index
+    from duckdb_ann_spark.index.file_format import read_header, read_ids
+
+    rng = np.random.default_rng(17)
+    n, dim = 900, 12
+    mat = rng.random((n, dim), dtype=np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(n)],
+        "vec_id long, embedding array<float>",
+    )
+    create_index(df, "vec_id", "embedding", "hsh", shards=3,
+                 shard_by="hash", catalog=cat, **opts)
+    _assert_shards_equal_driver_builds(cat, "hsh", mat, tmp_path)
+    want = {s: set() for s in range(3)}
+    for r in df.select(
+        "vec_id", F.pmod(F.hash("vec_id"), F.lit(3)).alias("s")
+    ).collect():
+        want[r["s"]].add(r["vec_id"])
+    root = cat.path("hsh")
+    for s in range(3):
+        p = f"{root}/graph/shard_{s}.diskann"
+        got = read_ids(p, read_header(p)["num_vectors"])
+        assert sorted(got.tolist()) == sorted(want[s]), s
+    drop_index("hsh", cat)

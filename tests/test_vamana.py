@@ -489,20 +489,13 @@ def test_flat_scan_gate_and_exactness():
     qs = rng.random((17, dim), dtype=np.float32)
 
     # gate: engages at 781 rows (<= 4*32*16 = 2048), not at a shard
-    # past the budget, not for SQ8 residency, off at factor 0
+    # past the budget, not for SQ8 residency
     assert vm._flat_scan_ok(g, k, L)
     try:
         g.n = 5000  # pretend-bigger shard: past 4*L*deg
         assert not vm._flat_scan_ok(g, k, L)
     finally:
         g.n = n
-    import os as _os
-
-    _os.environ["SPARK_GRAFT_FLAT_SCAN_FACTOR"] = "0"
-    try:
-        assert not vm._flat_scan_ok(g, k, L)
-    finally:
-        del _os.environ["SPARK_GRAFT_FLAT_SCAN_FACTOR"]
     sq_backup = g.vectors
     try:
         mn = np.zeros(dim, dtype=np.float32)
