@@ -277,6 +277,13 @@ def np_from_arrow_list(col, dim: int, dtype=np.float32):
     return vals.astype(dtype, copy=False).reshape(n, dim)
 
 
+def np_arrow_mat(col, dim: int) -> np.ndarray:
+    """(n, dim) f32 matrix of an Arrow vector column — zero-copy when
+    `np_from_arrow_list` applies, else the pandas conversion."""
+    mat = np_from_arrow_list(col, dim)
+    return mat if mat is not None else np_stack_vectors(col.to_pandas())
+
+
 def np_u8_from_arrow_binary(col, dim: int):
     """Zero-copy-ish (n, dim) uint8 matrix from a pyarrow ``binary``
     column of fixed-width SQ8 code rows, or None when the fast path

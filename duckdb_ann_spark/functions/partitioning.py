@@ -25,12 +25,16 @@ would fail loud instead of silently skewing partitions.
 The module also owns the rest of cell placement, shared by the vamana
 cell build, its calibration replay and knn_join: the LPT packer that
 maps cells to bins (`lpt_bins`) and the oversized-cell split rule
-(`split_cells`, `sub_cells`).
+(`split_cells`, `sub_cells`). Both cell-probe scans — knn_join's bins
+and the IVF index scan — invert their probe pairs with `probe_csr` and
+score with `score_cells`.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from .distance import np_index_distances
 
 
 def _rotl32(x: int, r: int) -> int:
@@ -122,3 +126,74 @@ def sub_cells(cells: np.ndarray, ids: np.ndarray, n_sub: np.ndarray,
     (int64). An unsplit cell (n_sub 1) maps to offsets[cell]."""
     sub = mix64_np(ids.astype(np.uint64)) % n_sub[cells].astype(np.uint64)
     return offsets[cells] + sub.astype(np.int64)
+
+
+def probe_csr(cells: np.ndarray, qidx: np.ndarray, n_cells: int):
+    """Invert (cell, query) probe pairs to CSR over cells →
+    (grouped_q, bounds (n_cells+1,)): cell c is probed by the queries
+    grouped_q[bounds[c]:bounds[c+1]], in their pair order (ascending
+    when the pairs come query-major)."""
+    order = np.argsort(cells, kind="stable")
+    return qidx[order], np.searchsorted(cells[order], np.arange(n_cells + 1))
+
+
+def cell_slices(ids: np.ndarray, mat: np.ndarray, cells: np.ndarray):
+    """Rows grouped by cell, in row order within a cell → iterator of
+    (cell, ids, mat) — the `score_cells` input of a mixed-cell batch."""
+    order = np.argsort(cells, kind="stable")
+    uc, starts = np.unique(cells[order], return_index=True)
+    ends = np.r_[starts[1:], len(order)]
+    for c, s, e in zip(uc.tolist(), starts.tolist(), ends.tolist()):
+        rows = order[s:e]
+        yield c, ids[rows], mat[rows]
+
+
+def score_cells(cells, qmat: np.ndarray, grouped_q: np.ndarray,
+                bounds: np.ndarray, metric: str, k: int):
+    """The one cell-probe scorer: each (cell, ids, vectors) of `cells`
+    against the queries probing it (CSR `grouped_q`/`bounds` into
+    `qmat`) → (qx — rows of qmat, ids, f64 distances), or None when no
+    cell meets a query. `cells` may be a generator, so a caller can keep
+    one cell resident at a time.
+
+    Each cell is ONE (|q_c|, |b_c|) GEMM. The per-cell cut keeps every
+    candidate with d <= the k-th smallest of its query row (ties kept;
+    a NaN k-th keeps the whole row — there is no safe cutoff there),
+    and the cross-cell merge keeps per query the first k by (d, id)
+    plus everything tied with the k-th (the `_hits_batch` discipline):
+    a superset of every global (d, id) top-k, so a final (d, id) cut is
+    exact over the probed cells and only ~k rows per query survive."""
+    acc_q: list = []
+    acc_b: list = []
+    acc_d: list = []
+    for c, ids, mat in cells:
+        qs_, qe_ = int(bounds[c]), int(bounds[c + 1])
+        if qe_ <= qs_:
+            continue
+        qidx_c = grouped_q[qs_:qe_]
+        d = np_index_distances(metric, mat, qmat[qidx_c])
+        nq_c, nb = d.shape
+        if nb > k:
+            kth = np.partition(d, k - 1, axis=1)[:, k - 1]
+            qi, bj = np.nonzero(~(d > kth[:, None]))
+        else:
+            qi = np.repeat(np.arange(nq_c), nb)
+            bj = np.tile(np.arange(nb), nq_c)
+        acc_q.append(qidx_c[qi])
+        acc_b.append(ids[bj])
+        acc_d.append(d[qi, bj])
+    if not acc_q:
+        return None
+    qx = np.concatenate(acc_q)
+    bx = np.concatenate(acc_b)
+    dx = np.concatenate(acc_d).astype(np.float64)
+    if len(qx) > k:
+        order = np.lexsort((bx, dx, qx))
+        qx, bx, dx = qx[order], bx[order], dx[order]
+        starts = np.flatnonzero(np.r_[True, qx[1:] != qx[:-1]])
+        counts = np.diff(np.r_[starts, len(qx)])
+        rank = np.arange(len(qx)) - np.repeat(starts, counts)
+        kth = dx[starts + np.minimum(counts - 1, k - 1)]
+        keep = (rank < k) | ~(dx > np.repeat(kth, counts))
+        qx, bx, dx = qx[keep], bx[keep], dx[keep]
+    return qx, bx, dx

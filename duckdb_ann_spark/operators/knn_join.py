@@ -17,7 +17,7 @@ Plan (IVF-style cell co-partitioning):
    * fast path (default, `method='blas'`): cells are LPT-packed into at
      most 2×parallelism BINS, each bin placed in its own partition.
      The base side makes one exchange into the bins, and each bin's
-     task scores its cells with `_score_cells` — one (|q_c|, |b_c|)
+     task scores its cells with `score_cells` — one (|q_c|, |b_c|)
      BLAS GEMM per cell, a tie-keep cut, and a merge across cells.
      Candidate pairs are never materialized as rows. The query side
      is delivered one of two ways:
@@ -51,12 +51,16 @@ from pyspark.sql import functions as F
 
 from ..functions.distance import (
     index_distance,
+    np_arrow_mat,
     np_index_distances,
     np_stack_vectors,
 )
 from ..functions.partitioning import (
+    cell_slices,
     exact_partition_tokens,
     lpt_bins,
+    probe_csr,
+    score_cells,
     split_cells,
     sub_cells,
 )
@@ -98,15 +102,6 @@ def _collect_queries_bounded(queries_df: DataFrame, query_id_col: str,
     return qids, qmat
 
 
-def _arrow_mat(col, dim: int) -> np.ndarray:
-    """(n, dim) f32 matrix of an Arrow vector column — zero-copy when
-    the layout allows, else the pandas conversion."""
-    from ..functions.distance import np_from_arrow_list
-
-    mat = np_from_arrow_list(col, dim)
-    return mat if mat is not None else np_stack_vectors(col.to_pandas())
-
-
 def _nearest_cells(metric: str, mat: np.ndarray, centroids: np.ndarray,
                    nprobe: int) -> np.ndarray:
     """(nprobe, n) nearest cells per row, nearest first — the one
@@ -135,21 +130,13 @@ def _sub_probes(cells: np.ndarray, n_sub: np.ndarray,
     return first + within, np.repeat(qidx, reps)
 
 
-def _probe_csr(cells: np.ndarray, qidx: np.ndarray, n_cells: int):
-    """Invert (cell, query) probe pairs to CSR over cells →
-    (grouped_q, bounds (n_cells+1,)): cell c is probed by the queries
-    grouped_q[bounds[c]:bounds[c+1]]."""
-    order = np.argsort(cells, kind="stable")
-    return qidx[order], np.searchsorted(cells[order], np.arange(n_cells + 1))
-
-
 def _driver_probe_csr(qmat: np.ndarray, centroids: np.ndarray, metric: str,
                       nprobe: int, n_sub: np.ndarray, offsets: np.ndarray):
     """Probe CSR over (sub-)cells of a driver-resident query matrix,
     with `_assign_cells` arithmetic → (grouped_q, bounds)."""
     sc, qi = _sub_probes(_nearest_cells(metric, qmat, centroids, nprobe),
                          n_sub, offsets)
-    return _probe_csr(sc, qi, int(offsets[-1]))
+    return probe_csr(sc, qi, int(offsets[-1]))
 
 
 def _cell_tokens(q_counts: np.ndarray, est_b: np.ndarray | None,
@@ -202,63 +189,6 @@ def _with_tokens(df: DataFrame, tokens: np.ndarray) -> DataFrame:
     return df.mapInArrow(add, schema=f"{schema}, {TOK_COL} int")
 
 
-def _score_cells(bids: np.ndarray, bmat: np.ndarray, bcell: np.ndarray,
-                 qmat: np.ndarray, grouped_q: np.ndarray,
-                 bounds: np.ndarray, metric: str, k: int):
-    """The one approximate-join scorer: base rows (ids, vectors, cells)
-    against the queries probing their cells (CSR `grouped_q`/`bounds`
-    into `qmat`) → (qx — rows of qmat, base ids, f64 distances), or
-    None when no cell meets a query.
-
-    Each cell is ONE (|q_c|, |b_c|) GEMM. The per-cell cut keeps every
-    candidate with d <= the k-th smallest of its query row (ties kept;
-    a NaN k-th keeps the whole row — there is no safe cutoff there),
-    and the cross-cell merge keeps per query the first k by (d, id)
-    plus everything tied with the k-th (the `_hits_batch` discipline):
-    a superset of every global (d, id) top-k, so the caller's window
-    is exact over the probed cells and only ~k rows per query leave
-    the task."""
-    order = np.argsort(bcell, kind="stable")
-    cs = bcell[order]
-    uc, starts = np.unique(cs, return_index=True)
-    ends = np.r_[starts[1:], len(cs)]
-    acc_q: list = []
-    acc_b: list = []
-    acc_d: list = []
-    for c, s, e in zip(uc.tolist(), starts.tolist(), ends.tolist()):
-        qs_, qe_ = int(bounds[c]), int(bounds[c + 1])
-        if qe_ <= qs_:
-            continue
-        qidx_c = grouped_q[qs_:qe_]
-        rows = order[s:e]
-        d = np_index_distances(metric, bmat[rows], qmat[qidx_c])
-        nq_c, nb = d.shape
-        if nb > k:
-            kth = np.partition(d, k - 1, axis=1)[:, k - 1]
-            qi, bj = np.nonzero(~(d > kth[:, None]))
-        else:
-            qi = np.repeat(np.arange(nq_c), nb)
-            bj = np.tile(np.arange(nb), nq_c)
-        acc_q.append(qidx_c[qi])
-        acc_b.append(bids[rows][bj])
-        acc_d.append(d[qi, bj])
-    if not acc_q:
-        return None
-    qx = np.concatenate(acc_q)
-    bx = np.concatenate(acc_b)
-    dx = np.concatenate(acc_d).astype(np.float64)
-    if len(qx) > k:
-        order = np.lexsort((bx, dx, qx))
-        qx, bx, dx = qx[order], bx[order], dx[order]
-        starts = np.flatnonzero(np.r_[True, qx[1:] != qx[:-1]])
-        counts = np.diff(np.r_[starts, len(qx)])
-        rank = np.arange(len(qx)) - np.repeat(starts, counts)
-        kth = dx[starts + np.minimum(counts - 1, k - 1)]
-        keep = (rank < k) | ~(dx > np.repeat(kth, counts))
-        qx, bx, dx = qx[keep], bx[keep], dx[keep]
-    return qx, bx, dx
-
-
 def _window_topk(scored: DataFrame, query_id_col: str, base_id_col: str,
                  k: int) -> DataFrame:
     """Per-query global top-k of the scored candidates, ties on base id
@@ -289,7 +219,7 @@ def _scored_topk(
     """The bin scorer's Spark stage. `b` carries (id, vec, `CELL_COL`,
     `TOK_COL`); cells whose token is -1 are pruned before the one
     exchange into `n_bins` partitions, and each partition runs
-    `_score_cells` on its bin. Exactly one query delivery is given:
+    `score_cells` on its bin. Exactly one query delivery is given:
 
     * `bcast` = (qids, qmat, grouped_q, bounds): the driver-resident
       queries and their probe CSR ride one broadcast;
@@ -299,7 +229,7 @@ def _scored_topk(
       bin's probe CSR (over `n_cells` cells) from the rows' cell
       lists.
 
-    Correctness does not depend on placement (see `_score_cells`);
+    Correctness does not depend on placement (see `score_cells`);
     query/base row order inside a GEMM follows shuffle arrival, which
     BLAS answers with last-ulp wobble — the id lists are pinned by
     tests, the distances to 1e-5."""
@@ -325,15 +255,17 @@ def _scored_topk(
             if qt.num_rows == 0 or t.num_rows == 0:
                 return
             qids = col_np(qt, base_id_col)
-            qmat = _arrow_mat(qt.column(base_vec_col), dim)
+            qmat = np_arrow_mat(qt.column(base_vec_col), dim)
             lists = qt.column(CELLS_COL).combine_chunks()
-            gq, bnd = _probe_csr(
+            gq, bnd = probe_csr(
                 lists.flatten().to_numpy(),
                 pc.list_parent_indices(lists).to_numpy(), n_cells,
             )
-        hits = _score_cells(
-            col_np(t, base_id_col), _arrow_mat(t.column(base_vec_col), dim),
-            col_np(t, CELL_COL), qmat, gq, bnd, metric, k,
+        hits = score_cells(
+            cell_slices(col_np(t, base_id_col),
+                        np_arrow_mat(t.column(base_vec_col), dim),
+                        col_np(t, CELL_COL)),
+            qmat, gq, bnd, metric, k,
         )
         if hits is not None:
             qx, bx, dx = hits
@@ -399,7 +331,7 @@ def _assign_cells(df: DataFrame, vec_col: str, centroids: np.ndarray,
             if n == 0:
                 continue
             cells = _nearest_cells(
-                metric, _arrow_mat(b.column(vec_col), cm.shape[1]), cm, nprobe
+                metric, np_arrow_mat(b.column(vec_col), cm.shape[1]), cm, nprobe
             )  # (nprobe, n)
             take = None
             if pl is None:
@@ -748,7 +680,7 @@ def index_knn_join(
     * centroids: the tiny driver-side table (`ivf._centroids`);
     * base side: the cell-PARTITIONED vectors parquet read as-is — no
       assignment pass, no exchange; pruned to the union of probed cells
-      (partition pruning, same as index search);
+      (Spark partition pruning);
     * query side: its `nprobe` nearest cells, then the same bin
       scorer (broadcast or exchange delivery) / exact scoring as
       `knn_join`. The index's cells are kept whole — no skew split —

@@ -187,7 +187,7 @@ _IVF_PROBE_ORACLE = f"""
 
 @register("ann_search_ivfflat_probe", _IVF_PROBE_ORACLE)
 def q_ann_search_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial-probe IVF (the 100 TB path: partition-pruned cell scan).
+    """Partial-probe IVF (the 100 TB path: a scan of the probed cells).
     The probe itself runs the engine's BLAS path (f32 ranking); the
     returned `_distance` is recomputed with the f64 JVM fold so values
     hash-match the artifact-replaying DuckDB oracle above (same move as

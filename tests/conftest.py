@@ -65,3 +65,28 @@ def assert_df_matches_oracle(sdf, duck_con, oracle_sql, sort_cols=None, rtol=0.0
                     assert x == y, f"col {c} row {i}: {x!r} != {y!r}"
             else:
                 assert x == y, f"col {c} row {i}: {x!r} != {y!r}"
+
+
+def garble_ivf_cells(artifact_dir, queries, nprobe, metric="l2", probed=False):
+    """Overwrite the parquet files of an IVF artifact's NON-probed cells
+    (or, with `probed=True`, of its first probed cell) with garbage
+    bytes → the probed cell ids. A scan that reads only the probed cells
+    still answers after the first call and fails after the second."""
+    import numpy as np
+
+    from duckdb_ann_spark.functions.distance import np_index_distances
+    from duckdb_ann_spark.index.ivf import CELL_COL, VECTORS_DIR, IvfFlatEngine
+
+    cent = IvfFlatEngine()._centroids(None, artifact_dir)
+    cd = np_index_distances(metric, cent, np.asarray(queries, np.float32))
+    hit = set(np.argsort(cd, axis=1, kind="stable")[:, :nprobe].ravel().tolist())
+    vdir = os.path.join(artifact_dir, VECTORS_DIR)
+    cells = {int(d.split("=")[1]): os.path.join(vdir, d)
+             for d in os.listdir(vdir) if d.startswith(f"{CELL_COL}=")}
+    victims = [min(hit & set(cells))] if probed else set(cells) - hit
+    for c in victims:
+        for f in os.listdir(cells[c]):
+            if f.endswith(".parquet"):
+                with open(os.path.join(cells[c], f), "wb") as fh:
+                    fh.write(b"not a parquet file")
+    return hit

@@ -136,21 +136,30 @@ def test_nprobe_monotone_recall(spark, emb, qvec, cat):
 
 
 def test_partition_pruning_in_plan(spark, emb, qvec, cat):
-    """The probed-cell filter must reach the parquet scan as a partition
-    filter — at 100 TB this IS the index: only nprobe/nlist of the data
-    is read."""
+    """Only the probed cells are read — at 100 TB this IS the index: a
+    probe reads nprobe/nlist of the data. With every non-probed cell's
+    parquet overwritten by garbage the scan returns its rows unchanged;
+    garbage in a probed cell raises. The scan's plan holds no join,
+    window or exchange."""
+    from conftest import garble_ivf_cells
+
     create_index(
         emb, "vec_id", "embedding", "ivf", engine="faiss", type="IVFFlat",
         ivf_nlist=16, nprobe=2, catalog=cat,
     )
-    df = index_scan(spark, "ivf", [qvec], 5, catalog=cat)
+    qs = [qvec, [-x for x in qvec]]
+    df = index_scan(spark, "ivf", qs, 5, catalog=cat)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "__cell" in plan, plan
-    # the pruned scan must not list all 16 cells
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "__cell" in m.group(1), plan
+    for node in ("Join", "Window", "Exchange"):
+        assert node not in plan, plan
+    want = sorted(tuple(r) for r in df.collect())
+    probed = garble_ivf_cells(cat.path("ivf"), qs, 2)
+    assert len(probed) < 16
+    got = index_scan(spark, "ivf", qs, 5, catalog=cat).collect()
+    assert sorted(tuple(r) for r in got) == want
+    garble_ivf_cells(cat.path("ivf"), qs, 2, probed=True)
+    with pytest.raises(Exception):
+        index_scan(spark, "ivf", qs, 5, catalog=cat).collect()
 
 
 def test_ip_metric_ivf(spark, emb, cat):

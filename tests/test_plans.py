@@ -109,8 +109,11 @@ def test_vamana_search_is_one_stage(spark, sf_dir, tmp_path):
 
 def test_ivf_probe_scan_has_no_join(spark, sf_dir, tmp_path):
     """Partial-probe IVF search: probe routing lives in the broadcast
-    closure — the plan is scan -> python scorer -> window, no join
-    duplicating base rows per query."""
+    closure and a probe is a file selection — the plan holds no join
+    duplicating base rows per query, no window and no exchange, and the
+    scan answers with every non-probed cell's files garbled."""
+    from conftest import garble_ivf_cells
+
     from duckdb_ann_spark.index import Catalog, create_index, index_scan
 
     cat = Catalog(str(tmp_path / "plan_cat2"))
@@ -119,9 +122,15 @@ def test_ivf_probe_scan_has_no_join(spark, sf_dir, tmp_path):
         emb, "vec_id", "embedding", "plan_ivf", engine="faiss",
         type="IVFFlat", ivf_nlist=8, nprobe=2, catalog=cat,
     )
-    plan = _plan(index_scan(spark, "plan_ivf", [[0.0] * 64], 5, catalog=cat))
-    assert "Join" not in plan, plan
-    assert "PartitionFilters" in plan, plan
+    q = [[0.0] * 64]
+    df = index_scan(spark, "plan_ivf", q, 5, catalog=cat)
+    plan = _plan(df)
+    for node in ("Join", "Window", "Exchange"):
+        assert node not in plan, plan
+    want = sorted(tuple(r) for r in df.collect())
+    garble_ivf_cells(cat.path("plan_ivf"), q, 2)
+    got = index_scan(spark, "plan_ivf", q, 5, catalog=cat).collect()
+    assert sorted(tuple(r) for r in got) == want
 
 
 def test_bm25_plan_no_explode_no_join_shuffle(spark, sf_dir):
