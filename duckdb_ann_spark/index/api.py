@@ -793,21 +793,25 @@ def recalibrate_index(
     probe/L/end measurements were taken on, but until this round the
     only refresh was `vacuum_index` — a complete re-shard + re-insert
     of every graph, a multi-hour event on a 100-TB index. The
-    measurement passes themselves are bounded narrow scans (sample +
-    exact-top-k scan + busiest-shard L pass + one end search), orders
-    cheaper than rebuild; this re-runs exactly them against the
-    cells/shards already on disk and commits the fresh curves +
-    anchors to the manifest. Searches ride the new curves immediately
-    (nprobe=0 / search_complexity=None / target_recall all resolve
-    through the manifest).
+    measurement passes themselves are bounded, orders cheaper than a
+    rebuild; this re-runs exactly them against the cells/shards
+    already on disk and commits the fresh curves + anchors to the
+    manifest. A routed graph index takes one sample collect, ONE job
+    over the shard files running the build's own per-shard measurement
+    (`calibration.measure_shards`: the candidate's cell is the shard
+    that holds it, so split cells measure as built), and one end
+    search; IVF takes a sample and one exact scan. Searches ride the
+    new curves immediately (nprobe=0 / search_complexity=None /
+    target_recall all resolve through the manifest).
 
     Tombstone discipline: the query sample and the exact end-recall
     truth are drawn from LIVE rows only (tombstoned ids anti-joined
-    out), and the end measurement runs through the real
-    tombstone-aware scan path, so deleted near-neighbors can neither
-    inflate nor starve it. The in-shard L curve measures the graph AS
-    BUILT (tombstones still occupy the beam until vacuum) — that IS
-    what a search pays. Note `rows_at_measurement` /
+    out of the sample and masked out of the per-shard truth), and the
+    end measurement runs through the real tombstone-aware scan path on
+    the target_recall serving beam, so deleted near-neighbors can
+    neither inflate nor starve it. The in-shard L curve measures the
+    graph AS BUILT (tombstones still occupy the beam until vacuum) —
+    that IS what a search pays. Note `rows_at_measurement` /
     `deleted_at_measurement` anchor the staleness counters at the
     CURRENT index state, so the flag clears without a rebuild.
 
@@ -815,12 +819,10 @@ def recalibrate_index(
     pinned-probe builds (a measurement no search would use — the same
     dead-weight rule the builds apply), hash/single-shard graph
     layouts (no routing/L curves to refresh)."""
-    from .calibration import (
-        DEFAULT_QUERIES,
-        IVF_TARGET,
-        measure_graph_calibrations,
-        measure_probe_calibration,
-    )
+    import numpy as np
+
+    from . import calibration
+    from .calibration import DEFAULT_QUERIES, IVF_TARGET
     from .ivf import IvfFlatEngine
     from .vamana import VamanaEngine, _route_centroids
 
@@ -863,7 +865,7 @@ def recalibrate_index(
             raise ValueError(
                 f"index '{name}' has <=1 trained cell — no curve to measure"
             )
-        cal = _anchor(measure_probe_calibration(
+        cal = _anchor(calibration.measure_probe_calibration(
             src, id_col, vec_col, centroids,
             manifest["params"]["metric"], n_live, IVF_TARGET, n_queries=nq,
         ))
@@ -883,26 +885,43 @@ def recalibrate_index(
                 "layout — it carries no routing/L measurements to refresh"
             )
         params = parse_params(manifest["engine"], _params_kwargs(manifest))
-
-        from .calibration import shape_search_results
+        metric = manifest["params"]["metric"]
+        base_l = impl._default_search_complexity(params)
+        _, qids, qmat = calibration.collect_train_and_sample(
+            src, id_col, vec_col, n_live, 0, calibration.graph_sample_size(nq)
+        )
+        plan = calibration.graph_plan(
+            qids, qmat, route, metric, n_live, base_l, nq,
+            existing={s for s, _ in shard_files},
+            deleted=(
+                None if deleted is None
+                else deleted.toPandas()[id_col].to_numpy(dtype=np.int64)
+            ),
+        )
+        hits = l_counts = None
+        if plan is not None:
+            hits, l_counts = calibration.gather_measures(
+                calibration.measure_shards(impl, spark, d, plan)
+            )
 
         def search_fn(qm, kk, rnp, L):
+            # the build's anchor beam (`vamana._run_cell_build`): the
+            # target_recall serving path
             mani = {**manifest,
                     "params": {**manifest["params"],
-                               "route_nprobe": int(rnp)}}
+                               "route_nprobe": int(rnp)},
+                    "slab_beam": True}
             res = _scan_with_manifest(
                 spark, impl, mani, d,
                 [[float(x) for x in q] for q in qm], kk, int(L),
             ).collect()
-            return shape_search_results(res, len(qm), id_col)
+            return calibration.shape_search_results(res, len(qm), id_col)
 
         measure_routing = int(
             (manifest.get("params") or {}).get("route_nprobe", 0) or 0
         ) == 0
-        route_cal, l_cal, end_cal = measure_graph_calibrations(
-            src, id_col, vec_col, route, manifest["params"]["metric"],
-            n_live, shard_files,
-            impl._default_search_complexity(params), search_fn,
+        route_cal, l_cal, end_cal = calibration.measure_graph_calibrations(
+            plan, hits, l_counts, route, n_live, base_l, search_fn,
             measure_routing=measure_routing, n_queries=nq,
         )
         # a refresh must never DOWNGRADE the artifact: a measurement

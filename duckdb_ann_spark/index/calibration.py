@@ -19,7 +19,7 @@ measurement (pre-round-9 manifests, `calibration_queries=0` builds).
 
 How the measurement stays one cheap pass (no per-nprobe re-search):
 for a held-out query sample, the exact top-k neighbors AND the cell
-each neighbor lives in are computed in ONE distributed scan; ranking
+each neighbor lives in are computed in ONE distributed pass; ranking
 the cells per query by centroid distance then gives the ENTIRE
 recall-vs-nprobe curve in closed form — a true neighbor is found at
 probe depth p iff its cell ranks < p. (For routed GRAPH shards the
@@ -38,13 +38,17 @@ live in lower-ranked cells), so heavy-delete indexes drift too — the
 engine's existing discipline already routes them to `vacuum_index`
 (`needs_vacuum`), which re-measures.
 
-Scale shape: the scan is mapInPandas with PER-PARTITION top-(k+1)
-accumulation — each partition emits at most `n_queries*(k+1)` rows
-regardless of how many Arrow batches it holds, so driver traffic is
-O(partitions * queries * k), never O(N). Candidate cells are computed
-in-task against the broadcast centroids (a (q*k, nlist) GEMM on <=1k
-rows). Cost is ~one extra narrow scan of the table per build — the
-build already pays two (train sample, assignment).
+Scale shape: the held-out sample rides the build's train-sample
+collect (`collect_train_and_sample`, one hash-of-id pass for both).
+IVF builds and knn_join then run one mapInArrow scan with PER-PARTITION
+top-(k+1) accumulation — each partition emits at most
+`n_queries*(k+1)` rows regardless of how many Arrow batches it holds,
+so driver traffic is O(partitions * queries * k), never O(N); candidate
+cells are computed in-task against the broadcast centroids. Routed
+graph builds scan nothing extra: each shard-build task folds its own
+rows into the top-(k+1) and counts the in-shard L curve on the shard it
+just wrote (`ShardMeasure`), so the measurement adds no Spark job to
+the build beyond the end-anchor search.
 """
 
 from __future__ import annotations
@@ -114,28 +118,80 @@ L_GRID_CAP = 4096
 L_MAX_SHARDS = 8
 
 
-def _sample_queries(
-    src: DataFrame, id_col: str, vec_col: str, n_rows: int, n_queries: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic held-out query sample → (qids, qmat). Hash-sampled
-    by id (the build's train-sample discipline — insertion order is not
-    a scalable concept), first `n_queries` by ascending id so the set
-    is stable for a given table."""
-    overshoot = n_queries * 4
-    sample = src.select(id_col, vec_col)
-    if n_rows > overshoot:
-        modulus = max(1, n_rows // overshoot)
-        sample = sample.where(
-            F.pmod(F.abs(F.hash(F.col(id_col))), F.lit(modulus)) == 0
-        )
-    pdf = sample.toPandas().sort_values(id_col).reset_index(drop=True)
-    pdf = pdf.iloc[:n_queries]
-    if not len(pdf):
-        return np.array([], dtype=np.int64), np.zeros((0, 0), np.float32)
-    return (
-        pdf[id_col].to_numpy(dtype=np.int64),
-        np_stack_vectors(pdf[vec_col]),
+def _every(id_col: str, n_rows: int, keep: int):
+    """Hash-of-id predicate keeping about `keep` of `n_rows` rows (every
+    row when `n_rows <= keep`, none when `keep <= 0`) — the
+    deterministic sampling every build-time collect shares (insertion
+    order is not a scalable concept)."""
+    if keep <= 0:
+        return F.lit(False)
+    if n_rows <= keep:
+        return F.lit(True)
+    return F.pmod(
+        F.abs(F.hash(F.col(id_col))), F.lit(max(1, n_rows // keep))
+    ) == 0
+
+
+def collect_train_and_sample(
+    src: DataFrame, id_col: str, vec_col: str, n_rows: int,
+    train_cap: int, n_queries: int,
+) -> "tuple[np.ndarray | None, np.ndarray, np.ndarray]":
+    """ONE driver collect → (train, qids, qmat): the k-means train set
+    and the held-out query sample of a calibrated build.
+
+    A row is collected when it passes either hash-of-id predicate. The
+    train set is the train rows in collect order cut to `train_cap`
+    (None when `train_cap` is 0). The sample keeps about
+    `4 * n_queries` rows and takes the first `n_queries` by ascending
+    id, so the set is stable for a given table (empty (0, 0) when
+    `n_queries` is 0)."""
+    pdf = (
+        src.select(id_col, vec_col,
+                   _every(id_col, n_rows, train_cap).alias("__train"),
+                   _every(id_col, n_rows, 4 * n_queries).alias("__sample"))
+        .where(F.col("__train") | F.col("__sample"))
+        .toPandas()
     )
+    train = None
+    if train_cap > 0:
+        train = np_stack_vectors(pdf.loc[pdf["__train"], vec_col])[:train_cap]
+    sample = (
+        pdf[pdf["__sample"]].sort_values(id_col).reset_index(drop=True)
+        .iloc[:n_queries]
+    )
+    if not len(sample):
+        return train, np.array([], dtype=np.int64), np.zeros((0, 0), np.float32)
+    return (
+        train,
+        sample[id_col].to_numpy(dtype=np.int64),
+        np_stack_vectors(sample[vec_col]),
+    )
+
+
+def _topk_fold(acc, d: np.ndarray, ids: np.ndarray, extra: np.ndarray,
+               cap: int):
+    """Fold one (nq, n) distance block into the running per-query
+    top-`cap` → [dists, ids, extra], each (nq, <=cap, ...). `extra` is
+    a per-row payload (the row's vector, or its shard) carried with
+    each candidate. The merge keeps the lowest (distance, id); a
+    block's own cut at a tie is argpartition's."""
+    take = min(cap, d.shape[1])
+    part = np.argpartition(d, take - 1, axis=1)[:, :take]
+    blk = [np.take_along_axis(d, part, axis=1), ids[part], extra[part]]
+    if acc is not None:
+        blk = [np.concatenate([a, b], axis=1) for a, b in zip(acc, blk)]
+    if blk[0].shape[1] > cap:
+        # nq is tiny; lexsort is per-row
+        o = np.stack([
+            np.lexsort((blk[1][i], blk[0][i]))[:cap]
+            for i in range(d.shape[0])
+        ])
+        blk = [
+            np.take_along_axis(a, o.reshape(o.shape + (1,) * (a.ndim - 2)),
+                               axis=1)
+            for a in blk
+        ]
+    return blk
 
 
 def _exact_topk_scan(
@@ -146,35 +202,33 @@ def _exact_topk_scan(
     centroids: np.ndarray,
     metric: str,
     k: int,
-    split=None,
 ) -> pd.DataFrame:
     """ONE distributed scan → per-query exact top-(k+1) candidates with
     the cell each candidate lives in: per-partition top-(k+1)
     accumulation (each partition emits at most `nq*(k+1)` rows
     regardless of batch count, so driver traffic is
     O(partitions*queries*k), never O(N)); candidate cells computed
-    in-task against the broadcast centroids. The shared substrate of
-    BOTH build-time measurements (routing curve + exact end-recall
-    truth) — round 11 fused them onto this single pass."""
+    in-task against the broadcast centroids. The truth of the IVF build
+    and knn_join measurements; routed graph builds compute the same
+    truth per shard inside their build tasks (`ShardMeasure`)."""
     spark = src.sparkSession
     nq = qmat.shape[0]
     cap = k + 1  # +1 so dropping the query's own row still leaves k
     bq = spark.sparkContext.broadcast(
-        (np.ascontiguousarray(qmat), np.ascontiguousarray(centroids), split)
+        (np.ascontiguousarray(qmat), np.ascontiguousarray(centroids))
     )
 
     def scan(batches):
-        # mapInArrow (round 12): every build-time measurement rides this
-        # scan, so the zero-copy vector reshape (vs the pandas
-        # object-Series round trip) cuts the measurement's wall the same
-        # way it cut the IVF assignment pass
+        # mapInArrow (round 12): the zero-copy vector reshape (vs the
+        # pandas object-Series round trip) cuts the measurement's wall
+        # the same way it cut the IVF assignment pass
         import pyarrow as pa
 
         from ..functions.distance import np_from_arrow_list
 
-        qm, cm, spl = bq.value
+        qm, cm = bq.value
         dim = qm.shape[1]
-        acc_d = acc_id = acc_v = None
+        acc = None
         for b in batches:
             if b.num_rows == 0:
                 continue
@@ -190,43 +244,14 @@ def _exact_topk_scan(
                 zero_copy_only=False
             ).astype(np.int64, copy=False)
             d = np_index_distances(metric, mat, qm)  # (nq, n)
-            take = min(cap, d.shape[1])
-            part = np.argpartition(d, take - 1, axis=1)[:, :take]
-            bd = np.take_along_axis(d, part, axis=1)
-            bid = ids[part]
-            bv = mat[part]  # (nq, take, dim)
-            if acc_d is None:
-                acc_d, acc_id, acc_v = bd, bid, bv
-            else:
-                acc_d = np.concatenate([acc_d, bd], axis=1)
-                acc_id = np.concatenate([acc_id, bid], axis=1)
-                acc_v = np.concatenate([acc_v, bv], axis=1)
-            if acc_d.shape[1] > cap:
-                kd = np.empty((nq, cap), acc_d.dtype)
-                ki = np.empty((nq, cap), np.int64)
-                kv = np.empty((nq, cap, dim), acc_v.dtype)
-                for i in range(nq):  # nq is tiny; lexsort is per-row
-                    o = np.lexsort((acc_id[i], acc_d[i]))[:cap]
-                    kd[i], ki[i], kv[i] = acc_d[i][o], acc_id[i][o], acc_v[i][o]
-                acc_d, acc_id, acc_v = kd, ki, kv
-        if acc_d is None:
+            acc = _topk_fold(acc, d, ids, mat, cap)
+        if acc is None:
             return
+        acc_d, acc_id, acc_v = acc
         m = acc_d.shape[1]
-        flat_v = acc_v.reshape(nq * m, dim)
-        if spl is not None:
-            # cell-split indexes (round 15): a candidate's shard is its
-            # CELL (argmin over the base centroids) plus its hash
-            # sub-shard — argmin over the DUPLICATED route rows would
-            # tie every candidate to a cell's first sub-shard, making
-            # the curve claim one probe captures a whole split cell
-            from ..functions.partitioning import sub_cells
-
-            offs, nsub = spl
-            base = cm[offs[:-1]]
-            cell0 = np_index_distances(metric, base, flat_v).argmin(axis=1)
-            cells = sub_cells(cell0, acc_id.reshape(-1), nsub, offs)
-        else:
-            cells = np_index_distances(metric, cm, flat_v).argmin(axis=1)
+        cells = np_index_distances(
+            metric, cm, acc_v.reshape(nq * m, dim)
+        ).argmin(axis=1)
         yield pa.RecordBatch.from_pandas(
             pd.DataFrame(
                 {
@@ -254,10 +279,11 @@ def _exact_topk_scan(
 def _merge_truth(
     hits: pd.DataFrame, qids: np.ndarray, k: int
 ) -> "list[tuple[np.ndarray, np.ndarray, np.ndarray]]":
-    """Merge the per-partition candidates to the per-query EXACT global
-    top-k → one (ids, dists, cells) triple per query, sorted by
-    (distance, id) with the query's own row dropped (self-exclusion by
-    id — the measurement discipline every calibration pass shares)."""
+    """Merge the per-partition (or per-task) candidates to the
+    per-query EXACT global top-k → one (ids, dists, cells) triple per
+    query, sorted by (distance, id) with the query's own row dropped
+    (self-exclusion by id — the measurement discipline every
+    calibration pass shares)."""
     truth: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = [
         (np.array([], np.int64), np.array([]), np.array([], np.int64))
     ] * len(qids)
@@ -336,6 +362,7 @@ def measure_probe_calibration(
     target: float,
     n_queries: int = DEFAULT_QUERIES,
     k: int = CAL_K,
+    sample: "tuple[np.ndarray, np.ndarray] | None" = None,
 ) -> dict | None:
     """→ manifest-ready calibration dict, or None when the index is too
     small/degenerate to measure (<=1 cell, <2 rows, no sample). The
@@ -346,12 +373,18 @@ def measure_probe_calibration(
     cell is SOMEWHERE in the ranking). The single-measurement surface
     (IVF builds, `knn_join`'s in-call cells) — graph builds measure
     routing + in-shard L + end recall together through
-    `measure_graph_calibrations` instead."""
+    `measure_graph_calibrations` instead. `sample` is the (qids, qmat)
+    the caller already collected with its train set
+    (`collect_train_and_sample`); None collects it here."""
     nlist = int(centroids.shape[0])
     if nlist <= 1 or n_rows < 2 or n_queries <= 0:
         return None
     k = max(1, min(k, n_rows - 1))
-    qids, qmat = _sample_queries(src, id_col, vec_col, n_rows, n_queries)
+    if sample is None:
+        sample = collect_train_and_sample(
+            src, id_col, vec_col, n_rows, 0, n_queries
+        )[1:]
+    qids, qmat = sample
     nq = qmat.shape[0]
     if nq == 0:
         return None
@@ -365,157 +398,272 @@ def measure_probe_calibration(
     return _probe_cal_dict(curve, nlist, target, nq, k, n_rows)
 
 
-def _measure_l_curve(
-    spark,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    centroids: np.ndarray,
-    metric: str,
-    shard_files: "list[tuple[int, str]]",
-    grid: "list[int]",
-    k: int,
+def _l_targets(
+    qmat: np.ndarray, route: np.ndarray, metric: str, existing=None,
     max_shards: int = L_MAX_SHARDS,
-) -> "tuple[dict, int]":
-    """The in-shard recall-vs-L measurement pass (round 10) →
-    ({L: recall}, n_queries_used). Routing calibration fixes WHICH
-    shards a query probes; this fixes how hard the greedy beam works
-    INSIDE them — the two losses multiply, and round 9's measurement
-    showed the in-shard term is the binding one on clustered data
-    (~0.76 at the static default L vs 0.92-0.97 on uniform shards —
-    occlusion pruning bites when every point is close).
-
-    How it stays bounded: the held-out queries (the shared build-time
-    sample) are routed to each query's top-1 shard; only the
-    `max_shards` busiest shards are measured. One distributed pass, one
-    task per measured shard: the task mmaps its shard (the search-time
-    cache path), computes the EXACT in-shard top-k once (a
-    (nq, shard_rows) GEMM — a shard is budget-bounded, so this is
-    small), then runs the lock-step batch search once per grid L.
-    Driver traffic is O(shards * |grid|) count rows, never vectors.
-    Recall is judged in the exact-distance domain with a tie tolerance
-    (a returned label counts if its exact distance is within the k-th
-    exact distance), so GEMM-vs-per-row float32 accumulation
-    differences cannot miscount. Self-exclusion is BY ID via the
-    shard's id sidecar (nearest-point "self" miscounts duplicate
-    vectors and is wrong outright for IP)."""
+) -> np.ndarray:
+    """The shard each held-out query is measured on by the in-shard L
+    pass, -1 for queries the pass skips: the query's top-1 routed shard
+    (stable ranking over the route rows) among `existing` shard ids —
+    every route row when None, the routed build's prediction before
+    any shard file exists — kept only on the `max_shards` busiest
+    targets by held-out query mass. Bounding the measured shards bounds
+    the pass's cost regardless of shard count."""
     nq = qmat.shape[0]
-    if nq == 0 or not shard_files:
-        return {}, 0
-    existing = {s for s, _ in shard_files}
-    cd = np_index_distances(metric, centroids, qmat)  # (nq, nlist)
-    order = np.argsort(cd, axis=1, kind="stable")
-    tgt = np.full(nq, -1, dtype=np.int64)
-    for i in range(nq):
-        for c in order[i]:
-            if int(c) in existing:
-                tgt[i] = int(c)
-                break
-    keep_q = tgt >= 0
-    if not keep_q.any():
-        return {}, 0
-    qids, qmat, tgt = qids[keep_q], qmat[keep_q], tgt[keep_q]
-    # bound the measurement to the busiest shards by held-out query mass
-    shards_u, counts = np.unique(tgt, return_counts=True)
-    busiest = set(
-        int(s) for s in shards_u[np.argsort(-counts, kind="stable")][:max_shards]
+    order = np.argsort(
+        np_index_distances(metric, route, qmat), axis=1, kind="stable"
     )
-    mask = np.array([int(t) in busiest for t in tgt])
-    qids, qmat, tgt = qids[mask], qmat[mask], tgt[mask]
-    paths = dict(shard_files)
-    rows = [
-        (int(s), int(qids[i]), [float(x) for x in qmat[i]])
-        for i, s in enumerate(tgt)
-    ]
-    from ..local import local_df
+    if existing is None:
+        tgt = order[:, 0].astype(np.int64)
+    else:
+        tgt = np.full(nq, -1, dtype=np.int64)
+        for i in range(nq):
+            for c in order[i]:
+                if int(c) in existing:
+                    tgt[i] = int(c)
+                    break
+    live = tgt >= 0
+    if live.any():
+        shards_u, counts = np.unique(tgt[live], return_counts=True)
+        busiest = shards_u[np.argsort(-counts, kind="stable")][:max_shards]
+        tgt[~np.isin(tgt, busiest)] = -1
+    return tgt
 
-    # deferred import breaks the module cycle (vamana imports this
-    # module); binding it HERE (driver-side) lets the task closure
-    # capture it by importable reference
-    from .vamana import _load_shard as load_shard
 
-    qdf = local_df(
-        spark, rows, "shard int, _qid long, _qv array<float>"
-    ).repartition(
-        min(len(busiest), spark.sparkContext.defaultParallelism), "shard"
-    )
+def _l_counts(g, ids: np.ndarray, qs: np.ndarray, q_ids: np.ndarray,
+              grid: "list[int]", k: int, metric: str) -> "list[tuple]":
+    """In-shard recall-vs-L hit counts of one shard → [(L, hits, total)]
+    (round 10). Routing calibration fixes WHICH shards a query probes;
+    this fixes how hard the greedy beam works INSIDE them — the two
+    losses multiply, and round 9's measurement showed the in-shard term
+    is the binding one on clustered data (~0.76 at the static default L
+    vs 0.92-0.97 on uniform shards — occlusion pruning bites when every
+    point is close).
 
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for shard, grp in pdf.groupby("shard", sort=True):
-                g, ids = load_shard(paths[int(shard)])
-                n = int(g.n)
-                if n < 2:
+    `g`/`ids` are the shard as served (`vamana._load_shard`: SQ8 codes,
+    HNSW layers); `qs`/`q_ids` the held-out queries routed to it. The
+    exact in-shard top-k comes from one (nq, shard_rows) GEMM — a shard
+    is budget-bounded, so this is small — then the lock-step batch
+    search runs once per grid L. Recall is judged in the exact-distance
+    domain with a tie tolerance (a returned label counts if its exact
+    distance is within the k-th exact distance), so GEMM-vs-per-row
+    float32 accumulation differences cannot miscount. Self-exclusion is
+    BY ID via the shard's id sidecar (nearest-point "self" miscounts
+    duplicate vectors and is wrong outright for IP)."""
+    n = int(g.n)
+    if n < 2:
+        return []
+    # the query IS a shard row (held-out sample routed to its own cell),
+    # so its self-point is a guaranteed trivial hit for BOTH the exact
+    # truth and the beam — excluding it keeps the measurement honest
+    # (the probe calibration drops the query's own row for the same
+    # reason; an inflated curve here under-measures L and the end
+    # recall pays for it)
+    kk = min(k, n - 1)
+    # judge (and SEARCH) only queries whose row is in this shard —
+    # defensive rows can't be self-excluded, and searching them per
+    # grid L was pure waste (round-10 advice: |grid| beam runs per
+    # never-judged query)
+    by_id = np.argsort(ids, kind="stable")
+    pos = by_id[np.searchsorted(ids[by_id], q_ids).clip(max=n - 1)]
+    self_all = np.where(ids[pos] == q_ids, pos, -1)
+    judged = self_all >= 0
+    if not judged.any():
+        return []
+    qs = qs[judged]
+    self_lab = self_all[judged]
+    nq_s = qs.shape[0]
+    vecs = np.asarray(g.vectors[:n])
+    d_exact = np_index_distances(metric, vecs, qs)  # (nq, n)
+    dk = np.full(nq_s, np.inf)
+    for qi in range(nq_s):
+        dq = d_exact[qi].copy()
+        dq[self_lab[qi]] = np.inf  # kk-th NEIGHBOR, self out
+        dk[qi] = np.partition(dq, kk - 1)[kk - 1]
+    # tie/float tolerance: squared-l2 >= 0, negated-ip can be negative —
+    # widen by magnitude either way
+    tol = dk + np.maximum(1e-6, np.abs(dk) * 1e-5)
+    total = int(kk * nq_s)
+    out = []
+    for L in grid:
+        # request kk+1 so the self-point occupying one slot cannot crowd
+        # out a true neighbor
+        res = g.search_batch(qs, kk + 1, L)
+        hits = 0
+        for qi, hl in enumerate(res):
+            found = 0
+            for label, _dist in hl:
+                lab = int(label)
+                if lab == int(self_lab[qi]) or found >= kk:
                     continue
-                qs = np_stack_vectors(grp["_qv"])
-                q_ids = grp["_qid"].to_numpy(dtype=np.int64)
-                # the query IS a shard row (held-out sample routed to
-                # its own cell), so its self-point is a guaranteed
-                # trivial hit for BOTH the exact truth and the beam —
-                # excluding it keeps the measurement honest (the probe
-                # calibration drops the query's own row for the same
-                # reason; an inflated curve here under-measures L and
-                # the end recall pays for it). Exclusion is BY ID via
-                # this shard's id sidecar (round-10 review: picking the
-                # nearest point as "self" miscounts duplicates and is
-                # wrong outright for IP, where self need not rank first)
-                kk = min(k, n - 1)
-                # judge (and SEARCH) only queries whose row is in this
-                # shard — defensive rows can't be self-excluded, and
-                # searching them per grid L was pure waste (round-10
-                # advice: |grid| beam runs per never-judged query)
-                by_id = np.argsort(ids, kind="stable")
-                pos = by_id[
-                    np.searchsorted(ids[by_id], q_ids).clip(max=n - 1)
-                ]
-                self_all = np.where(ids[pos] == q_ids, pos, -1)
-                judged = self_all >= 0
-                if not judged.any():
-                    continue
-                qs = qs[judged]
-                self_lab = self_all[judged]
-                nq_s = qs.shape[0]
-                vecs = np.asarray(g.vectors[:n])
-                d_exact = np_index_distances(metric, vecs, qs)  # (nq, n)
-                dk = np.full(nq_s, np.inf)
-                for qi in range(nq_s):
-                    dq = d_exact[qi].copy()
-                    dq[self_lab[qi]] = np.inf  # kk-th NEIGHBOR, self out
-                    dk[qi] = np.partition(dq, kk - 1)[kk - 1]
-                # tie/float tolerance: squared-l2 >= 0, negated-ip can be
-                # negative — widen by magnitude either way
-                tol = dk + np.maximum(1e-6, np.abs(dk) * 1e-5)
-                total = int(kk * nq_s)
-                for L in grid:
-                    # request kk+1 so the self-point occupying one slot
-                    # cannot crowd out a true neighbor
-                    res = g.search_batch(qs, kk + 1, L)
-                    hits = 0
-                    for qi, hl in enumerate(res):
-                        found = 0
-                        for label, _dist in hl:
-                            lab = int(label)
-                            if lab == int(self_lab[qi]) or found >= kk:
-                                continue
-                            if d_exact[qi, lab] <= tol[qi]:
-                                hits += 1
-                            found += 1
-                        # only the first kk non-self returns are judged
-                    out.append((int(L), int(hits), total))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["l", "hits", "total"]
+                if d_exact[qi, lab] <= tol[qi]:
+                    hits += 1
+                found += 1
+            # only the first kk non-self returns are judged
+        out.append((int(L), int(hits), total))
+    return out
+
+
+def graph_sample_size(n_queries: int) -> int:
+    """Held-out sample size of a routed graph measurement: the 4x
+    oversample the busiest-shard L cut needs, capped at 512."""
+    return min(4 * n_queries, 512)
+
+
+def graph_plan(
+    qids: np.ndarray, qmat: np.ndarray, route: np.ndarray, metric: str,
+    n_rows: int, base_l: int, n_queries: int, existing=None,
+    deleted: "np.ndarray | None" = None, k: int = CAL_K,
+    max_shards: int = L_MAX_SHARDS,
+) -> dict | None:
+    """The driver-side plan of a routed graph measurement, or None when
+    there is nothing to measure (calibration off, no L base, <2 rows,
+    empty sample). Small enough to broadcast with a build (the sample
+    is <=512 x d floats): the sample, the clamped k, the L grid, the
+    per-query L targets (`_l_targets` over `existing`), and the
+    tombstoned ids the truth must skip. `truth=False` plans measure
+    only L (the build's missing-target re-run)."""
+    if (n_queries <= 0 or int(base_l) <= 0 or n_rows < 2
+            or qmat.shape[0] == 0):
+        return None
+    return {
+        "qids": qids,
+        "qmat": np.ascontiguousarray(qmat),
+        "k": max(1, min(k, n_rows - 1)),
+        "metric": metric,
+        "grid": _l_grid(int(base_l)),
+        "tgt": _l_targets(qmat, route, metric, existing, max_shards),
+        "deleted": deleted,
+        "truth": True,
+    }
+
+
+# one row per measured shard: (shard, rows) plus its L hit counts; the
+# task's last row also carries the task's exact top-(k+1) candidates
+MEASURE_SCHEMA = (
+    "shard int, n long, qi array<int>, _d array<double>, _id array<long>, "
+    "_cell array<int>, l array<int>, hits array<long>, total array<long>"
+)
+_MEASURE_NAMES = [f.split()[0] for f in MEASURE_SCHEMA.split(", ")]
+
+
+class ShardMeasure:
+    """One task's share of a routed graph measurement (`graph_plan`).
+
+    `batch(shard, ids, vecs, last)` runs on a shard whose file is
+    written: it folds the shard's rows into the task's exact top-(k+1)
+    per query — the candidate's cell is the shard that holds it, so
+    split cells need no plumbing — and, when the shard is an L target,
+    counts its in-shard L-grid hits on the file read back the way it is
+    served (`_l_counts`). It returns the shard's `MEASURE_SCHEMA` row;
+    the `last` row of the task carries the folded candidates, so a task
+    ships at most nq x (k+1) of them. The routed build calls it right
+    after each shard build (`vamana._build_cells`), and `measure_shards`
+    over the shard files on disk — one code path for both."""
+
+    def __init__(self, plan: dict, artifact_dir: str):
+        self.plan = plan
+        self.artifact_dir = artifact_dir
+        self.acc = None
+
+    def batch(self, shard: int, ids, vecs, last: bool):
+        import pyarrow as pa
+
+        p = self.plan
+        n = 0 if ids is None else len(ids)
+        if n and p["truth"]:
+            if p["deleted"] is not None:
+                live = ~np.isin(ids, p["deleted"])
+                ids, vecs = ids[live], vecs[live]
+            if len(ids):
+                d = np_index_distances(p["metric"], vecs, p["qmat"])
+                self.acc = _topk_fold(
+                    self.acc, d, ids, np.full(len(ids), shard, np.int32),
+                    p["k"] + 1,
                 )
+        counts = np.empty((0, 3), np.int64)
+        sel = p["tgt"] == shard
+        if sel.any():
+            # deferred import breaks the module cycle (vamana imports
+            # this module)
+            from .vamana import _load_shard, _shard_path
 
-    agg = qdf.mapInPandas(run, schema="l int, hits long, total long").toPandas()
-    if not len(agg):
-        return {}, 0
-    curve = (
-        agg.groupby("l", sort=True).sum()
-    )
-    return (curve["hits"] / curve["total"]).to_dict(), int(qmat.shape[0])
+            g, gids = _load_shard(_shard_path(self.artifact_dir, shard))
+            counts = np.array(
+                _l_counts(g, gids, p["qmat"][sel], p["qids"][sel],
+                          p["grid"], p["k"], p["metric"]),
+                dtype=np.int64,
+            ).reshape(-1, 3)
+        cand = [np.empty(0, np.int32), np.empty(0, np.float64),
+                np.empty(0, np.int64), np.empty(0, np.int32)]
+        if last and self.acc is not None:
+            acc_d, acc_id, acc_cell = self.acc
+            nq, m = acc_d.shape
+            cand = [np.repeat(np.arange(nq, dtype=np.int32), m),
+                    acc_d.reshape(-1).astype(np.float64),
+                    acc_id.reshape(-1), acc_cell.reshape(-1)]
+            self.acc = None
+        lists = cand + [counts[:, 0].astype(np.int32), counts[:, 1],
+                        counts[:, 2]]
+        return pa.RecordBatch.from_arrays(
+            [pa.array([shard], pa.int32()), pa.array([n], pa.int64())]
+            + [pa.ListArray.from_arrays(pa.array([0, len(a)], pa.int32()),
+                                        pa.array(a))
+               for a in lists],
+            names=_MEASURE_NAMES,
+        )
+
+
+def measure_shards(engine, spark, artifact_dir: str, plan: dict):
+    """The standalone per-shard pass: ONE job over the shard files on
+    disk (`engine._shard_scan`) running `ShardMeasure` on each → the
+    collected `MEASURE_SCHEMA` rows. The truth reads each shard's raw
+    vectors (full precision under SQ8) and id sidecar. Used by
+    `recalibrate_index`, and by a routed build whose predicted L target
+    wrote no file."""
+
+    def emit(shard_files):
+        from .file_format import read_diskann, read_ids
+        from .vamana_core import _blas_set_threads
+
+        m = ShardMeasure(plan, artifact_dir)
+        # one BLAS thread, as in the build tasks: OpenBLAS GEMM results
+        # change in the last ulp with the thread count, and the truth's
+        # distances must not depend on which path measured them
+        prev_threads = _blas_set_threads(1)
+        try:
+            for j, (shard, path) in enumerate(shard_files):
+                ids = vecs = None
+                if plan["truth"]:
+                    g = read_diskann(path, mmap=True)
+                    ids = read_ids(path, g.n)
+                    vecs = np.asarray(g.vectors[: g.n])
+                yield m.batch(shard, ids, vecs, j == len(shard_files) - 1)
+        finally:
+            if prev_threads is not None:
+                _blas_set_threads(prev_threads)
+
+    return engine._shard_scan(
+        spark, artifact_dir, emit, MEASURE_SCHEMA
+    ).toPandas()
+
+
+def gather_measures(rows) -> "tuple[pd.DataFrame, pd.DataFrame]":
+    """Collected `MEASURE_SCHEMA` rows → (candidates (qi, _d, _id,
+    _cell), L counts (l, hits, total)). Accepts Arrow-collected numpy
+    arrays and row-collected lists alike."""
+
+    def cat(col, dt):
+        parts = [np.asarray(v, dt) for v in rows[col] if v is not None]
+        return np.concatenate(parts) if parts else np.empty(0, dt)
+
+    hits = pd.DataFrame({"qi": cat("qi", np.int32), "_d": cat("_d", np.float64),
+                         "_id": cat("_id", np.int64),
+                         "_cell": cat("_cell", np.int32)})
+    counts = pd.DataFrame({"l": cat("l", np.int32),
+                           "hits": cat("hits", np.int64),
+                           "total": cat("total", np.int64)})
+    return hits, counts
 
 
 def _l_cal_dict(
@@ -618,53 +766,37 @@ def _l_grid(base_l: int) -> "list[int]":
 
 
 def measure_graph_calibrations(
-    src: DataFrame,
-    id_col: str,
-    vec_col: str,
+    plan: dict | None,
+    hits: pd.DataFrame,
+    l_counts: pd.DataFrame,
     centroids: np.ndarray,
-    metric: str,
     n_rows: int,
-    shard_files: "list[tuple[int, str]]",
     base_l: int,
     search_fn,
     measure_routing: bool = True,
     route_target: float = ROUTED_TARGET,
     l_target: float = L_TARGET,
     n_queries: int = DEFAULT_QUERIES,
-    k: int = CAL_K,
-    max_shards: int = L_MAX_SHARDS,
-    split=None,
 ) -> "tuple[dict | None, dict | None, dict | None]":
-    """The FUSED build-time measurement for routed graph indexes
-    (round 11) → (route_calibration, l_calibration, end_calibration),
-    each None when unmeasurable. Round 10 ran the routing and in-shard
-    passes as two fully separate jobs — each with its own
-    `_sample_queries` toPandas and its own scan — which the round-10
-    bench priced at +24-40% of the routed build wall at 100k. This
-    function samples ONCE (the 4x oversample the busiest-shard cut
-    needs), scans ONCE (`_exact_topk_scan` — the per-partition
-    top-(k+1) accumulation whose candidates carry both the cell ranks
-    for the routing curve AND the exact-distance truth), then runs the
-    bounded in-shard L pass on the busiest shards, and finally ONE
-    end-to-end search of the sample at the resolved default config
-    (`search_fn(qmat, k, route_nprobe, L) -> [[(id, dist), ...]]` —
-    the engine's real search path). The L pass reads each measured
-    shard's id sidecar beside its graph to exclude a query's own row.
+    """The finishing step of a routed graph measurement →
+    (route_calibration, l_calibration, end_calibration), each None when
+    unmeasurable.
 
-    Measured phase walls (uniform 100k x d128, 128 cells, local[32]):
-    sample 0.15s + exact scan 0.65s + merge/curve 0.06s + end search
-    ~1.5-3s (query-capped below), against a ~21-27s core build — and
-    the same session measured consecutive IDENTICAL builds drifting
-    20.9-24.4s, so at bench scale the measurement rides inside host
-    noise; at the multi-hour 300k+ builds it is rounding error.
-
-    The L pass is the largest phase whenever the beam runs in python:
-    on a 4-core host, perfbench's `build` workload (3k x d128 routed,
-    degree 16, L 32; 20 calls) measured the L pass at median 3.7s
-    (2.1-4.8s) of a 5.7s (3.4-7.8s) measurement with the python beam,
-    and 0.81s (0.60-1.27s) of 3.0s (1.9-5.5s) with the compiled beam
-    of `_prune_c` (the default). The L pass wall at the 100k shape
-    above has not been re-measured.
+    The measurement is planned on the driver (`graph_plan`: one shared
+    held-out sample, collected with the k-means train set), and its
+    per-shard work runs where the shard data already is
+    (`ShardMeasure`): inside the routed build's shard-build tasks, or
+    in one job over the shards on disk (`measure_shards`,
+    `recalibrate_index`). `hits` and `l_counts` are those tasks'
+    gathered output (`gather_measures`). This step merges the
+    candidates to the exact global truth, derives the routing curve
+    from the candidates' shards, turns the L counts into the L curve,
+    and runs ONE end-to-end search of the sample at the resolved
+    default config (`search_fn(qmat, k, route_nprobe, L) ->
+    [[(id, dist), ...]]` — the engine's real search path). The routed
+    build therefore adds no scan of the table: its measurement costs
+    the sample rows in the train collect, the per-shard GEMM and L
+    grid inside the build tasks, and the end search.
 
     `end_calibration` is the piece that turns the two sample curves
     into an honest end-recall contract: the sample curves are measured
@@ -680,42 +812,29 @@ def measure_graph_calibrations(
     `measure_routing=False` (pinned `route_nprobe` builds) skips the
     routing curve AND the end measurement (the composition needs both
     curves), but still measures L — the per-call knob with no build
-    pin. Routing curve n_queries grows from 64 to the shared 4x sample
-    (a strictly lower-variance curve; the log-spaced manifest slice is
-    unchanged in shape)."""
-    if (not shard_files or n_queries <= 0 or int(base_l) <= 0
-            or n_rows < 2):
+    pin. The routing curve uses the whole 4x sample (a strictly
+    lower-variance curve than the IVF measurement's)."""
+    if plan is None or not len(hits):
         return None, None, None
-    k = max(1, min(k, n_rows - 1))
-    qids, qmat = _sample_queries(
-        src, id_col, vec_col, n_rows, min(4 * n_queries, 512)
-    )
+    qids, qmat, k = plan["qids"], plan["qmat"], plan["k"]
     nq = qmat.shape[0]
-    if nq == 0:
-        return None, None, None
-    spark = src.sparkSession
-    hits = _exact_topk_scan(
-        src, id_col, vec_col, qmat, centroids, metric, k, split=split
-    )
-    if not len(hits):
-        return None, None, None
     truth = _merge_truth(hits, qids, k)
     nlist = int(centroids.shape[0])
     route_cal = None
     curve = None
     if nlist > 1:
-        curve = _routing_curve(truth, qmat, centroids, metric)
+        curve = _routing_curve(truth, qmat, centroids, plan["metric"])
         if curve is not None and measure_routing:
             route_cal = _probe_cal_dict(
                 curve, nlist, route_target, nq, k, n_rows
             )
-    grid = _l_grid(int(base_l))
-    l_recall, l_nq = _measure_l_curve(
-        spark, qids, qmat, centroids, metric, shard_files,
-        grid, k, max_shards,
-    )
+    l_recall: dict = {}
+    if len(l_counts):
+        summed = l_counts.groupby("l", sort=True).sum()
+        l_recall = (summed["hits"] / summed["total"]).to_dict()
     l_cal = _l_cal_dict(
-        l_recall, grid, int(base_l), l_target, l_nq, k, n_rows
+        l_recall, plan["grid"], int(base_l), l_target,
+        int((plan["tgt"] >= 0).sum()), k, n_rows,
     )
     end_cal = None
     if route_cal is not None and l_cal is not None and search_fn is not None:

@@ -57,11 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.distance import (
-    np_arrow_mat,
-    np_index_distances,
-    np_stack_vectors,
-)
+from ..functions.distance import np_arrow_mat, np_index_distances
 from ..functions.partitioning import (
     cell_slices,
     lpt_bins,
@@ -778,18 +774,23 @@ class IvfFlatEngine:
         else:
             cap = max(50 * nlist, 10_000)
         cap = min(cap, n, 200_000)
-        sample = df.select(vec_col)
-        if n > cap:
-            modulus = max(1, n // cap)
-            sample = df.where(
-                F.pmod(F.abs(F.hash(F.col(id_col))), F.lit(modulus)) == 0
-            ).select(vec_col)
-        # Arrow collect (toPandas), not row collect: same values, ~3x
-        # faster for array columns. The exact-cap cut happens in numpy —
-        # a Spark limit() would funnel the collect through CollectLimit's
-        # single-task path (~8x slower). The hash-sample above already
-        # bounds the collected rows to O(cap).
-        train = np_stack_vectors(sample.toPandas()[vec_col])[:cap]
+        from . import calibration
+
+        # only measure when the build leaves nprobe on AUTO — a pinned
+        # nprobe is what every search will use, so the measurement
+        # could never be consulted and the extra table scan it costs
+        # would be dead weight on every default (nprobe=1) build
+        nq = int(getattr(params, "calibration_queries", 0) or 0)
+        if int(getattr(params, "nprobe", 0) or 0) != 0:
+            nq = 0
+        # ONE Arrow collect of the hash-sampled train set and the
+        # held-out calibration sample. The exact-cap cut happens in
+        # numpy — a Spark limit() would funnel the collect through
+        # CollectLimit's single-task path (~8x slower). The hash-sample
+        # already bounds the collected rows to O(cap).
+        train, qids, qmat = calibration.collect_train_and_sample(
+            df, id_col, vec_col, int(n), cap, nq
+        )
         centroids = _kmeans(train, nlist)
         k_eff = centroids.shape[0]
 
@@ -827,27 +828,20 @@ class IvfFlatEngine:
         # uniform-worst-case auto_nprobe rule (always returned, None
         # when disabled/degenerate, so rebuilds clear stale values).
         # Round 16 (guide §2.6 "overlap independent jobs"): the
-        # measurement reads only (df, centroids) — nothing the
-        # assignment+write job below produces — so it runs CONCURRENTLY
-        # with the write on a driver thread instead of serially after
-        # it; the readings are identical (hash-based sampling, no shared
-        # state), only the build wall shrinks by the shorter of the two.
-        from .calibration import IVF_TARGET, measure_probe_calibration
-
+        # measurement reads only (df, centroids, sample) — nothing the
+        # assignment+write job below produces — so its exact scan runs
+        # CONCURRENTLY with the write on a driver thread instead of
+        # serially after it; only the build wall shrinks.
         cal_fut = None
         pool = None
-        nq = int(getattr(params, "calibration_queries", 0) or 0)
-        # only measure when the build leaves nprobe on AUTO — a pinned
-        # nprobe is what every search will use, so the measurement
-        # could never be consulted and the extra table scan it costs
-        # would be dead weight on every default (nprobe=1) build
-        if nq > 0 and int(getattr(params, "nprobe", 0) or 0) == 0:
+        if nq > 0:
             from concurrent.futures import ThreadPoolExecutor
 
             pool = ThreadPoolExecutor(max_workers=1)
             cal_fut = pool.submit(
-                measure_probe_calibration, df, id_col, vec_col, centroids,
-                metric, int(n), IVF_TARGET, n_queries=nq,
+                calibration.measure_probe_calibration, df, id_col, vec_col,
+                centroids, metric, int(n), calibration.IVF_TARGET,
+                n_queries=nq, sample=(qids, qmat),
             )
         # co-locate each cell before the partitioned write: without
         # this, every task writes a sliver of every cell (tasks x nlist

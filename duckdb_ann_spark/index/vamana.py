@@ -420,13 +420,17 @@ def _shard_path(artifact_dir: str, shard: int) -> str:
 
 
 def _build_cells(build_shard_np, id_col: str, vec_col: str,
-                 task_accs=None):
+                 task_accs=None, measure=None):
     """The one shard-build body of every multi-shard graph build (hash
     and cells, both engines): a mapInArrow function over (id, vec,
     shard int, ...) rows that builds each distinct `shard` value of
-    its task from that shard's rows alone through `build_shard_np` and
-    emits one (shard, n) row per shard built. `task_accs` (routed
-    builds under SPARK_GRAFT_BUILD_PHASES) sums per-task phase walls."""
+    its task from that shard's id-sorted rows alone through
+    `build_shard_np` and emits one (shard, n) row per shard built.
+    `measure` (calibrated routed builds) makes the task's
+    `calibration.ShardMeasure`; each shard row is then its
+    `MEASURE_SCHEMA` row, measured right after the shard is written.
+    `task_accs` (routed builds under SPARK_GRAFT_BUILD_PHASES) sums
+    per-task phase walls."""
 
     def build_cells(batches):
         # mapInArrow (round 13 — r12 verdict item 2): a pandas body
@@ -443,7 +447,7 @@ def _build_cells(build_shard_np, id_col: str, vec_col: str,
 
         walls = (
             {"shuffle_fetch": 0.0, "input_arrow": 0.0,
-             "graph_insert": 0.0, "file_write": 0.0}
+             "graph_insert": 0.0, "file_write": 0.0, "measure": 0.0}
             if task_accs is not None
             else None
         )
@@ -483,7 +487,9 @@ def _build_cells(build_shard_np, id_col: str, vec_col: str,
         ids = np.concatenate(id_parts)
         vecs = np.vstack(vec_parts)
         cells = np.concatenate(cell_parts)
-        order = np.argsort(cells, kind="stable")
+        # by (shard, id): each shard's rows arrive in the id order its
+        # build and measurement use
+        order = np.lexsort((ids, cells))
         cells_s = cells[order]
         starts = np.concatenate(
             [[0], np.flatnonzero(np.diff(cells_s)) + 1, [len(cells_s)]]
@@ -498,17 +504,26 @@ def _build_cells(build_shard_np, id_col: str, vec_col: str,
         # kernels want the default.
         from .vamana_core import _blas_set_threads
 
+        meas = measure() if measure is not None else None
         prev_threads = _blas_set_threads(1)
         try:
             for a, z in zip(starts[:-1], starts[1:]):
                 rows = order[a:z]
                 shard = int(cells_s[a])
                 n = build_shard_np(ids[rows], vecs[rows], shard, walls)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([shard], pa.int32()),
-                     pa.array([n], pa.int64())],
-                    names=["shard", "n"],
-                )
+                if meas is None:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array([shard], pa.int32()),
+                         pa.array([n], pa.int64())],
+                        names=["shard", "n"],
+                    )
+                    continue
+                t_in = _t.perf_counter()
+                out = meas.batch(shard, ids[rows], vecs[rows],
+                                 z == len(cells_s))
+                if walls is not None:
+                    walls["measure"] += _t.perf_counter() - t_in
+                yield out
         finally:
             if prev_threads is not None:
                 _blas_set_threads(prev_threads)
@@ -692,17 +707,27 @@ class VamanaEngine:
         """shard_by='cells': train routing centroids on a bounded
         deterministic sample (the IVF build's train discipline), assign
         rows to their nearest centroid in one narrow pass, build one
-        graph per CELL. A shuffle partition may receive several cells
-        (hash of the cell id), so the build task loops per cell —
-        shard file ids are cell ids, dense 0..k_eff-1."""
+        graph per CELL. A shuffle partition may receive several cells,
+        so the build task loops per cell — shard file ids are cell
+        ids, dense 0..k_eff-1 (sub-shard ids for split cells).
+
+        Calibration rides the same passes: the held-out query sample
+        comes from the train collect, the driver plans the measurement
+        before the build job, and each build task measures the shards
+        it just wrote (`calibration.ShardMeasure`). After the build only
+        the end-anchor search runs, so the build's Spark jobs are the
+        train+sample collect, assign+build (two with its shuffle) and
+        that search."""
         import time as _time
 
+        from . import calibration
         from .ivf import _kmeans
 
         # phase-wall attribution for scale tuning (round 13): set
         # SPARK_GRAFT_BUILD_PHASES=1 to print each build phase's wall —
         # the 10M smokes report one build number; this names where it
-        # goes (train/kmeans vs assign+build vs calibration)
+        # goes (train+sample collect, kmeans, assign+build with the
+        # in-task measurement, the calibration finish)
         _phases = os.environ.get("SPARK_GRAFT_BUILD_PHASES")
         _t0 = _time.perf_counter()
 
@@ -718,15 +743,12 @@ class VamanaEngine:
             n_rows = src.count()
         n_rows = int(n_rows)
         cap = min(max(50 * shards, 10_000), n_rows, 200_000)
-        sample = src.select(vec_col)
-        if n_rows > cap:
-            modulus = max(1, n_rows // cap)
-            sample = src.where(
-                F.pmod(F.abs(F.hash(F.col(id_col))), F.lit(modulus)) == 0
-            ).select(vec_col)
-        _phase("count+sample-plan")
-        train = np_stack_vectors(sample.toPandas()[vec_col])[:cap]
-        _phase("train-collect")
+        nq = int(getattr(params, "calibration_queries", 0) or 0)
+        _phase("count")
+        train, qids, qmat = calibration.collect_train_and_sample(
+            src, id_col, vec_col, n_rows, cap, calibration.graph_sample_size(nq)
+        )
+        _phase("train+sample-collect")
         centroids = _kmeans(train, shards)
         _phase("routing-kmeans")
         k_eff = centroids.shape[0]
@@ -843,10 +865,20 @@ class VamanaEngine:
                 )
         else:
             tokens = exact_partition_tokens(total_shards)
-        bc = spark.sparkContext.broadcast(
-            (centroids, tokens, sub_offsets, n_sub)
-        )
         metric = params.metric
+        base_l = self._default_search_complexity(params)
+        # the measurement plan (route_cents, not centroids: the curves
+        # must rank the SAME sub-shard rows serve-time routing ranks —
+        # identical when no cell split) rides the build broadcast
+        plan = calibration.graph_plan(
+            qids, qmat, route_cents, metric, n_rows, base_l, nq
+        )
+        bc = spark.sparkContext.broadcast(
+            (centroids, tokens, sub_offsets, n_sub, plan)
+        )
+        measure = None if plan is None else (
+            lambda: calibration.ShardMeasure(bc.value[4], artifact_dir)
+        )
 
         # round 14 (r13 verdict item 1): per-TASK phase walls, summed
         # via accumulators, so the one driver-side composite phase
@@ -861,7 +893,7 @@ class VamanaEngine:
             {
                 k: spark.sparkContext.accumulator(0.0)
                 for k in ("assign", "shuffle_fetch", "input_arrow",
-                          "graph_insert", "file_write")
+                          "graph_insert", "file_write", "measure")
             }
             if _phases
             else None
@@ -877,7 +909,7 @@ class VamanaEngine:
 
             from .ivf import _arrow_cells
 
-            cm, toks, offs, nsub = bc.value
+            cm, toks, offs, nsub = bc.value[:4]
             t_body = 0.0
             for b in batches:
                 if b.num_rows == 0:
@@ -915,7 +947,7 @@ class VamanaEngine:
             "shard int, _pt int"
         )
 
-        (
+        rows = (
             # belt-and-braces dtype cast (round-13 advice): the assign
             # batches pass id/vec VERBATIM into the declared
             # long/array<float> schema; create_index already normalizes,
@@ -924,10 +956,14 @@ class VamanaEngine:
             .mapInArrow(assign, schema=schema)
             .repartition(n_bins, F.col("_pt"))
             .mapInArrow(
-                _build_cells(build_shard_np, id_col, vec_col, task_accs),
-                schema="shard int, n long",
+                _build_cells(build_shard_np, id_col, vec_col, task_accs,
+                             measure),
+                schema=(
+                    calibration.MEASURE_SCHEMA if measure is not None
+                    else "shard int, n long"
+                ),
             )
-            .collect()
+            .toPandas()
         )
         if task_accs is not None:
             parts = " ".join(
@@ -941,23 +977,20 @@ class VamanaEngine:
                 flush=True,
             )
         _phase("assign+cell-builds")
-        # FUSED build-time measurement (round 11; shard files exist
-        # now): one shared sample + one exact-top-k scan feed the
-        # routing curve (round 9), the in-shard L curve (round 10), AND
-        # one end-to-end search at the resolved default config whose
-        # measured end recall anchors the target_recall composition
-        # contract (see calibration.measure_graph_calibrations /
-        # resolve_end_recall). The routing curve is only STORED when
-        # route_nprobe stays on AUTO — a pinned probe count is what
-        # every search will use (same dead-weight rule as the IVF
-        # build's nprobe gate); L is a per-call knob with no build pin,
-        # so its measurement is never dead weight.
-        nq = int(getattr(params, "calibration_queries", 0) or 0)
         shard_files = self._shard_files(artifact_dir)
-        if nq > 0 and shard_files:
-            from .calibration import measure_graph_calibrations
-
-            from .calibration import shape_search_results
+        if plan is not None and shard_files:
+            hits, l_counts = calibration.gather_measures(rows)
+            tgt = calibration._l_targets(
+                qmat, route_cents, metric, {s for s, _ in shard_files}
+            )
+            if not np.array_equal(tgt, plan["tgt"]):
+                # a predicted L target wrote no shard file (an empty
+                # cell or sub-shard): measure L again over the shards
+                # that exist, as the standalone pass does
+                plan = {**plan, "tgt": tgt, "truth": False}
+                _, l_counts = calibration.gather_measures(
+                    calibration.measure_shards(self, spark, artifact_dir, plan)
+                )
 
             def search_fn(qm, kk, rnp, L):
                 # round 15 (r14 advice): the end anchor is the ONLY
@@ -981,29 +1014,27 @@ class VamanaEngine:
                     [[float(x) for x in q] for q in qm], kk,
                     search_complexity=int(L),
                 ).collect()
-                return shape_search_results(res, len(qm), id_col)
+                return calibration.shape_search_results(res, len(qm), id_col)
 
-            measure_routing = (
-                k_eff > 1
-                and int(getattr(params, "route_nprobe", 0) or 0) == 0
-            )
+            # the routing curve is only STORED when route_nprobe stays
+            # on AUTO — a pinned probe count is what every search will
+            # use (same dead-weight rule as the IVF build's nprobe
+            # gate); L is a per-call knob with no build pin, so its
+            # measurement is never dead weight
             (
                 params._route_calibration,
                 params._l_calibration,
                 params._end_calibration,
-            ) = measure_graph_calibrations(
-                # route_cents, not centroids: the curves must rank the
-                # SAME (sub-shard) rows serve-time routing ranks —
-                # identical when no cell split
-                src, id_col, vec_col, route_cents, metric, n_rows,
-                shard_files, self._default_search_complexity(params),
+            ) = calibration.measure_graph_calibrations(
+                plan, hits, l_counts, route_cents, n_rows, base_l,
                 search_fn,
-                measure_routing=measure_routing, n_queries=nq,
-                split=(
-                    (sub_offsets, n_sub) if total_shards > k_eff else None
+                measure_routing=(
+                    k_eff > 1
+                    and int(getattr(params, "route_nprobe", 0) or 0) == 0
                 ),
+                n_queries=nq,
             )
-            _phase("fused-calibration")
+            _phase("calibration-finish")
         return len(shard_files)
 
     def _default_search_complexity(self, params) -> int:
@@ -1017,14 +1048,14 @@ class VamanaEngine:
                     emit, schema: str) -> DataFrame:
         """One row stream over every shard in ascending (shard, label)
         order: task t reads a contiguous run of the sorted shard files,
-        and `emit(path)` yields each shard's RecordBatches."""
-        files = [p for _, p in self._shard_files(artifact_dir)]
+        and `emit(shard_files)` yields the RecordBatches of that run's
+        (shard, path) pairs."""
+        files = self._shard_files(artifact_dir)
         npart = max(1, min(len(files), spark.sparkContext.defaultParallelism))
 
         def run(batches):
             for b in batches:
-                for i in b.column(0).to_numpy():
-                    yield from emit(files[int(i)])
+                yield from emit([files[int(i)] for i in b.column(0).to_numpy()])
 
         return spark.range(0, len(files), 1, npart).mapInArrow(run, schema)
 
@@ -1032,11 +1063,12 @@ class VamanaEngine:
         """Just the indexed ids — the shards' id sidecars, no vector
         reads (used by the insert uniqueness check)."""
 
-        def emit(path):
+        def emit(shard_files):
             import pyarrow as pa
 
-            ids = read_ids(path, read_header(path)["num_vectors"])
-            yield pa.RecordBatch.from_arrays([pa.array(ids)], [id_col])
+            for _, path in shard_files:
+                ids = read_ids(path, read_header(path)["num_vectors"])
+                yield pa.RecordBatch.from_arrays([pa.array(ids)], [id_col])
 
         return self._shard_scan(
             spark, artifact_dir, emit, f"{_quote(id_col)} long"
@@ -1052,23 +1084,25 @@ class VamanaEngine:
         m = read_manifest(artifact_dir, spark)
         id_col, vec_col = m["id_col"], m["vec_col"]
 
-        def emit(path):
+        def emit(shard_files):
             import pyarrow as pa
 
-            # raw file read (not _load_shard): SQ8 indexes keep
-            # full-precision vectors in the v2 body; rebuilds must use
-            # those, not the dequantized search cache
-            g = read_diskann(path, mmap=True)
-            if g.n == 0:
-                return
-            ids = read_ids(path, g.n)
-            flat = np.asarray(g.vectors[: g.n]).reshape(-1)
-            offsets = np.arange(0, g.n * g.dim + 1, g.dim, dtype=np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids),
-                 pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat))],
-                [id_col, vec_col],
-            )
+            for _, path in shard_files:
+                # raw file read (not _load_shard): SQ8 indexes keep
+                # full-precision vectors in the v2 body; rebuilds must
+                # use those, not the dequantized search cache
+                g = read_diskann(path, mmap=True)
+                if g.n == 0:
+                    continue
+                ids = read_ids(path, g.n)
+                flat = np.asarray(g.vectors[: g.n]).reshape(-1)
+                offsets = np.arange(0, g.n * g.dim + 1, g.dim, dtype=np.int32)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(ids),
+                     pa.ListArray.from_arrays(pa.array(offsets),
+                                              pa.array(flat))],
+                    [id_col, vec_col],
+                )
 
         return self._shard_scan(
             spark, artifact_dir, emit,

@@ -524,21 +524,19 @@ def knn_join(
     if nlist == 0:
         nlist = auto_nlist(n)  # shared sqrt-N rule, same as ivf_nlist=0
     cap = min(max(50 * nlist, 10_000), 200_000)
-    sample = base_df.select(base_vec_col)
-    if n > cap:
-        modulus = max(1, n // cap)
-        sample = base_df.where(
-            F.pmod(F.abs(F.hash(F.col(base_id_col))), F.lit(modulus)) == 0
-        ).select(base_vec_col)
+    from ..index import calibration
+
     # round 16 (guide §1.4-adjacent measurement): `limit(cap)` ran the
     # incremental CollectLimit (a 1-partition probe job, then the full
     # scan) — 0.3s vs 0.07s for a plain collect at the bench shape. The
     # filtered sample is O(cap) rows BY CONSTRUCTION (modulus = n//cap
     # keeps the expectation in [cap, 2cap); n <= cap collects the whole
-    # base), so collect it all and slice: both spellings traverse
-    # partitions in the same order, so the first `cap` rows — and the
-    # trained centroids — are identical.
-    train = np_stack_vectors(sample.toPandas()[base_vec_col][:cap])
+    # base), so collect it all and slice. The same collect carries the
+    # held-out calibration sample of an nprobe=0 join.
+    train, qids, qmat = calibration.collect_train_and_sample(
+        base, base_id_col, base_vec_col, n, cap,
+        int(calibration_queries) if nprobe == 0 else 0,
+    )
     centroids = _kmeans(train, min(nlist, max(1, len(train))))
     nlist_eff, dim = centroids.shape[0], int(centroids.shape[1])
     measured = False
@@ -561,11 +559,10 @@ def knn_join(
             # build-time pass a CREATE INDEX runs — so clustered data
             # gets the small probe count it actually needs instead of
             # the static uniform-worst-case rule (see docstring)
-            from ..index import calibration
-
             cal = calibration.measure_probe_calibration(
                 base, base_id_col, base_vec_col, centroids, metric, n,
                 calibration.IVF_TARGET, n_queries=int(calibration_queries),
+                sample=(qids, qmat),
             )
             if target_recall is not None:
                 nprobe = calibration.nprobe_for_target(

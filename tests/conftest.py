@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -90,3 +91,22 @@ def garble_ivf_cells(artifact_dir, queries, nprobe, metric="l2", probed=False):
                 with open(os.path.join(cells[c], f), "wb") as fh:
                     fh.write(b"not a parquet file")
     return hit
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def spark_jobs(spark, fn) -> list:
+    """The stage names of each Spark job `fn` runs (one list per job),
+    counted through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"job-floor-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "job floor")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    return [[st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+            for j in st.getJobIdsForGroup(group)]

@@ -6,7 +6,6 @@ filesystem, and falls back to a pruned Spark scan when only Spark can
 read it; both must return what that numpy reference returns."""
 
 import copy
-import itertools
 import os
 
 import numpy as np
@@ -15,6 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import duckdb_ann_spark.index.ivf as ivf
+from conftest import spark_jobs
 from duckdb_ann_spark.functions.distance import np_index_distances
 from duckdb_ann_spark.index import (
     Catalog,
@@ -161,24 +161,6 @@ def test_probe_scan_matches_numpy_reference(spark, cat, monkeypatch, case):
             assert any(r[2] is None for r in got if r[0] == 2)
 
 
-_GROUPS = itertools.count()
-
-
-def _jobs(spark, fn) -> list:
-    """The stage names of each Spark job `fn` runs."""
-    sc = spark.sparkContext
-    group = f"job-floor-{next(_GROUPS)}"
-    sc.setJobGroup(group, "job floor")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    st = sc.statusTracker()
-    return [[st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
-            for j in st.getJobIdsForGroup(group)]
-
-
 def test_index_scan_runs_one_spark_job(spark, cat):
     """A partial-probe IVF scan over more than 32 cells (Spark's
     parallel partition-discovery threshold) and a routed DiskANN scan on
@@ -194,6 +176,6 @@ def test_index_scan_runs_one_spark_job(spark, cat):
                  shard_by="cells", catalog=cat)
     q = _queries(12).tolist()
     for name in ("ivf40", "routed"):
-        jobs = _jobs(spark, lambda: index_scan(spark, name, q, 10,
+        jobs = spark_jobs(spark, lambda: index_scan(spark, name, q, 10,
                                                catalog=cat).collect())
         assert len(jobs) == 1, (name, jobs)
