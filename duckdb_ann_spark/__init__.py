@@ -23,6 +23,12 @@ import os as _os
 for _var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     _os.environ.setdefault(_var, "2")
 
+# inside a PySpark Python worker: stop every later task of this worker
+# from re-reading pyspark.zip's directory (a no-op on the driver)
+from ._worker import install as _install_zip_guard  # noqa: E402
+
+_install_zip_guard()
+
 from .session import get_spark  # noqa: E402
 from .functions.distance import (  # noqa: E402
     array_cosine_similarity,

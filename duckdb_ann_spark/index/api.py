@@ -166,6 +166,15 @@ def _load(name: str, table_name: str, catalog: Optional[Catalog]):
     return cat, manifest, d, impl
 
 
+def _indexed_ids(spark: SparkSession, impl, d: str, id_col: str) -> DataFrame:
+    """The ids the index holds — the engine's id-only read when it has
+    one (graph sidecars, IVF's pruned parquet scan), else Flat's
+    stored vectors."""
+    if hasattr(impl, "ids"):
+        return impl.ids(spark, d, id_col)
+    return impl.vectors(spark, d).select(id_col)
+
+
 def _deleted_ids(spark: SparkSession, d: str, manifest: dict) -> Optional[DataFrame]:
     if manifest.get("num_deleted", 0) <= 0:
         return None
@@ -706,13 +715,30 @@ def delete_from_index(
     catalog: Optional[Catalog] = None,
 ) -> dict:
     """Tombstone ids (`Delete`, `src/diskann_index.cpp:363-385`): no
-    graph surgery, just an append to the delete set."""
+    graph surgery, just an append to the delete set. Like the
+    reference, only ids the index holds are tombstoned — an id it
+    never held is ignored, so it stays insertable — and `num_deleted`
+    counts distinct tombstoned ids."""
     cat, manifest, d, impl = _load(name, "", catalog)
     id_col = manifest["id_col"]
+    if int(manifest["num_vectors"]) == 0:
+        return manifest  # holds nothing to tombstone
     if isinstance(ids, DataFrame):
+        held = None
         del_df = ids.select(F.col(ids.columns[0]).cast("long").alias(id_col))
     else:
-        del_df = local_df(spark, [(int(i),) for i in ids], f"{_quote(id_col)} long")
+        ids = [int(i) for i in ids]
+        # graph engines check a list against their id sidecars on the
+        # driver; everything else semi-joins the index's ids below
+        held = impl.held_ids(d, ids) if hasattr(impl, "held_ids") else None
+        if held is not None and held.size == 0:
+            return manifest
+        del_df = local_df(spark, [(int(i),) for i in
+                                  (ids if held is None else held)],
+                          f"{_quote(id_col)} long")
+    if held is None:
+        del_df = del_df.join(_indexed_ids(spark, impl, d, id_col),
+                             on=id_col, how="left_semi")
     del_df.write.mode("append").parquet(os.path.join(d, DELETED_DIR))
     _refresh(spark, d)
     n_deleted = (
@@ -1083,10 +1109,8 @@ def insert_into_index(
     if int(manifest["num_vectors"]) == 0:
         # nothing to collide with
         existing = None
-    elif hasattr(impl, "ids"):
-        existing = impl.ids(spark, d, id_col)
     else:
-        existing = impl.vectors(spark, d).select(id_col)
+        existing = _indexed_ids(spark, impl, d, id_col)
     new_ids = src.select(id_col)
     deleted = _deleted_ids(spark, d, manifest)
     if deleted is not None:

@@ -46,6 +46,12 @@ def get_spark(app_name: str = "duckdb_ann_spark", cpus: int | None = None) -> Sp
         # carriage-return escape spam that pollutes captured bench output
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # off: PySpark otherwise wraps every functions.* call in a call-site
+        # capture (~2 extra py4j round trips each, and an IPython import on
+        # the first). pyspark caches the value on its first read, so it
+        # must be set here, before any plan is built. DataFrame errors then
+        # carry no Python call-site context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -112,6 +112,41 @@ def test_delete_then_reinsert_says_vacuum(spark, cat):
     drop_index(name, cat)
 
 
+@pytest.mark.parametrize("engine,opts,sidecar_cap", [
+    ("diskann", {}, None),
+    ("diskann", {}, 0),  # sidecars past the driver-read cap: the Spark check
+    ("faiss", {"type": "IVFFlat", "ivf_nlist": 4, "nprobe": 4}, None),
+    ("faiss", {}, None),
+])
+def test_delete_of_never_indexed_ids_tombstones_nothing(
+        spark, cat, monkeypatch, engine, opts, sidecar_cap):
+    """Phantom deletes: like the reference (`src/diskann_index.cpp:363-385`)
+    only ids the index holds are tombstoned, so deleting ids it never
+    held counts 0 and leaves them insertable, and `num_deleted` counts
+    distinct tombstoned ids — list and DataFrame input alike."""
+    from duckdb_ann_spark.index import vamana
+
+    if sidecar_cap is not None:
+        monkeypatch.setattr(vamana, "HELD_IDS_MAX_BYTES", sidecar_cap)
+    name = f"rob_phantom_{engine}_{opts.get('type', 'flat')}"
+    drop_index(name, cat)
+    create_index(_vecs(spark, range(200)), "vec_id", "embedding", name,
+                 engine=engine, table_name="t", catalog=cat, **opts)
+    m = delete_from_index(spark, name, list(range(1000, 1150)), catalog=cat)
+    assert int(m.get("num_deleted", 0)) == 0
+    m = insert_into_index(spark, name, _vecs(spark, [1000]), catalog=cat)
+    assert m["num_vectors"] == 201
+    assert delete_from_index(spark, name, [5, 5, 2000],
+                             catalog=cat)["num_deleted"] == 1
+    assert delete_from_index(spark, name, [5], catalog=cat)["num_deleted"] == 1
+    more = spark.createDataFrame([(7,), (3000,), (1000,)], "x long")
+    assert delete_from_index(spark, name, more, catalog=cat)["num_deleted"] == 3
+    got = {r["vec_id"] for r in index_scan(
+        spark, name, [[5.0, 6.0, 7.0, 8.0]], k=50, catalog=cat).collect()}
+    assert got and not got & {5, 7, 1000}
+    drop_index(name, cat)
+
+
 @pytest.mark.parametrize("opts", [{}, {"type": "IVFFlat", "ivf_nlist": 4}])
 def test_hostile_column_names(spark, cat, opts):
     """id/vec column names with dashes and spaces survive the index
