@@ -22,9 +22,11 @@ The guard acts only inside a PySpark Python worker, recognised by the
 `PYTHON_WORKER_FACTORY_SECRET` variable Spark's `PythonWorkerFactory`
 gives its workers; the driver never has it. The package calls
 `install()` on import, so any task whose function imports the package
-installs it for every later task its (reused) worker runs. The first
-call after install still re-reads each archive once: an importer has
-no remembered key until then.
+installs it for every later task its (reused) worker runs. `install()`
+also records the current key of every importer already in
+`sys.path_importer_cache`: the task that installs the guard re-read
+them all at its start (or created them since), so only a fresh
+worker's first task pays the re-read.
 """
 
 from __future__ import annotations
@@ -50,8 +52,7 @@ def install() -> bool:
 
     def invalidate_caches(self):
         try:
-            st = os.stat(self.archive)
-            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+            key = _archive_key(self.archive)
             if self.__dict__.get(_KEY) == key:
                 return
         except Exception:  # the guard must never fail an import
@@ -60,9 +61,20 @@ def install() -> bool:
         original(self)
         self.__dict__[_KEY] = key
 
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, zipimport.zipimporter):
+            try:
+                importer.__dict__[_KEY] = _archive_key(importer.archive)
+            except Exception:  # unrecorded: the next call re-reads it
+                pass
     setattr(invalidate_caches, _MARK, True)
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     return True
+
+
+def _archive_key(path: str) -> tuple:
+    st = os.stat(path)
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
 def active() -> bool:

@@ -723,20 +723,21 @@ def delete_from_index(
     id_col = manifest["id_col"]
     if int(manifest["num_vectors"]) == 0:
         return manifest  # holds nothing to tombstone
-    if isinstance(ids, DataFrame):
-        held = None
-        del_df = ids.select(F.col(ids.columns[0]).cast("long").alias(id_col))
-    else:
-        ids = [int(i) for i in ids]
+    if not isinstance(ids, DataFrame) and hasattr(impl, "held_ids"):
         # graph engines check a list against their id sidecars on the
-        # driver; everything else semi-joins the index's ids below
-        held = impl.held_ids(d, ids) if hasattr(impl, "held_ids") else None
-        if held is not None and held.size == 0:
+        # driver
+        held = impl.held_ids(d, [int(i) for i in ids])
+        if held.size == 0:
             return manifest
-        del_df = local_df(spark, [(int(i),) for i in
-                                  (ids if held is None else held)],
+        del_df = local_df(spark, [(int(i),) for i in held],
                           f"{_quote(id_col)} long")
-    if held is None:
+    else:
+        if isinstance(ids, DataFrame):
+            del_df = ids.select(
+                F.col(ids.columns[0]).cast("long").alias(id_col))
+        else:
+            del_df = local_df(spark, [(int(i),) for i in ids],
+                              f"{_quote(id_col)} long")
         del_df = del_df.join(_indexed_ids(spark, impl, d, id_col),
                              on=id_col, how="left_semi")
     del_df.write.mode("append").parquet(os.path.join(d, DELETED_DIR))

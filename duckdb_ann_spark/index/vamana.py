@@ -84,9 +84,6 @@ ROUTE_DIR = "route"
 # most cells one packed build partition of a routed build holds (see
 # `_run_cell_build`)
 CELL_PACK = 8
-# largest id-sidecar total (bytes, 8 per indexed row) a list-input
-# delete reads on the driver (`held_ids`): 8M ids
-HELD_IDS_MAX_BYTES = 64 << 20
 
 # per-process (driver or python worker) shard cache, LRU-bounded two
 # ways (round 8): by RESIDENT BYTES (the real constraint — SQ8 shards
@@ -1079,16 +1076,14 @@ class VamanaEngine:
 
     def held_ids(self, artifact_dir: str, ids: Sequence[int]):
         """The sorted distinct subset of `ids` the index holds, read on
-        the driver from the shards' id sidecars (no Spark job; the
-        index root is mounted here as on every executor) — or None
-        when the sidecars total more than HELD_IDS_MAX_BYTES, where a
-        distributed check over `ids()` is the cheaper read."""
-        files = self._shard_files(artifact_dir)
-        shards = [(path, read_header(path)["num_vectors"]) for _, path in files]
-        if 8 * sum(n for _, n in shards) > HELD_IDS_MAX_BYTES:
-            return None
+        the driver from the shards' id sidecars one shard at a time (no
+        Spark job; the index root is mounted here, as `_shard_files`
+        already assumes for every search)."""
         ids = np.unique(np.asarray(ids, dtype=np.int64))
-        held = [ids[np.isin(ids, read_ids(path, n))] for path, n in shards]
+        held = [
+            ids[np.isin(ids, read_ids(path, read_header(path)["num_vectors"]))]
+            for _, path in self._shard_files(artifact_dir)
+        ]
         return np.unique(np.concatenate(held)) if held else ids[:0]
 
     def vectors(self, spark: SparkSession, artifact_dir: str) -> DataFrame:

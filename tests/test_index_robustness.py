@@ -112,22 +112,17 @@ def test_delete_then_reinsert_says_vacuum(spark, cat):
     drop_index(name, cat)
 
 
-@pytest.mark.parametrize("engine,opts,sidecar_cap", [
-    ("diskann", {}, None),
-    ("diskann", {}, 0),  # sidecars past the driver-read cap: the Spark check
-    ("faiss", {"type": "IVFFlat", "ivf_nlist": 4, "nprobe": 4}, None),
-    ("faiss", {}, None),
+@pytest.mark.parametrize("engine,opts", [
+    ("diskann", {}),
+    ("faiss", {"type": "IVFFlat", "ivf_nlist": 4, "nprobe": 4}),
+    ("faiss", {}),
 ])
 def test_delete_of_never_indexed_ids_tombstones_nothing(
-        spark, cat, monkeypatch, engine, opts, sidecar_cap):
+        spark, cat, engine, opts):
     """Phantom deletes: like the reference (`src/diskann_index.cpp:363-385`)
     only ids the index holds are tombstoned, so deleting ids it never
     held counts 0 and leaves them insertable, and `num_deleted` counts
     distinct tombstoned ids — list and DataFrame input alike."""
-    from duckdb_ann_spark.index import vamana
-
-    if sidecar_cap is not None:
-        monkeypatch.setattr(vamana, "HELD_IDS_MAX_BYTES", sidecar_cap)
     name = f"rob_phantom_{engine}_{opts.get('type', 'flat')}"
     drop_index(name, cat)
     create_index(_vecs(spark, range(200)), "vec_id", "embedding", name,
