@@ -148,8 +148,18 @@ def cell_slices(ids: np.ndarray, mat: np.ndarray, cells: np.ndarray):
         yield c, ids[rows], mat[rows]
 
 
+def live_mask(ids: np.ndarray, deleted: np.ndarray) -> np.ndarray:
+    """True where `ids` is not in the sorted tombstone array `deleted`
+    (binary search: O(|ids| log |deleted|), no re-sort of `deleted`)."""
+    if len(deleted) == 0:
+        return np.ones(len(ids), dtype=bool)
+    pos = np.minimum(np.searchsorted(deleted, ids), len(deleted) - 1)
+    return deleted[pos] != ids
+
+
 def score_cells(cells, qmat: np.ndarray, grouped_q: np.ndarray,
-                bounds: np.ndarray, metric: str, k: int):
+                bounds: np.ndarray, metric: str, k: int,
+                deleted: np.ndarray | None = None):
     """The one cell-probe scorer: each (cell, ids, vectors) of `cells`
     against the queries probing it (CSR `grouped_q`/`bounds` into
     `qmat`) → (qx — rows of qmat, ids, f64 distances), or None when no
@@ -162,7 +172,12 @@ def score_cells(cells, qmat: np.ndarray, grouped_q: np.ndarray,
     and the cross-cell merge keeps per query the first k by (d, id)
     plus everything tied with the k-th (the `_hits_batch` discipline):
     a superset of every global (d, id) top-k, so a final (d, id) cut is
-    exact over the probed cells and only ~k rows per query survive."""
+    exact over the probed cells and only ~k rows per query survive.
+
+    `deleted` (sorted int64 tombstones): their columns are dropped
+    after the GEMM, before the per-cell cut — the GEMM keeps the cell's
+    full shape, so every live distance is bit-identical to a clean
+    scan's."""
     acc_q: list = []
     acc_b: list = []
     acc_d: list = []
@@ -172,6 +187,10 @@ def score_cells(cells, qmat: np.ndarray, grouped_q: np.ndarray,
             continue
         qidx_c = grouped_q[qs_:qe_]
         d = np_index_distances(metric, mat, qmat[qidx_c])
+        if deleted is not None:
+            live = live_mask(ids, deleted)
+            if not live.all():
+                ids, d = ids[live], d[:, live]
         nq_c, nb = d.shape
         if nb > k:
             kth = np.partition(d, k - 1, axis=1)[:, k - 1]

@@ -11,22 +11,28 @@ Validation messages and semantics follow the reference:
 * 'Index with name "x" already exists!' — `src/diskann_index.cpp:268`.
 * "ANN index 'x' not found on table 'y'" — `src/ann_search.cpp:147`.
 * Dimension-mismatched queries return empty — `src/diskann_index.cpp:554-556`.
-* Deleted rows: search over-requests `k + |deleted|`, filters, then
-  trims to k — `src/diskann_index.cpp:552-595`.
+* Deleted rows: the tombstone set (`deleted/`, read once per call by
+  `_tombstones`) rides into every engine's search tasks, which drop
+  tombstoned ids before each query's final top-k cut, as the
+  reference's search filters its in-index delete set —
+  `src/diskann_index.cpp:552-595`.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..local import local_df
 from .catalog import Catalog
-from .engines import get_engine
+from .engines import drop_tombstoned, get_engine
 from .params import parse_params
 from . import flat  # noqa: F401  (registers the Flat engine)
 from . import ivf  # noqa: F401  (registers the IVFFlat engine)
@@ -35,12 +41,6 @@ from ..functions.text import quote_ident as _quote
 
 DISTANCE_COL = "_distance"
 DELETED_DIR = "deleted"
-# tombstone over-request bound (round 8): first-pass search depth is
-# k + min(|deleted|, max(2k, OVERREQUEST_CAP)) instead of the
-# reference's unbounded k + |deleted|; see index_scan for the
-# exactness-preserving retry
-OVERREQUEST_CAP = 128
-
 
 
 def _refresh(spark: SparkSession, artifact_dir: str) -> None:
@@ -175,17 +175,26 @@ def _indexed_ids(spark: SparkSession, impl, d: str, id_col: str) -> DataFrame:
     return impl.vectors(spark, d).select(id_col)
 
 
-def _deleted_ids(spark: SparkSession, d: str, manifest: dict) -> Optional[DataFrame]:
-    if manifest.get("num_deleted", 0) <= 0:
-        return None
+def _id_frame(spark: SparkSession, id_col: str, ids: np.ndarray) -> DataFrame:
+    """A driver-local one-column DataFrame of int64 ids."""
+    return local_df(spark, pd.DataFrame({id_col: ids}),
+                    T.StructType([T.StructField(id_col, T.LongType())]))
+
+
+def _tombstones(d: str) -> np.ndarray:
+    """The index's tombstoned ids, sorted and distinct, read on the
+    driver from every parquet file under `deleted/` (one per
+    `delete_from_index` call; older artifacts hold Spark-written part
+    files of the same one-column shape). Names starting with "." or
+    "_" are not data, as for Spark."""
+    import pyarrow.dataset as ds
+
     path = os.path.join(d, DELETED_DIR)
-    if not os.path.exists(path):
-        return None
-    id_col = manifest["id_col"]
-    return (
-        spark.read.schema(f"{_quote(id_col)} long").parquet(path)
-        .select(id_col).distinct()
-    )
+    if os.path.isdir(path):
+        t = ds.dataset(path, format="parquet").to_table()
+        if t.num_columns:  # else an empty directory
+            return np.unique(np.asarray(t.column(0), dtype=np.int64))
+    return np.empty(0, np.int64)
 
 
 def index_scan(
@@ -232,89 +241,8 @@ def index_scan(
         schema = f"query_idx int, {_quote(id_col)} long, {DISTANCE_COL} double"
         return spark.createDataFrame([], schema)
 
-    return _scan_with_manifest(spark, impl, manifest, d, qs, k,
-                               search_complexity)
-
-
-def _scan_with_manifest(
-    spark: SparkSession, impl, manifest: dict, d: str, qs: list, k: int,
-    search_complexity: Optional[int],
-) -> DataFrame:
-    """The tombstone-aware scan body shared by `index_scan` and the
-    recalibration end-recall measurement (round 11 — the measurement
-    must ride the REAL user path, including the bounded over-request
-    and anti-join, so tombstoned hits can neither starve nor inflate
-    it; the only difference is the caller-supplied manifest copy
-    carrying a per-call route_nprobe)."""
-    id_col = manifest["id_col"]
-    deleted = _deleted_ids(spark, d, manifest)
-    # over-request so tombstones can't starve the result
-    # (src/diskann_index.cpp:558-592 requests k + |deleted|). Round 8:
-    # the reference's k + |deleted| is UNBOUNDED — after a million
-    # deletes every search would run at depth 1M+k (graph search cost
-    # is ~linear in the request depth), which does not survive scale.
-    # Instead request k + min(|deleted|, max(2k, OVERREQUEST_CAP)) and
-    # RETRY at full k + |deleted| only if some query is left with fewer
-    # than its ACHIEVABLE result size (min(k, surviving rows) — see
-    # `target` below). Exactness is preserved: when a query holds >= k
-    # survivors inside its top-(k+over) list, those ARE its true top-k
-    # survivors — any survivor ranked deeper than k+over sits below all
-    # k+over rows above it, of which at least k survive. Only starved
-    # queries (tombstones crowding the whole neighborhood) need the
-    # deep pass; heavy-delete indexes should vacuum anyway
-    # (`needs_vacuum`).
-    nd = int(manifest.get("num_deleted", 0)) if deleted is not None else 0
-    if nd == 0:
-        return impl.search(spark, manifest, d, qs, k, search_complexity)
-    over = min(nd, max(2 * k, OVERREQUEST_CAP))
-    hits = impl.search(spark, manifest, d, qs, k + over, search_complexity)
-    filtered = hits.join(F.broadcast(deleted), on=id_col, how="anti")
-    n_total = int(manifest["num_vectors"])
-    # each query's ACHIEVABLE result size: k, or every survivor when
-    # fewer than k remain. Gating the retry on `target` (not k) keeps
-    # two properties the round-8 review demanded together: a bounded
-    # pass that already found every reachable survivor never re-searches
-    # (no futile deep pass on every call until vacuum), and a bounded
-    # pass that MISSED recoverable survivors still retries — even when
-    # fewer than k exist (returning the best available rows matters).
-    # KNOWN COST EDGE (documented round 9, judge watch item): `target`
-    # is derived from the WHOLE index's survivor count, but on a
-    # shard_by='cells' index the engine only searches the probed-shard
-    # subset — a query whose probed shards genuinely hold fewer than
-    # `target` survivors (tombstones crowding one spatial region)
-    # re-triggers the deep pass on EVERY call until vacuum, and the
-    # deep pass cannot help because it deepens the same probed subset.
-    # This is a cost-only issue (results stay correct: every reachable
-    # survivor is returned), it needs a heavily-deleted spatial region
-    # AND a query inside it, and the engine already pushes such indexes
-    # to `vacuum_index` via `needs_vacuum`. Gating on per-shard survivor
-    # counts would need a probed-subset population map the driver
-    # doesn't have — not worth a per-search shard-census job.
-    target = min(k, max(0, n_total - nd))
-    if over < nd and k + over < n_total and target > 0:
-        # bounded first pass: check for starvation (any query with <
-        # target survivors — including queries whose every hit was
-        # tombstoned, which vanish from the groupBy). localCheckpoint
-        # keeps the check from re-running the search when the result is
-        # consumed.
-        filtered = filtered.localCheckpoint()
-        ok = (
-            filtered.groupBy("query_idx").count()
-            .where(F.col("count") >= target).count()
-        )
-        if ok < len(qs):
-            hits = impl.search(
-                spark, manifest, d, qs, k + nd, search_complexity
-            )
-            filtered = hits.join(F.broadcast(deleted), on=id_col, how="anti")
-    w = Window.partitionBy("query_idx").orderBy(
-        F.col(DISTANCE_COL).asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        filtered.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return impl.search(spark, manifest, d, qs, k, search_complexity,
+                       deleted=_tombstones(d))
 
 
 def require_integral_qid(df: DataFrame, query_id_col: str, surface: str) -> None:
@@ -419,8 +347,6 @@ def _apply_target_recall(
 def _as_queries(queries) -> list:
     """Normalize a single vector, list of vectors, or numpy matrix to
     list-of-lists."""
-    import numpy as np
-
     if isinstance(queries, np.ndarray):
         return queries.reshape(1, -1).tolist() if queries.ndim == 1 else queries.tolist()
     if len(queries) and isinstance(queries[0], (int, float)):
@@ -495,7 +421,8 @@ def index_search_table(
     dropped (the reference empties the whole batch on any mismatch,
     `src/diskann_index.cpp:554-556`; per-row filtering is the
     DataFrame-native reading of that contract). Tombstoned ids never
-    appear (over-request + anti-join, like `index_scan`).
+    appear, and every query gets the rows `index_scan` gives it: the
+    search tasks drop them before each query's top-k cut.
     `method='exact'` switches the IVF/Flat scoring to the bit-exact JVM
     fold (oracle discipline); graph engines ignore it (their distances
     come from the same float32 kernel either way).
@@ -523,71 +450,44 @@ def index_search_table(
             query_id_col, f"_q_{query_id_col}"
         )
         query_id_col = f"_q_{query_id_col}"
-    deleted = _deleted_ids(spark, d, manifest)
-    # bounded tombstone over-request (round 8, same bound as
-    # index_scan's first pass). No starvation retry here: the query
-    # side is an unbounded DataFrame, so the check would itself cost a
-    # full pass — instead the contract is documented: a query whose
-    # ENTIRE top-(k+over) neighborhood was tombstoned may return fewer
-    # than k rows until `vacuum_index` (which heavy-delete indexes are
-    # told to run — `needs_vacuum`). Tombstones are still never
-    # returned.
-    nd = int(manifest.get("num_deleted", 0)) if deleted is not None else 0
-    eff_k = k + min(nd, max(2 * k, OVERREQUEST_CAP)) if nd else k
 
     if hasattr(impl, "search_df"):
-        hits = impl.search_df(
+        return impl.search_df(
             spark, manifest, d, queries_df, query_id_col, query_vec_col,
-            eff_k, search_complexity,
+            k, search_complexity, deleted=_tombstones(d),
         )
-    else:
-        from .flat import FlatEngine
-        from .ivf import IvfFlatEngine
+    from .flat import FlatEngine
+    from .ivf import IvfFlatEngine
 
-        if isinstance(impl, IvfFlatEngine):
-            # same per-row dim-mismatch drop the other branches apply —
-            # without it a ragged query vector reaches np.vstack inside
-            # the cell-assignment kernel and fails the whole job
-            qn = queries_df.where(
-                F.size(query_vec_col) == int(manifest["dim"])
-            )
-            # index_knn_join anti-joins tombstones itself, before
-            # scoring — no over-request needed on this path
-            return index_knn_join(
-                spark, name, qn, query_id_col, query_vec_col, k,
-                nprobe=int(search_complexity or 0), catalog=catalog,
-                method=method,
-            )
-        if isinstance(impl, FlatEngine):
-            vecs = impl.vectors(spark, d)
-            if deleted is not None:
-                vecs = vecs.join(F.broadcast(deleted), on=id_col, how="anti")
-            qn = queries_df.where(
-                F.size(query_vec_col) == int(manifest["dim"])
-            )
-            # flat = exact scan: full-probe cell join (auto cells keep
-            # the GEMMs task-sized; every pair is still scored)
-            return knn_join(
-                qn, query_id_col, query_vec_col, vecs, id_col,
-                manifest["vec_col"], k=k, nlist=0, nprobe=1 << 30,
-                n_rows=int(manifest["num_vectors"]), method=method,
-            )
-        raise ValueError(
-            f"index_search_table: engine {manifest['engine']}/"
-            f"{manifest.get('subtype', '')} has no DataFrame-queries path"
+    if isinstance(impl, IvfFlatEngine):
+        # same per-row dim-mismatch drop the other branches apply —
+        # without it a ragged query vector reaches np.vstack inside
+        # the cell-assignment kernel and fails the whole job
+        qn = queries_df.where(
+            F.size(query_vec_col) == int(manifest["dim"])
         )
-
-    if deleted is not None:
-        hits = hits.join(F.broadcast(deleted), on=id_col, how="anti")
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col(DISTANCE_COL).asc_nulls_last(), F.col(id_col).asc()
+        # index_knn_join drops tombstones itself, before scoring
+        return index_knn_join(
+            spark, name, qn, query_id_col, query_vec_col, k,
+            nprobe=int(search_complexity or 0), catalog=catalog,
+            method=method,
         )
-        hits = (
-            hits.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
+    if isinstance(impl, FlatEngine):
+        vecs = drop_tombstoned(impl.vectors(spark, d), id_col, _tombstones(d))
+        qn = queries_df.where(
+            F.size(query_vec_col) == int(manifest["dim"])
         )
-    return hits
+        # flat = exact scan: full-probe cell join (auto cells keep
+        # the GEMMs task-sized; every pair is still scored)
+        return knn_join(
+            qn, query_id_col, query_vec_col, vecs, id_col,
+            manifest["vec_col"], k=k, nlist=0, nprobe=1 << 30,
+            n_rows=int(manifest["num_vectors"]), method=method,
+        )
+    raise ValueError(
+        f"index_search_table: engine {manifest['engine']}/"
+        f"{manifest.get('subtype', '')} has no DataFrame-queries path"
+    )
 
 
 def ann_search_batch_indexed(
@@ -715,38 +615,41 @@ def delete_from_index(
     catalog: Optional[Catalog] = None,
 ) -> dict:
     """Tombstone ids (`Delete`, `src/diskann_index.cpp:363-385`): no
-    graph surgery, just an append to the delete set. Like the
+    graph surgery, just one more file in the delete set. Like the
     reference, only ids the index holds are tombstoned — an id it
     never held is ignored, so it stays insertable — and `num_deleted`
     counts distinct tombstoned ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     cat, manifest, d, impl = _load(name, "", catalog)
     id_col = manifest["id_col"]
     if int(manifest["num_vectors"]) == 0:
         return manifest  # holds nothing to tombstone
-    if not isinstance(ids, DataFrame) and hasattr(impl, "held_ids"):
-        # graph engines check a list against their id sidecars on the
+    if isinstance(ids, DataFrame):
+        col = F.col(ids.columns[0]).cast("long")
+        ids = ids.select(col).where(col.isNotNull()).toArrow().column(0)
+    ids = np.asarray(ids, dtype=np.int64)
+    if hasattr(impl, "held_ids"):
+        # graph engines check ids against their id sidecars on the
         # driver
-        held = impl.held_ids(d, [int(i) for i in ids])
-        if held.size == 0:
-            return manifest
-        del_df = local_df(spark, [(int(i),) for i in held],
-                          f"{_quote(id_col)} long")
+        held = impl.held_ids(d, ids)
     else:
-        if isinstance(ids, DataFrame):
-            del_df = ids.select(
-                F.col(ids.columns[0]).cast("long").alias(id_col))
-        else:
-            del_df = local_df(spark, [(int(i),) for i in ids],
-                              f"{_quote(id_col)} long")
-        del_df = del_df.join(_indexed_ids(spark, impl, d, id_col),
-                             on=id_col, how="left_semi")
-    del_df.write.mode("append").parquet(os.path.join(d, DELETED_DIR))
-    _refresh(spark, d)
-    n_deleted = (
-        spark.read.schema(f"{_quote(id_col)} long")
-        .parquet(os.path.join(d, DELETED_DIR)).distinct().count()
-    )
-    return cat.update(name, num_deleted=int(n_deleted))
+        held = _id_frame(spark, id_col, ids).join(
+            _indexed_ids(spark, impl, d, id_col), on=id_col, how="left_semi"
+        ).toArrow().column(0).to_numpy()
+    dead = _tombstones(d)
+    new = np.setdiff1d(held, dead)
+    if new.size == 0:
+        return manifest
+    path = os.path.join(d, DELETED_DIR)
+    os.makedirs(path, exist_ok=True)
+    # written under a hidden name, then renamed: readers skip names
+    # starting with "." (`_tombstones`), so they never see a torn file
+    fname = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(pa.table({id_col: new}), os.path.join(path, "." + fname))
+    os.replace(os.path.join(path, "." + fname), os.path.join(path, fname))
+    return cat.update(name, num_deleted=int(dead.size + new.size))
 
 
 def vacuum_index(
@@ -764,10 +667,7 @@ def vacuum_index(
 
             shutil.rmtree(delpath)
         return cat.update(name, num_deleted=0)
-    vecs = impl.vectors(spark, d)
-    deleted = _deleted_ids(spark, d, manifest)
-    if deleted is not None:
-        vecs = vecs.join(F.broadcast(deleted), on=id_col, how="anti")
+    vecs = drop_tombstoned(impl.vectors(spark, d), id_col, _tombstones(d))
     params = parse_params(
         manifest["engine"],
         _params_kwargs(manifest),
@@ -778,9 +678,11 @@ def vacuum_index(
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     os.makedirs(tmp)
+    # only held ids are tombstoned, so the manifest counts the live
+    # rows exactly; the build's train collect fills the cache
+    n = int(manifest["num_vectors"]) - int(manifest.get("num_deleted", 0))
     vecs = vecs.persist()
-    n = vecs.count()
-    params._n_rows = int(n)
+    params._n_rows = n
     extra = impl.build(spark, vecs, id_col, manifest["vec_col"], tmp, params,
                        manifest["dim"])
     vecs.unpersist()
@@ -802,7 +704,7 @@ def vacuum_index(
         shutil.rmtree(delpath)
     _refresh(spark, d)
     # the rebuild IS the rebalance a routed append may have flagged
-    return cat.update(name, num_vectors=int(n), num_deleted=0,
+    return cat.update(name, num_vectors=n, num_deleted=0,
                       needs_vacuum=False, **(extra or {}))
 
 
@@ -832,9 +734,9 @@ def recalibrate_index(
     target_recall all resolve through the manifest).
 
     Tombstone discipline: the query sample and the exact end-recall
-    truth are drawn from LIVE rows only (tombstoned ids anti-joined
-    out of the sample and masked out of the per-shard truth), and the
-    end measurement runs through the real tombstone-aware scan path on
+    truth are drawn from LIVE rows only (tombstoned ids dropped from
+    the sample and masked out of the per-shard truth), and the end
+    measurement runs through the real tombstone-aware search on
     the target_recall serving beam, so deleted near-neighbors can
     neither inflate nor starve it. The in-shard L curve measures the
     graph AS BUILT (tombstones still occupy the beam until vacuum) —
@@ -846,8 +748,6 @@ def recalibrate_index(
     pinned-probe builds (a measurement no search would use — the same
     dead-weight rule the builds apply), hash/single-shard graph
     layouts (no routing/L curves to refresh)."""
-    import numpy as np
-
     from . import calibration
     from .calibration import DEFAULT_QUERIES, IVF_TARGET
     from .ivf import IvfFlatEngine
@@ -866,10 +766,10 @@ def recalibrate_index(
         raise ValueError(
             f"index '{name}' holds {n_live} live rows — nothing to measure"
         )
-    src = impl.vectors(spark, d).select(id_col, vec_col)
-    deleted = _deleted_ids(spark, d, manifest)
-    if deleted is not None:
-        src = src.join(F.broadcast(deleted), on=id_col, how="anti")
+    dead = _tombstones(d)
+    src = drop_tombstoned(
+        impl.vectors(spark, d).select(id_col, vec_col), id_col, dead
+    )
 
     def _anchor(cal: Optional[dict]) -> Optional[dict]:
         # staleness counters restart at the CURRENT index state: the
@@ -920,10 +820,7 @@ def recalibrate_index(
         plan = calibration.graph_plan(
             qids, qmat, route, metric, n_live, base_l, nq,
             existing={s for s, _ in shard_files},
-            deleted=(
-                None if deleted is None
-                else deleted.toPandas()[id_col].to_numpy(dtype=np.int64)
-            ),
+            deleted=dead if len(dead) else None,
         )
         hits = l_counts = None
         if plan is not None:
@@ -938,9 +835,9 @@ def recalibrate_index(
                     "params": {**manifest["params"],
                                "route_nprobe": int(rnp)},
                     "slab_beam": True}
-            res = _scan_with_manifest(
-                spark, impl, mani, d,
-                [[float(x) for x in q] for q in qm], kk, int(L),
+            res = impl.search(
+                spark, mani, d, [[float(x) for x in q] for q in qm], kk,
+                int(L), deleted=dead,
             ).collect()
             return calibration.shape_search_results(res, len(qm), id_col)
 
@@ -1017,20 +914,16 @@ def merge_indexes(
         return m_dst  # both empty: nothing to rebuild
     frames = []
     if n_dst:
-        a = impl.vectors(spark, d_dst)
-        da = _deleted_ids(spark, d_dst, m_dst)
-        if da is not None:
-            a = a.join(F.broadcast(da), on=id_col, how="anti")
-        frames.append(a)
+        frames.append(drop_tombstoned(
+            impl.vectors(spark, d_dst), id_col, _tombstones(d_dst)
+        ))
     if n_src:
-        # anti-join the source's tombstones BEFORE renaming to the
+        # drop the source's tombstones BEFORE renaming to the
         # destination's column names: after toDF the source id column no
-        # longer exists, and a src index with a different id_col +
-        # tombstones would fail the join
-        b = impl_src.vectors(spark, d_src)
-        db = _deleted_ids(spark, d_src, m_src)
-        if db is not None:
-            b = b.join(F.broadcast(db), on=m_src["id_col"], how="anti")
+        # longer exists under the source's name
+        b = drop_tombstoned(
+            impl_src.vectors(spark, d_src), m_src["id_col"], _tombstones(d_src)
+        )
         frames.append(b.toDF(id_col, m_dst["vec_col"]))
     union = frames[0] if len(frames) == 1 else frames[0].unionByName(frames[1])
     params = parse_params(m_dst["engine"], _params_kwargs(m_dst))
@@ -1113,13 +1006,15 @@ def insert_into_index(
     else:
         existing = _indexed_ids(spark, impl, d, id_col)
     new_ids = src.select(id_col)
-    deleted = _deleted_ids(spark, d, manifest)
-    if deleted is not None:
+    deleted = _tombstones(d)
+    if len(deleted):
         # a tombstoned id still owns a label in the graph/cells; clearing
         # the tombstone for a re-insert would resurface the STALE vector
         # alongside the new one, so re-insert requires a vacuum first —
         # say so, instead of the misleading 'already exists'
-        dead = new_ids.join(deleted, on=id_col).count()
+        dead = new_ids.join(
+            _id_frame(spark, id_col, deleted), on=id_col
+        ).count()
         if dead:
             raise ValueError(
                 f"{dead} ids were deleted from index '{name}'; run "

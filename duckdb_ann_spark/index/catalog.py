@@ -9,7 +9,8 @@ filesystem catalog — each index is a directory
         vectors/             (Flat/IVF parquet: id + vec, IVF partitioned
                               by cell; Vamana keeps vectors inside its
                               graph/ shard files instead)
-        deleted/             (parquet: tombstoned ids, optional)
+        deleted/             (tombstoned ids, optional: one parquet
+                              file per delete call, read on the driver)
         graph/               (engine-specific: .diskann shards, centroids)
 
 `manifest.json` is the committed state: readers treat a directory without

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import quote_ident as _quote
 from ..operators.batch import search_batch_ids
-from .engines import register_engine
+from .engines import drop_tombstoned, register_engine
 
 VECTORS_DIR = "vectors"
 
@@ -75,10 +75,11 @@ class FlatEngine:
         queries: Sequence[Sequence[float]],
         k: int,
         search_complexity: int | None = None,
+        deleted=None,
     ) -> DataFrame:
-        vecs = self.vectors(spark, artifact_dir)
         return search_batch_ids(
-            vecs,
+            drop_tombstoned(self.vectors(spark, artifact_dir),
+                            manifest["id_col"], deleted),
             manifest["id_col"],
             manifest["vec_col"],
             queries,

@@ -66,7 +66,7 @@ from ..functions.partitioning import (
 )
 from ..local import local_df
 from .catalog import local_fs_path
-from .engines import register_engine
+from .engines import drop_tombstoned, register_engine
 from ..functions.text import quote_ident as _quote
 
 VECTORS_DIR = "vectors"
@@ -1012,6 +1012,7 @@ class IvfFlatEngine:
         queries: Sequence[Sequence[float]],
         k: int,
         search_complexity: int | None = None,
+        deleted: np.ndarray | None = None,
     ) -> DataFrame:
         id_col, vec_col = manifest["id_col"], manifest["vec_col"]
         metric = manifest["params"]["metric"]
@@ -1041,9 +1042,11 @@ class IvfFlatEngine:
             # quantized provider serves)
             from ..operators.batch import search_batch_ids
 
+            vecs = drop_tombstoned(
+                self._vectors(spark, artifact_dir, manifest), id_col, deleted
+            )
             return search_batch_ids(
-                self._vectors(spark, artifact_dir, manifest), id_col,
-                vec_col, queries, k, metric, "exact",
+                vecs, id_col, vec_col, queries, k, metric, "exact",
             )
 
         # driver-side probe: nprobe nearest centroids per query (tiny
@@ -1062,17 +1065,18 @@ class IvfFlatEngine:
         root = local_fs_path(artifact_dir, spark)
         scan = self._search_spark if root is None else self._search_files
         return scan(spark, manifest, root or artifact_dir, qmat, grouped_q,
-                    bounds, probed, payload, k)
+                    bounds, probed, payload, k, deleted)
 
     def _search_files(self, spark, manifest, root, qmat, grouped_q, bounds,
-                      probed, payload, k) -> DataFrame:
+                      probed, payload, k, deleted) -> DataFrame:
         """The probe scan of a driver-local artifact, in ONE Spark job: a
         probe is a FILE selection. The driver lists the probed cells'
         files and LPT-packs the cells into bins by GEMM mass (|q_c| ×
         file bytes); each `spark.range` task reads its bin's cells with
         pyarrow, one cell resident at a time, and scores them; the
         driver cuts each query's top-k from the partial rows (bounded by
-        nq × bins × (k + ties), never by data size). No partition
+        nq × bins × (k + ties), never by data size). Tombstoned ids
+        ride the broadcast and are dropped by `score_cells`. No partition
         discovery job, exchange or window. One bin per core, not
         knn_join's two: a second wave of tasks cost more than the finer
         LPT balance bought (5k×d128, 70 cells, 50 queries, 4 cores:
@@ -1092,14 +1096,14 @@ class IvfFlatEngine:
         bins = [[c for c, b in zip(cells, bin_of) if b == i]
                 for i in range(n_bins)]
         bq = spark.sparkContext.broadcast(
-            (qmat, grouped_q, bounds, bins, files, payload)
+            (qmat, grouped_q, bounds, bins, files, payload, deleted)
         )
 
         def run(batches):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            qm, gq, bnd, bins_, files_, (col, dim, sq8_) = bq.value
+            qm, gq, bnd, bins_, files_, (col, dim, sq8_), dead = bq.value
 
             def read(c):
                 t = pa.concat_tables(
@@ -1113,7 +1117,7 @@ class IvfFlatEngine:
                 for bin_id in b.column(0).to_numpy().tolist():
                     hits = score_cells(
                         (read(c) for c in bins_[bin_id]), qm, gq, bnd,
-                        metric, k,
+                        metric, k, dead,
                     )
                     if hits is not None:
                         yield _hits_record_batch(hits, id_col)
@@ -1128,7 +1132,7 @@ class IvfFlatEngine:
                                      _hits_schema(id_col))
 
     def _search_spark(self, spark, manifest, artifact_dir, qmat, grouped_q,
-                      bounds, probed, payload, k) -> DataFrame:
+                      bounds, probed, payload, k, deleted) -> DataFrame:
         """The probe scan of an artifact only Spark can read (a DFS
         `fs.defaultFS`): a partition-pruned parquet scan, `score_cells`
         per Arrow batch, and a per-query window over the partial top-k
@@ -1136,10 +1140,12 @@ class IvfFlatEngine:
         id_col = manifest["id_col"]
         metric = manifest["params"]["metric"]
         col, dim, sq8 = payload
-        bq = spark.sparkContext.broadcast((qmat, grouped_q, bounds, sq8))
+        bq = spark.sparkContext.broadcast(
+            (qmat, grouped_q, bounds, sq8, deleted)
+        )
 
         def score(batches):
-            qm, gq, bnd, sq8_ = bq.value
+            qm, gq, bnd, sq8_, dead = bq.value
             for b in batches:
                 if b.num_rows == 0:
                     continue
@@ -1149,7 +1155,7 @@ class IvfFlatEngine:
                         _payload_mat(b.column(col), dim, sq8_),
                         b.column(CELL_COL).to_numpy(),
                     ),
-                    qm, gq, bnd, metric, k,
+                    qm, gq, bnd, metric, k, dead,
                 )
                 if hits is not None:
                     yield _hits_record_batch(hits, id_col)

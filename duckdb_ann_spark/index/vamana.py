@@ -39,8 +39,9 @@ Search: the searching process memmaps each shard with its id sidecar
 ids and keeps each query's top-k by (distance, id) — in-process, as the
 reference does (`src/diskann_index.cpp:552-595`), so a distributed
 search is one stage. Few-query scans are served driver-locally
-(BASELINE.json concedes Spark's win is batch, not point lookups); the
-tombstone over-request happens in `api.index_scan`.
+(BASELINE.json concedes Spark's win is batch, not point lookups).
+Tombstoned ids ride the same broadcast and are dropped inside the
+search task, before each query's final top-k cut (`_hits_batch`).
 """
 
 from __future__ import annotations
@@ -59,6 +60,7 @@ from ..functions.distance import (
     np_index_distances,
     np_stack_vectors,
 )
+from ..functions.partitioning import live_mask
 from .file_format import (
     read_diskann,
     read_header,
@@ -285,36 +287,28 @@ def _cut_topk(ids: np.ndarray, d: np.ndarray, k: int):
     return ids[o], d[o]
 
 
-def _hits_batch(qs: np.ndarray, qids: list, psets, shard_files,
-                k: int, search_complexity, qid_name: str, qid_np_dtype,
-                id_name: str, slab: bool = False):
-    """One Arrow RecordBatch (qid, id, _distance) holding the FINAL
-    top-k of every query in a task's slab: per probed shard, the
-    lock-step `search_batch`; labels map to ids through the shard's id
-    sidecar (loaded with the graph by `_load_shard`), and each query's
-    hits across its probe set are cut to k rows by (distance, id) with
-    NaN last (`_cut_topk`) — the row set and values a global
-    `ORDER BY _distance, id` window would keep. A query's whole probe
-    set is searched inside one task (every caller partitions queries,
-    never shards), so no join or window follows. `psets` is positional
-    (probe set per query row) or None for full fan-out. `slab`
-    (target_recall-driven calls only) swaps in the frontier-slab beam
-    where the graph offers one — measured-floor contract, not
-    byte-parity."""
-    import pyarrow as pa
+# a tombstoned search asks each probed shard for
+# k + min(|deleted|, max(2k, OVERREQUEST_CAP)) rows, not the reference's
+# k + |deleted| (`src/diskann_index.cpp:558-592`): search cost grows
+# with the depth, and a million deletes would make every search 1M deep
+OVERREQUEST_CAP = 128
 
-    nq = len(qids)
-    acc_i: list = [[] for _ in range(nq)]
-    acc_d: list = [[] for _ in range(nq)]
+
+def _probe_topk(qs: np.ndarray, rows: list, psets, shard_files, k: int,
+                search_complexity, slab: bool):
+    """Each query row of `rows` → its (ids, distances) over its probe
+    set, cut to k by (distance, id) with NaN last: per probed shard,
+    the lock-step `search_batch` of the rows probing it; labels map to
+    ids through the shard's id sidecar (loaded with the graph by
+    `_load_shard`). `slab` swaps in the frontier-slab beam (and the
+    exact scan of small shards) where the graph offers one."""
+    acc_i: dict = {qi: [] for qi in rows}
+    acc_d: dict = {qi: [] for qi in rows}
     for shard, path in shard_files:
-        if psets is None:
-            sub_qs = qs
-            keep = range(nq)
-        else:
-            keep = [i for i in range(nq) if shard in psets[i]]
-            if not keep:
-                continue
-            sub_qs = qs[keep]
+        keep = [qi for qi in rows if psets is None or shard in psets[qi]]
+        if not keep:
+            continue
+        sub_qs = qs if len(keep) == len(qs) else qs[keep]
         g, ids = _load_shard(path)
         if slab and _flat_scan_ok(g, k, search_complexity):
             found = _flat_search_batch(g, sub_qs, k)
@@ -333,22 +327,68 @@ def _hits_batch(qs: np.ndarray, qids: list, psets, shard_files,
             la, da = zip(*hits)
             acc_i[qi].append(ids[np.asarray(la, dtype=np.int64)])
             acc_d[qi].append(np.asarray(da, dtype=np.float64))
-    out_q, out_i, out_d = [], [], []
-    for qi in range(nq):
-        if not acc_d[qi]:
-            continue
-        rid, d = _cut_topk(
-            np.concatenate(acc_i[qi]), np.concatenate(acc_d[qi]), k
-        )
-        out_q.append(np.full(d.shape[0], qids[qi], dtype=qid_np_dtype))
-        out_i.append(rid)
-        out_d.append(d)
-    if out_q:
-        cols = [np.concatenate(out_q), np.concatenate(out_i),
-                np.concatenate(out_d)]
+    empty = (np.empty(0, np.int64), np.empty(0, np.float64))
+    return [
+        _cut_topk(np.concatenate(acc_i[qi]), np.concatenate(acc_d[qi]), k)
+        if acc_d[qi] else empty
+        for qi in rows
+    ]
+
+
+def _hits_batch(qs: np.ndarray, qids: list, psets, shard_files,
+                k: int, search_complexity, qid_name: str, qid_np_dtype,
+                id_name: str, slab: bool = False,
+                deleted: np.ndarray | None = None, n_total: int = 0):
+    """One Arrow RecordBatch (qid, id, _distance) holding the FINAL
+    top-k of every query in a task's slab (`_probe_topk`): the row set
+    and values a global `ORDER BY _distance, id` window would keep. A
+    query's whole probe set is searched inside one task (every caller
+    partitions queries, never shards), so no join or window follows.
+    `psets` is positional (probe set per query row) or None for full
+    fan-out. `slab` (target_recall-driven calls only) swaps in the
+    frontier-slab beam — measured-floor contract, not byte-parity.
+
+    Tombstones (`deleted`, sorted int64; `n_total` = the index's row
+    count, tombstoned rows included) are dropped here, as the
+    reference's search does (`src/diskann_index.cpp:552-595`): each
+    query's top-(k + over) is cut, filtered, and its first k kept —
+    with ≥ k survivors there, those are its true top-k survivors. A
+    query left with fewer than min(k, live rows) is searched again at
+    k + |deleted|, with only the other starved rows of this task, so
+    every query's rows are those it gets scanned alone. A query whose
+    probed shards hold fewer survivors pays that deep pass on every
+    call until `vacuum_index`."""
+    import pyarrow as pa
+
+    nq = len(qids)
+    rows = list(range(nq))
+    nd = 0 if deleted is None else len(deleted)
+    if nd == 0:
+        found = _probe_topk(qs, rows, psets, shard_files, k,
+                            search_complexity, slab)
     else:
-        cols = [np.empty(0, qid_np_dtype), np.empty(0, np.int64),
-                np.empty(0, np.float64)]
+        def survivors(hits):
+            rid, d = hits
+            live = live_mask(rid, deleted)
+            return rid[live][:k], d[live][:k]
+
+        over = min(nd, max(2 * k, OVERREQUEST_CAP))
+        found = [survivors(h) for h in _probe_topk(
+            qs, rows, psets, shard_files, k + over, search_complexity, slab
+        )]
+        target = min(k, max(0, n_total - nd))
+        starved = [qi for qi in rows if len(found[qi][0]) < target]
+        if starved and over < nd and k + over < n_total:
+            deep = _probe_topk(qs, starved, psets, shard_files, k + nd,
+                               search_complexity, slab)
+            for qi, h in zip(starved, deep):
+                found[qi] = survivors(h)
+    cols = [
+        np.repeat(np.asarray(qids, dtype=qid_np_dtype),
+                  [len(d) for _, d in found]),
+        np.concatenate([np.empty(0, np.int64)] + [i for i, _ in found]),
+        np.concatenate([np.empty(0, np.float64)] + [d for _, d in found]),
+    ]
     return pa.RecordBatch.from_arrays(
         [pa.array(c) for c in cols], names=[qid_name, id_name, "_distance"],
     )
@@ -1331,6 +1371,7 @@ class VamanaEngine:
         queries: Sequence[Sequence[float]],
         k: int,
         search_complexity: int | None = None,
+        deleted: np.ndarray | None = None,
     ) -> DataFrame:
         id_col = manifest["id_col"]
         # None → the index's measured in-shard L when recorded (round
@@ -1351,7 +1392,7 @@ class VamanaEngine:
         if len(queries) > self.DISTRIBUTE_THRESHOLD:
             return self._search_distributed(
                 spark, manifest, queries, k, search_complexity,
-                shard_files, probe_sets,
+                shard_files, probe_sets, deleted,
             )
         # driver-local: the whole (few-query) batch is one `_hits_batch`
         # slab, the body every distributed search task runs
@@ -1359,6 +1400,7 @@ class VamanaEngine:
             np.asarray(queries, dtype=np.float32), list(range(len(queries))),
             probe_sets, shard_files, k, search_complexity,
             "query_idx", np.int32, id_col, bool(manifest.get("slab_beam")),
+            deleted, int(manifest.get("num_vectors", 0)),
         )
         return local_df(
             spark, zip(*(c.to_pylist() for c in batch.columns)),
@@ -1367,11 +1409,12 @@ class VamanaEngine:
 
     def _search_distributed(
         self, spark, manifest, queries, k, search_complexity,
-        shard_files, probe_sets=None,
+        shard_files, probe_sets=None, deleted=None,
     ) -> DataFrame:
         """Batch path (`rust_lib/src/provider.rs:248-441` lock-step batch →
-        Spark shape), ONE stage: the query matrix and the per-query
-        probe sets (shard_by='cells') ride one broadcast, and each of
+        Spark shape), ONE stage: the query matrix, the per-query probe
+        sets (shard_by='cells') and the tombstones ride one broadcast,
+        and each of
         `spark.range(npart)`'s tasks searches the queries that
         `repartition(npart, query_idx)` would place in its partition
         (Spark's int hash), in ascending order — the batched kernels
@@ -1389,11 +1432,12 @@ class VamanaEngine:
         nq = qm.shape[0]
         npart = min(nq, spark.sparkContext.defaultParallelism)
         part = np.array([murmur3_hash_int(i) % npart for i in range(nq)])
-        bq = spark.sparkContext.broadcast((qm, part, probe_sets))
+        bq = spark.sparkContext.broadcast((qm, part, probe_sets, deleted))
         slab = bool(manifest.get("slab_beam"))
+        n_total = int(manifest.get("num_vectors", 0))
 
         def run(batches):
-            qm_, part_, pm = bq.value
+            qm_, part_, pm, dead = bq.value
             for b in batches:
                 for p in b.column(0).to_numpy():
                     sel = np.flatnonzero(part_ == p)
@@ -1403,7 +1447,7 @@ class VamanaEngine:
                         qm_[sel], sel.tolist(),
                         None if pm is None else [pm[qi] for qi in sel],
                         shard_files, k, search_complexity,
-                        "query_idx", np.int32, id_col, slab,
+                        "query_idx", np.int32, id_col, slab, dead, n_total,
                     )
 
         return spark.range(0, npart, 1, npart).mapInArrow(
@@ -1420,6 +1464,7 @@ class VamanaEngine:
         query_vec_col: str,
         k: int,
         search_complexity: int | None = None,
+        deleted: np.ndarray | None = None,
     ) -> DataFrame:
         """DataFrame-queries search → (<query_id_col>, id, _distance),
         each query row's top-k emitted by its own task (`_hits_batch`):
@@ -1449,8 +1494,9 @@ class VamanaEngine:
             )
         else:
             route = None
-        bc = spark.sparkContext.broadcast(route)
+        bc = spark.sparkContext.broadcast((route, deleted))
         existing = {s for s, _ in shard_files}
+        n_total = int(manifest.get("num_vectors", 0))
 
         # the query id rides the shuffle as LONG; non-integral ids are
         # rejected one level up in index_search_table (uniformly for
@@ -1479,7 +1525,7 @@ class VamanaEngine:
             # index_search_table legs at 10M)
             from ..functions.distance import np_from_arrow_list
 
-            route_mat = bc.value
+            route_mat, dead = bc.value
             for b in batches:
                 if b.num_rows == 0:
                     continue
@@ -1503,7 +1549,7 @@ class VamanaEngine:
                         pm.append(s if s else existing)
                 yield _hits_batch(
                     qs, qids, pm, shard_files, k, search_complexity,
-                    "_qid", np.int64, id_col, slab,
+                    "_qid", np.int64, id_col, slab, dead, n_total,
                 )
 
         return qdf.mapInArrow(

@@ -690,11 +690,12 @@ def index_knn_join(
       `auto_nprobe` rule. To force full-probe regardless of the pin,
       pass `nprobe >= nlist`.
 
-    Tombstoned ids are anti-joined off the base side before scoring, so
+    Tombstoned ids are dropped off the base side before scoring, so
     results match a vacuumed index. `nprobe >= nlist` degenerates to
     the exact k-NN join (`method='exact'` for bit-exact distances).
     """
-    from ..index.api import _deleted_ids, _load
+    from ..index.api import _load, _tombstones
+    from ..index.engines import drop_tombstoned
     from ..index.ivf import CELL_COL as IVF_CELL_COL
     from ..index.ivf import IvfFlatEngine, _decode_cells_df
 
@@ -753,9 +754,6 @@ def index_knn_join(
     b = impl._read_cells(spark, d, manifest)
     if IVF_CELL_COL != CELL_COL:  # pragma: no cover - same constant today
         b = b.withColumnRenamed(IVF_CELL_COL, CELL_COL)
-    deleted = _deleted_ids(spark, d, manifest)
-    if deleted is not None:
-        b = b.join(F.broadcast(deleted), on=base_id_col, how="anti")
 
     got = None
     if method != "exact":
@@ -791,6 +789,9 @@ def index_knn_join(
         # (a scan optimization — the scorer's token filter alone cannot
         # reach the parquet scan)
         b = b.where(F.col(CELL_COL).isin([int(c) for c in probed]))
+    # after the prune: the task-side tombstone filter is opaque to
+    # Catalyst, so a filter above it would not reach the parquet scan
+    b = drop_tombstoned(b, base_id_col, _tombstones(d))
     sq8 = impl._sq8_params(manifest)
     if sq8 is not None:
         # dequantize AFTER the cell pruning so the parquet scan still

@@ -47,3 +47,17 @@ def test_summary_counts_wins_by_direction(capsys):
     assert "recall identical per seed: NO, seeds [0]" in out
     assert "change failed: 1/16" in out
     assert "base failed: 0/16" in out
+
+
+def test_summary_says_when_recall_is_not_reported(capsys):
+    """Traced perfbench runs carry only the per-layer metrics: the
+    summary must say recall is absent, not call it identical."""
+    ab = _ab()
+    traced = {"attempted": 1, "failed": 0,
+              "metrics": {"index.index_scan.vamana.jobs":
+                          {"value": 1, "unit": "count"}}}
+    pairs = [{"seed": s, "base": traced, "change": traced} for s in range(3)]
+    ab.summarize("query", pairs, ab.directions(ROOT))
+    out = capsys.readouterr().out
+    assert "recall: not reported (traced runs)" in out
+    assert "recall identical per seed" not in out

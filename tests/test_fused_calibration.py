@@ -224,7 +224,8 @@ def test_shard_measure_is_grouping_independent(spark, cat, metric):
 def test_routed_lifecycle_job_floor(spark, cat):
     """A calibrated routed build runs 7 Spark jobs: 3 input validation,
     the train+sample collect, assign+build (2 with its shuffle) and the
-    end-anchor search; a vacuum adds 5 around its rebuild."""
+    end-anchor search; a vacuum runs only its rebuild's 4 (no input
+    validation, no row count, tombstones dropped in the read tasks)."""
     df = _frame(spark, _clustered(n=3000))
     jobs = spark_jobs(spark, lambda: create_index(
         df, "vec_id", "embedding", "floor", catalog=cat,
@@ -233,4 +234,4 @@ def test_routed_lifecycle_job_floor(spark, cat):
     delete_from_index(spark, "floor", list(range(0, 300, 3)), catalog=cat)
     jobs = spark_jobs(spark, lambda: vacuum_index(spark, "floor",
                                                   catalog=cat))
-    assert len(jobs) == 9, jobs
+    assert len(jobs) == 4, jobs

@@ -236,7 +236,7 @@ def test_bounded_tombstone_overrequest(spark, cat):
     * the query's ENTIRE near neighborhood tombstoned (worst case) →
       the retry kicks in and still returns the true top-k survivors.
     """
-    import duckdb_ann_spark.index.api as api
+    from duckdb_ann_spark.index.vamana import OVERREQUEST_CAP
 
     n, k = 1000, 3
     dim = 4
@@ -264,7 +264,7 @@ def test_bounded_tombstone_overrequest(spark, cat):
            .orderBy("_distance", "vec_id").collect()]
     assert got == [150, 151, 152]
     # sanity: the bound really engaged (both passes' depth math)
-    assert 300 > max(2 * k, api.OVERREQUEST_CAP), "cap must be < |deleted|"
+    assert 300 > max(2 * k, OVERREQUEST_CAP), "cap must be < |deleted|"
 
     # scenario 3 (r8 review): fewer than k survivors in total — the
     # retry must still recover ALL of them (returning the best

@@ -119,9 +119,14 @@ def summarize(workload: str, pairs: list[dict], better: dict) -> None:
         fmt = "{:8.4g}/{:8.4g}/{:8.4g}"
         print(f"{name:<44} {fmt.format(*bq):>26} {fmt.format(*cq):>26}"
               f" {wins:>3}/{decided:<3} {'yes' if gap else 'no':>7}")
-    diff = [p["seed"] for p in pairs
-            if value(p["base"], "recall") != value(p["change"], "recall")]
-    print("recall identical per seed:", "yes" if not diff else f"NO, seeds {diff}")
+    recalls = [(p["seed"], value(p["base"], "recall"),
+                value(p["change"], "recall")) for p in pairs]
+    if any(b is None or c is None for _, b, c in recalls):
+        print("recall: not reported (traced runs)")
+    else:
+        diff = [s for s, b, c in recalls if b != c]
+        print("recall identical per seed:",
+              "yes" if not diff else f"NO, seeds {diff}")
     for side in ("base", "change"):
         failed = sum(p[side]["failed"] for p in pairs)
         attempted = sum(p[side]["attempted"] for p in pairs)
