@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..local import local_df
-from .catalog import Catalog
+from .catalog import Catalog, spark_path
 from .engines import drop_tombstoned, get_engine
 from .params import parse_params
 from . import flat  # noqa: F401  (registers the Flat engine)
@@ -46,11 +46,11 @@ DELETED_DIR = "deleted"
 def _refresh(spark: SparkSession, artifact_dir: str) -> None:
     """Invalidate Spark's cached file listings for an artifact that was
     just mutated in place (append/vacuum/merge) — stale FileStatusCache
-    entries otherwise crash or silently miss files on re-read."""
-    try:
-        spark.catalog.refreshByPath(artifact_dir)
-    except Exception:
-        pass
+    entries otherwise crash or silently miss files on re-read. The
+    path is the `file:` URI the engines' reads use, or the refresh
+    misses their listings."""
+    spark.catalog.refreshByPath(spark_path(artifact_dir))
+
 
 def _check_vec_type(df: DataFrame, vec_col: str, engine: str) -> None:
     try:
@@ -787,7 +787,7 @@ def recalibrate_index(
                 f"index '{name}' pins nprobe — a measurement no search "
                 "would use (rebuild with nprobe=0 to ride calibration)"
             )
-        centroids = impl._centroids(spark, d)
+        centroids = impl._centroids(d)
         if centroids is None or centroids.shape[0] <= 1:
             raise ValueError(
                 f"index '{name}' has <=1 trained cell — no curve to measure"
@@ -804,7 +804,7 @@ def recalibrate_index(
         return cat.update(name, calibration=cal)
 
     if isinstance(impl, VamanaEngine):  # incl. HnswEngine
-        route = _route_centroids(spark, d, manifest.get("params") or {})
+        route = _route_centroids(d, manifest.get("params") or {})
         shard_files = impl._shard_files(d)
         if route is None or not shard_files:
             raise ValueError(

@@ -16,8 +16,15 @@ filesystem catalog — each index is a directory
 `manifest.json` is the committed state: readers treat a directory without
 a manifest as nonexistent, and creation writes the manifest last (after
 all data files), giving create/drop crash consistency without needing a
-transaction log. On a real cluster <root> lives on shared storage
-(HDFS/S3/DBFS via the executors' filesystem); locally it's a temp dir.
+transaction log.
+
+One filesystem contract: <root> is a POSIX directory mounted at the same
+path on the driver and on every executor (a local disk on one machine, a
+shared or FUSE mount such as `/dbfs/...` on a cluster). `Catalog`
+resolves it once to an absolute path; the driver and the executors' own
+Python read and write artifacts with plain file calls, and Spark reaches
+them through `spark_path`'s `file:` URIs, which ignore `fs.defaultFS`.
+Any other URI scheme is rejected.
 """
 
 from __future__ import annotations
@@ -34,63 +41,43 @@ DEFAULT_ROOT_ENV = "SPARK_ANN_INDEX_ROOT"
 _FILE_URI_RE = re.compile(
     r"^file:(?:///|/(?!/)|//localhost/)(.*)$", re.IGNORECASE
 )
-_ANY_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 
 
-def local_fs_path(path: str, spark=None) -> str | None:
-    """Resolve a path/URI to a DRIVER-LOCAL filesystem path, or None when
-    it names a non-local store. `file:` URIs strip to their path; any
-    other explicit scheme is non-local; a scheme-less path is local
-    unless `spark` is given and its resolved `fs.defaultFS` is not
-    `file:` (Hadoop would resolve the bare path against the DFS, so a
-    driver-local open() of it reads/writes the WRONG filesystem — the
-    round-13 fs.defaultFS guard, shared here so every artifact-dir
-    open() applies it)."""
+def file_uri_path(path: str) -> str | None:
+    """The local path a `file:` URI names, for all three spellings
+    (`file:///x`, the `file:/x` Hadoop renders, `file://localhost/x`);
+    None for anything else."""
     m = _FILE_URI_RE.match(path)
-    if m:
-        return "/" + m.group(1)
-    if _ANY_SCHEME_RE.match(path):
-        return None
-    if spark is not None:
-        default_fs = (
-            spark.sparkContext._jsc.hadoopConfiguration().get(
-                "fs.defaultFS", "file:///"
-            )
-            or "file:///"
-        )
-        if not default_fs.lower().startswith("file:"):
-            return None
-    return path
+    return "/" + m.group(1) if m else None
 
 
-def read_manifest(artifact_dir: str, spark=None) -> dict:
-    """Read `manifest.json` from an artifact dir that may be a plain
-    local path, a `file:` URI, or (with `spark`) any Hadoop-readable
-    path. Engines must route manifest reads through here instead of a
-    raw `open()` (round-13 verdict item 4: a driver-local open() of a
-    DFS artifact dir raises FileNotFoundError on a real cluster)."""
-    local = local_fs_path(artifact_dir, spark)
-    if local is not None:
-        with open(os.path.join(local, MANIFEST)) as f:
-            return json.load(f)
-    if spark is None:
-        raise ValueError(
-            f"artifact dir '{artifact_dir}' is not driver-local and no "
-            "SparkSession was provided to read it"
-        )
-    # one tiny whole-file read through Hadoop's filesystem layer — the
-    # same path the artifact's parquet scans already use
-    row = spark.read.text(
-        f"{artifact_dir.rstrip('/')}/{MANIFEST}", wholetext=True
-    ).head()
-    return json.loads(row[0])
+def spark_path(artifact_dir: str) -> str:
+    """The `file:` URI every Spark read, write and refresh of an
+    artifact dir goes through: it names the mounted index root whatever
+    the session's `fs.defaultFS` is."""
+    return "file://" + os.path.abspath(artifact_dir)
+
+
+def read_manifest(artifact_dir: str) -> dict:
+    with open(os.path.join(artifact_dir, MANIFEST)) as f:
+        return json.load(f)
 
 
 class Catalog:
     def __init__(self, root: str | None = None):
-        self.root = root or os.environ.get(DEFAULT_ROOT_ENV) or os.path.join(
+        root = root or os.environ.get(DEFAULT_ROOT_ENV) or os.path.join(
             tempfile.gettempdir(), "duckdb_ann_spark_indexes"
         )
+        local = file_uri_path(root)
+        if local is None and _SCHEME_RE.match(root):
+            raise ValueError(
+                f"index root '{root}' is not a local path: the root must be "
+                "a POSIX directory mounted at the same path on the driver "
+                "and every executor (a FUSE mount such as /dbfs/... "
+                "qualifies), given as a path or a file: URI"
+            )
+        self.root = os.path.abspath(local or root)
         os.makedirs(self.root, exist_ok=True)
 
     # -- paths ---------------------------------------------------------
@@ -133,8 +120,7 @@ class Catalog:
             raise ValueError(
                 f"ANN index '{name}' not found on table '{table_name or '?'}'"
             )
-        with open(self.manifest_path(name)) as f:
-            return json.load(f)
+        return read_manifest(self.path(name))
 
     def update(self, name: str, **changes) -> dict:
         m = self.load(name)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import quote_ident as _quote
 from ..operators.batch import search_batch_ids
+from .catalog import read_manifest, spark_path
 from .engines import drop_tombstoned, register_engine
 
 VECTORS_DIR = "vectors"
@@ -37,7 +38,7 @@ class FlatEngine:
         dim: int,
     ) -> dict:
         df.select(id_col, vec_col).write.mode("overwrite").parquet(
-            f"{artifact_dir}/{VECTORS_DIR}"
+            f"{spark_path(artifact_dir)}/{VECTORS_DIR}"
         )
         return {"layout": "flat-parquet-v1"}
 
@@ -45,12 +46,10 @@ class FlatEngine:
         """The stored (id, vec) parquet, read under the schema the
         build writes (ids long, vectors array<float> — create_index and
         insert normalize both), so no schema-inference job runs."""
-        from .catalog import read_manifest
-
-        m = read_manifest(artifact_dir, spark)
+        m = read_manifest(artifact_dir)
         return spark.read.schema(
             f"{_quote(m['id_col'])} long, {_quote(m['vec_col'])} array<float>"
-        ).parquet(f"{artifact_dir}/{VECTORS_DIR}")
+        ).parquet(f"{spark_path(artifact_dir)}/{VECTORS_DIR}")
 
     def append(
         self,
@@ -64,7 +63,7 @@ class FlatEngine:
         stored vectors."""
         df_new.select(manifest["id_col"], manifest["vec_col"]).write.mode(
             "append"
-        ).parquet(f"{artifact_dir}/{VECTORS_DIR}")
+        ).parquet(f"{spark_path(artifact_dir)}/{VECTORS_DIR}")
         return {}
 
     def search(

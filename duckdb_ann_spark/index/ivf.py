@@ -30,8 +30,6 @@ Spark-first translation — this is the engine that survives 100 TB:
   scorer knn_join's bins run too); the driver cuts each query's first k
   by (distance, id) from the bounded partial rows. A probe is a file
   selection, so no partition-discovery job, exchange or window runs.
-  An artifact only Spark can read (a DFS `fs.defaultFS`) keeps the
-  partition-pruned Spark scan with the same scorer and a window merge.
   `nprobe >= nlist` degenerates to an exact flat scan (bit-exact JVM
   expressions).
 
@@ -59,13 +57,11 @@ from pyspark.sql import functions as F
 
 from ..functions.distance import np_arrow_mat, np_index_distances
 from ..functions.partitioning import (
-    cell_slices,
     lpt_bins,
     probe_csr,
     score_cells,
 )
-from ..local import local_df
-from .catalog import local_fs_path
+from .catalog import read_manifest, spark_path
 from .engines import drop_tombstoned, register_engine
 from ..functions.text import quote_ident as _quote
 
@@ -598,61 +594,36 @@ def _write_partition_count(spark: SparkSession, k_eff: int, n: int, dim: int) ->
 
 
 def _write_centroids(
-    spark: SparkSession,
     dest: str,
     centroids: np.ndarray,
     cell_col: str = CELL_COL,
 ) -> None:
-    """Write the (nlist, dim) centroid table to `dest`. pyarrow-direct
-    when the path resolves to the DRIVER'S LOCAL filesystem (the
-    3162-row Spark job costs ~6s of fixed overhead at the 10M build —
-    measured — where pyarrow writes the same parquet in milliseconds);
-    any failure falls back to the Spark write, mirroring `_centroids`'
-    read-side fallback. Also serves the vamana routing-centroid write
-    (cell_col='shard').
+    """Write the (nlist, dim) centroid table to the artifact dir `dest`
+    as one parquet file, with pyarrow on the driver, which mounts the
+    index root (a Spark job writing the same 3162 rows cost ~6s of fixed
+    overhead at the 10M build — measured). Also serves the vamana
+    routing-centroid write (cell_col='shard'); an empty build writes a
+    (0, dim) table."""
+    import shutil
 
-    A scheme-less dest is only local when the session's fs.defaultFS
-    is (round-13 advice): on a cluster whose default filesystem is a
-    DFS, Spark writes the vectors parquet to the DFS while a pyarrow
-    write here would land the centroids on the driver's local disk —
-    a split artifact unreadable from other machines (and the rmtree
-    could delete an unrelated same-named local directory). An explicit
-    `file:` URI stays pyarrow-eligible regardless."""
-    try:
-        import shutil
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = local_fs_path(dest, spark)
-        if path is None:
-            raise ValueError("non-local dest; use the Spark writer")
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path, exist_ok=True)
-        tbl = pa.table(
-            {
-                cell_col: pa.array(
-                    np.arange(centroids.shape[0], dtype=np.int32),
-                    type=pa.int32(),
-                ),
-                "centroid": pa.array(
-                    [c for c in centroids.astype(np.float32)],
-                    type=pa.list_(pa.float32()),
-                ),
-            }
-        )
-        pq.write_table(tbl, f"{path}/part-0.parquet")
-        return
-    except Exception:
-        pass
-    # fallback only: the list-of-Python-floats materialization is
-    # deferred here so the pyarrow fast path never builds it
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(centroids)
-    ]
-    local_df(
-        spark, rows, f"{cell_col} int, centroid array<float>"
-    ).coalesce(1).write.mode("overwrite").parquet(dest)
+    shutil.rmtree(dest, ignore_errors=True)
+    os.makedirs(dest)
+    tbl = pa.table(
+        {
+            cell_col: pa.array(
+                np.arange(centroids.shape[0], dtype=np.int32),
+                type=pa.int32(),
+            ),
+            "centroid": pa.array(
+                [c for c in centroids.astype(np.float32)],
+                type=pa.list_(pa.float32()),
+            ),
+        }
+    )
+    pq.write_table(tbl, f"{dest}/part-0.parquet")
 
 
 def _kmeans(data: np.ndarray, k: int, seed: int = TRAIN_SEED,
@@ -753,11 +724,12 @@ class IvfFlatEngine:
             df.select(id_col, vec_col).withColumn(
                 CELL_COL, F.lit(0)
             ).write.mode("overwrite").partitionBy(CELL_COL).parquet(
-                f"{artifact_dir}/{VECTORS_DIR}"
+                f"{spark_path(artifact_dir)}/{VECTORS_DIR}"
             )
-            spark.createDataFrame([], f"{CELL_COL} int, centroid array<float>").write.mode(
-                "overwrite"
-            ).parquet(f"{artifact_dir}/{CENTROIDS_DIR}")
+            _write_centroids(
+                f"{artifact_dir}/{CENTROIDS_DIR}",
+                np.zeros((0, dim), dtype=np.float32),
+            )
             return {
                 "layout": "ivf-parquet-v1", "nlist_effective": 0,
                 "calibration": None,
@@ -855,11 +827,9 @@ class IvfFlatEngine:
             ).sortWithinPartitions(CELL_COL).write.mode(
                 "overwrite"
             ).partitionBy(CELL_COL).parquet(
-                f"{artifact_dir}/{VECTORS_DIR}"
+                f"{spark_path(artifact_dir)}/{VECTORS_DIR}"
             )
-            _write_centroids(
-                spark, f"{artifact_dir}/{CENTROIDS_DIR}", centroids
-            )
+            _write_centroids(f"{artifact_dir}/{CENTROIDS_DIR}", centroids)
             cal = cal_fut.result() if cal_fut is not None else None
         finally:
             if pool is not None:
@@ -914,7 +884,7 @@ class IvfFlatEngine:
         )
         return spark.read.schema(
             f"{_quote(id_col)} long, {payload}, {CELL_COL} int"
-        ).parquet(f"{artifact_dir}/{VECTORS_DIR}")
+        ).parquet(f"{spark_path(artifact_dir)}/{VECTORS_DIR}")
 
     def ids(self, spark: SparkSession, artifact_dir: str,
             id_col: str) -> DataFrame:
@@ -922,13 +892,10 @@ class IvfFlatEngine:
         touches (or dequantizes) the vector payload."""
         return spark.read.schema(
             f"{_quote(id_col)} long, {CELL_COL} int"
-        ).parquet(f"{artifact_dir}/{VECTORS_DIR}").select(id_col)
+        ).parquet(f"{spark_path(artifact_dir)}/{VECTORS_DIR}").select(id_col)
 
     def vectors(self, spark: SparkSession, artifact_dir: str) -> DataFrame:
-        from .catalog import read_manifest
-
-        return self._vectors(spark, artifact_dir,
-                             read_manifest(artifact_dir, spark))
+        return self._vectors(spark, artifact_dir, read_manifest(artifact_dir))
 
     def _vectors(self, spark: SparkSession, artifact_dir: str,
                  manifest: dict) -> DataFrame:
@@ -962,7 +929,7 @@ class IvfFlatEngine:
                 spark, df_new, id_col, vec_col, artifact_dir, params,
                 int(manifest["dim"]),
             )
-        centroids = self._centroids(spark, artifact_dir)
+        centroids = self._centroids(artifact_dir)
         bc = spark.sparkContext.broadcast(centroids)
         metric = manifest["params"]["metric"]
         sq8 = self._sq8_params(manifest)
@@ -974,7 +941,7 @@ class IvfFlatEngine:
             df_new, id_col, vec_col, bc, metric, sq8_bc, clip_acc
         ).write.mode(
             "append"
-        ).partitionBy(CELL_COL).parquet(f"{artifact_dir}/{VECTORS_DIR}")
+        ).partitionBy(CELL_COL).parquet(f"{spark_path(artifact_dir)}/{VECTORS_DIR}")
         if clip_acc is None:
             return {}
         # cumulative: appended rows outside the BUILD-TIME train
@@ -984,25 +951,16 @@ class IvfFlatEngine:
         return {"sq8_clip_count": max(prior, 0) + int(clip_acc.value)}
 
     # -- search --------------------------------------------------------
-    def _centroids(self, spark: SparkSession, artifact_dir: str) -> np.ndarray:
-        """Driver-local read of the (nlist, dim) centroid table. A 64-row
-        Spark job costs ~0.5s of fixed overhead per search; pyarrow reads
-        the same parquet in ms. Falls back to Spark for path schemes
-        pyarrow can't open (e.g. non-local DFS without a mounted client)."""
-        try:
-            import pyarrow.dataset as ds
+    def _centroids(self, artifact_dir: str) -> np.ndarray:
+        """Driver-local pyarrow read of the (nlist, dim) centroid table
+        (a 64-row Spark job costs ~0.5s of fixed overhead per search;
+        pyarrow reads the same parquet in ms)."""
+        import pyarrow.dataset as ds
 
-            t = ds.dataset(f"{artifact_dir}/{CENTROIDS_DIR}", format="parquet")
-            pdf = t.to_table(columns=[CELL_COL, "centroid"]).to_pandas()
-            pdf = pdf.sort_values(CELL_COL)
-            return np.array(pdf["centroid"].tolist(), dtype=np.float32)
-        except Exception:
-            rows = (
-                spark.read.parquet(f"{artifact_dir}/{CENTROIDS_DIR}")
-                .orderBy(CELL_COL)
-                .collect()
-            )
-            return np.array([r["centroid"] for r in rows], dtype=np.float32)
+        t = ds.dataset(f"{artifact_dir}/{CENTROIDS_DIR}", format="parquet")
+        pdf = t.to_table(columns=[CELL_COL, "centroid"]).to_pandas()
+        pdf = pdf.sort_values(CELL_COL)
+        return np.array(pdf["centroid"].tolist(), dtype=np.float32)
 
     def search(
         self,
@@ -1018,7 +976,7 @@ class IvfFlatEngine:
         metric = manifest["params"]["metric"]
         nprobe = int(search_complexity or manifest["params"].get("nprobe", 1))
         qmat = np.asarray(queries, dtype=np.float32)
-        centroids = self._centroids(spark, artifact_dir)
+        centroids = self._centroids(artifact_dir)
         nlist = centroids.shape[0]
         if nlist == 0:
             return spark.createDataFrame([], _hits_schema(id_col))
@@ -1062,15 +1020,13 @@ class IvfFlatEngine:
         sq8 = self._sq8_params(manifest)
         payload = (SQ8_COL if sq8 is not None else vec_col,
                    int(manifest["dim"]), sq8)
-        root = local_fs_path(artifact_dir, spark)
-        scan = self._search_spark if root is None else self._search_files
-        return scan(spark, manifest, root or artifact_dir, qmat, grouped_q,
-                    bounds, probed, payload, k, deleted)
+        return self._search_files(spark, manifest, artifact_dir, qmat,
+                                  grouped_q, bounds, probed, payload, k,
+                                  deleted)
 
     def _search_files(self, spark, manifest, root, qmat, grouped_q, bounds,
                       probed, payload, k, deleted) -> DataFrame:
-        """The probe scan of a driver-local artifact, in ONE Spark job: a
-        probe is a FILE selection. The driver lists the probed cells'
+        """The probe scan, in ONE Spark job: a probe is a FILE selection. The driver lists the probed cells'
         files and LPT-packs the cells into bins by GEMM mass (|q_c| ×
         file bytes); each `spark.range` task reads its bin's cells with
         pyarrow, one cell resident at a time, and scores them; the
@@ -1130,45 +1086,6 @@ class IvfFlatEngine:
             bq.unpersist()
         return spark.createDataFrame(_cut_hits(part, id_col, k),
                                      _hits_schema(id_col))
-
-    def _search_spark(self, spark, manifest, artifact_dir, qmat, grouped_q,
-                      bounds, probed, payload, k, deleted) -> DataFrame:
-        """The probe scan of an artifact only Spark can read (a DFS
-        `fs.defaultFS`): a partition-pruned parquet scan, `score_cells`
-        per Arrow batch, and a per-query window over the partial top-k
-        rows."""
-        id_col = manifest["id_col"]
-        metric = manifest["params"]["metric"]
-        col, dim, sq8 = payload
-        bq = spark.sparkContext.broadcast(
-            (qmat, grouped_q, bounds, sq8, deleted)
-        )
-
-        def score(batches):
-            qm, gq, bnd, sq8_, dead = bq.value
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                hits = score_cells(
-                    cell_slices(
-                        b.column(id_col).to_numpy().astype(np.int64, copy=False),
-                        _payload_mat(b.column(col), dim, sq8_),
-                        b.column(CELL_COL).to_numpy(),
-                    ),
-                    qm, gq, bnd, metric, k, dead,
-                )
-                if hits is not None:
-                    yield _hits_record_batch(hits, id_col)
-
-        from ..operators.knn_join import _window_topk
-
-        partial = (
-            self._read_cells(spark, artifact_dir, manifest)
-            .where(F.col(CELL_COL).isin(probed))
-            .select(CELL_COL, id_col, col)
-            .mapInArrow(score, schema=_hits_schema(id_col))
-        )
-        return _window_topk(partial, "query_idx", id_col, k)
 
 
 def _hits_schema(id_col: str) -> str:

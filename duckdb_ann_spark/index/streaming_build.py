@@ -35,12 +35,6 @@ __all__ = ["diskann_streaming_build", "read_raw_vectors", "write_raw_vectors"]
 
 CHUNK_ROWS = 8192
 
-# The Spark fallback (path schemes pyarrow can't open) collects the
-# vectors to the driver in one batch; above this many rows it refuses —
-# an error beats a driver OOM, and the pyarrow path is the real
-# out-of-core route (same guard idea as batch.MAX_QUERY_ROWS).
-MAX_FALLBACK_ROWS = 500_000
-
 
 def read_raw_vectors(path: str) -> np.ndarray:
     """Read the reference's raw input format: [u32 n][u32 dim][f32 data]."""
@@ -153,7 +147,6 @@ def diskann_streaming_build(
     build_complexity: int = 128,
     alpha: float = 1.2,
     sample_size: int = 0,
-    spark=None,
     vec_col: str = "embedding",
 ) -> tuple[int, int, int]:
     """Build a `.diskann` file from a raw binary or parquet vector file.
@@ -167,36 +160,11 @@ def diskann_streaming_build(
         raise FileNotFoundError(f"Input file does not exist: {input_path}")
 
     if input_path.endswith(".parquet") or os.path.isdir(input_path):
-        try:
-            n = _parquet_count(input_path)
-            chunks = _iter_parquet_chunks(input_path, vec_col)
-            dim_probe = None
-        except Exception:
-            # path schemes pyarrow can't open → Spark fallback (collects;
-            # the pyarrow path above is the out-of-core one)
-            if spark is None:
-                raise
-            src = spark.read.parquet(input_path).select(vec_col)
-            # cheap guard: count stops the collect before it OOMs
-            n_probe = src.limit(MAX_FALLBACK_ROWS + 1).count()
-            if n_probe > MAX_FALLBACK_ROWS:
-                raise ValueError(
-                    f"diskann_streaming_build: input exceeds "
-                    f"{MAX_FALLBACK_ROWS} rows and is not readable by "
-                    "pyarrow (the out-of-core path); the Spark fallback "
-                    "collects to the driver in one batch. Copy the input "
-                    "to a pyarrow-readable location, or use "
-                    "create_index(engine='diskann') for a distributed "
-                    "sharded build."
-                )
-            rows = src.collect()
-            vectors = np.array([r[0] for r in rows], dtype=np.float32)
-            n = len(vectors)
-            chunks = iter([vectors] if n else [])
-            dim_probe = vectors.shape[1] if n else 0
+        n = _parquet_count(input_path)
+        chunks = _iter_parquet_chunks(input_path, vec_col)
     else:
-        n, dim_probe = _raw_header(input_path)
-        chunks = _iter_raw_chunks(input_path, n, dim_probe)
+        n, dim = _raw_header(input_path)
+        chunks = _iter_raw_chunks(input_path, n, dim)
 
     used = sample_size if sample_size > 0 else max(int(np.sqrt(n)), 1000)
     used = min(used, n)

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..local import local_df
+from .catalog import read_manifest
 from .engines import register_engine
 from ..functions.distance import (
     cast_id_vec,
@@ -121,7 +122,7 @@ def _resident_nbytes(g) -> int:
     return total
 
 
-def _route_centroids(spark: SparkSession, artifact_dir: str,
+def _route_centroids(artifact_dir: str,
                      manifest_params: dict) -> np.ndarray | None:
     """(n_shards, dim) routing centroids for a shard_by='cells' index;
     None for hash-sharded indexes. Gated on BOTH the manifest flag and
@@ -131,21 +132,16 @@ def _route_centroids(spark: SparkSession, artifact_dir: str,
     path = f"{artifact_dir}/{ROUTE_DIR}"
     if not os.path.isdir(path):
         return None
-    try:
-        import pyarrow.dataset as ds
+    import pyarrow.dataset as ds
 
-        pdf = (
-            ds.dataset(path, format="parquet")
-            .to_table(columns=["shard", "centroid"])
-            .to_pandas()
-            .sort_values("shard")
-        )
-        cents = np.array(pdf["centroid"].tolist(), dtype=np.float32)
-        shards = pdf["shard"].to_numpy(dtype=np.int64)
-    except Exception:
-        rows = spark.read.parquet(path).orderBy("shard").collect()
-        cents = np.array([r["centroid"] for r in rows], dtype=np.float32)
-        shards = np.array([r["shard"] for r in rows], dtype=np.int64)
+    pdf = (
+        ds.dataset(path, format="parquet")
+        .to_table(columns=["shard", "centroid"])
+        .to_pandas()
+        .sort_values("shard")
+    )
+    cents = np.array(pdf["centroid"].tolist(), dtype=np.float32)
+    shards = pdf["shard"].to_numpy(dtype=np.int64)
     # shard ids are dense 0..k-1 by construction; assert so a corrupted
     # route table fails loud instead of mapping queries to wrong shards
     if not np.array_equal(shards, np.arange(len(shards))):
@@ -844,8 +840,7 @@ class VamanaEngine:
         # across a split cell's sub-shards (dense shard ids 0..S-1)
         route_cents = centroids[np.repeat(np.arange(k_eff), n_sub)]
         _write_centroids(
-            spark, f"{artifact_dir}/{ROUTE_DIR}", route_cents,
-            cell_col="shard"
+            f"{artifact_dir}/{ROUTE_DIR}", route_cents, cell_col="shard"
         )
 
         # collision-free cell->partition placement (round 11): hashing
@@ -1131,9 +1126,7 @@ class VamanaEngine:
         sidecars, distributed over shards, in ascending (shard, label)
         order — no driver materialization, no duplicate vector
         parquet."""
-        from .catalog import read_manifest
-
-        m = read_manifest(artifact_dir, spark)
+        m = read_manifest(artifact_dir)
         id_col, vec_col = m["id_col"], m["vec_col"]
 
         def emit(shard_files):
@@ -1326,7 +1319,7 @@ class VamanaEngine:
         pdf = self._collect_delta(df_new, id_col, vec_col)
         if not len(pdf):
             return {}
-        route = _route_centroids(spark, artifact_dir, manifest["params"])
+        route = _route_centroids(artifact_dir, manifest["params"])
         if route is not None:
             return self._append_routed(
                 spark, manifest, artifact_dir, pdf, params, route
@@ -1383,7 +1376,7 @@ class VamanaEngine:
         # shard_by='cells': probe only the route_nprobe nearest shards
         # per query instead of fanning out to all of them
         probe_sets = None
-        route = _route_centroids(spark, artifact_dir, manifest["params"])
+        route = _route_centroids(artifact_dir, manifest["params"])
         if route is not None and len(shard_files) > 1:
             probe_sets = _route_probe_sets(
                 route, queries, manifest["params"]["metric"],
@@ -1486,7 +1479,7 @@ class VamanaEngine:
             manifest, search_complexity
         )
         shard_files = self._shard_files(artifact_dir)
-        route = _route_centroids(spark, artifact_dir, manifest["params"])
+        route = _route_centroids(artifact_dir, manifest["params"])
         rnp = 0
         if route is not None and len(shard_files) > 1:
             rnp = _resolve_route_nprobe(

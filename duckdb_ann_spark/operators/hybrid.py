@@ -363,8 +363,9 @@ def _norm_index_path(path: str) -> str:
     """Canonical form for the delta publish's in-place guard: local
     paths resolve through `os.path.realpath` (symlinked spellings of
     the same directory must compare equal — abspath strings don't), and
-    a `file://` URI IS a local path (Spark resolves it to the same
-    directory), so it is unwrapped and realpathed too. Other URI
+    a `file:` URI IS a local path (Spark resolves it to the same
+    directory), so it is unwrapped as the index catalog unwraps its
+    root and realpathed too. Other URI
     schemes (s3://, hdfs://...) are NOT filesystem paths —
     realpath/abspath would mangle the double slash — so they only
     normalize trailing slashes; two remote URIs aliasing one location
@@ -372,17 +373,11 @@ def _norm_index_path(path: str) -> str:
     (round-10 advice + review)."""
     import re
 
-    # all three RFC/Hadoop spellings of a local file URI: the empty-
-    # authority triple-slash (file:///x), the single-slash shorthand
-    # Hadoop renders (file:/x), and the localhost authority
-    # (file://localhost/x) — each IS the local path after unwrapping
-    # (round-10 advice: the latter two fell through to the generic-URI
-    # branch and evaded the in-place guard)
-    m = re.match(
-        r"^file:(?:///|/(?!/)|//localhost/)(.*)$", path, re.IGNORECASE
-    )
-    if m:
-        return os.path.realpath("/" + m.group(1))
+    from ..index.catalog import file_uri_path
+
+    local = file_uri_path(path)
+    if local is not None:
+        return os.path.realpath(local)
     if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
         return path.rstrip("/")
     return os.path.realpath(path)

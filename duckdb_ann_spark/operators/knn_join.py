@@ -710,7 +710,7 @@ def index_knn_join(
     base_id_col = manifest["id_col"]
     base_vec_col = manifest["vec_col"]
     metric = manifest["params"]["metric"]
-    centroids = impl._centroids(spark, d)
+    centroids = impl._centroids(d)
     nlist_eff = centroids.shape[0]
     if nlist_eff == 0:
         raise ValueError(f"index '{index_name}' is empty (no trained cells)")

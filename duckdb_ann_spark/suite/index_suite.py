@@ -489,7 +489,7 @@ def q_diskann_streaming_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(tempfile.gettempdir(), f"suite_sb_{os.getpid()}.diskann")
     n, dim, used = diskann_streaming_build(
         f"{sf_dir}/embeddings.parquet", out, max_degree=16,
-        build_complexity=32, spark=spark,
+        build_complexity=32,
     )
     return spark.createDataFrame(
         [(n, dim, used)], "num_vectors long, dimension int, sample_size int"

@@ -78,7 +78,7 @@ def garble_ivf_cells(artifact_dir, queries, nprobe, metric="l2", probed=False):
     from duckdb_ann_spark.functions.distance import np_index_distances
     from duckdb_ann_spark.index.ivf import CELL_COL, VECTORS_DIR, IvfFlatEngine
 
-    cent = IvfFlatEngine()._centroids(None, artifact_dir)
+    cent = IvfFlatEngine()._centroids(artifact_dir)
     cd = np_index_distances(metric, cent, np.asarray(queries, np.float32))
     hit = set(np.argsort(cd, axis=1, kind="stable")[:, :nprobe].ravel().tolist())
     vdir = os.path.join(artifact_dir, VECTORS_DIR)

@@ -179,7 +179,7 @@ def test_shard_measure_is_grouping_independent(spark, cat, metric):
     d = cat.path("g")
     eng = VamanaEngine()
     files = eng._shard_files(d)
-    route = _route_centroids(spark, d, m["params"])
+    route = _route_centroids(d, m["params"])
     _, qids, qmat = calibration.collect_train_and_sample(
         _frame(spark, mat), "vec_id", "embedding", len(mat), 0,
         calibration.graph_sample_size(64),

@@ -60,7 +60,7 @@ def _reference(spark, cat, name, queries, k):
     eng = get_engine(m["engine"], m["subtype"])
     files = eng._shard_files(d)
     L = vm._resolve_search_complexity(m, None)
-    route = vm._route_centroids(spark, d, m["params"])
+    route = vm._route_centroids(d, m["params"])
     psets = None
     if route is not None and len(files) > 1:
         psets = vm._route_probe_sets(

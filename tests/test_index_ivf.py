@@ -1,5 +1,7 @@
 """IVFFlat engine: faiss_ivfflat.test-style checks + scale-plan asserts."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -430,10 +432,9 @@ def test_arrow_assignment_matches_pandas_path(spark):
     assert sl is not None and sl.tolist() == [[3.0, 4.0], [5.0, 6.0]]
 
 
-def test_write_centroids_pyarrow_and_uri_forms(spark, tmp_path):
-    """_write_centroids writes a parquet the engine's reader round-trips
-    for plain paths AND file: URI spellings; non-local schemes fall
-    back to the Spark writer (checked via a path Spark can also write)."""
+def test_write_centroids_round_trips(tmp_path):
+    """_write_centroids writes a parquet the engine's reader round-trips,
+    including the (0, dim) table of an empty build."""
     import numpy as np
 
     from duckdb_ann_spark.index.ivf import IvfFlatEngine, _write_centroids
@@ -442,14 +443,12 @@ def test_write_centroids_pyarrow_and_uri_forms(spark, tmp_path):
     eng = IvfFlatEngine()
 
     plain = str(tmp_path / "plain")
-    _write_centroids(spark, f"{plain}/centroids", cents)
-    got = eng._centroids(spark, plain)
-    assert np.allclose(got, cents)
+    _write_centroids(f"{plain}/centroids", cents)
+    assert np.array_equal(eng._centroids(plain), cents)
 
-    uri = tmp_path / "uri"
-    _write_centroids(spark, f"file://{uri}/centroids", cents)
-    got = eng._centroids(spark, str(uri))
-    assert np.allclose(got, cents)
+    empty = str(tmp_path / "empty")
+    _write_centroids(f"{empty}/centroids", np.zeros((0, 3), np.float32))
+    assert eng._centroids(empty).shape[0] == 0
 
 
 def test_write_partition_count_regimes(spark):
@@ -648,15 +647,16 @@ def test_sq8_clip_count_observability(spark, cat):
     drop_index("clip_sq8", cat)
 
 
-def test_vectors_reads_manifest_from_file_uri(spark, cat):
-    """Round 14 (r13 verdict item 4): engine vectors() must route the
-    manifest read through catalog.read_manifest — a raw driver open()
-    of a `file:` URI (or DFS path) artifact dir raised FileNotFoundError
-    even though Spark reads the artifact's parquet fine."""
+def test_vectors_reads_manifest_from_file_uri(spark, tmp_path):
+    """An index whose catalog root is given as a `file:` URI builds and
+    round-trips its (dequantized) vectors: the root resolves to a plain
+    path, so the engines' manifest reads and Spark scans agree."""
     import numpy as np
 
     from duckdb_ann_spark.index.engines import get_engine
 
+    cat = Catalog("file://" + str(tmp_path / "indexes"))
+    assert cat.root == str(tmp_path / "indexes")
     rng = np.random.default_rng(22)
     n, dim = 300, 8
     rows = [(int(i), [float(x) for x in rng.random(dim)]) for i in range(n)]
@@ -665,7 +665,7 @@ def test_vectors_reads_manifest_from_file_uri(spark, cat):
                  type="IVFFlat", ivf_nlist=4, quantization="sq8",
                  catalog=cat)
     impl = get_engine("faiss", "ivfflat")
-    got = impl.vectors(spark, "file://" + cat.path("uri_sq8")).collect()
+    got = impl.vectors(spark, cat.path("uri_sq8")).collect()
     assert len(got) == n
     by_id = {r["vec_id"]: r["embedding"] for r in got}
     # dequantized values reconstruct within the SQ8 half-step bound
@@ -674,29 +674,27 @@ def test_vectors_reads_manifest_from_file_uri(spark, cat):
     drop_index("uri_sq8", cat)
 
 
-def test_local_fs_path_and_read_manifest():
-    """URI/scheme resolution shared by every driver-local artifact
-    open (catalog.local_fs_path)."""
-    import json
-    import os
-    import tempfile
+@pytest.mark.parametrize("root", ["hdfs://nn/idx", "s3a://b/x", "dbfs:/x"])
+def test_catalog_rejects_non_file_roots(root, tmp_path, monkeypatch):
+    """A root under any scheme but `file:` breaks the one filesystem
+    contract (a POSIX mount at the same path everywhere): it raises,
+    and creates no directory (relative to the working directory, where
+    `os.makedirs` would have put `hdfs:/nn/idx`)."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="mounted at the same path"):
+        Catalog(root)
+    assert os.listdir(tmp_path) == []
 
-    from duckdb_ann_spark.index.catalog import local_fs_path, read_manifest
 
-    assert local_fs_path("/a/b") == "/a/b"
-    assert local_fs_path("file:///a/b") == "/a/b"
-    assert local_fs_path("file:/a/b") == "/a/b"
-    assert local_fs_path("file://localhost/a/b") == "/a/b"
-    assert local_fs_path("hdfs://nn/a/b") is None
-    assert local_fs_path("s3a://bucket/a") is None
-
-    with tempfile.TemporaryDirectory() as d:
-        with open(os.path.join(d, "manifest.json"), "w") as f:
-            json.dump({"name": "x"}, f)
-        assert read_manifest(d)["name"] == "x"
-        assert read_manifest("file://" + d)["name"] == "x"
-    with pytest.raises(ValueError, match="not driver-local"):
-        read_manifest("hdfs://nn/idx")
+def test_catalog_root_spellings_resolve_to_one_path(tmp_path, monkeypatch):
+    """The three `file:` spellings and a relative path all resolve to
+    the same absolute root."""
+    want = str(tmp_path / "idx")
+    monkeypatch.chdir(tmp_path)
+    for root in ("file://" + want, "file:" + want,
+                 "file://localhost" + want, "FILE://" + want, "idx",
+                 "./idx/"):
+        assert Catalog(root).root == want, root
 
 
 def test_sq8_envelope_full_clip_free(spark, cat):

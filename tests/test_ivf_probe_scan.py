@@ -1,9 +1,8 @@
 """IVFFlat partial-probe scan: each probed cell is ONE GEMM of its rows
 against the ascending list of queries probing it, and every query keeps
 its first k rows by (distance, id), NaN last. The scan reads the probed
-cells' files in one Spark job when the artifact is on the driver's
-filesystem, and falls back to a pruned Spark scan when only Spark can
-read it; both must return what that numpy reference returns."""
+cells' files in one Spark job and must return what that numpy reference
+returns."""
 
 import copy
 import os
@@ -59,7 +58,7 @@ def _reference(spark, cat, name, manifest, qmat, k, nprobe, deleted=()):
     rows, NaN as None."""
     d = cat.path(name)
     metric = manifest["params"]["metric"]
-    cent = ivf.IvfFlatEngine()._centroids(spark, d)
+    cent = ivf.IvfFlatEngine()._centroids(d)
     probe = np.argsort(np_index_distances(metric, cent, qmat), axis=1,
                        kind="stable")[:, :nprobe]
     vdir = os.path.join(d, ivf.VECTORS_DIR)
@@ -112,8 +111,8 @@ def _assert_rows(got, want, exact):
 
 
 @pytest.mark.parametrize("case", ["l2", "ip", "sq8", "appended",
-                                  "tombstoned", "spark_read"])
-def test_probe_scan_matches_numpy_reference(spark, cat, monkeypatch, case):
+                                  "tombstoned"])
+def test_probe_scan_matches_numpy_reference(spark, cat, case):
     ids, mat = _data(1200, seed=1)
     opts = dict(engine="faiss", type="IVFFlat", ivf_nlist=40, nprobe=3,
                 calibration_queries=0,
@@ -133,8 +132,6 @@ def test_probe_scan_matches_numpy_reference(spark, cat, monkeypatch, case):
     if case == "tombstoned":
         deleted = set(ids[::9].tolist())
         delete_from_index(spark, case, sorted(deleted), catalog=cat)
-    if case == "spark_read":
-        monkeypatch.setattr(ivf, "local_fs_path", lambda *a, **kw: None)
     m = cat.load(case)
     q = _queries(12)
     # nprobe >= 2 over a 12-query batch sharing cells; k=500 exceeds
@@ -146,7 +143,7 @@ def test_probe_scan_matches_numpy_reference(spark, cat, monkeypatch, case):
                                   search_complexity=nprobe,
                                   catalog=cat).collect())
             _assert_rows(got, want, exact=case != "appended")
-    if case in ("l2", "spark_read"):
+    if case == "l2":
         # cosine (index builds take L2/IP): the engine over the same
         # artifact with a cosine manifest; the zero query's distances
         # are NaN and sort last, so its rows are the smallest ids

@@ -165,32 +165,13 @@ def test_streaming_build_missing_input(tmp_path):
         diskann_streaming_build(str(tmp_path / "nope.bin"), str(tmp_path / "o"))
 
 
-def test_streaming_build_from_parquet(spark, sf_dir, tmp_path):
+def test_streaming_build_from_parquet(sf_dir, tmp_path):
     out = str(tmp_path / "emb.diskann")
     n, dim, used = diskann_streaming_build(
         f"{sf_dir}/embeddings.parquet", out, max_degree=16, build_complexity=32,
-        spark=spark,
     )
     assert dim == 64 and n > 0 and used <= n
     assert read_diskann(out).n == n
-
-
-def test_streaming_build_fallback_row_cap(spark, sf_dir, tmp_path,
-                                          monkeypatch):
-    """The Spark fallback (input unreadable by pyarrow) must refuse huge
-    inputs with a clear error instead of collecting them to the driver."""
-    import duckdb_ann_spark.index.streaming_build as sb
-
-    def boom(path):
-        raise OSError("simulated: pyarrow cannot open this path scheme")
-
-    monkeypatch.setattr(sb, "_parquet_count", boom)
-    monkeypatch.setattr(sb, "MAX_FALLBACK_ROWS", 100)
-    with pytest.raises(ValueError, match="exceeds 100 rows"):
-        diskann_streaming_build(
-            f"{sf_dir}/embeddings.parquet", str(tmp_path / "cap.diskann"),
-            max_degree=16, build_complexity=32, spark=spark,
-        )
 
 
 def test_faiss_gpu_info(spark):
