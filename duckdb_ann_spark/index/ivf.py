@@ -1024,11 +1024,11 @@ class IvfFlatEngine:
                                   grouped_q, bounds, probed, payload, k,
                                   deleted)
 
-    def _search_files(self, spark, manifest, root, qmat, grouped_q, bounds,
-                      probed, payload, k, deleted) -> DataFrame:
-        """The probe scan, in ONE Spark job: a probe is a FILE selection. The driver lists the probed cells'
-        files and LPT-packs the cells into bins by GEMM mass (|q_c| ×
-        file bytes); each `spark.range` task reads its bin's cells with
+    def _search_files(self, spark, manifest, artifact_dir, qmat, grouped_q,
+                      bounds, probed, payload, k, deleted) -> DataFrame:
+        """The probe scan, in ONE Spark job: a probe is a FILE selection.
+        The driver lists the probed cells' files and LPT-packs the cells
+        into bins by GEMM mass (|q_c| × file bytes); each `spark.range` task reads its bin's cells with
         pyarrow, one cell resident at a time, and scores them; the
         driver cuts each query's top-k from the partial rows (bounded by
         nq × bins × (k + ties), never by data size). Tombstoned ids
@@ -1039,7 +1039,7 @@ class IvfFlatEngine:
         0.61 s per scan at 2 bins per core, 0.34 s at 1)."""
         id_col = manifest["id_col"]
         metric = manifest["params"]["metric"]
-        files = _cell_files(os.path.join(root, VECTORS_DIR), probed)
+        files = _cell_files(os.path.join(artifact_dir, VECTORS_DIR), probed)
         cells = sorted(files)
         if not cells:
             return spark.createDataFrame([], _hits_schema(id_col))

@@ -107,6 +107,17 @@ def spark_jobs(spark, fn) -> list:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    # the status store is filled by the asynchronous listener bus: drain
+    # it so every job of the group is recorded
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     st = sc.statusTracker()
-    return [[st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+
+    def name(stage_id):
+        # the store keeps `spark.ui.retainedStages` stages (1000 by
+        # default), so late in a long session a stage's info can already
+        # be evicted; the job still counts
+        info = st.getStageInfo(stage_id)
+        return info.name if info is not None else f"stage {stage_id}"
+
+    return [[name(s) for s in st.getJobInfo(j).stageIds]
             for j in st.getJobIdsForGroup(group)]

@@ -67,7 +67,7 @@ def test_lifecycle_ignores_default_fs(spark, tmp_path, kind):
     want = _lifecycle(spark, str(tmp_path / "default_fs"), ENGINES[kind])
     assert want[2] == (N + N_NEW - len(range(0, N + N_NEW, 7)), 0)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    default_fs = conf.get("fs.defaultFS")
+    default_fs = conf.get("fs.defaultFS", "file:///")
     conf.set("fs.defaultFS", FAKE_FS)
     try:
         # the fake filesystem is live: a bare path cannot be read
